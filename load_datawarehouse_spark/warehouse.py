@@ -13,8 +13,11 @@ Storage model: one directory per table holding parquet files plus a
 ``_ldw_meta.json`` sidecar (api_repr schema, expiry). A metadata
 sidecar instead of a Hive metastore keeps the engine location-
 agnostic — on a cluster the root is any shared filesystem / object
-store prefix, and every data path is a plain distributed
-``df.write.parquet`` / ``spark.read.parquet``.
+store prefix. Reads are plain ``spark.read.parquet``. DataFrame loads
+and the ``update`` / ``merge`` rewrites are distributed
+``df.write.parquet``; a record batch, which already sits on the
+driver, is appended as one Arrow-built parquet file written by the
+driver, with no Spark job.
 """
 
 from __future__ import annotations
@@ -27,14 +30,19 @@ import uuid
 from enum import Enum
 from typing import Any, Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from load_datawarehouse_spark import types as wtypes
 from load_datawarehouse_spark.data import clean_dataframe_keys, prepare
 from load_datawarehouse_spark.errors import (
     WarehouseInvalidInput,
     WarehouseTableNotFound,
+    WarehouseTableRowsInvalid,
 )
 from load_datawarehouse_spark.schema_infer import (
     infer_schema,
@@ -55,8 +63,6 @@ def _conform_value(value: Any, field: dict) -> Any:
     """Coerce one record value to its condensed schema field — the
     role BigQuery's ingestion plays for the reference (server-side
     coercion after inference)."""
-    if value is None:
-        return None
     ftype = field.get("type", wtypes.DEFAULT_TYPE)
     mode = field.get("mode", wtypes.DEFAULT_MODE)
     if mode == wtypes.REPEATED:
@@ -73,6 +79,10 @@ def _conform_value(value: Any, field: dict) -> Any:
         else:
             items = [value]
         return [_conform_scalar(v, ftype) for v in items]
+    if ftype == wtypes.RECORD:
+        if isinstance(value, dict):
+            return _conform_record(value, field.get("fields", []))
+        return value  # not a record: the Arrow build rejects it
     return _conform_scalar(value, ftype)
 
 
@@ -88,11 +98,17 @@ def _conform_scalar(value: Any, ftype: str) -> Any:
     if ftype == wtypes.BOOLEAN:
         return bool(value)
     if ftype in (wtypes.DATETIME, wtypes.TIMESTAMP):
-        if isinstance(value, _dt.datetime):
-            return value
-        if isinstance(value, _dt.date):
-            return _dt.datetime(value.year, value.month, value.day)
-        return value
+        if not isinstance(value, _dt.datetime):
+            if not isinstance(value, _dt.date):
+                return value
+            value = _dt.datetime(value.year, value.month, value.day)
+        # Arrow ignores a datetime's UTC offset when the target type is
+        # given, so normalise here with Spark's own rules: TIMESTAMP is
+        # an instant (naive values are local time, as in
+        # TimestampType.toInternal); DATETIME keeps the wall clock.
+        if ftype == wtypes.TIMESTAMP:
+            return value.astimezone(_dt.timezone.utc)
+        return value.replace(tzinfo=None) if value.tzinfo is not None else value
     if ftype == wtypes.TIME:
         return value.isoformat() if isinstance(value, _dt.time) else str(value)
     return value
@@ -102,7 +118,39 @@ def _conform_record(record: dict, schema: list[dict]) -> dict:
     from load_datawarehouse_spark.data import clean_field_key
 
     cleaned = {clean_field_key(k): v for k, v in record.items()}
-    return {f["name"]: _conform_value(cleaned.get(f["name"]), f) for f in schema}
+    out = {}
+    for f in schema:
+        name = f["name"]
+        value = cleaned.get(name)
+        if value is None:
+            # normalised as api_repr_to_struct_type does: a null in a
+            # non-nullable Arrow column would be written as a zero
+            if str(f.get("mode", "")).upper() == wtypes.REQUIRED:
+                raise WarehouseTableRowsInvalid(
+                    f"field {name!r} is REQUIRED but the record has no value for it"
+                )
+            out[name] = None
+        else:
+            out[name] = _conform_value(value, f)
+    return out
+
+
+def _arrow_table(rows: list[dict], struct: T.StructType) -> pa.Table:
+    """Conformed rows as one Arrow table typed by the table's schema
+    (Spark's own Spark→Arrow type map). Built column by column so a
+    value Arrow cannot convert is reported with its field's name."""
+    schema = to_arrow_schema(struct)
+    if rows and not len(schema):
+        raise WarehouseTableRowsInvalid("records have no fields to write")
+    columns = []
+    for field in schema:
+        try:
+            columns.append(pa.array([r[field.name] for r in rows], type=field.type))
+        except (pa.ArrowException, OverflowError) as exc:
+            raise WarehouseTableRowsInvalid(
+                f"field {field.name!r} ({field.type}): {exc}"
+            ) from exc
+    return pa.Table.from_arrays(columns, schema=schema)
 
 
 class SparkWarehouse:
@@ -295,10 +343,8 @@ class SparkWarehouse:
                 rows.append({**conformed, op_col: r.get(op_col, "U")})
             # StructType.add MUTATES the receiver — build a fresh copy
             # so the payload struct used below keeps only data fields
-            from pyspark.sql import types as _T
-
-            ch_struct = _T.StructType(list(struct.fields)).add(op_col, "string")
-            ch = self.spark.createDataFrame(rows, ch_struct)
+            ch_struct = T.StructType(list(struct.fields)).add(op_col, "string")
+            ch = self.spark.createDataFrame(_arrow_table(rows, ch_struct), ch_struct)
         upserts = ch.filter(F.col(op_col).isin("I", "U")).select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in struct.fields]
         )
@@ -430,9 +476,15 @@ class SparkWarehouse:
         (existing wins per field) → create-if-missing → append.
 
         The reference's chunked streaming-insert loop (:432-442)
-        becomes a single distributed ``df.write``: the executor/driver
-        boundary replaces the HTTP boundary, and parquet row-groups
-        replace 20 MiB JSON chunks.
+        becomes one parquet file per batch, and parquet row-groups
+        replace 20 MiB JSON chunks. A record batch is driver-resident
+        by contract, so the driver writes it: the conformed records
+        become one Arrow table, typed by Spark's own Spark→Arrow map,
+        and are appended as a single file with no Spark job. A batch
+        with no rows updates the schema and writes no file. A record
+        that fails its schema (a null for a REQUIRED field, a value
+        that cannot convert) raises ``WarehouseTableRowsInvalid``
+        before anything is written.
 
         ``data`` may also be a Spark DataFrame (VERDICT r14 #5): that
         is the BULK path — no records round-trip, no driver
@@ -531,7 +583,9 @@ class SparkWarehouse:
             conformed = [
                 _conform_record(r, api) for r in records if isinstance(r, dict)
             ]
-            df = self.spark.createDataFrame(conformed, struct)
+            table = _arrow_table(conformed, struct)
+        # schema first, data second: a crash in between leaves extra
+        # nullable columns, never a data file the schema cannot read
         if not self.exists():
             self._write_meta(
                 {"schema": api, "expires": None,
@@ -539,8 +593,31 @@ class SparkWarehouse:
             )
         else:
             self._write_meta({**self._read_meta(), "schema": api})
-        df.write.mode("append").parquet(os.path.join(self.path, "data"))
+        if isinstance(data, DataFrame):
+            df.write.mode("append").parquet(os.path.join(self.path, "data"))
+        elif table.num_rows:
+            self._append_file(table)
         return True
+
+    def _append_file(self, table: pa.Table) -> None:
+        """Append ``table`` to ``data/`` as one parquet file compressed
+        with the session's parquet codec. It is written under a dot
+        name, which Spark's reader skips, and renamed into place, so no
+        reader sees a partial file."""
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec").lower()
+        if codec == "uncompressed":
+            codec = "none"
+        data_path = os.path.join(self.path, "data")
+        os.makedirs(data_path, exist_ok=True)
+        suffix = ".parquet" if codec == "none" else f".{codec}.parquet"
+        name = f"part-{uuid.uuid4().hex}{suffix}"
+        tmp = os.path.join(data_path, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp, compression=codec)
+            os.replace(tmp, os.path.join(data_path, name))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     @staticmethod
     def _widen_only_merge(
@@ -617,9 +694,8 @@ class SparkWarehouse:
             )
         else:
             records = prepare(data)
-            new_df = self.spark.createDataFrame(
-                [_conform_record(r, api) for r in records if isinstance(r, dict)], struct
-            )
+            rows = [_conform_record(r, api) for r in records if isinstance(r, dict)]
+            new_df = self.spark.createDataFrame(_arrow_table(rows, struct), struct)
         existing_df = self.df()
         merged = existing_df.join(new_df, on=keys, how="left_anti").unionByName(new_df)
 

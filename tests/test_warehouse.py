@@ -5,12 +5,17 @@ the reference's live-BigQuery integration tests
 from __future__ import annotations
 
 import datetime as dt
+import decimal
+import glob
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from load_datawarehouse_spark.errors import (
     WarehouseInvalidInput,
     WarehouseTableNotFound,
+    WarehouseTableRowsInvalid,
 )
 from load_datawarehouse_spark.warehouse import QuerySort, SparkWarehouse
 
@@ -394,3 +399,164 @@ def test_load_dataframe_cleans_keys_like_records_path(spark, root):
     b = SparkWarehouse.new(spark, root, "kd")
     b.load(df)
     assert [f["name"] for f in b.schema] == [f["name"] for f in a.schema]
+
+
+# --- driver-side record loads: one Arrow-built parquet file ---------------
+
+_TZ2 = dt.timezone(dt.timedelta(hours=2))
+_TIME_SCHEMA = [
+    {"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+    {"name": "ts", "type": "TIMESTAMP", "mode": "NULLABLE"},
+    {"name": "dt", "type": "DATETIME", "mode": "NULLABLE"},
+]
+
+
+def _data_files(wh):
+    return sorted(glob.glob(os.path.join(wh.path, "data", "*.parquet")))
+
+
+def _data_listing(wh):
+    data = os.path.join(wh.path, "data")
+    return sorted(os.listdir(data)) if os.path.isdir(data) else []
+
+
+def test_record_load_writes_one_file_and_runs_no_spark_job(spark, root):
+    wh = SparkWarehouse.new(spark, root, "one")
+    sc = spark.sparkContext
+    sc.setJobGroup("record-load", "record load")
+    try:
+        wh.load(RECORDS)
+        wh.load([{"id": 4, "name": "delta"}])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("record-load")) == []
+    files = _data_files(wh)
+    assert len(files) == 2
+    # nothing else in data/: no dot-named temp file, no Spark side files
+    assert _data_listing(wh) == [os.path.basename(f) for f in files]
+    assert sorted(pq.read_metadata(f).num_rows for f in files) == [1, 3]
+    assert wh.df().count() == 4
+
+
+def test_record_load_footer_types_and_codec(spark, root):
+    wh = SparkWarehouse.new(spark, root, "footer", schema=_TIME_SCHEMA)
+    wh.load([{"id": 1, "ts": dt.datetime(2024, 1, 1, 5), "dt": dt.datetime(2024, 1, 1, 5)}])
+    (path,) = _data_files(wh)
+    md = pq.read_metadata(path)
+    cols = {md.schema.column(i).name: md.schema.column(i) for i in range(md.num_columns)}
+    assert "isAdjustedToUTC=true" in str(cols["ts"].logical_type)
+    assert "isAdjustedToUTC=false" in str(cols["dt"].logical_type)
+    codec = spark.conf.get("spark.sql.parquet.compression.codec")
+    assert md.row_group(0).column(0).compression == codec.upper()
+    assert path.endswith(f".{codec}.parquet")
+
+
+def test_record_load_uncompressed_codec(spark, root):
+    key = "spark.sql.parquet.compression.codec"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "uncompressed")
+    try:
+        wh = SparkWarehouse.new(spark, root, "plain", data=RECORDS)
+    finally:
+        spark.conf.set(key, before)
+    (path,) = _data_files(wh)
+    assert pq.read_metadata(path).row_group(0).column(0).compression == "UNCOMPRESSED"
+    assert wh.df().count() == 3
+
+
+def test_timestamp_and_datetime_keep_spark_semantics(spark, root):
+    # TIMESTAMP is an instant: an aware value is converted to UTC and a
+    # naive one is local time (as Spark's TimestampType.toInternal).
+    # DATETIME keeps the wall clock and drops any offset.
+    naive = dt.datetime(2024, 1, 1, 5)
+    aware = dt.datetime(2024, 1, 1, 5, tzinfo=_TZ2)
+    wh = SparkWarehouse.new(spark, root, "tz", schema=_TIME_SCHEMA)
+    wh.load([{"id": 1, "ts": aware, "dt": aware}, {"id": 2, "ts": naive, "dt": naive}])
+    want = {
+        1: (1704078000, "2024-01-01 05:00:00"),
+        2: (int(naive.timestamp()), "2024-01-01 05:00:00"),
+    }
+    got = wh.df().selectExpr("id", "CAST(ts AS BIGINT) AS s", "CAST(dt AS STRING) AS w").collect()
+    assert {r["id"]: (r["s"], r["w"]) for r in got} == want
+    # update() builds the same Arrow table, so it stores the same values
+    wh.update([{"id": 1, "ts": aware, "dt": aware}], keys=["id"])
+    got = wh.df().selectExpr("id", "CAST(ts AS BIGINT) AS s", "CAST(dt AS STRING) AS w").collect()
+    assert {r["id"]: (r["s"], r["w"]) for r in got} == want
+
+
+_STRICT_SCHEMA = [
+    {"name": "id", "type": "INTEGER", "mode": "REQUIRED"},
+    {"name": "day", "type": "DATE", "mode": "NULLABLE"},
+    {"name": "amount", "type": "NUMERIC", "mode": "NULLABLE"},
+    {"name": "meta", "type": "RECORD", "mode": "NULLABLE", "fields": [
+        {"name": "k", "type": "STRING", "mode": "REQUIRED"},
+    ]},
+    {"name": "items", "type": "RECORD", "mode": "REPEATED", "fields": [
+        {"name": "sku", "type": "STRING", "mode": "REQUIRED"},
+    ]},
+]
+
+
+@pytest.mark.parametrize(
+    "bad, field",
+    [
+        ({"id": None}, "id"),
+        ({"meta": {"other": "x"}}, "k"),
+        ({"items": [{"sku": "a"}, {"qty": 2}]}, "sku"),
+        ({"day": "2024-01-01"}, "day"),
+        ({"amount": 1.5}, "amount"),
+    ],
+    ids=["required-top", "required-nested", "required-repeated", "str-in-date", "float-in-numeric"],
+)
+def test_rejected_record_load_changes_nothing(spark, root, bad, field):
+    good = {"id": 1, "day": dt.date(2024, 1, 1), "amount": decimal.Decimal("2.5"),
+            "meta": {"k": "a"}, "items": [{"sku": "s"}]}
+    wh = SparkWarehouse.new(spark, root, "strict", schema=_STRICT_SCHEMA, data=[good])
+    meta_before = open(wh._meta_path).read()
+    files_before = _data_listing(wh)
+    with pytest.raises(WarehouseTableRowsInvalid, match=repr(field)):
+        wh.load([{**good, "id": 2}, {**good, **bad}])
+    assert open(wh._meta_path).read() == meta_before
+    assert _data_listing(wh) == files_before
+    assert wh.df().count() == 1
+
+
+def test_update_and_merge_reject_required_null(spark, root):
+    wh = SparkWarehouse.new(spark, root, "strict_up", schema=_STRICT_SCHEMA, data=[{"id": 1}])
+    with pytest.raises(WarehouseTableRowsInvalid, match="'id'"):
+        wh.update([{"id": None}], keys=["id"])
+    with pytest.raises(WarehouseTableRowsInvalid, match="'k'"):
+        wh.merge([{"id": 2, "meta": {}, "op": "I"}], keys=["id"])
+    assert wh.df().count() == 1
+
+
+def test_empty_record_load_updates_schema_and_writes_no_file(spark, root):
+    schema = [{"name": "id", "type": "INTEGER", "mode": "NULLABLE"}]
+    fresh = SparkWarehouse(spark, root, "fresh")
+    assert fresh.load([], schema=schema, full_schema=True) is True
+    assert fresh.exists() and fresh.schema == schema
+    assert _data_listing(fresh) == []
+    assert fresh.df().count() == 0
+
+    wh = SparkWarehouse.new(spark, root, "grown", data=RECORDS)
+    files = _data_listing(wh)
+    wider = wh.schema + [{"name": "flag", "type": "BOOLEAN", "mode": "NULLABLE"}]
+    wh.load([], schema=wider, full_schema=True)
+    assert [f["name"] for f in wh.schema] == [f["name"] for f in wider]
+    assert _data_listing(wh) == files
+    assert wh.df().count() == 3
+    assert wh.df().filter("flag IS NOT NULL").count() == 0
+
+
+def test_snapshot_reads_driver_written_files(spark, root):
+    wh = SparkWarehouse.new(spark, root, "snap", data=RECORDS)
+    v1 = wh.snapshot()
+    wh.load([{"id": 4, "name": "delta", "extra": "x"}])
+    v2 = wh.snapshot()
+    snap = os.path.join(wh.path, "snapshots")
+    assert len(glob.glob(os.path.join(snap, f"v{v1}", "*.parquet"))) == 1
+    assert len(glob.glob(os.path.join(snap, f"v{v2}", "*.parquet"))) == 2
+    assert wh.df_at(v1).count() == 3
+    assert "extra" not in wh.df_at(v1).columns
+    assert wh.df_at(v2).filter("extra = 'x'").count() == 1

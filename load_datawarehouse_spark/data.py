@@ -15,6 +15,7 @@ reference's accidental ``UnboundLocalError`` (``data.py:293-307``).
 
 from __future__ import annotations
 
+import datetime
 import json
 import random
 import re
@@ -30,23 +31,46 @@ from load_datawarehouse_spark.errors import WarehouseRowOversize
 
 _PROHIBITED = re.compile(r"\W")
 
+#: str key -> cleaned key. A load sees a few dozen distinct keys but
+#: cleans every key of every record, so each distinct key runs the
+#: regex once. Bounded: a full cache is emptied and refills.
+_CLEAN_KEYS: dict[str, str] = {}
+_CLEAN_KEYS_MAX = 4096
+
+#: exact leaf types ``clean_keys`` returns unchanged without further
+#: dispatch (subclasses, e.g. ``pandas.Timestamp``, take the full path)
+_LEAVES = frozenset(
+    {str, int, float, bool, type(None), bytes, datetime.datetime, datetime.date, datetime.time}
+)
+
 
 def clean_field_key(key: Any) -> str:
     """Substitute all non-word characters in a field name with ``_``;
     non-string keys are stringified first (data.py:13-26)."""
     if not isinstance(key, str):
         key = str(key)
-    return _PROHIBITED.sub("_", key)
+    clean = _CLEAN_KEYS.get(key)
+    if clean is None:
+        clean = _PROHIBITED.sub("_", key)
+        if len(_CLEAN_KEYS) >= _CLEAN_KEYS_MAX:
+            _CLEAN_KEYS.clear()
+        _CLEAN_KEYS[key] = clean
+    return clean
 
 
 def clean_keys(obj: Any) -> Any:
     """Recursively sanitize keys through dict/list trees; Spark and
     pandas DataFrames dispatch to their column cleaners
     (data.py:29-46)."""
+    if type(obj) in _LEAVES:
+        return obj
     if isinstance(obj, dict):
-        return {clean_field_key(k): clean_keys(v) for k, v in obj.items()}
+        return {
+            clean_field_key(k): v if type(v) in _LEAVES else clean_keys(v)
+            for k, v in obj.items()
+        }
     if isinstance(obj, (list, tuple)):
-        return [clean_keys(item) for item in obj]
+        return [v if type(v) in _LEAVES else clean_keys(v) for v in obj]
     if isinstance(obj, DataFrame):
         return clean_dataframe_keys(obj)
     try:

@@ -18,6 +18,11 @@ Reproduces the observation -> condense lattice of
   date->DATETIME quirk), then numeric promotion
   (float>int>bool, the ``np.find_common_type`` lattice).
 
+Fields the existing schema fixes are not observed: ``condense``
+copies their entry verbatim whatever was seen, so only their presence
+is recorded (which keeps field order and the stability factor
+unchanged) and their values are never walked.
+
 Verified golden outputs: FIXTURES.md F1/F2 (executed against the
 reference during the survey).
 
@@ -135,6 +140,12 @@ class Observation:
     so merging partition observations in ANY order yields the same
     first-observed kind ordering as one sequential pass in partition
     order.
+
+    ``fixed`` names the top-level fields an existing schema already
+    types: their presence is registered but their values are not
+    observed. Skipping a field only shifts the intra-row sequence of
+    later fields by a constant, so every field's own kind order is
+    unchanged.
     """
 
     fields: "dict[str, FieldObs]" = field(default_factory=dict)
@@ -144,6 +155,7 @@ class Observation:
     first_seen: bool = False
     type_errors: list = field(default_factory=list)  # sample of non-dict rows
     part_id: int = 0
+    fixed: frozenset = frozenset()
 
     MAX_ERROR_SAMPLES = 20
 
@@ -155,13 +167,14 @@ class Observation:
                 self.type_errors.append(row)
             return
         added = False
+        fields, fixed = self.fields, self.fixed
         for raw_key, value in row.items():
             key = clean_field_key(raw_key)
-            obs = self.fields.get(key)
+            obs = fields.get(key)
             if obs is None:
-                obs = self.fields[key] = FieldObs()
+                obs = fields[key] = FieldObs()
                 added = True
-            if value is None:
+            if value is None or key in fixed:
                 continue
             _observe_value(obs, value, order_key)
         if self.first_seen and added:
@@ -192,17 +205,22 @@ class Observation:
 
 def _observe_value(obs: FieldObs, value: Any, order_key: "_RowKeys") -> None:
     """Observe one non-None value into a FieldObs (schema.py:687-720)."""
-    try:
-        import pandas as _pd
+    kind = _EXACT_KINDS.get(type(value))
+    if kind is not None:
+        _first_add(obs.scalars, kind, order_key.next())
+        return
+    if type(value) is not dict and type(value) is not list:
+        try:
+            import pandas as _pd
 
-        if isinstance(value, _pd.DataFrame):
-            value = value.to_dict(orient="records")
-        elif isinstance(value, _pd.Series):
-            value = list(value)
-    except Exception:  # pragma: no cover
-        pass
-    if _np is not None and isinstance(value, _np.ndarray):
-        value = value.tolist()
+            if isinstance(value, _pd.DataFrame):
+                value = value.to_dict(orient="records")
+            elif isinstance(value, _pd.Series):
+                value = list(value)
+        except Exception:  # pragma: no cover
+            pass
+        if _np is not None and isinstance(value, _np.ndarray):
+            value = value.tolist()
 
     if isinstance(value, dict):
         # Plain dict degrades to a list of its KEYS (the verified
@@ -235,9 +253,26 @@ def _observe_value(obs: FieldObs, value: Any, order_key: "_RowKeys") -> None:
     _first_add(obs.scalars, _scalar_kind(value), order_key.next())
 
 
+#: kinds of the exact built-in scalar types, looked up before the
+#: isinstance chain below (which subclasses and numpy scalars need)
+_EXACT_KINDS = {
+    bool: "bool",
+    bytes: "bytes",
+    _dt.datetime: "datetime",
+    _dt.date: "date",
+    _dt.time: "time",
+    str: "str",
+    int: "int",
+    float: "float",
+}
+
+
 #: canonical scalar kinds (pickle-friendly strings, stable across
 #: partitions): order of checks mirrors type identity, not promotion.
 def _scalar_kind(value: Any) -> str:
+    kind = _EXACT_KINDS.get(type(value))
+    if kind is not None:
+        return kind
     if isinstance(value, bool) or (_np is not None and isinstance(value, _np.bool_)):
         return "bool"
     if isinstance(value, bytes):
@@ -304,13 +339,14 @@ def promote_scalars(kinds: Iterable[str], strict_dates: bool = False) -> str | N
     return None  # -> default STRING NULLABLE downstream
 
 
-def _existing_lookup(schema: Iterable[dict] | None, name: str) -> dict | None:
-    if not schema:
-        return None
-    for f in schema:
-        if isinstance(f, dict) and f.get("name") == name:
-            return f
-    return None
+def _existing_by_name(schema: Iterable[dict] | None) -> dict[str, dict]:
+    """Name -> the first existing-schema entry of that name, read in
+    one pass (so a one-shot iterable works)."""
+    out: dict[str, dict] = {}
+    for f in schema or ():
+        if isinstance(f, dict):
+            out.setdefault(f.get("name"), f)
+    return out
 
 
 def condense(
@@ -325,9 +361,10 @@ def condense(
     None-typed (all-None / unknown) fields get the STRING NULLABLE
     default (bigquery/schema.py:446-475).
     """
+    by_name = _existing_by_name(existing_schema)
     out: list[dict] = []
     for name, obs in fields.items():
-        existing = _existing_lookup(existing_schema, name)
+        existing = by_name.get(name)
         if existing is not None:
             entry = {
                 "name": name,
@@ -387,16 +424,22 @@ def infer_schema(
 ) -> InferenceResult:
     """Sequential reference-faithful inference
     (= deconstruct_records + condense_record_fields +
-    get_api_repr_from_record_fields)."""
+    get_api_repr_from_record_fields).
+
+    Values of the fields ``schema`` already types are not observed:
+    the existing entry wins verbatim, so observing them could not
+    change the result. Only their presence is recorded.
+    """
     if records is None or isinstance(records, (str, bytes, dict)):
         raise WarehouseInvalidInput(
             f"expected an iterable of records, got {type(records).__name__}"
         )
-    obs = Observation()
+    existing = _existing_by_name(schema)
+    obs = Observation(fixed=frozenset(existing))
     for row in records:
         obs.observe_row(row)
     return InferenceResult(
-        schema=condense(obs.fields, schema, strict_dates),
+        schema=condense(obs.fields, list(existing.values()), strict_dates),
         type_errors=obs.type_errors,
         factor_of_records_adding_fields=obs.factor_of_records_adding_fields,
         n_records=obs.n_records,
@@ -415,8 +458,13 @@ def infer_schema_distributed(
     Accepts an RDD of dicts or a DataFrame (rows observed as nested
     dicts). The observation merge is associative and the condense
     happens once on the driver over the merged (small) type tree.
+    As in ``infer_schema``, fields ``schema`` already types are not
+    observed.
     """
     from pyspark.sql import DataFrame
+
+    existing = _existing_by_name(schema)
+    fixed = frozenset(existing)
 
     if isinstance(rdd_or_df, DataFrame):
         rdd = rdd_or_df.rdd.map(lambda r: r.asDict(recursive=True))
@@ -427,7 +475,7 @@ def infer_schema_distributed(
         # partition id seeds the order keys: "first observed" is then
         # global (partition order x row order), so the treeReduce
         # merge order cannot change the condensed schema
-        obs = Observation(part_id=pid)
+        obs = Observation(part_id=pid, fixed=fixed)
         for row in rows:
             obs.observe_row(row)
         yield obs
@@ -442,7 +490,7 @@ def infer_schema_distributed(
     else:
         merged = parts.treeReduce(lambda a, b: a.merge(b), depth=depth)
     return InferenceResult(
-        schema=condense(merged.fields, schema, strict_dates),
+        schema=condense(merged.fields, list(existing.values()), strict_dates),
         type_errors=merged.type_errors,
         factor_of_records_adding_fields=merged.factor_of_records_adding_fields,
         n_records=merged.n_records,

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from load_datawarehouse_spark import types as wtypes
-from load_datawarehouse_spark.data import clean_dataframe_keys, prepare
+from load_datawarehouse_spark.data import clean_dataframe_keys, clean_field_key, prepare
 from load_datawarehouse_spark.errors import (
     WarehouseInvalidInput,
     WarehouseTableNotFound,
@@ -57,6 +57,10 @@ class QuerySort(Enum):
 
     ASCENDING = "ASC"
     DESCENDING = "DESC"
+
+
+def _as_utc(value: _dt.datetime) -> _dt.datetime:
+    return value if value.tzinfo is not None else value.replace(tzinfo=_dt.timezone.utc)
 
 
 def _conform_value(value: Any, field: dict) -> Any:
@@ -114,22 +118,57 @@ def _conform_scalar(value: Any, ftype: str) -> Any:
     return value
 
 
-def _conform_record(record: dict, schema: list[dict]) -> dict:
-    from load_datawarehouse_spark.data import clean_field_key
+#: the exact Python type a scalar value of a warehouse type already has
+#: when ``_conform_scalar`` would return it unchanged
+_CONFORMED_TYPE = {
+    wtypes.STRING: str,
+    wtypes.FLOAT: float,
+    wtypes.INTEGER: int,
+    wtypes.BOOLEAN: bool,
+}
 
+
+class _ConformPlan:
+    """A schema compiled once for conforming a batch of records. Per
+    field: its name, whether it is REQUIRED, the exact type of a value
+    that passes through unchanged (scalar STRING, FLOAT, INTEGER and
+    BOOLEAN fields only), and the field itself, whose RECORD ``fields``
+    are compiled to sub-plans. ``_conform_record`` accepts a plan
+    wherever it accepts a schema."""
+
+    __slots__ = ("fields",)
+
+    def __init__(self, schema: list[dict]) -> None:
+        self.fields = []
+        for f in schema:
+            ftype = f.get("type", wtypes.DEFAULT_TYPE)
+            repeated = f.get("mode", wtypes.DEFAULT_MODE) == wtypes.REPEATED
+            if ftype == wtypes.RECORD:
+                f = {**f, "fields": _ConformPlan(f.get("fields", []))}
+            self.fields.append((
+                f["name"],
+                # normalised as api_repr_to_struct_type does: a null in a
+                # non-nullable Arrow column would be written as a zero
+                str(f.get("mode", "")).upper() == wtypes.REQUIRED,
+                None if repeated else _CONFORMED_TYPE.get(ftype),
+                f,
+            ))
+
+
+def _conform_record(record: dict, schema: "list[dict] | _ConformPlan") -> dict:
+    plan = schema if isinstance(schema, _ConformPlan) else _ConformPlan(schema)
     cleaned = {clean_field_key(k): v for k, v in record.items()}
     out = {}
-    for f in schema:
-        name = f["name"]
+    for name, required, exact, f in plan.fields:
         value = cleaned.get(name)
         if value is None:
-            # normalised as api_repr_to_struct_type does: a null in a
-            # non-nullable Arrow column would be written as a zero
-            if str(f.get("mode", "")).upper() == wtypes.REQUIRED:
+            if required:
                 raise WarehouseTableRowsInvalid(
                     f"field {name!r} is REQUIRED but the record has no value for it"
                 )
             out[name] = None
+        elif type(value) is exact:
+            out[name] = value
         else:
             out[name] = _conform_value(value, f)
     return out
@@ -282,11 +321,13 @@ class SparkWarehouse:
             self._pending = {}
 
     def is_expired(self, now: _dt.datetime | None = None) -> bool:
+        """Whether the stored expiry instant is at or before ``now``
+        (default: the current time). Naive values count as UTC."""
         exp = self._read_meta().get("expires")
         if not exp:
             return False
         now = now or _dt.datetime.now(_dt.timezone.utc)
-        return now.isoformat() >= exp
+        return _as_utc(now) >= _as_utc(_dt.datetime.fromisoformat(exp))
 
     # --- data verbs -------------------------------------------------------
 
@@ -333,12 +374,13 @@ class SparkWarehouse:
             ch = changes
         else:
             records = prepare(changes)
+            plan = _ConformPlan(api)
             rows = []
             for r in records:
                 if not isinstance(r, dict):
                     continue
                 conformed = _conform_record(
-                    {k: v for k, v in r.items() if k != op_col}, api
+                    {k: v for k, v in r.items() if k != op_col}, plan
                 )
                 rows.append({**conformed, op_col: r.get(op_col, "U")})
             # StructType.add MUTATES the receiver — build a fresh copy
@@ -580,8 +622,9 @@ class SparkWarehouse:
                 api = infer_schema(records, schema=schema).schema
             api = self._widen_only_merge(api, existing)
             struct = wtypes.api_repr_to_struct_type(api)
+            plan = _ConformPlan(api)
             conformed = [
-                _conform_record(r, api) for r in records if isinstance(r, dict)
+                _conform_record(r, plan) for r in records if isinstance(r, dict)
             ]
             table = _arrow_table(conformed, struct)
         # schema first, data second: a crash in between leaves extra
@@ -694,7 +737,8 @@ class SparkWarehouse:
             )
         else:
             records = prepare(data)
-            rows = [_conform_record(r, api) for r in records if isinstance(r, dict)]
+            plan = _ConformPlan(api)
+            rows = [_conform_record(r, plan) for r in records if isinstance(r, dict)]
             new_df = self.spark.createDataFrame(_arrow_table(rows, struct), struct)
         existing_df = self.df()
         merged = existing_df.join(new_df, on=keys, how="left_anti").unionByName(new_df)

@@ -46,6 +46,24 @@ def test_clean_field_key():
     assert clean_field_key("ok_name9") == "ok_name9"
 
 
+def test_clean_field_key_cache(monkeypatch):
+    from load_datawarehouse_spark import data
+
+    monkeypatch.setattr(data, "_CLEAN_KEYS", {})
+    monkeypatch.setattr(data, "_CLEAN_KEYS_MAX", 8)
+    # equal-hashing keys of different types keep distinct entries
+    for _ in range(2):
+        assert clean_field_key(True) == "True"
+        assert clean_field_key(1) == "1"
+        assert clean_field_key(1.5) == "1_5"
+        assert clean_field_key(("a", 1)) == "__a___1_"
+    assert set(data._CLEAN_KEYS) == {"True", "1", "1.5", "('a', 1)"}
+    for i in range(20):
+        assert clean_field_key(f"k {i}") == f"k_{i}"
+        assert len(data._CLEAN_KEYS) <= 8
+    assert clean_field_key("k 0") == "k_0"
+
+
 def test_clean_keys_recursive():
     out = clean_keys({"a.b": [{"c d": 1}], "e": {"f.g": {"h i": 2}}})
     assert out == {"a_b": [{"c_d": 1}], "e": {"f_g": {"h_i": 2}}}

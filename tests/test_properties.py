@@ -18,6 +18,7 @@ import json
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from load_datawarehouse_spark import types as wtypes
 from load_datawarehouse_spark.data import chunks, clean_keys, json_size
 from load_datawarehouse_spark.errors import WarehouseRowOversize
 from load_datawarehouse_spark.schema_infer import Observation, condense, infer_schema
@@ -95,6 +96,33 @@ def test_inference_idempotent_under_duplication(records):
     once = _norm(infer_schema(records).schema)
     twice = _norm(infer_schema(records + records).schema)
     assert once == twice
+
+
+_TYPES = ("STRING", "string", "INTEGER", "int64", "FLOAT", "BOOLEAN", "bool", "TIMESTAMP", "DATE", "BYTES")
+_MODES = ("NULLABLE", "nullable", "REQUIRED", "REPEATED", "repeated")
+
+
+@settings(max_examples=60, deadline=None)
+@given(records=record_lists, data=st.data())
+def test_existing_schema_fixes_only_its_fields(records, data):
+    # fixed fields are not observed: each keeps its normalised
+    # existing entry, and every other field (and the field order) is
+    # exactly what inference without a schema gives
+    base = infer_schema(records).schema
+    names = [f["name"] for f in base]
+    fixed = data.draw(st.lists(st.sampled_from(names), unique=True) if names else st.just([]))
+    existing = [
+        {"name": n, "type": data.draw(st.sampled_from(_TYPES)), "mode": data.draw(st.sampled_from(_MODES))}
+        for n in fixed
+    ]
+    by_name = {e["name"]: e for e in existing}
+    want = [
+        {"name": f["name"], "type": wtypes.normalize_type(by_name[f["name"]]["type"]),
+         "mode": by_name[f["name"]]["mode"].upper()}
+        if f["name"] in by_name else f
+        for f in base
+    ]
+    assert infer_schema(records, existing).schema == want
 
 
 # --- clean_keys: idempotence ----------------------------------------------

@@ -86,6 +86,37 @@ def test_f1_distributed_matches(spark):
     assert len(res.type_errors) == 2
 
 
+#: an existing schema over F1: a non-normalised entry (lower-case type
+#: alias and mode), a RECORD whose sub-fields disagree with the data,
+#: and a name the data never has
+F1_EXISTING = [
+    {"name": "A", "type": "string", "mode": "required"},
+    {"name": "D", "type": "RECORD", "mode": "REPEATED",
+     "fields": [{"name": "D1", "type": "STRING", "mode": "NULLABLE"}]},
+    {"name": "ZZ", "type": "INTEGER", "mode": "NULLABLE"},
+]
+
+
+def test_f1_distributed_matches_with_existing_schema(spark):
+    # fixed fields are skipped on both paths; condense still
+    # normalises their entries, and every other field is inferred
+    # exactly as without a schema
+    seq = infer_schema(F1_RECORDS, schema=F1_EXISTING)
+    rdd = spark.sparkContext.parallelize(F1_RECORDS, 3)
+    dist = infer_schema_distributed(rdd, schema=F1_EXISTING)
+    assert dist.schema == seq.schema
+    assert dist.n_records == seq.n_records
+    by_name = _by_name(seq.schema)
+    assert by_name["A"] == {"name": "A", "type": "STRING", "mode": "REQUIRED"}
+    assert by_name["D"]["fields"] == F1_EXISTING[1]["fields"]
+    assert "ZZ" not in by_name
+    expected = _by_name(F1_EXPECTED)
+    for name in ("B", "C", "E", "FFF", "G"):
+        assert by_name[name] == expected[name]
+    assert [f["name"] for f in seq.schema] == [f["name"] for f in F1_EXPECTED]
+    assert seq.factor_of_records_adding_fields == pytest.approx(1 / 3)
+
+
 @pytest.mark.parametrize(
     "records,expected",
     [
@@ -117,6 +148,20 @@ def test_f2_existing_schema_wins():
     existing = [{"name": "x", "type": "STRING", "mode": "NULLABLE"}]
     res = infer_schema([{"x": 1}, {"x": 2}], schema=existing)
     assert res.schema[0]["type"] == "STRING"
+
+
+def test_existing_schema_may_be_an_iterator():
+    # a one-shot iterable is read once: every field keeps its
+    # existing type, not only those found before it ran out
+    existing = iter([
+        {"name": "a", "type": "STRING", "mode": "NULLABLE"},
+        {"name": "b", "type": "INTEGER", "mode": "NULLABLE"},
+    ])
+    res = infer_schema([{"b": "x", "a": 1}], schema=existing)
+    assert res.schema == [
+        {"name": "b", "type": "INTEGER", "mode": "NULLABLE"},
+        {"name": "a", "type": "STRING", "mode": "NULLABLE"},
+    ]
 
 
 def test_strict_dates_divergence_flag():

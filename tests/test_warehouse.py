@@ -144,6 +144,22 @@ def test_expiry_round_trip(spark, root):
     assert not wh.is_expired()
 
 
+def test_expiry_compares_instants_across_offsets(spark, root):
+    wh = SparkWarehouse.new(spark, root, "t7tz")
+    now = dt.datetime(2024, 6, 1, 12, 0, tzinfo=dt.timezone.utc)
+    plus2 = dt.timezone(dt.timedelta(hours=2))
+    # 30 minutes past, written in +02:00 (lexically after ``now``)
+    wh.set_expiry((now - dt.timedelta(minutes=30)).astimezone(plus2))
+    assert wh.is_expired(now)
+    # 30 minutes ahead, written in -05:00 (lexically before ``now``)
+    wh.set_expiry((now + dt.timedelta(minutes=30)).astimezone(dt.timezone(dt.timedelta(hours=-5))))
+    assert not wh.is_expired(now)
+    # naive values, stored or given, count as UTC
+    wh.set_expiry(dt.datetime(2024, 6, 1, 12, 30))
+    assert not wh.is_expired(now)
+    assert wh.is_expired(dt.datetime(2024, 6, 1, 12, 30))
+
+
 def test_pandas_load(spark, root):
     import pandas as pd
 
@@ -560,3 +576,35 @@ def test_snapshot_reads_driver_written_files(spark, root):
     assert wh.df_at(v1).count() == 3
     assert "extra" not in wh.df_at(v1).columns
     assert wh.df_at(v2).filter("extra = 'x'").count() == 1
+
+
+def test_conform_alternating_schemas():
+    from load_datawarehouse_spark.warehouse import _conform_record, _ConformPlan
+
+    a = [
+        {"name": "x", "type": "INTEGER", "mode": "NULLABLE"},
+        {"name": "y", "type": "RECORD", "mode": "NULLABLE", "fields": [
+            {"name": "k", "type": "STRING", "mode": "REQUIRED"},
+        ]},
+    ]
+    b = [
+        {"name": "y", "type": "RECORD", "mode": "REPEATED", "fields": [
+            {"name": "k", "type": "INTEGER", "mode": "NULLABLE"},
+        ]},
+        {"name": "x", "type": "STRING", "mode": "NULLABLE"},
+    ]
+    want_a = {"x": 1, "y": {"k": "2"}}
+    want_b = {"y": [{"k": 2}], "x": "True"}
+    plan_a, plan_b = _ConformPlan(a), _ConformPlan(b)
+    cases = [(a, plan_a, want_a, 7), (b, plan_b, want_b, "7.0")]
+    for i in range(6):
+        schema, plan, want, x7 = cases[i % 2]
+        for s in (schema, plan):
+            got = _conform_record({"x": True, "y": {"k": 2}}, s)
+            assert got == want and type(got["x"]) is type(want["x"])
+            assert _conform_record({"x": 7.0, "y": {"k": "2"}}, s)["x"] == x7
+    for s in (a, plan_a):
+        with pytest.raises(WarehouseTableRowsInvalid, match="'k'"):
+            _conform_record({"x": 1, "y": {"k": None}}, s)
+    # the same nested field is nullable under the other schema
+    assert _conform_record({"y": [{"k": None}]}, plan_b) == {"y": [{"k": None}], "x": None}

@@ -114,98 +114,6 @@ HEADLINE = [
 ]
 
 
-def _write_bench_flags(detail_path: str, timings: dict, queries: dict) -> None:
-    """BENCH_FLAGS.json (VERDICT r16 #4): queries whose best time
-    moved >20% vs the previously COMMITTED BENCH_DETAIL.json with no
-    committed diff touching their op body since that detail map was
-    recorded. Those are exactly the deltas the BASELINE.md variance
-    policy says to adjudicate (regime/jitter vs found cause) — the
-    artifact replaces the judge having to rediscover them per round.
-
-    Attribution reuses the census's file-attribution idea: the op
-    body is located by ``inspect`` on the registered callable, and a
-    ``git diff -U0 <base>..HEAD`` hunk overlap against that line span
-    decides "touched". A delta whose op body WAS touched is explained
-    by code and not flagged; git/introspection failures flag with
-    ``op_body_touched: null`` (adjudicate manually)."""
-    import inspect
-    import re
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.exists(detail_path):
-        return
-    with open(detail_path) as fh:
-        prev = json.load(fh).get("queries", {})
-
-    def _git(*args: str) -> str:
-        return subprocess.run(
-            ["git", *args], cwd=here, capture_output=True, text=True, timeout=30
-        ).stdout
-
-    base = _git("log", "-1", "--format=%H", "--", "BENCH_DETAIL.json").strip()
-
-    def _body_touched(name: str):
-        if not base:
-            return None
-        try:
-            fn = inspect.unwrap(queries[name])
-            src = inspect.getsourcefile(fn)
-            body, start = inspect.getsourcelines(fn)
-            rel = os.path.relpath(src, here)
-        except Exception:
-            return None
-        # diff base -> WORKING TREE (not base..HEAD): the op body the
-        # bench just timed is the checked-out one, committed or not
-        diff = _git("diff", "-U0", base, "--", rel)
-        if not diff:
-            return False
-        lo, hi = start, start + len(body) - 1
-        # current-side hunk spans: @@ -a[,b] +c[,d] @@ — the +c,d side
-        # indexes the HEAD file, which is where (lo, hi) was measured
-        for m in re.finditer(r"^@@ [^+]*\+(\d+)(?:,(\d+))? @@", diff, re.M):
-            c, d = int(m.group(1)), int(m.group(2) or "1")
-            if c <= hi and (c + max(d, 1) - 1) >= lo:
-                return True
-        return False
-
-    flags = []
-    for name, cur in timings.items():
-        p = prev.get(name)
-        if not p or p <= 0:
-            continue
-        delta = (cur - p) / p
-        if abs(delta) <= 0.20:
-            continue
-        touched = _body_touched(name)
-        if touched:
-            continue  # delta explained by a committed code change
-        flags.append(
-            {
-                "query": name,
-                "prev_sec": p,
-                "cur_sec": cur,
-                "delta_pct": round(100 * delta, 1),
-                "op_body_touched": touched,
-            }
-        )
-    doc = {
-        "note": (
-            "queries whose bench delta vs the previous committed "
-            "BENCH_DETAIL.json exceeds 20% with no committed diff "
-            "touching their op body — adjudicate per the BASELINE.md "
-            "variance policy (cross-replay or recorded jitter row)"
-        ),
-        "base_commit": base or None,
-        "flags": sorted(flags, key=lambda f: -abs(f["delta_pct"])),
-    }
-    with open(os.path.join(here, "BENCH_FLAGS.json"), "w") as fh:
-        json.dump(doc, fh, indent=1)
-        fh.write("\n")
-    if flags:
-        print(f"# BENCH_FLAGS: {len(flags)} unattributed >20% deltas", file=sys.stderr)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -269,14 +177,6 @@ def main() -> None:
     # survives the stdout truncation without a judge re-run. Committed
     # alongside each round's bench run.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    # VERDICT r16 #4: >20%-on-untouched-code deltas have cost four
-    # rounds of judge cross-replays — auto-record them at bench time
-    # (vs the previous COMMITTED detail map, read before overwrite)
-    # so round-end adjudication starts from a recorded artifact.
-    try:
-        _write_bench_flags(detail_path, timings, queries)
-    except Exception as exc:  # the flag artifact must never fail a bench run
-        print(f"# BENCH_FLAGS skipped: {type(exc).__name__}: {exc}", file=sys.stderr)
     with open(detail_path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")

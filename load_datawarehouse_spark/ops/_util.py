@@ -61,10 +61,10 @@ def bcast_bounded(df, bound: str):
 def input_files_key(df) -> tuple | None:
     """Identity key of a frame's on-disk inputs: the sorted tuple of
     ``(path, size, mtime_ns)`` for every input file (driver-side
-    file-index lookup, no job). Shared by the per-process memo caches
-    (``_BAND_SIZE_CACHE``, ``_MEASURED_ROWS_CACHE``): including size +
-    mtime means a corpus directory regenerated IN PLACE with the same
-    file names but different contents invalidates the memo (ADVICE
+    file-index lookup, no job). Keys the per-process memo
+    ``_MEASURED_MEMO``: including size + mtime means a corpus
+    directory regenerated IN PLACE with the same file names but
+    different contents invalidates the memo (ADVICE
     r14 — the name-only key could stale-hit on a same-names
     regeneration with a different row count). Returns ``None`` for
     frames with no file inputs (in-memory fixtures) — callers must
@@ -104,11 +104,37 @@ def input_files_key(df) -> tuple | None:
     return tuple(key)
 
 
-#: per-process memo of measured row counts, keyed by
-#: ``(tag, input_files_key)`` — repeated invocations against one
-#: corpus pay the count exactly once (same contract as
-#: ``_BAND_SIZE_CACHE``).
-_MEASURED_ROWS_CACHE: dict[tuple, int] = {}
+#: per-process memo of measured numbers, keyed by ``(kind, tag, *one
+#: input_files_key per input frame)``: repeated invocations against
+#: one corpus pay the measurement once, an in-place regeneration of ANY
+#: input misses, and ``kind`` (``"rows"``, ``"workload"``,
+#: ``"band_size"``) keeps two quantities that share a tag from ever
+#: reading each other's number (ADVICE r17 #2). Values are ints only.
+_MEASURED_MEMO: dict[tuple, int] = {}
+
+
+def memo_measured(kind: str, tag: str, key_df, count_fn) -> int:
+    """``int(count_fn())``, memoized in ``_MEASURED_MEMO`` under
+    ``kind`` + ``tag`` + :func:`input_files_key` of ``key_df``.
+    ``count_fn`` is a thunk running the actual measurement job.
+
+    ``key_df`` may be a single frame or a LIST/TUPLE of frames when
+    the measurement reads several inputs (ADVICE r17 #1: join_theta's
+    histogram reads supplier AND customer — keying on one table alone
+    would stale-hit when only the other is regenerated in place). If
+    ANY input frame reports no files (in-memory fixtures), the memo is
+    skipped."""
+    frames = key_df if isinstance(key_df, (list, tuple)) else (key_df,)
+    fks = [input_files_key(df) for df in frames]
+    key = None if any(fk is None for fk in fks) else (kind, tag, *fks)
+    if key is not None:
+        n = _MEASURED_MEMO.get(key)
+        if n is not None:
+            return n
+    n = int(count_fn())
+    if key is not None:
+        _MEASURED_MEMO[key] = n
+    return n
 
 
 def bcast_measured(
@@ -134,55 +160,17 @@ def bcast_measured(
     (localCheckpoint → LogicalRDD) reports ZERO input files, which
     would silently disable the memo and re-count on every invocation;
     pass the underlying table scan instead."""
-    key = None
-    if tag is not None:
-        fk = input_files_key(key_df if key_df is not None else df)
-        if fk is not None:
-            key = (tag, fk)
-    n = _MEASURED_ROWS_CACHE.get(key) if key is not None else None
-    if n is None:
+    if tag is None:
         n = df.count()
-        if key is not None:
-            _MEASURED_ROWS_CACHE[key] = n
+    else:
+        n = memo_measured("rows", tag, key_df if key_df is not None else df, df.count)
     return F.broadcast(df) if n <= max_rows else df
 
 
-#: per-process memo for measured WORKLOAD numbers — kept separate from
-#: ``_MEASURED_ROWS_CACHE`` (ADVICE r17 #2: the two quantity kinds were
-#: distinguished only by string-tag discipline in one shared dict, so
-#: an accidental tag reuse across bcast_measured and measured_workload
-#: would silently feed the wrong number to a broadcast decision or a
-#: budget gate; separate namespaces make that collision impossible).
-_MEASURED_WORKLOAD_CACHE: dict[tuple, int] = {}
-
-
 def measured_workload(tag: str, key_df, count_fn) -> int:
-    """Per-process memo for a MEASURED workload number (pair-budget
-    histogram sums, gate counts) keyed by ``tag`` +
-    :func:`input_files_key` of ``key_df`` — the same contract as
-    ``_MEASURED_ROWS_CACHE`` / ``_BAND_SIZE_CACHE``: repeated
-    invocations against one corpus pay the measurement job exactly
-    once, and an in-place corpus regeneration (different files, sizes
-    or mtimes) invalidates the memo. ``count_fn`` is a thunk running
-    the actual measurement job; frames with no file inputs (in-memory
-    fixtures) skip the memo entirely.
-
-    ``key_df`` may be a single frame or a LIST/TUPLE of frames when
-    the measurement reads several inputs (ADVICE r17 #1: join_theta's
-    histogram reads supplier AND customer — keying on one table alone
-    would stale-hit when only the other is regenerated in place). If
-    ANY input frame reports no files, the memo is skipped."""
-    frames = key_df if isinstance(key_df, (list, tuple)) else (key_df,)
-    fks = [input_files_key(df) for df in frames]
-    key = None if any(fk is None for fk in fks) else (tag, *fks)
-    if key is not None:
-        n = _MEASURED_WORKLOAD_CACHE.get(key)
-        if n is not None:
-            return n
-    n = int(count_fn())
-    if key is not None:
-        _MEASURED_WORKLOAD_CACHE[key] = n
-    return n
+    """A MEASURED workload number (pair-budget histogram sums, gate
+    counts) through :func:`memo_measured`."""
+    return memo_measured("workload", tag, key_df, count_fn)
 
 
 def dec_sum(col: Column | str, alias: str) -> Column:

@@ -426,30 +426,15 @@ def _lsh_band_size(n_docs: int) -> int:
     return min(N_MINHASH // 2, BAND_SIZE + grow)
 
 
-#: per-process memo of the derived band size, keyed by the documents
-#: table's FULL input-file identity tuple — sorted (path, size,
-#: mtime_ns) via ``ops._util.input_files_key`` (driver-side lookup,
-#: no job): repeated invocations of banding ops in one session (bench
-#: warmup + timed runs, multi-op pipelines) pay the corpus count
-#: exactly once per distinct corpus instead of once per call. The
-#: full-tuple key (ADVICE r13 #2) means a corpus directory
-#: regenerated in-place with a DIFFERENT file set invalidates the
-#: memo; including size + mtime (ADVICE r14 #3) extends that to a
-#: regeneration that keeps identical file NAMES but different
-#: contents/row counts, which the name-only key could not observe.
-_BAND_SIZE_CACHE: dict[tuple, int] = {}
-
-
 def _derived_band_size(docs) -> int:
-    from load_datawarehouse_spark.ops._util import input_files_key
+    """:func:`_lsh_band_size` of the corpus count, memoized per corpus
+    file identity (bench warmup + timed runs, multi-op pipelines pay
+    the count once per distinct corpus)."""
+    from load_datawarehouse_spark.ops._util import memo_measured
 
-    key = input_files_key(docs)
-    if key is not None and key in _BAND_SIZE_CACHE:
-        return _BAND_SIZE_CACHE[key]
-    bs = _lsh_band_size(docs.count())
-    if key is not None:
-        _BAND_SIZE_CACHE[key] = bs
-    return bs
+    return memo_measured(
+        "band_size", "documents", docs, lambda: _lsh_band_size(docs.count())
+    )
 
 
 #: SQL twin of :func:`_lsh_band_size` — a CTE every banding oracle

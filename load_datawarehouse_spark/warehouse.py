@@ -23,6 +23,7 @@ driver, with no Spark job.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import shutil
@@ -32,7 +33,7 @@ from typing import Any, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -192,6 +193,128 @@ def _arrow_table(rows: list[dict], struct: T.StructType) -> pa.Table:
     return pa.Table.from_arrays(columns, schema=schema)
 
 
+def _struct(api: list[dict], op_col: str | None = None) -> T.StructType:
+    """The table's Spark schema, plus a merge's string ``op_col``."""
+    struct = wtypes.api_repr_to_struct_type(api)
+    return struct.add(op_col, T.StringType()) if op_col else struct
+
+
+def _conform_records(data, api_of, op_col: str | None = None) -> tuple[list[dict], pa.Table]:
+    """Fit a record batch to the schema ``api_of(records)``: keys are
+    cleaned, a field missing at any depth is null, an unknown field
+    drops, a null REQUIRED field raises. ``op_col`` adds a merge's op
+    column (``"U"`` where a record has none). Returns ``(api, table)``."""
+    records = prepare(data)
+    if not isinstance(records, list):
+        raise WarehouseInvalidInput(f"expected records or DataFrame, got {type(data).__name__}")
+    api = api_of(records)
+    plan = _ConformPlan(api)
+    dicts = [r for r in records if isinstance(r, dict)]
+    rows = [_conform_record(r, plan) for r in dicts]
+    if op_col:
+        for row, r in zip(rows, dicts):
+            row[op_col] = r.get(op_col, "U")
+    return api, _arrow_table(rows, _struct(api, op_col))
+
+
+def _conform_expr(col: Column, src_type: T.DataType | None, dst_type: T.DataType) -> Column:
+    """Conform one column (ADVICE r15 #1): a whole-struct ``cast``
+    fails when the batch's struct misses (or adds) nested fields, while
+    ``_conform_record`` backfills them with NULL and drops extras, so
+    structs are rebuilt field by field."""
+    if src_type is None:
+        return F.lit(None).cast(dst_type)
+    if isinstance(dst_type, T.StructType):
+        if not isinstance(src_type, T.StructType):
+            return col.cast(dst_type)  # loud, like the record path's type clash
+        sub_have = {sf.name: sf.dataType for sf in src_type.fields}
+        inner = [
+            _conform_expr(
+                col.getField(sub.name) if sub.name in sub_have else F.lit(None),
+                sub_have.get(sub.name),
+                sub.dataType,
+            ).alias(sub.name)
+            for sub in dst_type.fields
+        ]
+        # a NULL struct stays NULL (not a struct of NULLs)
+        return F.when(col.isNotNull(), F.struct(*inner))
+    if isinstance(dst_type, T.ArrayType):
+        if isinstance(src_type, T.ArrayType):
+            if isinstance(dst_type.elementType, T.StructType):
+                return F.when(
+                    col.isNotNull(),
+                    F.transform(
+                        col,
+                        lambda x: _conform_expr(x, src_type.elementType, dst_type.elementType),
+                    ),
+                )
+            return col.cast(dst_type)
+        # reference quirk parity (_conform_record): a scalar arriving
+        # for a REPEATED field wraps into a 1-element array; NULL stays
+        # NULL
+        elem = _conform_expr(col, src_type, dst_type.elementType)
+        return F.when(col.isNotNull(), F.array(elem))
+    return col.cast(dst_type)
+
+
+def _required_paths(fields: list[dict], parent: tuple = ()):
+    """Each REQUIRED field's path of ``(name, repeated)`` steps."""
+    for f in fields:
+        mode = str(f.get("mode", wtypes.DEFAULT_MODE)).upper()
+        path = (*parent, (f["name"], mode == wtypes.REPEATED))
+        if mode == wtypes.REQUIRED:
+            yield path
+        if f.get("type", wtypes.DEFAULT_TYPE) == wtypes.RECORD:
+            yield from _required_paths(f.get("fields", []), path)
+
+
+def _null_at(get, path) -> Column:
+    """``_conform_record``'s REQUIRED rule: true where the field at
+    ``path`` is null in a present parent (or REPEATED RECORD element)."""
+    (name, repeated), rest = path[0], path[1:]
+    col = get(name)
+    if not rest:
+        return col.isNull()
+    if repeated:
+        return F.exists(col, lambda x: x.isNotNull() & _null_at(x.getField, rest))
+    return col.isNotNull() & _null_at(col.getField, rest)
+
+
+def _conform_dataframe(
+    data: DataFrame, api_of, op_col: str | None = None, require: Iterable[str] = ()
+) -> tuple[list[dict], DataFrame]:
+    """:func:`_conform_records`'s contract as one projection; the
+    REQUIRED rule costs one Spark job, only if the schema has such a
+    field. A ``require`` column (a rewrite's keys, a merge's op) must
+    be present: backfilled null, every row would be a null-key append
+    or a delete."""
+    src = clean_dataframe_keys(data)
+    have = {f.name: f.dataType for f in src.schema.fields}
+    missing = [c for c in require if c not in have]
+    if missing:
+        raise WarehouseInvalidInput(f"DataFrame lacks required column(s) {missing}")
+    api = api_of(src)
+    out = src.select(
+        *[
+            _conform_expr(F.col(f.name) if f.name in have else F.lit(None),
+                          have.get(f.name), f.dataType).alias(f.name)
+            for f in _struct(api, op_col).fields
+        ]
+    )
+    paths = list(_required_paths(api))
+    if paths:
+        nulls = [_null_at(F.col, p) for p in paths]
+        hit = out.where(functools.reduce(Column.__or__, nulls)).select(
+            *[n.alias(str(i)) for i, n in enumerate(nulls)]
+        ).first()
+        if hit is not None:
+            name = next(p[-1][0] for p, v in zip(paths, hit) if v)
+            raise WarehouseTableRowsInvalid(
+                f"field {name!r} is REQUIRED but a row has no value for it"
+            )
+    return api, out
+
+
 class SparkWarehouse:
     """One instance ≙ one warehouse table (classes.py:20-23)."""
 
@@ -335,69 +458,60 @@ class SparkWarehouse:
         """Lazy scan of the table's parquet data."""
         if not self.exists():
             raise WarehouseTableNotFound(f"table {self.table!r} not found")
-        data_path = os.path.join(self.path, "data")
-        if not os.path.isdir(data_path):
-            api = self.schema or []
-            return self.spark.createDataFrame([], wtypes.api_repr_to_struct_type(api))
-        api = self.schema
+        return self._scan(os.path.join(self.path, "data"), self.schema)
+
+    def _scan(self, path: str, api: list[dict] | None) -> DataFrame:
+        """Lazy scan of ``path`` with the declared schema ``api``: files
+        written before a schema-widening append lack the newer columns,
+        and a bare read would surface whichever footer Spark samples
+        first — the declared schema fills missing columns with null
+        deterministically (cheaper than mergeSchema, which re-reads
+        every footer)."""
+        if not os.path.isdir(path) or not os.listdir(path):
+            return self.spark.createDataFrame([], wtypes.api_repr_to_struct_type(api or []))
         if api:
-            # read with the DECLARED schema: files written before a
-            # schema-widening append lack the newer columns, and a bare
-            # read would surface whichever footer Spark samples first —
-            # the declared schema fills missing columns with null
-            # deterministically (cheaper than mergeSchema, which
-            # re-reads every footer).
-            return self.spark.read.schema(
-                wtypes.api_repr_to_struct_type(api)
-            ).parquet(data_path)
-        return self.spark.read.parquet(data_path)
+            return self.spark.read.schema(wtypes.api_repr_to_struct_type(api)).parquet(path)
+        return self.spark.read.parquet(path)
 
     def merge(self, changes, keys: Iterable[str], op_col: str = "op") -> bool:
         """Three-way CDC merge: apply a change batch whose ``op_col``
         holds ``I`` (insert), ``U`` (update), or ``D`` (delete) —
         the full MERGE INTO semantics ``update`` (upsert-only) lacks.
+        ``changes`` (records or a DataFrame) is conformed as by
+        ``load``; a record without ``op_col`` is an update, and a
+        DataFrame must carry ``op_col`` and every key column. Plan:
+        ``_rewrite``."""
+        return self._rewrite(changes, keys, op_col)
 
-        Plan: one LEFT ANTI join drops every changed key (updates,
-        deletes, and colliding inserts alike), then the I/U payload
-        rows union back in — a single key shuffle regardless of the
-        op mix, written via the same atomic temp-path swap as
-        ``update``. At scale, partition the table by key prefix so
-        the rewrite touches only affected partitions (or use a
-        lakehouse format whose MERGE does file-level pruning).
-        """
+    def _rewrite(self, data, keys: Iterable[str], op_col: str | None = None) -> bool:
+        """The plan ``update`` and ``merge`` share: conform the change
+        batch, then one LEFT ANTI join drops every existing row whose
+        key it holds (updates, deletes, and colliding inserts alike)
+        and its upserts (every row, or a merge's I/U rows) union back
+        in — a single key shuffle regardless of the op mix — written to
+        a temp path then atomically swapped in for ``data/``;
+        single-writer assumption documented (SURVEY.md §7.5). At scale,
+        partition the table by key prefix so the rewrite touches only
+        affected partitions (or use a lakehouse format whose MERGE does
+        file-level pruning)."""
         keys = list(keys)
         api = self.schema
         if api is None:
             raise WarehouseTableNotFound(f"table {self.table!r} has no schema")
-        struct = wtypes.api_repr_to_struct_type(api)
-        if isinstance(changes, DataFrame):
-            ch = changes
+        if isinstance(data, DataFrame):
+            require = keys + [op_col] if op_col else keys
+            _, ch = _conform_dataframe(data, lambda _: api, op_col, require)
         else:
-            records = prepare(changes)
-            plan = _ConformPlan(api)
-            rows = []
-            for r in records:
-                if not isinstance(r, dict):
-                    continue
-                conformed = _conform_record(
-                    {k: v for k, v in r.items() if k != op_col}, plan
-                )
-                rows.append({**conformed, op_col: r.get(op_col, "U")})
-            # StructType.add MUTATES the receiver — build a fresh copy
-            # so the payload struct used below keeps only data fields
-            ch_struct = T.StructType(list(struct.fields)).add(op_col, "string")
-            ch = self.spark.createDataFrame(_arrow_table(rows, ch_struct), ch_struct)
-        upserts = ch.filter(F.col(op_col).isin("I", "U")).select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in struct.fields]
-        )
-        changed_keys = ch.select(*keys).distinct()
+            _, table = _conform_records(data, lambda _: api, op_col)
+            ch = self.spark.createDataFrame(table, _struct(api, op_col))
+        upserts = ch.filter(F.col(op_col).isin("I", "U")).drop(op_col) if op_col else ch
         merged = (
             self.df()
-            .join(changed_keys, on=keys, how="left_anti")
+            .join(ch.select(*keys).distinct(), on=keys, how="left_anti")
             .unionByName(upserts)
         )
         data_path = os.path.join(self.path, "data")
-        tmp_path = os.path.join(self.path, f".tmp_merge_{uuid.uuid4().hex}")
+        tmp_path = os.path.join(self.path, f".tmp_rewrite_{uuid.uuid4().hex}")
         merged.write.mode("overwrite").parquet(tmp_path)
         old_path = os.path.join(self.path, f".old_{uuid.uuid4().hex}")
         if os.path.isdir(data_path):
@@ -462,17 +576,9 @@ class SparkWarehouse:
         declared when the snapshot was taken (time travel)."""
         for v in self.versions():
             if v["version"] == version:
-                snap_path = os.path.join(self.path, "snapshots", f"v{version}")
-                api = v.get("schema")
-                if not os.path.isdir(snap_path) or not os.listdir(snap_path):
-                    return self.spark.createDataFrame(
-                        [], wtypes.api_repr_to_struct_type(api or [])
-                    )
-                if api:
-                    return self.spark.read.schema(
-                        wtypes.api_repr_to_struct_type(api)
-                    ).parquet(snap_path)
-                return self.spark.read.parquet(snap_path)
+                return self._scan(
+                    os.path.join(self.path, "snapshots", f"v{version}"), v.get("schema")
+                )
         raise WarehouseTableNotFound(
             f"table {self.table!r} has no snapshot version {version}"
         )
@@ -523,10 +629,7 @@ class SparkWarehouse:
         by contract, so the driver writes it: the conformed records
         become one Arrow table, typed by Spark's own Spark→Arrow map,
         and are appended as a single file with no Spark job. A batch
-        with no rows updates the schema and writes no file. A record
-        that fails its schema (a null for a REQUIRED field, a value
-        that cannot convert) raises ``WarehouseTableRowsInvalid``
-        before anything is written.
+        with no rows updates the schema and writes no file.
 
         ``data`` may also be a Spark DataFrame (VERDICT r14 #5): that
         is the BULK path — no records round-trip, no driver
@@ -536,110 +639,37 @@ class SparkWarehouse:
         observation + treeAggregate), and the append is a straight
         ``df.write`` — every stage scales with the cluster, closing
         the verb-decade finding that the record path's collect slope
-        (6.02) is driver-bound by contract. Semantics are identical to
-        the records path: adopt-existing-schema, existing-wins field
-        merge, widen-only stable-order append.
+        (6.02) is driver-bound by contract.
+
+        Both input kinds share the schema steps above and, with
+        ``update`` and ``merge``, one conform contract: a field missing
+        at any depth is null, an unknown field drops, and a null
+        REQUIRED field or a value that cannot convert raises
+        ``WarehouseTableRowsInvalid`` before anything is written.
         """
+        existing = self.schema if self.exists() else None
+        if existing and schema is None:
+            schema = existing  # :409-410 — adopt table schema
+
+        def api_of(batch, infer) -> list[dict]:
+            if full_schema and schema:
+                api = schema  # caller asserts completeness (:413-417)
+            else:
+                api = infer(batch, schema=schema).schema
+            return self._widen_only_merge(api, existing)
+
         if isinstance(data, DataFrame):
-            src = clean_dataframe_keys(data)
-            existing = self.schema if self.exists() else None
-            if existing and schema is None:
-                schema = existing  # :409-410 — adopt table schema
-            if full_schema and schema:
-                api = schema  # caller asserts completeness (:413-417)
-            else:
-                api = infer_schema_distributed(src, schema=schema).schema
-            api = self._widen_only_merge(api, existing)
-            struct = wtypes.api_repr_to_struct_type(api)
-            have = {f.name: f.dataType for f in src.schema.fields}
-
-            def _conform_expr(col, src_type, dst_type):
-                """Recursive per-field conform (ADVICE r15 #1): a
-                whole-struct ``cast`` fails with an AnalysisException
-                when the batch's struct misses (or adds) nested fields
-                relative to the table schema, while the record path's
-                ``_conform_record`` backfills missing nested fields
-                with NULL and drops extras. Build struct columns
-                field-by-field so the two load paths evolve nested
-                schemas identically."""
-                from pyspark.sql import types as T
-
-                if src_type is None:
-                    return F.lit(None).cast(dst_type)
-                if isinstance(dst_type, T.StructType):
-                    if not isinstance(src_type, T.StructType):
-                        return col.cast(dst_type)  # loud, like the record path's type clash
-                    sub_have = {sf.name: sf.dataType for sf in src_type.fields}
-                    inner = [
-                        _conform_expr(
-                            col.getField(sub.name) if sub.name in sub_have else F.lit(None),
-                            sub_have.get(sub.name),
-                            sub.dataType,
-                        ).alias(sub.name)
-                        for sub in dst_type.fields
-                    ]
-                    # a NULL struct stays NULL (not a struct of NULLs)
-                    return F.when(col.isNotNull(), F.struct(*inner))
-                if isinstance(dst_type, T.ArrayType):
-                    if isinstance(src_type, T.ArrayType):
-                        if isinstance(dst_type.elementType, T.StructType):
-                            return F.when(
-                                col.isNotNull(),
-                                F.transform(
-                                    col,
-                                    lambda x: _conform_expr(
-                                        x, src_type.elementType, dst_type.elementType
-                                    ),
-                                ),
-                            )
-                        return col.cast(dst_type)
-                    # reference quirk parity (_conform_record): a
-                    # scalar arriving for a REPEATED field wraps into
-                    # a 1-element array; NULL stays NULL
-                    elem = _conform_expr(col, src_type, dst_type.elementType)
-                    return F.when(col.isNotNull(), F.array(elem))
-                return col.cast(dst_type)
-
-            df = src.select(
-                *[
-                    _conform_expr(F.col(f.name) if f.name in have else F.lit(None),
-                                  have.get(f.name), f.dataType).alias(f.name)
-                    for f in struct.fields
-                ]
-            )
+            api, out = _conform_dataframe(data, lambda src: api_of(src, infer_schema_distributed))
         else:
-            records = prepare(data)
-            if not isinstance(records, list):
-                raise WarehouseInvalidInput(
-                    f"expected records or DataFrame, got {type(data).__name__}"
-                )
-            existing = self.schema if self.exists() else None
-            if existing and schema is None:
-                schema = existing  # :409-410 — adopt table schema
-            if full_schema and schema:
-                api = schema  # caller asserts completeness (:413-417)
-            else:
-                api = infer_schema(records, schema=schema).schema
-            api = self._widen_only_merge(api, existing)
-            struct = wtypes.api_repr_to_struct_type(api)
-            plan = _ConformPlan(api)
-            conformed = [
-                _conform_record(r, plan) for r in records if isinstance(r, dict)
-            ]
-            table = _arrow_table(conformed, struct)
+            api, out = _conform_records(data, lambda records: api_of(records, infer_schema))
         # schema first, data second: a crash in between leaves extra
         # nullable columns, never a data file the schema cannot read
-        if not self.exists():
-            self._write_meta(
-                {"schema": api, "expires": None,
-                 "created_at": _dt.datetime.now(_dt.timezone.utc).isoformat()}
-            )
-        else:
-            self._write_meta({**self._read_meta(), "schema": api})
-        if isinstance(data, DataFrame):
-            df.write.mode("append").parquet(os.path.join(self.path, "data"))
-        elif table.num_rows:
-            self._append_file(table)
+        created = _dt.datetime.now(_dt.timezone.utc).isoformat()
+        self._write_meta({"expires": None, "created_at": created, **self._read_meta(), "schema": api})
+        if isinstance(out, DataFrame):
+            out.write.mode("append").parquet(os.path.join(self.path, "data"))
+        elif out.num_rows:
+            self._append_file(out)
         return True
 
     def _append_file(self, table: pa.Table) -> None:
@@ -713,43 +743,7 @@ class SparkWarehouse:
     def update(self, data, keys: Iterable[str]) -> bool:
         """Upsert without a lakehouse dependency (R3, stub at
         classes.py:56-58): new rows replace existing rows that match
-        on ``keys``.
-
-        Plan: existing LEFT ANTI JOIN new (drop rows being replaced)
-        UNION new, written to a temp path then atomically swapped —
-        single-writer assumption documented (SURVEY.md §7.5). The
-        anti-join shuffles once on the key; at scale, partition the
-        table by the key prefix so the rewrite touches only affected
-        partitions.
-        """
-        keys = list(keys)
-        api = self.schema
-        if api is None:
-            raise WarehouseTableNotFound(f"table {self.table!r} has no schema")
-        struct = wtypes.api_repr_to_struct_type(api)
-        if isinstance(data, DataFrame):
-            # Distributed fast path: a DataFrame source (e.g. a
-            # foreachBatch micro-batch) is conformed to the declared
-            # schema by projection+cast — no driver round-trip, so the
-            # upsert scales with the cluster, not the driver.
-            new_df = data.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in struct.fields]
-            )
-        else:
-            records = prepare(data)
-            plan = _ConformPlan(api)
-            rows = [_conform_record(r, plan) for r in records if isinstance(r, dict)]
-            new_df = self.spark.createDataFrame(_arrow_table(rows, struct), struct)
-        existing_df = self.df()
-        merged = existing_df.join(new_df, on=keys, how="left_anti").unionByName(new_df)
-
-        data_path = os.path.join(self.path, "data")
-        tmp_path = os.path.join(self.path, f".tmp_update_{uuid.uuid4().hex}")
-        merged.write.mode("overwrite").parquet(tmp_path)
-        old_path = os.path.join(self.path, f".old_{uuid.uuid4().hex}")
-        if os.path.isdir(data_path):
-            os.replace(data_path, old_path)
-        os.replace(tmp_path, data_path)
-        if os.path.isdir(old_path):
-            shutil.rmtree(old_path)
-        return True
+        on ``keys``. ``data`` (records, or a DataFrame such as a
+        ``foreachBatch`` micro-batch) is conformed as by ``load``; a
+        DataFrame must carry every key column. Plan: ``_rewrite``."""
+        return self._rewrite(data, keys)

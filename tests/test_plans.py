@@ -1171,11 +1171,11 @@ def test_bcast_measured_memo_keyed_by_file_identity(spark, tmp_path):
     spark.range(10).withColumnRenamed("id", "gram").write.mode("overwrite").parquet(p)
     df = spark.read.parquet(p)
     _util.bcast_measured(df, 100, "memo probe", tag="memo-probe")
-    keys = [k for k in _util._MEASURED_ROWS_CACHE if k[0] == "memo-probe"]
+    keys = [k for k in _util._MEASURED_MEMO if k[:2] == ("rows", "memo-probe")]
     assert len(keys) == 1
     # (a) memo consulted: poison the cached count over the ceiling —
     # the next call must go bare WITHOUT re-counting the real 10 rows
-    _util._MEASURED_ROWS_CACHE[keys[0]] = 10**9
+    _util._MEASURED_MEMO[keys[0]] = 10**9
     bare = spark.range(100).withColumnRenamed("id", "gram").join(
         _util.bcast_measured(df, 100, "memo probe", tag="memo-probe"), "gram"
     )
@@ -1308,12 +1308,12 @@ def test_eval_gram_gate_goes_bare_over_ceiling(spark, monkeypatch):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
     # clear the memo so each branch re-evaluates under its ceiling
-    _util._MEASURED_ROWS_CACHE.clear()
+    _util._MEASURED_MEMO.clear()
     monkeypatch.setattr(llm, "_EVAL_GRAM_BCAST_MAX", 0)
     bare = opt(llm.contamination_ngram_check(spark, SF_DIR))
     assert "strategy=broadcast" not in bare
 
-    _util._MEASURED_ROWS_CACHE.clear()
+    _util._MEASURED_MEMO.clear()
     monkeypatch.setattr(llm, "_EVAL_GRAM_BCAST_MAX", 1_000_000)
     hinted = opt(llm.contamination_ngram_check(spark, SF_DIR))
     assert "strategy=broadcast" in hinted

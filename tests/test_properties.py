@@ -1724,19 +1724,19 @@ def test_census_identical_pairs_are_adjudicated():
 
 def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
     """BASELINE.md measured-gate memo contract (VERDICT r17 #7): the
-    in-process gate memos may hold ONLY scalar ints keyed by (tag,
-    file-identity tuples) — never DataFrames or other derived state —
-    and measured_workload must key on EVERY input frame it is given
-    (ADVICE r17 #1), so regenerating any one input invalidates the
-    entry. Runs a real memoized measurement against two throwaway
-    parquet inputs, then audits every memo dict in the library."""
+    in-process gate memo may hold ONLY scalar ints keyed by (kind,
+    tag, file-identity tuples) — never DataFrames or other derived
+    state — measured_workload must key on EVERY input frame it is
+    given (ADVICE r17 #1), so regenerating any one input invalidates
+    the entry, and two kinds sharing a tag never collide (ADVICE r17
+    #2). Runs real memoized measurements against two throwaway parquet
+    inputs, then audits the library's one memo dict."""
     import os
     import time
 
     from pyspark.sql import DataFrame
 
     from load_datawarehouse_spark.ops import _util
-    from load_datawarehouse_spark.ops.llm import _BAND_SIZE_CACHE
 
     p1, p2 = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
     spark.range(7).write.parquet(p1)
@@ -1761,22 +1761,25 @@ def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
         "regenerating the SECOND input must invalidate the memo"
     )
 
-    for name, memo in (
-        ("_MEASURED_ROWS_CACHE", _util._MEASURED_ROWS_CACHE),
-        ("_MEASURED_WORKLOAD_CACHE", _util._MEASURED_WORKLOAD_CACHE),
-        ("_BAND_SIZE_CACHE", _BAND_SIZE_CACHE),
-    ):
-        for key, val in memo.items():
-            assert isinstance(val, int) and not isinstance(val, bool), (
-                f"{name} holds a non-int value {type(val).__name__} — "
-                "the memo contract allows scalar gate inputs only"
+    # a row count and a workload number under the SAME tag and input
+    # are different kinds: neither may read or overwrite the other
+    _util.bcast_measured(df1, 10, "memo probe", tag=tag)
+    n = _util.measured_workload(tag, df1, lambda: calls.append(1) or 99)
+    assert n == 99 and calls == [1, 1, 1], "workload read the row count"
+    assert _util._MEASURED_MEMO[("rows", tag, _util.input_files_key(df1))] == 7
+
+    for key, val in _util._MEASURED_MEMO.items():
+        assert isinstance(val, int) and not isinstance(val, bool), (
+            f"_MEASURED_MEMO holds a non-int value {type(val).__name__} — "
+            "the memo contract allows scalar gate inputs only"
+        )
+        assert not isinstance(val, DataFrame)
+        assert isinstance(key, tuple), f"_MEASURED_MEMO key {key!r} not a tuple"
+        # (kind, tag, *one file-identity tuple per input)
+        kind, tag_, *ident = key
+        assert isinstance(kind, str) and isinstance(tag_, str), key
+        assert ident, f"_MEASURED_MEMO key {key!r} has no file identity"
+        for part in ident:
+            assert isinstance(part, tuple), (
+                f"_MEASURED_MEMO key {key!r} carries a non-file-identity part"
             )
-            assert not isinstance(val, DataFrame)
-            assert isinstance(key, tuple), f"{name} key {key!r} not a tuple"
-            # _BAND_SIZE_CACHE keys are the bare file-identity tuple;
-            # the tagged memos prepend a str tag
-            ident = key[1:] if key and isinstance(key[0], str) else key
-            for part in ident:
-                assert isinstance(part, tuple), (
-                    f"{name} key {key!r} carries a non-file-identity part"
-                )

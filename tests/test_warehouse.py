@@ -608,3 +608,166 @@ def test_conform_alternating_schemas():
             _conform_record({"x": 1, "y": {"k": None}}, s)
     # the same nested field is nullable under the other schema
     assert _conform_record({"y": [{"k": None}]}, plan_b) == {"y": [{"k": None}], "x": None}
+
+
+# --- one conform contract for load, update and merge ------------------------
+
+_CONFORM_SCHEMA = [
+    {"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+    {"name": "na_me", "type": "STRING", "mode": "NULLABLE"},
+    {"name": "meta", "type": "RECORD", "mode": "NULLABLE", "fields": [
+        {"name": "a", "type": "STRING", "mode": "NULLABLE"},
+        {"name": "b", "type": "INTEGER", "mode": "NULLABLE"},
+    ]},
+]
+_REQUIRED_SCHEMA = [
+    {"name": "id", "type": "INTEGER", "mode": "REQUIRED"},
+    {"name": "meta", "type": "RECORD", "mode": "NULLABLE", "fields": [
+        {"name": "k", "type": "STRING", "mode": "REQUIRED"},
+    ]},
+    {"name": "items", "type": "RECORD", "mode": "REPEATED", "fields": [
+        {"name": "sku", "type": "STRING", "mode": "REQUIRED"},
+    ]},
+]
+_REQUIRED_DDL = "id long, meta struct<k:string>, items array<struct<sku:string>>"
+_REQUIRED_GOOD = {"id": 1, "meta": {"k": "a"}, "items": [{"sku": "s"}]}
+_ROW1 = {"id": 1, "na_me": "one", "meta": {"a": "p", "b": 1}}
+
+# case -> (table schema, batch rows, DataFrame DDL, landed row 2 or the
+# (error, field) the batch is rejected with)
+_CONFORM_CASES = {
+    "missing-nullable": (
+        _CONFORM_SCHEMA, [{"id": 2, "meta": {"a": "x", "b": 3}}],
+        "id long, meta struct<a:string,b:long>",
+        {"id": 2, "na_me": None, "meta": {"a": "x", "b": 3}},
+    ),
+    "dirty-name": (
+        _CONFORM_SCHEMA, [{"id": 2, "na me": "zz", "meta": {"a": "x", "b": 3}}],
+        "id long, `na me` string, meta struct<a:string,b:long>",
+        {"id": 2, "na_me": "zz", "meta": {"a": "x", "b": 3}},
+    ),
+    "nested-subset": (
+        _CONFORM_SCHEMA, [{"id": 2, "na_me": "zz", "meta": {"a": "x"}}],
+        "id long, na_me string, meta struct<a:string>",
+        {"id": 2, "na_me": "zz", "meta": {"a": "x", "b": None}},
+    ),
+    "single-dict": (
+        _CONFORM_SCHEMA, {"id": 2, "na_me": "zz"}, None, (WarehouseInvalidInput, None),
+    ),
+    "no-op-column": (
+        _CONFORM_SCHEMA, [{"id": 2, "na_me": "zz"}], "id long, na_me string",
+        (WarehouseInvalidInput, "op"),
+    ),
+    "no-key-column": (
+        _CONFORM_SCHEMA, [{"na_me": "zz"}], "na_me string", (WarehouseInvalidInput, "id"),
+    ),
+    "required-top": (
+        _REQUIRED_SCHEMA, [{**_REQUIRED_GOOD, "id": None}], _REQUIRED_DDL,
+        (WarehouseTableRowsInvalid, "id"),
+    ),
+    "required-nested": (
+        _REQUIRED_SCHEMA, [{**_REQUIRED_GOOD, "id": 2, "meta": {"k": None}}], _REQUIRED_DDL,
+        (WarehouseTableRowsInvalid, "k"),
+    ),
+    "required-repeated": (
+        _REQUIRED_SCHEMA,
+        [{**_REQUIRED_GOOD, "id": 2, "items": [{"sku": "a"}, {"sku": None}]}],
+        _REQUIRED_DDL, (WarehouseTableRowsInvalid, "sku"),
+    ),
+}
+
+
+def _tuples(value):
+    if isinstance(value, dict):
+        return tuple(_tuples(v) for v in value.values())
+    if isinstance(value, list):
+        return [_tuples(v) for v in value]
+    return value
+
+
+@pytest.mark.parametrize(
+    "verb, kind, case",
+    [
+        (verb, kind, case)
+        for case in ("missing-nullable", "dirty-name", "nested-subset",
+                     "required-top", "required-nested", "required-repeated")
+        for verb in ("load", "update", "merge")
+        for kind in ("records", "dataframe")
+    ]
+    + [("load", "records", "single-dict"), ("update", "records", "single-dict"),
+       ("merge", "records", "single-dict"), ("merge", "dataframe", "no-op-column"),
+       ("update", "dataframe", "no-key-column"), ("merge", "dataframe", "no-key-column")],
+)
+def test_verbs_share_one_conform_contract(spark, root, verb, kind, case):
+    """load, update and merge conform records and DataFrames alike:
+    the same batch lands the same row through every verb and input
+    kind, and a batch one of them rejects is rejected by all before
+    the table changes. A merge record without an op is an update; a
+    merge DataFrame must carry its op column."""
+    schema, rows, ddl, want = _CONFORM_CASES[case]
+    first = _REQUIRED_GOOD if schema is _REQUIRED_SCHEMA else _ROW1
+    wh = SparkWarehouse.new(spark, root, "conform", schema=schema, data=[first])
+    if verb == "merge" and case != "no-op-column" and kind == "dataframe":
+        rows, ddl = [{**r, "op": "U"} for r in rows], ddl + ", op string"
+    batch = spark.createDataFrame([_tuples(r) for r in rows], ddl) if kind == "dataframe" else rows
+    apply = {
+        "load": lambda: wh.load(batch),
+        "update": lambda: wh.update(batch, keys=["id"]),
+        "merge": lambda: wh.merge(batch, keys=["id"]),
+    }[verb]
+    if isinstance(want, tuple):
+        meta_before, files_before = open(wh._meta_path).read(), _data_listing(wh)
+        error, field = want
+        with pytest.raises(error, match=repr(field) if field else None):
+            apply()
+        assert open(wh._meta_path).read() == meta_before
+        assert _data_listing(wh) == files_before
+        assert wh.df().count() == 1
+        return
+    assert apply() is True
+    assert wh.schema == schema
+    got = {r["id"]: r.asDict(recursive=True) for r in wh.df().collect()}
+    assert got == {1: first, 2: want}
+
+
+def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
+    """perfbench/trace.py times the loader's layers by wrapping these
+    module and class attributes; each verb must still reach them, or
+    a layer's metric would silently read 0."""
+    from collections import Counter
+
+    from load_datawarehouse_spark import warehouse
+
+    calls = Counter()
+
+    def counting(owner, name):
+        fn = getattr(owner, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    for name in ("prepare", "clean_dataframe_keys", "infer_schema",
+                 "infer_schema_distributed", "_conform_record"):
+        counting(warehouse, name)
+    for name in ("load", "merge"):
+        counting(SparkWarehouse, name)
+
+    wh = SparkWarehouse.new(spark, root, "credits")
+    expect = {
+        "records load": (lambda: wh.load(RECORDS),
+                         {"prepare", "infer_schema", "_conform_record", "load"}),
+        "DataFrame load": (lambda: wh.load(_records_as_df(spark)),
+                           {"clean_dataframe_keys", "infer_schema_distributed", "load"}),
+        "records update": (lambda: wh.update(RECORDS[:1], keys=["id"]),
+                           {"prepare", "_conform_record"}),
+        "records merge": (lambda: wh.merge([{**RECORDS[0], "op": "U"}], keys=["id"]),
+                          {"prepare", "_conform_record", "merge"}),
+    }
+    for what, (run, credited) in expect.items():
+        calls.clear()
+        run()
+        missing = {n for n in credited if not calls[n]}
+        assert not missing, f"{what} no longer calls {sorted(missing)}"

@@ -268,14 +268,18 @@ def test_f3_articles_golden_schema():
 def test_f3_round_trips_through_spark(spark):
     # the inferred api_repr must produce a StructType Spark accepts,
     # and the conformed records must load losslessly
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from load_datawarehouse_spark import types as wtypes
+    from load_datawarehouse_spark.data import prepare
     from load_datawarehouse_spark.warehouse import _conform_record
 
     records = _f3_records()
     api = infer_schema(records).schema
     struct = wtypes.api_repr_to_struct_type(api)
-    df = spark.createDataFrame(
-        [_conform_record(r, api) for r in records], struct
-    )
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(_conform_record(prepare(records), api, arrow), schema=arrow)
+    df = spark.createDataFrame(table, struct)
     assert df.count() == len(records)
     assert {f.name for f in df.schema.fields} == {f["name"] for f in api}

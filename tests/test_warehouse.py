@@ -538,6 +538,55 @@ def test_rejected_record_load_changes_nothing(spark, root, bad, field):
     assert wh.df().count() == 1
 
 
+_TYPED_SCHEMA = [
+    {"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+    {"name": "n", "type": "INTEGER", "mode": "NULLABLE"},
+    {"name": "f", "type": "FLOAT", "mode": "NULLABLE"},
+    {"name": "meta", "type": "RECORD", "mode": "NULLABLE", "fields": [
+        {"name": "k", "type": "STRING", "mode": "REQUIRED"},
+    ]},
+    {"name": "tag", "type": "RECORD", "mode": "NULLABLE", "fields": [
+        {"name": "v", "type": "STRING", "mode": "NULLABLE"},
+    ]},
+]
+
+
+@pytest.mark.parametrize("verb", ["load", "update", "merge"])
+@pytest.mark.parametrize(
+    "bad, field",
+    [
+        ({"n": "abc"}, "n"),
+        ({"n": float("nan")}, "n"),
+        ({"n": [1]}, "n"),
+        ({"f": "abc"}, "f"),
+        ({"f": {"a": 1}}, "f"),
+        ({"meta": []}, "meta"),
+        ({"tag": ""}, "tag"),  # Arrow alone reads an empty sequence as a record of nulls
+    ],
+    ids=["str-in-int", "nan-in-int", "list-in-int", "str-in-float", "dict-in-float",
+         "list-in-record", "empty-str-in-record"],
+)
+def test_unconvertible_value_is_rejected_before_any_write(spark, root, verb, bad, field):
+    """A value of another kind meets an existing typed field, which
+    inference no longer observes: every verb rejects it naming the
+    field, and the sidecar and data files stay as they were."""
+    good = {"id": 1, "n": 1, "f": 1.0, "meta": {"k": "a"}}
+    wh = SparkWarehouse.new(spark, root, "typed", schema=_TYPED_SCHEMA, data=[good])
+    meta_before = open(wh._meta_path).read()
+    files_before = _data_listing(wh)
+    batch = [{**good, "id": 2}, {**good, "id": 3, **bad}]
+    run = {
+        "load": lambda: wh.load(batch),
+        "update": lambda: wh.update(batch, keys=["id"]),
+        "merge": lambda: wh.merge([{**r, "op": "I"} for r in batch], keys=["id"]),
+    }[verb]
+    with pytest.raises(WarehouseTableRowsInvalid, match=repr(field)):
+        run()
+    assert open(wh._meta_path).read() == meta_before
+    assert _data_listing(wh) == files_before
+    assert wh.df().count() == 1
+
+
 def test_update_and_merge_reject_required_null(spark, root):
     wh = SparkWarehouse.new(spark, root, "strict_up", schema=_STRICT_SCHEMA, data=[{"id": 1}])
     with pytest.raises(WarehouseTableRowsInvalid, match="'id'"):
@@ -578,8 +627,19 @@ def test_snapshot_reads_driver_written_files(spark, root):
     assert wh.df_at(v2).filter("extra = 'x'").count() == 1
 
 
+def _conform_one(record, schema):
+    """``record`` conformed alone through the batch pass, as a dict."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from load_datawarehouse_spark.warehouse import _conform_record, _struct
+
+    arrow = to_arrow_schema(_struct(schema))
+    return pa.Table.from_arrays(_conform_record([record], schema, arrow), schema=arrow).to_pylist()[0]
+
+
 def test_conform_alternating_schemas():
-    from load_datawarehouse_spark.warehouse import _conform_record, _ConformPlan
+    from load_datawarehouse_spark.warehouse import _conform_scalar
 
     a = [
         {"name": "x", "type": "INTEGER", "mode": "NULLABLE"},
@@ -595,19 +655,20 @@ def test_conform_alternating_schemas():
     ]
     want_a = {"x": 1, "y": {"k": "2"}}
     want_b = {"y": [{"k": 2}], "x": "True"}
-    plan_a, plan_b = _ConformPlan(a), _ConformPlan(b)
-    cases = [(a, plan_a, want_a, 7), (b, plan_b, want_b, "7.0")]
+    cases = [(a, want_a, 7), (b, want_b, "7.0")]
     for i in range(6):
-        schema, plan, want, x7 = cases[i % 2]
-        for s in (schema, plan):
-            got = _conform_record({"x": True, "y": {"k": 2}}, s)
-            assert got == want and type(got["x"]) is type(want["x"])
-            assert _conform_record({"x": 7.0, "y": {"k": "2"}}, s)["x"] == x7
-    for s in (a, plan_a):
+        schema, want, x7 = cases[i % 2]
+        got = _conform_one({"x": True, "y": {"k": 2}}, schema)
+        assert got == want and type(got["x"]) is type(want["x"])
+        assert _conform_one({"x": 7.0, "y": {"k": "2"}}, schema)["x"] == x7
+    # the conversions themselves, before Arrow sees them
+    assert type(_conform_scalar(True, "INTEGER")) is int
+    assert _conform_scalar(True, "STRING") == "True"
+    for y in ({"k": None}, {}):  # null, then absent from every record
         with pytest.raises(WarehouseTableRowsInvalid, match="'k'"):
-            _conform_record({"x": 1, "y": {"k": None}}, s)
+            _conform_one({"x": 1, "y": y}, a)
     # the same nested field is nullable under the other schema
-    assert _conform_record({"y": [{"k": None}]}, plan_b) == {"y": [{"k": None}], "x": None}
+    assert _conform_one({"y": [{"k": None}]}, b) == {"y": [{"k": None}], "x": None}
 
 
 # --- one conform contract for load, update and merge ------------------------
@@ -771,3 +832,10 @@ def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
         run()
         missing = {n for n in credited if not calls[n]}
         assert not missing, f"{what} no longer calls {sorted(missing)}"
+    # the conform pass runs once per batch, not once per record
+    per_batch = []
+    for n in (1, 200):
+        calls.clear()
+        wh.load([{"id": 10_000 + i, "name": f"n{i}", "score": 0.5, "tags": ["t"]} for i in range(n)])
+        per_batch.append(calls["_conform_record"])
+    assert per_batch == [1, 1]

@@ -110,7 +110,7 @@ HEADLINE = [
     # sublinear in data (slope10 6.19 / 3.78). At bench scale (sf0.1)
     # the per-iteration term is fixed scheduler overhead, which is the
     # distortion the exclusion avoids. It remains oracle-checked and is
-    # benched at scale by scalecheck.py / scalecheck10.py.
+    # benched at scale by scalecheck.py (both decades).
 ]
 
 

@@ -27,9 +27,12 @@ output, and a label census is ``n_distinct`` + the min/max pair of a
 low-cardinality string column.
 
 Output: ``CENSUS.json`` — ``{"scales": {label: {query: {...}}}}``.
-Per-scale maps MERGE over the existing artifact (like
-``scalecheck.py --only``), so sf0.01 and sf1 runs compose and a
-chunked ``--only a,b,c`` run never clobbers rows it did not measure.
+Per-scale maps MERGE over the existing artifact (like the one scale
+harness, ``scalecheck.py [--decade 2] --only``, does over its
+per-decade artifact), so sf0.01 and sf1 runs compose and a chunked
+``--only a,b,c`` run never clobbers rows it did not measure. Like
+``scalecheck.py``'s first decade and ``scaleverify.py``, it sweeps
+the registry itself, never a hand-kept copy of it.
 Queries since removed from the registry are pruned from the merged
 map. ``tests/test_properties.py::test_census_covers_registry_and_no_
 allnull_columns`` consumes the artifact: every registered query must

@@ -2051,9 +2051,9 @@ FROM pairs GROUP BY d1 ORDER BY day
 def _band_grid(t) -> DataFrame:
     """Orders keyed into the (price-band, time-band) grid — the ONE
     derivation shared by ``orders_price_time_band_pairs`` and its
-    workload counter ``_count_band_grid_candidates`` so the recorded
-    ``slope_per_candidate_pair`` can never measure a different
-    bucketing than the op pays."""
+    pair bound ``_bound_band_grid_pairs`` so the recorded
+    ``slope_per_pair_slot`` can never measure a different bucketing
+    than the op pays."""
     return t["orders"].select(
         F.col("o_orderkey").alias("k"),
         F.col("o_custkey").alias("cust"),
@@ -2127,23 +2127,17 @@ def orders_price_time_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _count_band_grid_candidates(spark: SparkSession, sf_dir: str) -> int:
+def _bound_band_grid_pairs(spark: SparkSession, sf_dir: str) -> int:
     """Exact number of joined row slots ``orders_price_time_band_pairs``'s
     grid join emits — sum over 3x3 neighbor offsets of
     sum_cells h(pc+dp, tc+dt) * h(pc, tc) — computed LINEARLY from the
     cell histogram (one groupBy + a 9-exploded histogram self-join;
-    never order x order). Registered in ``CANDIDATE_PAIR_COUNTS`` so
-    the scale sweeps record a measured ``slope_per_candidate_pair``
-    for this op (VERDICT r15 #3). History: through round 16 the scale
-    corpus replicated orders into a FIXED calendar span, so cell
-    occupancy — and the band-pair workload — grew ~quadratically per
-    decade BY CONSTRUCTION (slope10 12.24 with per-candidate 0.122);
-    round 17 made scalegen grow the calendar span with sf (per-copy
-    backward date stride, VERDICT r16 #3), restoring the
-    linear-workload regime a real growing corpus produces. The
-    accounting still separates workload growth from engine scaling.
-    Shares ``_band_grid`` / ``_band_offsets`` with the op itself so
-    the counted workload cannot drift from the paid one."""
+    never order x order). Registered in ``CANDIDATE_PAIR_BOUNDS``, so
+    the scale sweeps record it as ``pair_slots``: the scale corpus
+    grows its calendar span with sf, so cell occupancy stays flat
+    (1.5M -> 15.2M slots across sf1 -> sf10), as in a real growing
+    corpus. Shares ``_band_grid`` / ``_band_offsets`` with the op
+    itself so the counted workload cannot drift from the paid one."""
     t = load_tables(spark, sf_dir, register_views=False)
     cells = _band_grid(t).groupBy("pc", "tc").agg(F.count(F.lit(1)).alias("n"))
     offs = _band_offsets(spark)

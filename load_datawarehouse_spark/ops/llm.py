@@ -312,8 +312,8 @@ def _capped_shingle_pairs(ds: DataFrame) -> DataFrame:
     ``(d1 < d2, n_common)`` for every doc pair sharing >= 1 shingle
     whose document frequency is within ``MAX_SHINGLE_DF``. This is THE
     pre-threshold candidate stage of both ``dedup_ngram_jaccard`` and
-    ``dedup_shingle_containment`` (and the frame whose cardinality
-    scalecheck records as ``candidates`` for those ops).
+    ``dedup_shingle_containment``; ``_bound_shingle_pairs`` bounds its
+    cardinality linearly for the scale sweeps and budget gates.
 
     r17: the df >= 2 pre-filter is new but pure pruning (a single-doc
     shingle joins only with itself and d1 < d2 discarded it); a
@@ -676,7 +676,7 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in duplicate density (the pre-round-12 rotation-based
     scale corpus measured ~1000x sf0.1's pairs at sf1 at 0.01x the
     per-pair cost; the permutation-based corpus keeps the dup rate
-    flat, and scalecheck's `candidates` column now accounts the pair
+    flat, and scalecheck's `pair_slots` column accounts the pair
     workload directly). Route 100-TB consumers to
     ``dedup_neardup_clusters`` for linear one-row-per-doc output."""
     t = load_tables(spark, sf_dir, register_views=False)
@@ -1350,7 +1350,7 @@ def _label_pair_workload(emb) -> int:
     within-label contract must score, computed LINEARLY from the label
     histogram (one groupBy on the slim label column, no pair join).
     Shared by the in-op budget gate (:func:`_label_cos_edges`) and the
-    sweep's candidate counter (``_count_label_pairs``) so the two can
+    sweep's pair bound (``_bound_label_pairs``) so the two can
     never drift."""
     n = F.col("n").cast("double")
     row = (
@@ -1977,7 +1977,8 @@ def _simhash_band_pairs(sh: DataFrame) -> DataFrame:
     """Banded candidate pairs of the simhash pigeonhole blocking:
     ``(d1 < d2, h1, h2)`` for every doc pair agreeing on at least one
     15-bit band — the pre-hamming-filter candidate stage shared by
-    ``dedup_simhash_neardup`` and its scalecheck candidate counter.
+    ``dedup_simhash_neardup`` and its pair bound
+    (``_bound_simhash_pairs`` buckets the same bands).
     NOT distinct: a pair agreeing on two bands appears twice (that is
     the join fanout the op actually pays for)."""
     bands = _simhash_bands(sh)
@@ -5720,7 +5721,7 @@ ORDER BY d1, d2
 def _tfidf_weights(t) -> DataFrame:
     """(doc_id, term, tf-idf weight) rows over the DF-capped vocabulary
     — the shared sparse-vector stage of ``dedup_tfidf_cosine_pairs``
-    (norms + dots) and its scalecheck candidate counter."""
+    (norms + dots) and its pair bound ``_bound_tfidf_pairs``."""
     # spread the single-file scan: the explode-heavy narrow stage ran
     # as ONE task at test scale (sf0.1/sf1 A/B in commit message).
     # r18: keyed on doc_id — the tf aggregation below (grouping keys
@@ -6129,8 +6130,8 @@ def dedup_jaccard_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataF
     cnt = arrs.filter(F.size("shingles") >= 1).select(
         "doc_id", F.size("shingles").cast("long").alias("n")
     )
-    # the shared pre-threshold candidate stage (same frame
-    # _count_shingle_candidates records as ``candidates`` for this op)
+    # the shared pre-threshold candidate stage (the frame
+    # _bound_shingle_pairs bounds as ``pair_slots`` for this op)
     pairs = _capped_shingle_pairs(ds)
     decile = F.floor(
         (10 * F.col("n_common")) / (F.col("n1") + F.col("n2") - F.col("n_common"))
@@ -7925,96 +7926,14 @@ def embedding_pca_second_component(spark: SparkSession, sf_dir: str) -> DataFram
 # Candidate-pair accounting for the pair-producing dedup family
 # ---------------------------------------------------------------------------
 
-def _count_shingle_candidates(spark: SparkSession, sf_dir: str) -> int:
-    t = load_tables(spark, sf_dir, register_views=False)
-    ds = _shingles(t, spread=True).transform(lineage_cut)
-    return _capped_shingle_pairs(ds).count()
-
-
-def _count_lsh_candidates(spark: SparkSession, sf_dir: str) -> int:
-    # the LSH op's output IS the candidate set (distinct bucket pairs)
-    return dedup_minhash_lsh(spark, sf_dir).count()
-
-
-def _count_jaccard_verified(spark: SparkSession, sf_dir: str) -> int:
-    # levenshtein_verify's expensive kernel runs once per VERIFIED
-    # jaccard pair — that output is its candidate list
-    return dedup_ngram_jaccard(spark, sf_dir).count()
-
-
-def _count_tfidf_candidates(spark: SparkSession, sf_dir: str) -> int:
-    t = load_tables(spark, sf_dir, register_views=False)
-    return _tfidf_dots(_tfidf_weights(t)).count()
-
-
-def _count_simhash_candidates(spark: SparkSession, sf_dir: str) -> int:
-    t = load_tables(spark, sf_dir, register_views=False)
-    sh = _simhash60(t).transform(lineage_cut)
-    return _simhash_band_pairs(sh).count()
-
-
-def _count_label_pairs(spark: SparkSession, sf_dir: str) -> int:
+def _bound_label_pairs(spark: SparkSession, sf_dir: str) -> int:
     # the exact within-label contract evaluates every C(n_label, 2)
     # pair; the tiled router changes WHERE they run, not how many.
-    # Delegates to the SAME histogram sum the in-op budget gate uses
-    # (_require_pair_budget in _label_cos_edges) so sweep accounting
+    # The SAME histogram sum the in-op budget gate uses
+    # (_require_pair_budget in _label_cos_edges), so sweep accounting
     # and the op's own refusal threshold cannot drift.
     t = load_tables(spark, sf_dir, register_views=False)
     return _label_pair_workload(t["embeddings"])
-
-
-def _count_corpus_text_chars(spark: SparkSession, sf_dir: str) -> int:
-    """Total text characters in the corpus — the workload unit of the
-    byte-linear per-row kernels (normalize + hash reads every char
-    exactly once). VERDICT r15 #3: ``dedup_exact_normalized``'s
-    slope10 of 12.31 looked ~20% superlinear against ROW growth, but
-    the scale corpus's copy-keyed token remap LENGTHENS tokens in
-    later copies (avg 297 / 395 / 453 chars per doc at sf0.1/1/10),
-    so BYTES grow 11.48x across the sf1->sf10 decade — against the
-    measured char workload the op is linear (~1.07 per char)."""
-    t = load_tables(spark, sf_dir, register_views=False)
-    row = t["documents"].agg(F.sum(F.length("text")).alias("c")).collect()[0]
-    return int(row["c"] or 0)
-
-
-#: op name -> pre-threshold WORKLOAD counter, (spark, sf_dir) -> int.
-#: The unit is the op's intrinsic work driver — candidate pairs for
-#: the banded/bucketed pair families, corpus chars for byte-linear
-#: kernels. Consumed by scalecheck.py / scalecheck10.py so slope
-#: outliers whose cost is workload-growth-driven (incl. ones whose
-#: FINAL output shrinks under a DF cap, e.g.
-#: dedup_shingle_containment) carry a measured
-#: ``slope_per_candidate_pair`` instead of an argued one. Each counter
-#: re-derives the op's OWN workload stage from the shared helper the
-#: op itself calls, so the two cannot drift.
-CANDIDATE_PAIR_COUNTS = {
-    # byte-linear normalize+hash kernel: workload = corpus chars
-    # (the token-remapped scale corpus grows ~11.5x chars per decade)
-    "dedup_exact_normalized": _count_corpus_text_chars,
-    "dedup_ngram_jaccard": _count_shingle_candidates,
-    "dedup_shingle_containment": _count_shingle_candidates,
-    # shares _capped_shingle_pairs verbatim (round-13 refactor made
-    # the call shared instead of inlined)
-    "dedup_jaccard_threshold_histogram": _count_shingle_candidates,
-    "dedup_levenshtein_verify": _count_jaccard_verified,
-    "dedup_minhash_lsh": _count_lsh_candidates,
-    "dedup_minhash_verified": _count_lsh_candidates,
-    # cluster collapse over the dedup_ngram_jaccard edge set — its
-    # expensive stage IS that op's capped-shingle candidate join
-    "dedup_neardup_clusters": _count_shingle_candidates,
-    "dedup_tfidf_cosine_pairs": _count_tfidf_candidates,
-    "dedup_simhash_neardup": _count_simhash_candidates,
-    "dedup_embedding_neardup": _count_label_pairs,
-    # same exact within-label pair graph as embedding_neardup
-    # (shared _label_cos_edges)
-    "dedup_semantic_clusters": _count_label_pairs,
-}
-
-# 2-D grid-cell pair workload (fixed calendar span -> occupancy grows
-# per decade by construction); counter lives next to the op
-from load_datawarehouse_spark.ops.analytics import _count_band_grid_candidates  # noqa: E402
-
-CANDIDATE_PAIR_COUNTS["orders_price_time_band_pairs"] = _count_band_grid_candidates
 
 
 def _bucket_pair_sum(df: DataFrame, *keys: str) -> int:
@@ -8074,18 +7993,20 @@ def _bound_theta_pairs(spark: SparkSession, sf_dir: str) -> int:
     return _theta_pair_workload(t)
 
 
-#: op name -> CHEAP upper bound on its candidate-pair workload,
-#: (spark, sf_dir) -> int. Each bound is the bucket-histogram sum
-#: sum C(bucket, 2) over the op's own blocking keys — linear in the
-#: corpus, never a pair join — and upper-bounds the matching
-#: CANDIDATE_PAIR_COUNTS value (multiplicity >= distinct pairs).
-#: scalecheck10 consults these BEFORE timing an op at sf10: a bound
-#: past its budget means the quadratic term is workload-intrinsic on
-#: the saturated-vocabulary synthetic corpus (fixed vocab => shingle
-#: DFs pile up under the cap as the corpus grows, unlike a real
-#: Heaps-law corpus where new vocabulary keeps DFs ~flat), and the op
-#: is recorded as skipped WITH the measured bound instead of burning
-#: hours on an audit view whose production path (LSH buckets /
+# the 2-D grid-cell join's slot count lives next to its op, sharing
+# its cell derivation
+from load_datawarehouse_spark.ops.analytics import _bound_band_grid_pairs  # noqa: E402
+
+#: op name -> the op's pair workload, (spark, sf_dir) -> int: the one
+#: per-op workload registry. Each entry is a bucket-histogram sum over
+#: the op's own blocking keys — linear in the corpus, never a pair
+#: join — so it counts the join-row slots the candidate stage emits
+#: (multiplicity >= distinct pairs) and upper-bounds the op's output.
+#: The in-op budget gates share these functions. ``scalecheck.py``
+#: records them as ``pair_slots`` at both scales of a decade and
+#: consults the big-side value BEFORE timing an op: a bound past its
+#: budget is recorded as skipped WITH the measured bound instead of
+#: burning hours on an audit view whose production path (LSH buckets /
 #: neardup_clusters) is measured in the same run.
 CANDIDATE_PAIR_BOUNDS = {
     "dedup_ngram_jaccard": _bound_shingle_pairs,
@@ -8106,10 +8027,11 @@ CANDIDATE_PAIR_BOUNDS = {
     # embedding family), so the sf10 sweep must consult the bound and
     # record the skip instead of hitting WarehousePairBudgetExceeded
     "join_theta": _bound_theta_pairs,
-    "dedup_embedding_neardup": _count_label_pairs,
+    "dedup_embedding_neardup": _bound_label_pairs,
     # same exact within-label pair graph as embedding_neardup (shared
     # _label_cos_edges); round 12 measured the ungated run once at
     # sf10 — 759 s for the 2.0B-pair exact contract (SCALECHECK10) —
     # and gates it here so future sweeps record the bound instead
-    "dedup_semantic_clusters": _count_label_pairs,
+    "dedup_semantic_clusters": _bound_label_pairs,
+    "orders_price_time_band_pairs": _bound_band_grid_pairs,
 }

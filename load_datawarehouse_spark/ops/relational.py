@@ -2425,8 +2425,8 @@ def graph_pagerank(
     localCheckpoint every ~5 rounds to cut lineage depth.
 
     ``iters`` overrides the iteration count for TIMING-ONLY callers
-    (scalecheck10's t(k) = build + k*per_iter attribution, ADVICE r16
-    #3 — previously a monkeypatch of the module global); the
+    (``scalecheck.py --decade 2``'s t(k) = build + k*per_iter
+    attribution — previously a monkeypatch of the module global); the
     REGISTERED query always runs the default ``_PR_ITERS`` = 3, which
     is what the 3-iteration oracle SQL verifies."""
     t = load_tables(spark, sf_dir, register_views=False)

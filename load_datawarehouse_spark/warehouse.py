@@ -193,22 +193,26 @@ def _struct(api: list[dict], op_col: str | None = None) -> T.StructType:
 def _conform_records(data, api_of, op_col: str | None = None) -> tuple[list[dict], pa.Table]:
     """Fit a record batch to the schema ``api_of(records)`` as one Arrow
     table typed by Spark's own Spark→Arrow map: a field missing at any
-    depth is null, an unknown field drops, and a null REQUIRED field or
-    a value that cannot convert raises ``WarehouseTableRowsInvalid``
-    naming the field. ``op_col`` adds a merge's op column (``"U"``
-    where a record has none). Returns ``(api, table)``."""
+    depth is null, an unknown field drops, and a record that is not a
+    dict, a null REQUIRED field or a value that cannot convert raises
+    ``WarehouseTableRowsInvalid``. ``op_col`` adds a merge's op column
+    (``"U"`` where a record has none). Returns ``(api, table)``."""
     records = prepare(data)
     if not isinstance(records, list):
         raise WarehouseInvalidInput(f"expected records or DataFrame, got {type(data).__name__}")
+    odd = [r for r in records if not isinstance(r, dict)]
+    if odd:
+        raise WarehouseTableRowsInvalid(
+            f"{len(odd)} record(s) are not dicts (the first is {type(odd[0]).__name__})"
+        )
     api = api_of(records)
     schema = to_arrow_schema(_struct(api, op_col))
-    rows = [r for r in records if isinstance(r, dict)]
-    if rows and not len(schema):
+    if records and not len(schema):
         raise WarehouseTableRowsInvalid("records have no fields to write")
-    columns = _conform_record(rows, api, schema)
+    columns = _conform_record(records, api, schema)
     if op_col:
         with _naming(op_col, pa.string()):
-            columns.append(pa.array([r.get(op_col, "U") for r in rows], pa.string()))
+            columns.append(pa.array([r.get(op_col, "U") for r in records], pa.string()))
     return api, pa.Table.from_arrays(columns, schema=schema)
 
 
@@ -474,8 +478,8 @@ class SparkWarehouse:
         the full MERGE INTO semantics ``update`` (upsert-only) lacks.
         ``changes`` (records or a DataFrame) is conformed as by
         ``load``; a record without ``op_col`` is an update, and a
-        DataFrame must carry ``op_col`` and every key column. Plan:
-        ``_rewrite``."""
+        DataFrame must carry ``op_col`` and every key column. ``op_col``
+        must not name a table column. Plan: ``_rewrite``."""
         return self._rewrite(changes, keys, op_col)
 
     def _rewrite(self, data, keys: Iterable[str], op_col: str | None = None) -> bool:
@@ -493,6 +497,14 @@ class SparkWarehouse:
         api = self.schema
         if api is None:
             raise WarehouseTableNotFound(f"table {self.table!r} has no schema")
+        # Spark resolves names case-insensitively, so a table column
+        # like op_col would make the op column ambiguous
+        clash = [f["name"] for f in api if op_col and f["name"].lower() == op_col.lower()]
+        if clash:
+            raise WarehouseInvalidInput(
+                f"op_col {op_col!r} collides with the table's column {clash[0]!r}; "
+                "pass another op_col"
+            )
         if isinstance(data, DataFrame):
             require = keys + [op_col] if op_col else keys
             _, ch = _conform_dataframe(data, lambda _: api, op_col, require)

@@ -1,465 +1,226 @@
-"""Measured scaling evidence: wall-time slope sf0.1 -> sf1.
+"""Scale evidence: per-query wall-time slope across one 10x data decade.
 
-Runs the scale-relevant queries at the driver's sf0.1 data AND the
-replicated sf1 data from ``scalegen.py`` (10x rows, key space scaled,
-perturbed text/embeddings) and reports the per-query slope
+Decade 1 times every registered query at the driver's sf0.1 data and at
+the replicated sf1 data from ``scalegen.py`` (10x rows, key space
+scaled, perturbed text/embeddings). Decade 2 re-times a hand-picked set
+at sf1 and sf10: a superlinear term that adds 20% at one decade adds 4x
+at two. Each row reports
 
-    slope = t(sf1) / t(sf0.1)
+    slope = t(big) / t(small)        against the 10x data growth
 
-against the 10x data growth. A slope near (or below) 10 on local[32]
-means the plan does per-row work with no superlinear term — the hard
-evidence behind the plan-shape locks in tests/test_plans.py. Also
-times the skew-stress join salted vs unsalted on the sf1 data, where
-the zipfian hot key is big enough for straggler effects to show.
+A slope near (or below) 10 means the plan does per-row work with no
+superlinear term — the evidence behind the plan-shape locks in
+tests/test_plans.py. Decade-2 rows also carry the op's decade-1 slope
+(``slope1``) and their ratio.
 
-Usage: python scalegen.py 10 && python scalecheck.py
-Writes SCALECHECK.json and prints one JSON line.
+Pair-producing ops record their pair workload at both scales as
+``pair_slots``, from ``ops.llm.CANDIDATE_PAIR_BOUNDS`` (bucket-histogram
+sums over the op's own blocking keys, computed linearly with no pair
+join; the in-op budget gates share the same functions), plus
+``slope_per_pair_slot``, which separates workload-intrinsic pair growth
+from engine scaling. An op whose big-side bound passes
+``PAIR_SLOT_BUDGET`` is timed on the small side only and recorded as
+skipped with its bound.
+
+Timing: warm-up plus min-of-2 ``count()``. Decade 2 warms only the sf1
+side: the sf1 pass already JIT-warmed every plan shape, and at sf10 run
+times are long enough that first-run jitter is second-order.
+
+Each decade also measures a few rows that are not registered queries
+(``Decade.extras``). They run on a full sweep or when named in
+``--only``; otherwise the artifact keeps their previous measurement.
+
+Usage:
+    python scalegen.py 10 && python scalecheck.py [--only a,b]
+    python scalegen.py 100 && python scalecheck.py --decade 2 [--only a,b]
+Writes SCALECHECK.json (decade 1) or SCALECHECK10.json (decade 2),
+merging over it on ``--only``, and prints one JSON line.
 """
 
 from __future__ import annotations
 
+import argparse
+import dataclasses
+import functools
+import gc
 import json
 import os
 import sys
 import time
+from typing import Callable
 
-SCALE_QUERIES = [
+from scalegen import SRC
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+
+#: a big-side pair-slot bound past this is recorded, not run: on the
+#: synthetic corpus such a workload is intrinsic to the op's blocking
+#: keys, and its production-path siblings are measured in the same table
+PAIR_SLOT_BUDGET = 300_000_000
+
+#: Decade 2's sweep, chosen from decade-1 slopes of earlier data models
+#: (the current SCALECHECK.json no longer reproduces that choice), so
+#: the list is fixed here.
+SCALE10_QUERIES = [
+    # every op whose decade-1 slope exceeded 3
+    "join_theta",
+    "dedup_levenshtein_verify",
+    "dedup_tfidf_cosine_pairs",
+    "dedup_neardup_clusters",
+    "dedup_embedding_neardup",
+    "dedup_exact_normalized",
+    "dedup_ngram_jaccard",
+    "text_token_entropy",
+    "quality_hashed_classifier",
+    "dedup_strategy_comparison",
+    "dedup_shingle_containment",
+    "ngram_lm_counts",
+    "lang_id_confusion",
+    "dedup_lsh_bucket_skew",
+    "multimodal_video_frame_dedup",
+    "quality_perplexity_buckets",
+    "dedup_jaccard_threshold_histogram",
+    "lm_commonness_score",
+    "udtf_bigrams",
+    "search_rrf_fusion",
+    "pipeline_curation_v3",
+    "dedup_minhash_verified",
+    "graph_pagerank",
+    "q13_order_distribution",
+    "orders_price_time_band_pairs",
+    "join_range_bucketed",
+    "join_inner",
+    "join_anti",
+    "dedup_template_groups",
+    "orders_cohort_ltv_curve",
+    "pipeline_training_prep",
+    "orders_pareto_skyline",
+    "stream_static_enrich",
+    "multimodal_feature_extract",
+    "tokenizer_vocab_coverage",
+    "stream_ingest_warehouse",
+    "multimodal_decode_flac_real",
+    "text_novelty_per_doc",
+    "subq_scalar_avg_qty",
+    # iterative ML, the flagship joins and the reshaped pair ops
+    "kmeans_lloyd",
+    "embedding_pca_power_iteration",
+    "embedding_pca_second_component",
+    "join_asof",
+    "join_skew_salted",
+    "join_bucketed_colocated",
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q10_returned_items",
-    "join_asof",
-    "time_window_session",
-    "topk_per_group",
-    "dedup_exact_keep_first",
-    "dedup_minhash_lsh",
-    "dedup_minhash_verified",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_neardup",
-    "similarity_cosine_topk",
-    "similarity_lsh_topk",
-    "tfidf_top_terms",
-    "contamination_ngram_check",
-    "pipeline_training_prep_v2",
-    "ts_resample_interpolate",
-    "graph_pagerank",  # at sf1 the event graph is real, not stage overhead
-    # round-4 additions
-    "q18_large_volume_customer",
-    "similarity_sq_topk",
-    "importance_resample_dsir",
-    "dedup_intradoc_segments",
-    "quality_perplexity_buckets",
-    "basket_affinity_lift",
-    # round-8: support-pruned + hub-capped semantics (min co-order
-    # support 4, degree cap 2048) turned the near-complete synthetic
-    # co-order graph into a 1.1M-edge affinity graph at sf1, closing
-    # the one slope-table hole (see the op's docstring).
-    "graph_triangle_count",
-    "attribution_last_touch",
-    "features_user_daily",
-    "search_bm25_topk",
-    "text_token_entropy",
-    "quality_domain_cap",
-    "window_running_distinct",
-    "dq_key_skew_gini",
-    "ts_cusum_changepoint",
-    "dedup_tfidf_cosine_pairs",
-    "pipeline_split_decontam_audit",
-    "pipeline_curation_v3",
-    "events_rolling_wau",
-    "orders_open_backlog_daily",
-    "bpe_first_merges",
-    "orders_pareto_skyline",
-    # round-4 session additions
-    "events_funnel_regex",
-    "heavy_hitters_misra_gries",
-    "text_novelty_per_doc",
-    "quality_hashed_classifier",
-    "sample_balanced_classes",
-    "part_bom_rollup",
-    "orders_concurrent_pairs",
-    "embedding_pca_power_iteration",
-    "sample_priority_weighted",
-    "stat_subsample_bootstrap_ci",
-    "basket_frequent_triples",
-    "ts_gap_fill_locf",
-    "geo_radius_pairs_bucketed",
-    "text_rake_keyphrases",
-    "lang_id_ngram_profile",
-    "multimodal_cdc_chunk_dedup",
-    "stats_classifier_kappa",
-    "stat_wasserstein_1d",
-    "orders_price_time_band_pairs",
-    "orders_spc_control_chart",
-    "multimodal_video_frame_dedup",
-    "ts_holt_linear",
-    # round-4 post-validation wave + round-5 additions
-    "stats_sprt_monitoring",
-    "basket_association_rules",
-    "stat_empirical_bayes_rates",
-    "pipeline_experiment_readout",
-    "stat_matched_pairs_uplift",
-    "embedding_pca_second_component",
-    "ts_forecast_baseline_backtest",
-    "multimodal_histogram_dedup",
-    "stream_backfill_then_tail",
-    "multimodal_decode_audio_real",
-    "multimodal_decode_flac_real",
-    # round-6 additions: the pair-view variants and lineage-cut
-    # beneficiaries whose physical plans changed in r5 (verdict ask) —
-    # lock their slopes post-change
-    "dedup_jaccard_threshold_histogram",
-    "dedup_incremental_batch",
-    "dedup_shingle_containment",
-    "dedup_strategy_comparison",
-    "dedup_lsh_bucket_skew",
-    "dedup_cascade_report",
-    "contamination_bloom_prefilter",
-    "dedup_neardup_clusters",
-    # dedup_semantic_clusters was OUT in round 6 (>35 min at sf1: the
-    # label-blocked pair graph on replicated embeddings was ~100x
-    # denser). Round 7's banded-LSH edge blocking cut one sf1
-    # evaluation to ~78 s, so it is measured again.
-    "dedup_semantic_clusters",
-    "quality_dedup_rate_by_source",
-    # round-7 expansion: one representative per plan family that had
-    # no sf1 evidence yet — join strategies, grouping shuffles,
-    # window frames, set ops, streaming at volume, pipeline
-    # analytics, UDF/Arrow paths, and distributed schema inference
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_approx_count_distinct",
-    "agg_weighted_median",
-    "join_inner",
-    "join_semi",
-    "join_anti",
-    "join_skew_salted",
     "join_range_bands",
-    "window_ranking",
-    "window_rows_frame",
-    "window_moving_median",
-    "window_share_of_total",
-    "setop_except_all",
-    "pivot_multi_agg",
-    "unpivot_long",
-    "topk_global",
-    "gap_islands_streaks",
-    "subq_in_groupby_having",
-    "q8_market_share",
-    "q9_product_profit",
-    "scd2_order_history",
-    "retention_cohorts",
-    "funnel_conversion",
-    "markov_event_transitions",
-    "rfm_segmentation",
-    "survival_kaplan_meier",
-    "events_dau_wau_stickiness",
-    "events_peak_concurrency_daily",
-    "stream_sliding_counts",
-    "stream_session_windows",
-    "stream_dedup_watermark",
-    "dedup_exact_groups",
-    "dedup_url_canonical",
-    "doc_fingerprint_simhash",
-    "split_train_val_test",
-    "sample_stratified_hash",
-    "quality_gopher_filters",
-    "pii_scrub",
-    "token_count",
-    "udf_pandas_vectorized",
-    "udaf_grouped_agg_pandas",
-    "kmeans_lloyd",
-    "schema_infer_documents",
-    # round-7 expansion, second wave: the remaining scalar / set-op /
-    # window / join / subquery / TPC-H / UDF-flavor / multimodal-meta
-    # faces, the streaming remainder, and the warehouse verbs that
-    # write real data at volume
-    "scalar_string",
-    "scalar_date",
-    "scalar_math",
-    "scalar_case_when",
-    "scalar_array",
-    "scalar_map",
-    "scalar_url_extract",
-    "scalar_null_semantics",
-    "scalar_try_arith",
-    "scalar_bitwise_family",
-    "scalar_calendar_edges",
-    "scalar_string_shape",
-    "scalar_encoding_family",
-    "scalar_geo_wkt",
-    "setop_union_all",
-    "setop_intersect",
-    "setop_except",
-    "setop_distinct",
-    "setop_intersect_all",
-    "window_lag_lead",
-    "window_ntile",
-    "window_first_last",
-    "window_distribution",
-    "window_range_frame",
-    "window_dedup_latest",
-    "window_rank_delta",
-    "window_ema_fold",
-    "window_rolling_zscore",
-    "window_running_drawdown",
-    "join_left_outer",
-    "join_full_outer",
-    "join_cross",
-    "join_theta",
-    "join_null_safe_eq",
-    "join_asof_forward",
-    "join_bucketed_colocated",
-    "join_hint_shuffle_hash",
-    "q4_order_priority",
-    "q11_important_stock",
-    "q12_priority_lines",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q20_excess_suppliers",
-    "q22_idle_rich_segments",
-    "subq_scalar_avg_qty",
-    "subq_not_exists_idle_rich",
-    "agg_basic",
-    "agg_percentiles",
-    "agg_mode",
-    "agg_approx_percentile",
-    "agg_string_agg",
-    "events_velocity_flags",
-    "events_bot_detection",
-    "funnel_time_to_convert",
-    "attribution_first_touch",
-    "udf_python_scalar",
-    "udf_arrow_optimized",
-    "udf_map_in_arrow",
-    "udf_pandas_iter",
-    "udf_cogrouped_merge",
-    "udtf_bigrams",
-    "udtf_sessionize_table_arg",
-    "udaf_apply_in_pandas",
-    "time_window_tumbling",
-    "time_window_sliding",
-    "multimodal_media_meta",
-    "multimodal_modality_stats",
-    "multimodal_payload_entropy",
-    "multimodal_image_dhash",
-    "multimodal_audio_energy",
-    "text_normalize",
-    "text_readability_score",
-    "text_zipf_fit",
-    "text_heaps_law_curve",
-    "lang_id_markers",
-    "lang_id_confusion",
-    "doc_repetition_score",
-    "histogram_fixed_bins",
-    "warehouse_load_fetch",
-    "warehouse_load_dataframe",
-    "warehouse_load_nested_evolution",
-    "warehouse_merge_cdc",
-    "warehouse_time_travel",
-    "warehouse_incremental_view",
-    # round-7 expansion, third wave: the full registry remainder
-    "agg_higher_moments",
-    "events_anomaly_zscore",
-    "abc_pareto_analysis",
-    "regression_ols_exact",
-    "events_burst_hours",
-    "orders_monthly_growth",
-    "events_interarrival_stats",
-    "stat_chi_square",
-    "agg_mean_family",
-    "stats_winsorized",
-    "warehouse_snapshot_diff",
-    "layout_zorder_clustering",
-    "source_partition_pruned_read",
-    "graph_degree_stats",
-    "customer_value_decay",
-    "events_top_paths_3step",
-    "stat_mann_kendall_trend",
-    "events_anomaly_iqr",
-    "orders_cohort_ltv_curve",
-    "supplier_ontime_rate",
-    "events_user_lifecycle_states",
-    "events_autocorr_lags",
-    "orders_benford_first_digit",
-    "warehouse_right_to_forget",
-    "warehouse_mv_rewrite",
-    "agg_boolean_family",
-    "regression_per_group_trend",
-    "source_schema_merge_read",
-    "source_csv_malformed_handling",
-    "orders_duplicate_suspects",
-    "stat_anova_weekday_revenue",
-    "stat_ks_two_sample",
-    "orders_revenue_bridge",
-    "source_federated_union",
-    "lineitem_return_rate_monthly",
-    "customer_concentration_hhi",
-    "customer_first_last_ratio",
-    "orders_sla_attainment",
-    "supplier_dual_sourcing_parts",
-    "orders_priority_drift_chi2",
-    "stat_spearman_qty_price",
-    "events_winback_gaps",
-    "customer_coverage_half_revenue",
-    "part_realized_vs_retail_margin",
-    "exec_daily_kpis",
-    "stat_dispersion_index",
-    "agg_median_abs_deviation",
-    "warehouse_etl_capstone",
-    "events_type_pmi",
-    "warehouse_idempotent_backfill",
-    "orders_aging_report",
-    "events_weekend_lift",
-    "histogram_2d_qty_price",
-    "geo_haversine_topk",
-    "sessions_gap_sensitivity",
-    "orders_nation_shift_share",
-    "agg_product_discount_factor",
-    "doc_fingerprint_rolling",
-    "dedup_levenshtein_verify",
-    "dedup_template_groups",
-    "dedup_minhash_estimate_quality",
-    "array_set_ops_pairs",
-    "similarity_ivf_topk",
-    "dedup_connected_components",
-    "dedup_exact_normalized",
-    "sample_temperature_mix",
-    "sample_topk_hash_per_group",
-    "search_rrf_fusion",
-    "embedding_norm_outliers",
-    "quality_source_lang_entropy",
-    "quality_source_kl_divergence",
-    "dedup_embedding_exact",
-    "contamination_embedding_check",
-    "pipeline_source_quality_card",
-    "stream_stateful_user_stats",
-    "stream_stream_join",
-    "stream_stream_left_outer_join",
-    "stream_ingest_warehouse",
-    "stream_topk_per_window",
-    "stream_late_data_drop",
-    "stream_update_mode_history",
-    "stream_upsert_warehouse",
-    "stream_static_enrich",
-    "stream_transform_with_state",
-    "stream_chained_windows",
-    "stream_ivm_aggregate",
-    "stream_exactly_once_sink",
-    "stream_union_sources",
-    "stream_temporal_dim_join",
-    "multimodal_frame_sample",
-    "multimodal_resize_thumbnail",
-    "multimodal_shard_packing",
-    "multimodal_dedup_payload",
-    "multimodal_caption_pairs",
-    "multimodal_video_shot_boundaries",
-    "multimodal_audio_silence_segments",
-    "udtf_dynamic_schema",
-    "join_right_outer",
-    "pivot_wide",
-    "chunking_distributed",
-    "join_dynamic_partition_pruned",
-    "stat_corr_cov",
-    "warehouse_expiry_sweep",
-    "warehouse_schema_evolution",
-    "warehouse_compact_small_files",
-    "join_asof_nearest",
-    "agg_filtered_aggregates",
-    "agg_argmax_struct",
-    "warehouse_vacuum_snapshots",
-    "join_asof_tolerance",
-    "agg_grouping_id",
-    "source_formats_roundtrip",
-    "ts_seasonal_decompose",
-    "orders_month_pacing_curve",
-    "stat_theil_sen_monthly",
-    "agg_sketch_set_intersection",
-    "warehouse_branch_merge",
-    "stat_mannwhitney_u",
-    "warehouse_quarantine_load",
-    "scalar_ip_cidr_family",
-    "dq_json_schema_drift",
-    "stats_ab_test_proportions",
-    "warehouse_clone_zero_copy",
-    "warehouse_two_table_atomic_publish",
-    "stats_diff_in_diff",
-    "warehouse_partitioned_upsert",
-    "agg_corr_matrix_single_pass",
-    "graph_label_propagation",
-    "features_user_hash_vector",
-    "stats_ab_power_mde",
-    # round-7: banded-LSH blocking chained into the label cells —
-    # lock the slope of the new (label, band, bkey) candidate join
-    "dedup_embedding_neardup",
-    # round-7 final wave: the HEADLINE-only remainder, so every
-    # registry query has a slope row (sf1 oracle checks already cover
-    # these via scaleverify's SCALE_QUERIES + HEADLINE union)
-    "events_hour_dow_heatmap",
-    "dq_expectations_report",
-    "agg_bitmap_distinct",
-    "ngram_lm_counts",
-    "embedding_label_centroids",
-    "contamination_decontaminate_apply",
-    "tokenizer_vocab_coverage",
-    "text_stats",
-    "quality_score",
-    "pipeline_training_prep",
+    "contamination_bloom_prefilter",
+    "dedup_minhash_lsh",
+    "dedup_simhash_neardup",
+    "dedup_semantic_clusters",
+    # every other op whose decade-1 slope exceeded 2
+    "basket_affinity_lift",
+    "basket_frequent_triples",
+    "bpe_first_merges",
+    "contamination_ngram_check",
+    "dedup_cascade_report",
     "dedup_crossdoc_segments",
-    "pack_training_sequences",
-    "lm_commonness_score",
-    "corpus_token_budget_allocation",
-    "stream_tumbling_counts",
-    "multimodal_feature_extract",
-    "multimodal_decode_image_real",
+    "dedup_incremental_batch",
+    "dedup_intradoc_segments",
+    "events_burst_hours",
+    "events_velocity_flags",
+    "events_winback_gaps",
+    "gap_islands_streaks",
+    "join_asof_forward",
+    "join_asof_nearest",
+    "join_asof_tolerance",
+    "heavy_hitters_misra_gries",
+    "join_semi",
+    "lang_id_ngram_profile",
+    "multimodal_caption_pairs",
     "multimodal_pipeline_prep",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "agg_groupby_distinct",
-    "json_extract_props",
-    "join_range_bucketed",
-    "subq_exists_late_ship",
-    "rollup_hypertable",
-    "q7_nation_volume",
-    "agg_hll_mergeable_rollup",
-    "join_skew_stress",
-    "profile_column_stats",
+    "multimodal_resize_thumbnail",
     "nest_order_lines",
-    "histogram_equi_depth",
-    "q2_min_cost_supplier",
-    "q13_order_distribution",
+    "orders_open_backlog_daily",
+    "pipeline_training_prep_v2",
+    "q12_priority_lines",
     "q16_supplier_part_counts",
-    "q19_disjunctive_revenue",
-    "q21_sole_late_supplier",
+    "q17_small_qty_revenue",
+    "q22_idle_rich_segments",
+    "q2_min_cost_supplier",
+    "q7_nation_volume",
+    "q9_product_profit",
+    "rfm_segmentation",
+    "search_bm25_topk",
+    "setop_intersect",
+    "source_federated_union",
+    "stat_empirical_bayes_rates",
+    "stats_classifier_kappa",
+    "stream_session_windows",
+    "subq_not_exists_idle_rich",
+    "survival_kaplan_meier",
+    "text_rake_keyphrases",
+    "udtf_dynamic_schema",
 ]
 
+#: Decade-2 adjudication notes attached to rows at generation time
+#: (hand-edits to the artifact would be clobbered by the next run).
+_ROW_NOTES_10 = {
+    "dedup_minhash_verified": (
+        "slope_per_pair_slot > 1 is an accounting artifact, not a "
+        "superlinear verify: LSH bucket pairs grow only ~3.4x per decade "
+        "(disjoint-vocabulary replication keeps cross-copy bands cold) "
+        "while the op's dominant cost — minhash signatures over every "
+        "document — is byte-linear at the corpus's 11.5x chars/decade "
+        "(signature leg matches dedup_exact_normalized; candidate join "
+        "matches dedup_minhash_lsh's own row)."
+    ),
+    "dedup_exact_normalized": (
+        "byte-linear kernel: the token remap lengthens tokens in later "
+        "copies (avg 297/395/453 chars/doc at sf0.1/1/10), so corpus "
+        "chars grow 11.48x per decade and row-based slopes read ~15% "
+        "high."
+    ),
+}
 
-def _warehouse_verb_decade(spark, sf_dir: str, df_legs_only: bool = False) -> dict:
-    """One decade of the reference-parity verb surface (VERDICT r13
-    #6): drives the S2 load path (prepare -> infer/merge -> append)
-    and the R3 merge over the documents table at ``sf_dir``, timing
-    each stage separately so driver-side bottlenecks are NAMED, not
-    argued.
 
-    ``df_legs_only`` (VERDICT r15 #5, consumed by scalecheck10.py)
-    skips the record-oriented legs (collect + record load) and times
-    only the distributed paths a 100-TB load actually takes —
-    ``load(DataFrame)`` and ``merge`` — so the second decade can be
-    measured without collecting half a million documents to the
-    driver for a leg whose driver-bound cost is already recorded as
-    reference contract.
+def _release() -> None:
+    """Per-query epilogue: unpersist cluster-mode lineage-cut frames,
+    then drop lazy-localCheckpoint RDD references, so block storage
+    from one query cannot pressure the next one's heap."""
+    from load_datawarehouse_spark.ops._util import release_lineage_cuts
 
-    The reference's load contract is record-oriented (streaming-
-    insert rows through the client), so the measurement honestly
-    includes the driver-side stages that contract implies: collect to
-    records, pure-Python prepare + schema inference over every
-    record, and a driver-side createDataFrame. Those ARE the S2
-    bottleneck at scale — a 100-TB deployment routes bulk loads
-    through the DataFrame path (`merge` here, or `update`/`df.write`)
-    and keeps the record verb for trickle inserts. merge() takes the
-    change batch as a DataFrame and stays fully distributed.
-    """
+    release_lineage_cuts()
+    gc.collect()
+
+
+def _best(run: Callable, warm: bool):
+    """min-of-2 wall time of ``run()`` (after one warm-up run when
+    ``warm``) and its last result."""
+    if warm:
+        run()
+    best, out = None, None
+    for _ in range(2):
+        t0 = time.perf_counter()
+        out = run()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    _release()
+    return best, out
+
+
+def _time(fn, *args, warm: bool = True) -> tuple[float, int]:
+    """:func:`_best` of ``fn(*args).count()``: wall time and row count."""
+    return _best(lambda: fn(*args).count(), warm)
+
+
+def _verb_decade_at(spark, sf_dir: str, df_legs_only: bool) -> dict:
+    """One scale of the warehouse verb surface over the documents table
+    at ``sf_dir``: the record load (collect to records, then prepare →
+    infer/merge → append on the driver), the DataFrame load (clean →
+    distributed infer → conform → append) and a CDC merge, each timed
+    separately so driver-side bottlenecks are named. ``df_legs_only``
+    skips the record legs, whose driver-bound cost is the reference's
+    record-oriented contract and is measured once, in decade 1."""
     import shutil
     import tempfile
 
@@ -468,39 +229,29 @@ def _warehouse_verb_decade(spark, sf_dir: str, df_legs_only: bool = False) -> di
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    if df_legs_only:
-        n_rows = docs.count()
-    else:
-        t0 = time.perf_counter()
-        records = [r.asDict() for r in docs.collect()]
-        t_collect = time.perf_counter() - t0
-        n_rows = len(records)
-
+    row = {}
     root = tempfile.mkdtemp(prefix="wh_decade_")
     try:
-        t_load = None
-        if not df_legs_only:
-            wh = SparkWarehouse(spark, root, "documents")
+        if df_legs_only:
+            row["rows_loaded"] = docs.count()
+        else:
             t0 = time.perf_counter()
-            wh.load(records)
-            t_load = time.perf_counter() - t0
-
-        # the round-15 bulk path: same verb, DataFrame in — clean ->
-        # distributed infer (treeAggregate) -> conform -> append, no
-        # driver materialization anywhere
+            records = [r.asDict() for r in docs.collect()]
+            row["collect_sec"] = round(time.perf_counter() - t0, 3)
+            row["rows_loaded"] = len(records)
+            target = SparkWarehouse(spark, root, "documents")
+            t0 = time.perf_counter()
+            target.load(records)
+            row["load_sec"] = round(time.perf_counter() - t0, 3)
         wh_df = SparkWarehouse(spark, root, "documents_df")
         t0 = time.perf_counter()
         wh_df.load(docs)
-        t_load_df = time.perf_counter() - t0
-
-        # CDC batch: ~1% updates, ~1% deletes, ~1% inserts, shipped
-        # as a DataFrame (the distributed merge path)
-        base = docs.filter(F.col("doc_id") % 100 < 3)
-        changes = base.select(
-            F.when(
-                F.col("doc_id") % 100 == 2,
-                F.col("doc_id") + F.lit(10_000_000_000),
-            )
+        row["load_df_sec"] = round(time.perf_counter() - t0, 3)
+        if df_legs_only:
+            target = wh_df
+        # CDC batch as a DataFrame: ~1% updates, ~1% deletes, ~1% inserts
+        changes = docs.filter(F.col("doc_id") % 100 < 3).select(
+            F.when(F.col("doc_id") % 100 == 2, F.col("doc_id") + F.lit(10_000_000_000))
             .otherwise(F.col("doc_id"))
             .alias("doc_id"),
             *[c for c in docs.columns if c != "doc_id"],
@@ -510,228 +261,370 @@ def _warehouse_verb_decade(spark, sf_dir: str, df_legs_only: bool = False) -> di
             .when(F.col("doc_id") % 100 == 1, F.lit("D"))
             .otherwise(F.lit("I")),
         )
-        n_changes = changes.count()
-        target = wh_df if df_legs_only else wh
+        row["n_changes"] = changes.count()
         t0 = time.perf_counter()
         target.merge(changes, keys=["doc_id"])
-        t_merge = time.perf_counter() - t0
-        n_final = target.df().count()
+        row["merge_sec"] = round(time.perf_counter() - t0, 3)
+        row["rows_after_merge"] = target.df().count()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    row = {
-        "rows_loaded": n_rows,
-        "load_df_sec": round(t_load_df, 3),
-        "merge_sec": round(t_merge, 3),
-        "n_changes": n_changes,
-        "rows_after_merge": n_final,
-    }
-    if not df_legs_only:
-        row["collect_sec"] = round(t_collect, 3)
-        row["load_sec"] = round(t_load, 3)
     return row
 
 
-def _time(fn, *args) -> tuple[float, int]:
-    fn(*args).count()  # warmup: codegen/JIT
-    best, n = None, 0
-    for _ in range(2):
-        t0 = time.perf_counter()
-        n = fn(*args).count()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    # per-query epilogue: unpersist cluster-mode lineage-cut frames,
-    # then drop lazy-localCheckpoint RDD references, so block storage
-    # from one query cannot pressure the next one's heap
-    from load_datawarehouse_spark.ops._util import release_lineage_cuts
-
-    release_lineage_cuts()
-    import gc
-
-    gc.collect()
-    return best, n
+def _verb_decade(spark, d: "Decade", df_legs_only: bool, note: str) -> dict:
+    _verb_decade_at(spark, d.small, df_legs_only)  # warm-up: codegen/JIT/FS
+    row = {label: _verb_decade_at(spark, path, df_legs_only)
+           for label, path in ((d.small_label, d.small), (d.big_label, d.big))}
+    s, b = row[d.small_label], row[d.big_label]
+    row["slopes"] = {k[:-4]: round(b[k] / s[k], 2) for k in s if k.endswith("_sec")}
+    row["note"] = note
+    return row
 
 
-def main() -> None:
-    here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, here)
-    # sf1 working sets + accumulated checkpoint blocks need more than
-    # the 8g engine default in one long measurement session
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    small = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    big = os.path.join(here, ".scaledata", "sf1.0")
-    if not os.path.isdir(big):
-        raise SystemExit("run `python scalegen.py 10` first")
+def _skew_stress(spark, d: "Decade") -> dict:
+    """Selective hot-key salting vs the unsalted shuffle on a zipfian
+    key at the big scale, where stragglers show."""
+    from load_datawarehouse_spark.ops.relational import _skew_stress_join
+
+    out = {}
+    for label, salted in (("salted", True), ("unsalted", False)):
+        t, n = _time(_skew_stress_join, spark, d.big, salted)
+        out[label] = {"sec": round(t, 3), "rows": n}
+    return out
+
+
+def _schema_infer_input(spark, sf_dir: str):
+    """A wide nested frame over documents — flat scalars, a 2-deep
+    struct, a repeated string and a repeated struct — so distributed
+    inference walks the whole lattice at corpus scale."""
+    from pyspark.sql import functions as F
+
+    from load_datawarehouse_spark.session import load_tables
+
+    d = load_tables(spark, sf_dir, register_views=False)["documents"]
+    return d.select(
+        "doc_id", "lang", "source", "n_chars",
+        F.struct(
+            F.col("lang").alias("lang"),
+            F.col("n_chars").alias("chars"),
+            F.struct(F.col("source").alias("origin")).alias("meta"),
+        ).alias("hdr"),
+        F.slice(F.split("text", " "), 1, 8).alias("head_words"),
+        F.array(F.struct(F.lit("n_chars").alias("k"), F.col("n_chars").alias("v"))).alias("kvs"),
+    )
+
+
+def _schema_infer(spark, d: "Decade") -> dict:
+    """``infer_schema_distributed`` is the reference-parity core, and it
+    returns an InferenceResult, not a DataFrame, so it is timed here
+    rather than registered as a query."""
+    from load_datawarehouse_spark.schema_infer import infer_schema_distributed
+
+    def timed(sf_dir: str, warm: bool):
+        df = _schema_infer_input(spark, sf_dir)
+        best, res = _best(lambda: infer_schema_distributed(df), warm)
+        return best, res.n_records, len(res.schema)
+
+    t_s, n_s, f_s = timed(d.small, True)
+    t_b, n_b, f_b = timed(d.big, d.warm_big)
+    return {
+        f"{d.small_label}_sec": round(t_s, 3),
+        f"{d.big_label}_sec": round(t_b, 3),
+        d.slope_key: round(t_b / t_s, 2),
+        "rows": [n_s, n_b],
+        "n_fields": [f_s, f_b],
+        "note": "infer_schema_distributed over a 7-column nested "
+        "frame (2-deep struct + repeated string + repeated "
+        "struct); per-partition Observation + treeReduce merge — "
+        "driver condense input is the merged type tree "
+        "(n_fields rows), independent of corpus size",
+    }
+
+
+def _pagerank_attribution(spark, d: "Decade") -> dict:
+    """graph_pagerank's cost split into graph build and per-iteration
+    work at both scales: with t(k) = build + k * per_iter,
+    per_iter = (t(3) - t(1)) / 2 and build = t(1) - per_iter. The
+    iteration count goes through the op's timing-only ``iters``
+    keyword; the registered query always runs its default."""
+    from load_datawarehouse_spark.ops import relational
+
+    def t(sf_dir: str, iters: int, warm: bool) -> float:
+        fn = functools.partial(relational.graph_pagerank, iters=iters)
+        return _time(fn, spark, sf_dir, warm=warm)[0]
+
+    t1 = [t(d.small, 1, True), t(d.big, 1, False)]
+    t3 = [t(d.small, 3, False), t(d.big, 3, False)]
+    per = [max((b - a) / 2, 0.0) for a, b in zip(t1, t3)]
+    build = [max(a - p, 0.0) for a, p in zip(t1, per)]
+    return {
+        "iters1_sec": [round(x, 3) for x in t1],
+        "iters3_sec": [round(x, 3) for x in t3],
+        "build_sec": [round(x, 3) for x in build],
+        "per_iteration_sec": [round(x, 3) for x in per],
+        "build_slope10": round(build[1] / build[0], 2) if build[0] else None,
+        "per_iteration_slope10": round(per[1] / per[0], 2) if per[0] else None,
+        "note": "t(k) = build + k*per_iter measured at k=1,3 (min-of-2 "
+        f"each; columns are [{d.small_label}, {d.big_label}]). build = edges "
+        "derivation (orders x lineitem distinct + lineage cut + node "
+        "count); per_iter = contributions join + agg + rank update.",
+    }
+
+
+@dataclasses.dataclass(frozen=True)
+class Decade:
+    """Everything that differs between the two decades."""
+
+    small: str  # scale directories, relative to the repo or absolute
+    big: str
+    small_label: str  # row key prefixes: f"{label}_sec"
+    big_label: str
+    slope_key: str
+    artifact: str
+    driver_mem: str  # SPARK_GRAFT_DRIVER_MEM default
+    warm_big: bool  # warm up the big side too
+    names: list[str] | None  # the sweep; None: every registered query
+    #: row name -> measure(spark, decade) for rows that are not queries
+    extras: dict[str, Callable]
+    extras_in_queries: bool  # False: extras are top-level artifact keys
+    prior: int | None = None  # decade whose slope each row also carries
+    row_notes: dict[str, str] = dataclasses.field(default_factory=dict)
+    note: str = ""
+
+
+DECADES = {
+    1: Decade(
+        small=SRC,  # the data scalegen.py replicates
+        big=".scaledata/sf1.0",
+        small_label="sf0.1",
+        big_label="sf1",
+        slope_key="slope",
+        artifact="SCALECHECK.json",
+        # sf1 working sets + accumulated checkpoint blocks need more
+        # than the 8g engine default in one long measurement session
+        driver_mem="16g",
+        warm_big=True,
+        names=None,
+        extras={
+            "warehouse_verb_decade": functools.partial(
+                _verb_decade, df_legs_only=False,
+                note="S2 load with records in is record-oriented by reference "
+                "contract: the decade cost is driver-side (collect + "
+                "pure-Python prepare/infer + Arrow build scale with row "
+                "count on ONE machine). load_df is the bulk path — the SAME "
+                "verb with a DataFrame in (distributed infer, conform, "
+                "append; no driver materialization), so its slope is the "
+                "engine's, like R3 merge. At 100 TB, bulk loads pass a "
+                "DataFrame to load() or merge/update; the record form is "
+                "for trickle inserts.",
+            ),
+            "skew_stress_sf1": _skew_stress,
+        },
+        extras_in_queries=False,
+        note=(
+            "10x data (scalegen.py replication of sf0.1 with key-space "
+            "scaling, copy-keyed token remaps on documents and copy-unique "
+            "orthogonal transforms on embeddings, which keep dup/near-dup "
+            "RATES flat across scale decades). slope = t(sf1)/t(sf0.1) over "
+            "every registered query. Pair-producing ops carry `pair_slots` "
+            "([sf0.1, sf1] bucket-pair sums over the op's own blocking keys, "
+            "from ops.llm.CANDIDATE_PAIR_BOUNDS — linear, no pair join) and "
+            "`slope_per_pair_slot`, separating workload-intrinsic pair growth "
+            "from engine scaling. skew_stress_sf1: selective hot-key salting "
+            "vs the unsalted shuffle on a zipfian key at sf1. Rows measured "
+            "before the bounds became the one workload registry carry "
+            "`candidates` / `slope_per_candidate_pair` from the retired "
+            "pair-join counters instead."
+        ),
+    ),
+    2: Decade(
+        small=".scaledata/sf1.0",
+        big=".scaledata/sf10.0",
+        small_label="sf1",
+        big_label="sf10",
+        slope_key="slope10",
+        artifact="SCALECHECK10.json",
+        driver_mem="24g",
+        warm_big=False,
+        names=SCALE10_QUERIES,
+        extras={
+            "schema_infer_distributed": _schema_infer,
+            "warehouse_verb_decade_df": functools.partial(
+                _verb_decade, df_legs_only=True,
+                note="second decade of the two distributed verb legs "
+                "(load with a DataFrame in: clean -> distributed infer -> "
+                "conform -> append; merge: CDC batch as a DataFrame). The "
+                "record-contract legs (collect + record load) are "
+                "decade-1-only by design — their driver-bound cost is "
+                "recorded as reference contract in SCALECHECK.json.",
+            ),
+            "graph_pagerank_attribution": _pagerank_attribution,
+        },
+        extras_in_queries=True,
+        prior=1,
+        row_notes=_ROW_NOTES_10,
+        note=(
+            "second decade: 10x data sf1 -> sf10 (scalegen.py K=100; "
+            "key-space scaled, token-remapped doc copies with disjoint "
+            "per-copy vocabularies, shift+Rademacher orthogonal embedding "
+            "copies; embedding cross-copy cosines keep a measured ~1-2% "
+            "tail above 0.3, the 1/sqrt(dim) floor scalegen prints at "
+            "generation time). slope10 = t(sf10)/t(sf1). `superlinear` "
+            "(slope1*slope10 > 120) = wall time outgrew the 100x data across "
+            "both decades — the scale-killer signal; `accelerating` (slope10 "
+            "> 1.5*slope1) usually means decade 1 was overhead-bound and "
+            "decade 2 reached CPU-saturated LINEAR throughput (slope10 -> 10 "
+            "is t ~ N) — an investigate-list, not a verdict. `pair_slots` "
+            "are [sf1, sf10] bucket-pair sums from CANDIDATE_PAIR_BOUNDS; "
+            "`sf10_skipped` rows passed the pair-slot budget and their "
+            "production-path siblings run in the same table. Rows measured "
+            "before the bounds became the one workload registry carry "
+            "`candidates` / `candidate_bound` instead."
+        ),
+    ),
+}
+
+
+def _error(errors: dict, name: str, exc: Exception) -> None:
+    errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+    print(f"# {name}: ERROR {errors[name]}", file=sys.stderr, flush=True)
+
+
+def _measure(spark, d: Decade, name: str, fn, prior: dict) -> dict:
+    """One sweep row: times at both scales (or the small scale only,
+    past the pair-slot budget) and the op's pair workload."""
+    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
+
+    small_sec, big_sec = f"{d.small_label}_sec", f"{d.big_label}_sec"
+    bound = CANDIDATE_PAIR_BOUNDS.get(name)
+    slots = None
+    if bound is not None:
+        slots = [bound(spark, d.small), bound(spark, d.big)]
+        _release()
+    if slots and slots[1] > PAIR_SLOT_BUDGET:
+        t_small, _ = _time(fn, spark, d.small)
+        return {small_sec: round(t_small, 3), f"{d.big_label}_skipped": True, "pair_slots": slots}
+    t_small, n_small = _time(fn, spark, d.small)
+    t_big, n_big = _time(fn, spark, d.big, warm=d.warm_big)
+    row = {
+        small_sec: round(t_small, 3),
+        big_sec: round(t_big, 3),
+        d.slope_key: round(t_big / t_small, 2),
+        "rows": [n_small, n_big],
+    }
+    slope1 = prior.get(name, {}).get("slope")
+    if slope1 is not None:
+        row["slope1"] = slope1
+        row["decade_ratio"] = round(row[d.slope_key] / slope1, 2) if slope1 else None
+    # the synthetic corpus's near-dup pair count can grow faster than the
+    # corpus; per output row separates that from engine scaling
+    if n_small and n_big and n_big / n_small > 20:
+        row["slope_per_output_row"] = round((t_big / n_big) / (t_small / n_small), 3)
+    if slots is not None:
+        row["pair_slots"] = slots
+        if all(slots):
+            row["slope_per_pair_slot"] = round((t_big / slots[1]) / (t_small / slots[0]), 3)
+    if name in d.row_notes:
+        row["note"] = d.row_notes[name]
+    return row
+
+
+def _summary(d: Decade, rows: dict) -> dict:
+    slopes = sorted(v[d.slope_key] for v in rows.values() if d.slope_key in v)
+    k = d.slope_key
+    out = {
+        f"median_{k}": round(slopes[len(slopes) // 2], 2) if slopes else None,
+        f"max_{k}": round(slopes[-1], 2) if slopes else None,
+    }
+    if d.prior is not None:
+        both = {n: (v["slope1"], v[k]) for n, v in rows.items() if v.get("slope1") and v.get(k)}
+        # superlinear: wall time grew faster than the 100x data across
+        # the two decades (120, not 100, leaves room for timing jitter);
+        # accelerating: the second decade is steeper than the first
+        superlinear = sorted(n for n, (s1, s2) in both.items() if s1 * s2 > 120)
+        accelerating = sorted(n for n, (s1, s2) in both.items() if s2 > 1.5 * s1)
+        out.update(superlinear_count=len(superlinear), superlinear=superlinear,
+                   accelerating_count=len(accelerating), accelerating=accelerating)
+    return out
+
+
+def _read(path: str) -> dict:
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def main(argv: list[str] | None = None) -> dict:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--decade", type=int, choices=sorted(DECADES), default=1)
+    ap.add_argument("--only", type=lambda s: set(s.split(",")),
+                    help="comma-separated rows to measure, merged over the artifact")
+    args = ap.parse_args(argv)
+    d = DECADES[args.decade]
+    d = dataclasses.replace(d, small=os.path.join(HERE, d.small), big=os.path.join(HERE, d.big))
+    only = args.only
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", d.driver_mem)
+    for path in (d.small, d.big):
+        if not os.path.isdir(path):
+            raise SystemExit(f"{path} is missing: `python scalegen.py K` writes sf(0.1 K)")
 
     import __spark_entry__ as entry_mod
-    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_COUNTS
-    from load_datawarehouse_spark.ops.relational import _skew_stress_join
+
     from load_datawarehouse_spark.session import get_spark
 
-    spark = get_spark(app_name="ldw-scalecheck")
+    spark = get_spark(app_name=f"ldw-scalecheck-{args.decade}")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
+    sweep = d.names or list(queries)
+    prior = {}
+    if d.prior is not None:
+        prior = _read(os.path.join(HERE, DECADES[d.prior].artifact)).get("queries", {})
 
-    # --only a,b,c -> measure a subset and merge over the existing
-    # SCALECHECK.json so the artifact stays a full-set snapshot
-    names = list(SCALE_QUERIES)
-    only = None
-    if len(sys.argv) > 2 and sys.argv[1] == "--only":
-        only = set(sys.argv[2].split(","))
-        names = [n for n in names if n in only]
-
-    out: dict[str, dict] = {}
+    rows: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    for name in names:
-        fn = queries[name]
-        try:
-            t_small, n_small = _time(fn, spark, small)
-            t_big, n_big = _time(fn, spark, big)
-        except Exception as exc:  # one pathological query must not lose the run
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            print(f"# {name}: ERROR {errors[name]}", file=sys.stderr, flush=True)
-            continue
-        out[name] = {
-            "sf0.1_sec": round(t_small, 3),
-            "sf1_sec": round(t_big, 3),
-            "slope": round(t_big / t_small, 2),
-            "rows": [n_small, n_big],
-        }
-        # Pair-producing ops (dedup families): the synthetic corpus has
-        # a small vocabulary, so the TRUE near-dup pair count grows
-        # ~quadratically with corpus size — the output is itself
-        # hundreds of times larger at sf1. Normalizing by output rows
-        # separates engine scaling from workload-intrinsic output
-        # growth (in a real corpus the near-dup rate per doc is ~flat,
-        # so output ~ N and the raw slope is the fair one).
-        if n_small and n_big and n_big / max(n_small, 1) > 20:
-            out[name]["slope_per_output_row"] = round(
-                (t_big / n_big) / (t_small / n_small), 3
-            )
-        # pair-producing dedup ops: record the PRE-threshold candidate
-        # count (the work the inverted-index/bucket join actually
-        # pays for) so slope outliers whose FINAL output shrinks under
-        # a DF cap are measured-accounted, not argued (VERDICT r11 #4)
-        if name in CANDIDATE_PAIR_COUNTS:
-            counter = CANDIDATE_PAIR_COUNTS[name]
+    for name, measure in d.extras.items():
+        if only is None or name in only:
             try:
-                c_small = counter(spark, small)
-                c_big = counter(spark, big)
-            except Exception as exc:
-                errors[f"{name}.candidates"] = f"{type(exc).__name__}: {exc}"[:300]
+                rows[name] = measure(spark, d)
+            except Exception as exc:  # one failing row must not lose the run
+                _error(errors, name, exc)
             else:
-                out[name]["candidates"] = [c_small, c_big]
-                if c_small and c_big:
-                    out[name]["slope_per_candidate_pair"] = round(
-                        (t_big / c_big) / (t_small / c_small), 3
-                    )
-                print(
-                    f"#   candidates {c_small} -> {c_big}"
-                    f"  slope/cand {out[name].get('slope_per_candidate_pair')}",
-                    file=sys.stderr, flush=True,
-                )
-        print(f"# {name}: {t_small:.2f}s -> {t_big:.2f}s  slope {out[name]['slope']}",
-              file=sys.stderr, flush=True)
+                print(f"# {name}: {json.dumps(rows[name])[:300]}", file=sys.stderr, flush=True)
+    for name in sweep:
+        if only is not None and name not in only:
+            continue
+        try:
+            rows[name] = _measure(spark, d, name, queries[name], prior)
+        except Exception as exc:
+            _error(errors, name, exc)
+        else:
+            print(f"# {name}: {json.dumps(rows[name])}", file=sys.stderr, flush=True)
 
-    path = os.path.join(here, "SCALECHECK.json")
-    skew_prev = None
-    if only is not None and os.path.exists(path):
-        with open(path) as f:
-            prev = json.load(f)
-        merged = prev.get("queries", {})
-        merged.update(out)
-        # prune rows for queries since removed/renamed out of
-        # SCALE_QUERIES (advisor r7: stale merged rows otherwise
-        # masquerade as current coverage forever)
-        out = {k: v for k, v in merged.items() if k in SCALE_QUERIES}
-        skew_prev = prev.get("skew_stress_sf1")
-        wh_prev = prev.get("warehouse_verb_decade")
-    else:
-        wh_prev = None
-
-    # warehouse-verb decade row (VERDICT r13 #6): measured on full
-    # runs, kept on subset runs, and forcible via
-    # `--only warehouse_verb_decade`
-    if wh_prev is not None and not (only and "warehouse_verb_decade" in only):
-        wh_row = wh_prev
-    else:
-        wh_row = {}
-        _warehouse_verb_decade(spark, small)  # warmup: codegen/JIT/FS
-        for label, d in (("sf0.1", small), ("sf1", big)):
-            wh_row[label] = _warehouse_verb_decade(spark, d)
-            print(f"# warehouse_verb_decade[{label}]: {wh_row[label]}",
-                  file=sys.stderr, flush=True)
-        s, b = wh_row["sf0.1"], wh_row["sf1"]
-        wh_row["slopes"] = {
-            k: round(b[f"{k}_sec"] / s[f"{k}_sec"], 2)
-            for k in ("collect", "load", "load_df", "merge")
-        }
-        wh_row["note"] = (
-            "S2 load with records in is record-oriented by reference "
-            "contract: the decade cost is driver-side (collect + "
-            "pure-Python prepare/infer + createDataFrame scale with "
-            "row count on ONE machine). load_df is the round-15 bulk "
-            "path — the SAME verb with a DataFrame in (distributed "
-            "infer via treeAggregate, conform, append; no driver "
-            "materialization), so its slope is the engine's, like R3 "
-            "merge. At 100 TB, bulk loads pass a DataFrame to load() "
-            "or merge/update; the record form is for trickle inserts."
-        )
-
-    if skew_prev is not None:
-        skew = skew_prev  # subset run keeps the full run's measurement
-    else:
-        skew = {}
-        for label, salted in (("salted", True), ("unsalted", False)):
-            t, n = _time(_skew_stress_join, spark, big, salted)
-            skew[label] = {"sec": round(t, 3), "rows": n}
-            print(f"# skew_stress[{label}] sf1: {t:.2f}s", file=sys.stderr, flush=True)
-
-    slopes = [v["slope"] for v in out.values()]
-    note = (
-        "10x data (scalegen.py replication of sf0.1 with key-space scaling, "
-        "copy-keyed pseudorandom word permutations on documents, and "
-        "copy-unique orthogonal transforms on embeddings — round 12: both "
-        "keep dup/near-dup RATES flat across scale decades). "
-        "slope = t(sf1)/t(sf0.1). Raw slope above ~6 appears only on the "
-        "shingle/term inverted-index AUDIT ops, and their `candidates` "
-        "column shows why: with a FIXED synthetic vocabulary the shingle-DF "
-        "distribution saturates, so the candidate mass under the absolute "
-        "MAX_*_DF cap grows ~quadratically with the corpus (1.13M -> 68.6M "
-        "slots at 10x) while TRUE near-dup output stays ~flat (256 -> 2192 "
-        "jaccard pairs) and per-candidate cost FALLS "
-        "(slope_per_candidate_pair ~0.2). A real Heaps-law corpus keeps "
-        "DFs ~flat and these ops ~linear; on saturated corpora the "
-        "production paths are the LSH/bucket ops (minhash_lsh slope 1.49, "
-        "simhash 1.48) and neardup_clusters. "
-        "skew_stress_sf1: selective hot-key salting vs the unsalted "
-        "shuffle on a zipfian key at sf1. Round 12: pair-producing "
-        "dedup ops carry `candidates` (pre-threshold candidate-pair "
-        "counts at both scales, from ops.llm.CANDIDATE_PAIR_COUNTS — "
-        "each counter reuses the op's own candidate-stage helper) and "
-        "`slope_per_candidate_pair`, so outliers with DF-cap-shrunk "
-        "FINAL output are measured-accounted."
-    )
+    # --only merges over the artifact so it stays a full-set snapshot;
+    # rows since dropped from the sweep are pruned, or they would pass
+    # for current coverage forever
+    path = os.path.join(HERE, d.artifact)
+    prev = _read(path) if only is not None else {}
+    merged = {**prev.get("queries", {}), **{k: prev[k] for k in d.extras if k in prev}, **rows}
+    queries_out = {k: merged[k] for k in [*sweep, *d.extras] if k in merged}
+    extras_out = {}
+    if not d.extras_in_queries:
+        extras_out = {k: queries_out.pop(k) for k in d.extras if k in queries_out}
     result = {
-        "note": note,
-        "metric": "scale_slope_sf0.1_to_sf1",
+        "note": d.note,
+        "metric": f"scale_slope_{d.small_label}_to_{d.big_label}",
         "data_factor": 10,
-        # `out` is empty on a fresh checkout running only the
-        # non-query decade row (`--only warehouse_verb_decade` with no
-        # SCALECHECK.json to merge over) — guard the summary stats so
-        # the expensive measurement still lands on disk (ADVICE r14)
-        "median_slope": (
-            round(sorted(slopes)[len(slopes) // 2], 2) if slopes else None
-        ),
-        "max_slope": round(max(slopes), 2) if slopes else None,
-        "queries": out,
-        "skew_stress_sf1": skew,
-        "warehouse_verb_decade": wh_row,
+        **_summary(d, queries_out),
+        "queries": queries_out,
+        **extras_out,
     }
     if errors:
         result["errors"] = errors
-    with open(os.path.join(here, "SCALECHECK.json"), "w") as f:
+    with open(path, "w") as f:
         json.dump(result, f, indent=2)
     print(json.dumps(result))
+    return result
 
 
 if __name__ == "__main__":

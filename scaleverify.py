@@ -1,7 +1,7 @@
 """Oracle verification at sf1 — correctness at 100x the driver gate.
 
-Replays the scale-relevant query set (scalecheck's SCALE_QUERIES plus
-the bench HEADLINE) against the DuckDB oracles on the replicated sf1
+Replays every registered query (the set ``scalecheck.py`` sweeps in
+its first decade) against the DuckDB oracles on the replicated sf1
 tables from ``scalegen.py``. This is the correctness complement of
 SCALECHECK.json's timing slopes: the same physical plans that the
 slopes certify as scale-linear are also proven to produce
@@ -167,14 +167,12 @@ def main() -> None:
         raise SystemExit("run `python scalegen.py 10` first")
 
     import __spark_entry__ as entry_mod
-    from bench import HEADLINE
     from oracle_harness import _norm
-    from scalecheck import SCALE_QUERIES
 
     from load_datawarehouse_spark.ops._util import release_lineage_cuts
     from load_datawarehouse_spark.session import get_spark
 
-    names = list(dict.fromkeys(SCALE_QUERIES + HEADLINE))
+    names = list(entry_mod.queries())
     # --only a,b,c  -> restrict to a subset (iterating on fixes);
     # the partial result is merged over the existing SCALEVERIFY.json
     # so the artifact stays a full-set snapshot.
@@ -263,7 +261,7 @@ def main() -> None:
         print(f"# {name}: {out[name]['status']}", file=sys.stderr, flush=True)
 
     path = os.path.join(here, "SCALEVERIFY.json")
-    current = set(dict.fromkeys(SCALE_QUERIES + HEADLINE))
+    current = set(entry_mod.queries())
     if only is not None and os.path.exists(path):
         with open(path) as f:
             prev = json.load(f).get("queries", {})

@@ -192,11 +192,11 @@ def test_embedding_pair_scale_contract(spark):
     assert _label_cos_edges(spark, emb, pair_budget=workload) is not None
     assert _label_cos_edges(spark, emb, pair_budget=0) is not None
 
-    # the in-op gate and the scale sweep's candidate counter must be
-    # the same measurement (they share _label_pair_workload)
-    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_COUNTS
+    # the in-op gate and the scale sweep's pair bound must be the same
+    # measurement (they share _label_pair_workload)
+    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
 
-    assert CANDIDATE_PAIR_COUNTS["dedup_embedding_neardup"](spark, SF_DIR) == workload
+    assert CANDIDATE_PAIR_BOUNDS["dedup_embedding_neardup"](spark, SF_DIR) == workload
 
 
 def test_theta_tfidf_pair_scale_contract(spark, monkeypatch):
@@ -1123,17 +1123,25 @@ def test_doc_keyed_spread_elides_downstream_exchanges(spark):
     # once per leg) — all of them REPARTITION_BY_NUM, i.e. the spread
     spreads = re.findall(r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\), REPARTITION_BY_NUM", plan)
     assert len(spreads) >= 1, plan
+    # The exchange-line patterns below were probed on Spark 4.1.2. Each
+    # negative pattern has a positive control in the same line format
+    # that must match another ENSURE_REQUIREMENTS hash exchange of the
+    # same plan, so a change of the EXPLAIN format fails here instead
+    # of passing the negative check vacuously.
+    other_key = r"Exchange hashpartitioning\((?!doc_id#)\w+#\d+L?[,)].*ENSURE_REQUIREMENTS"
     # no ENSURE_REQUIREMENTS re-shuffle on a doc_id-prefixed key may
     # remain: the spread partitioning must satisfy every doc-keyed op
     assert not re.search(
         r"Exchange hashpartitioning\(doc_id#\d+L?[,)].*ENSURE_REQUIREMENTS", plan
     ), plan
+    assert re.search(other_key, plan), plan  # the (lang, gram) profile shuffle
     # simhash's 60-vote-column exchange is gone the same way: its only
     # hash exchanges are the spread + the banding self-join bucket key
     plan_sh = _plan(llm.QUERIES["dedup_simhash_neardup"](spark, SF_DIR))
     assert not re.search(
         r"Exchange hashpartitioning\(doc_id#\d+L?[,)].*ENSURE_REQUIREMENTS", plan_sh
     ), plan_sh
+    assert re.search(other_key, plan_sh), plan_sh  # the (d1, d2, hamming) dedup shuffle
 
 
 def test_bcast_measured_hints_only_under_threshold(spark):

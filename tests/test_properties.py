@@ -1180,19 +1180,19 @@ def test_bands_from_sigs_shapes(spark):
 
 
 def test_candidate_counters_bound_their_ops(spark):
-    """Round-12 accounting contract (VERDICT r11 #4): every
-    CANDIDATE_PAIR_COUNTS counter measures the PRE-threshold candidate
-    stage of its op, so it must upper-bound the op's final pair count
-    (containment emits both directions of each unordered candidate,
-    hence the factor 2). Counters share the op's own candidate-stage
-    helpers, so a drift between the two is a bug in the op itself."""
+    """Every CANDIDATE_PAIR_BOUNDS entry measures the pair workload of
+    its op's PRE-threshold candidate stage, so it must upper-bound the
+    op's final pair count (containment emits both directions of each
+    unordered candidate, hence the factor 2). The bounds share the
+    op's own blocking-key helpers, so a drift between the two is a bug
+    in the op itself."""
     from tests.conftest import SF_DIR
 
     from load_datawarehouse_spark.ops import llm as _llm
 
     counts = {
         name: fn(spark, SF_DIR)
-        for name, fn in _llm.CANDIDATE_PAIR_COUNTS.items()
+        for name, fn in _llm.CANDIDATE_PAIR_BOUNDS.items()
     }
     for name, c in counts.items():
         assert isinstance(c, int) and c >= 0, name
@@ -1212,7 +1212,7 @@ def test_candidate_counters_bound_their_ops(spark):
     ]:
         out_rows = q[name](spark, SF_DIR).count()
         assert factor * counts[name] >= out_rows, (
-            f"{name}: candidates {counts[name]} x{factor} < output {out_rows}"
+            f"{name}: pair slots {counts[name]} x{factor} < output {out_rows}"
         )
 
 
@@ -1998,6 +1998,13 @@ _KV = [{"name": "k", "type": "INTEGER", "mode": "NULLABLE"}]
 ))
 def test_columnar_conform_equals_row_wise(case):
     api, batch, op_col = case
+    dicts = [r for r in batch if isinstance(r, dict)]
+    if len(dicts) < len(batch):
+        # a record that is not a dict rejects the whole batch; its
+        # dicts alone still compare
+        new, _ = _conform_both(api, batch, op_col)
+        assert isinstance(new, WarehouseTableRowsInvalid) and "not dicts" in str(new), new
+        batch = dicts
     new, old = _conform_both(api, batch, op_col)
     if isinstance(old, Exception):
         # the row-wise pass let a failed conversion escape untyped; the

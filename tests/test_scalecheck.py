@@ -1,0 +1,83 @@
+"""The scale harness end to end on the test scales: each decade runs
+with sf0.001 as its small side and sf0.01 as its big side, writing its
+artifact under ``tmp_path``."""
+
+from __future__ import annotations
+
+import dataclasses
+import json
+import os
+
+from tests.conftest import SF_DIR, SF_DIR_ORACLE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ONLY = "q1_pricing_summary,dedup_ngram_jaccard"
+
+
+def _committed() -> dict[str, bytes]:
+    return {n: open(os.path.join(REPO, n), "rb").read()
+            for n in ("SCALECHECK.json", "SCALECHECK10.json")}
+
+
+def test_both_decades_write_documented_rows_and_merge_on_only(spark, tmp_path, monkeypatch):
+    import scalecheck
+
+    from load_datawarehouse_spark import session
+    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
+
+    committed = _committed()
+    # reuse the test session as configured (get_spark would reset its
+    # shuffle partitions) and keep the driver-memory default local
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setitem(os.environ, "SPARK_GRAFT_DRIVER_MEM",
+                        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    for k, d in scalecheck.DECADES.items():
+        monkeypatch.setitem(scalecheck.DECADES, k, dataclasses.replace(
+            d, small=SF_DIR, big=SF_DIR_ORACLE, artifact=str(tmp_path / d.artifact)))
+    slots = [CANDIDATE_PAIR_BOUNDS["dedup_ngram_jaccard"](spark, p) for p in (SF_DIR, SF_DIR_ORACLE)]
+    assert all(isinstance(s, int) and s > 0 for s in slots), slots
+
+    def rows(result: dict) -> dict[str, set]:
+        # slope_per_output_row appears only where output grows > 20x
+        return {n: set(r) - {"slope_per_output_row"} for n, r in result["queries"].items()}
+
+    d1 = scalecheck.main(["--only", ONLY])
+    timed1 = {"sf0.1_sec", "sf1_sec", "slope", "rows"}
+    assert rows(d1) == {
+        "q1_pricing_summary": timed1,
+        "dedup_ngram_jaccard": timed1 | {"pair_slots", "slope_per_pair_slot"},
+    }
+    assert d1["queries"]["dedup_ngram_jaccard"]["pair_slots"] == slots
+    assert d1["metric"] == "scale_slope_sf0.1_to_sf1"
+    assert {"median_slope", "max_slope"} <= set(d1)
+    # extras run on a full sweep or when named, so none ran here
+    assert not {"warehouse_verb_decade", "skew_stress_sf1"} & set(d1)
+    assert json.load(open(tmp_path / "SCALECHECK.json")) == d1
+
+    again = scalecheck.main(["--only", "q1_pricing_summary"])
+    assert again["queries"]["dedup_ngram_jaccard"] == d1["queries"]["dedup_ngram_jaccard"]
+    assert set(again["queries"]) == set(d1["queries"])
+
+    d2 = scalecheck.main(["--decade", "2", "--only", ONLY])
+    timed2 = {"sf1_sec", "sf10_sec", "slope10", "rows", "slope1", "decade_ratio"}
+    assert rows(d2) == {
+        "q1_pricing_summary": timed2,
+        "dedup_ngram_jaccard": timed2 | {"pair_slots", "slope_per_pair_slot"},
+    }
+    for name, row in d2["queries"].items():
+        assert row["slope1"] == again["queries"][name]["slope"]
+    assert d2["queries"]["dedup_ngram_jaccard"]["pair_slots"] == slots
+    assert d2["metric"] == "scale_slope_sf1_to_sf10"
+    assert {"median_slope10", "superlinear", "accelerating"} <= set(d2)
+
+    # past the pair-slot budget an op is timed on the small side only
+    monkeypatch.setattr(scalecheck, "PAIR_SLOT_BUDGET", 0)
+    skip = scalecheck.main(["--decade", "2", "--only", "dedup_ngram_jaccard"])
+    assert rows(skip) == {
+        "q1_pricing_summary": timed2,
+        "dedup_ngram_jaccard": {"sf1_sec", "sf10_skipped", "pair_slots"},
+    }
+    assert skip["queries"]["dedup_ngram_jaccard"]["pair_slots"] == slots
+    assert skip["queries"]["q1_pricing_summary"] == d2["queries"]["q1_pricing_summary"]
+
+    assert _committed() == committed

@@ -562,25 +562,29 @@ _TYPED_SCHEMA = [
         ({"f": {"a": 1}}, "f"),
         ({"meta": []}, "meta"),
         ({"tag": ""}, "tag"),  # Arrow alone reads an empty sequence as a record of nulls
+        ([1, "x"], None),  # records that are not dicts
     ],
     ids=["str-in-int", "nan-in-int", "list-in-int", "str-in-float", "dict-in-float",
-         "list-in-record", "empty-str-in-record"],
+         "list-in-record", "empty-str-in-record", "non-dict-records"],
 )
 def test_unconvertible_value_is_rejected_before_any_write(spark, root, verb, bad, field):
     """A value of another kind meets an existing typed field, which
-    inference no longer observes: every verb rejects it naming the
-    field, and the sidecar and data files stay as they were."""
+    inference no longer observes, or a record is not a dict: every verb
+    rejects the batch naming the field (or counting the odd records),
+    and the sidecar and data files stay as they were."""
     good = {"id": 1, "n": 1, "f": 1.0, "meta": {"k": "a"}}
     wh = SparkWarehouse.new(spark, root, "typed", schema=_TYPED_SCHEMA, data=[good])
     meta_before = open(wh._meta_path).read()
     files_before = _data_listing(wh)
-    batch = [{**good, "id": 2}, {**good, "id": 3, **bad}]
+    batch = [{**good, "id": 2}, *(bad if isinstance(bad, list) else [{**good, "id": 3, **bad}])]
     run = {
         "load": lambda: wh.load(batch),
         "update": lambda: wh.update(batch, keys=["id"]),
-        "merge": lambda: wh.merge([{**r, "op": "I"} for r in batch], keys=["id"]),
+        "merge": lambda: wh.merge(
+            [{**r, "op": "I"} if isinstance(r, dict) else r for r in batch], keys=["id"]),
     }[verb]
-    with pytest.raises(WarehouseTableRowsInvalid, match=repr(field)):
+    message = repr(field) if field else r"2 record\(s\) are not dicts \(the first is int\)"
+    with pytest.raises(WarehouseTableRowsInvalid, match=message):
         run()
     assert open(wh._meta_path).read() == meta_before
     assert _data_listing(wh) == files_before
@@ -691,6 +695,10 @@ _REQUIRED_SCHEMA = [
     ]},
 ]
 _REQUIRED_DDL = "id long, meta struct<k:string>, items array<struct<sku:string>>"
+_OP_SCHEMA = [{"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+              {"name": "op", "type": "STRING", "mode": "NULLABLE"}]
+_OP_UPPER_SCHEMA = [{"name": "id", "type": "INTEGER", "mode": "NULLABLE"},
+                    {"name": "OP", "type": "STRING", "mode": "NULLABLE"}]
 _REQUIRED_GOOD = {"id": 1, "meta": {"k": "a"}, "items": [{"sku": "s"}]}
 _ROW1 = {"id": 1, "na_me": "one", "meta": {"a": "p", "b": 1}}
 
@@ -735,6 +743,11 @@ _CONFORM_CASES = {
         [{**_REQUIRED_GOOD, "id": 2, "items": [{"sku": "a"}, {"sku": None}]}],
         _REQUIRED_DDL, (WarehouseTableRowsInvalid, "sku"),
     ),
+    # a merge's op column may not share a table column's name, in any case
+    "op-column-clash": (_OP_SCHEMA, [{"id": 2}], "id long", (WarehouseInvalidInput, "op")),
+    "op-column-clash-case": (
+        _OP_UPPER_SCHEMA, [{"id": 2}], "id long", (WarehouseInvalidInput, "OP"),
+    ),
 }
 
 
@@ -757,7 +770,9 @@ def _tuples(value):
     ]
     + [("load", "records", "single-dict"), ("update", "records", "single-dict"),
        ("merge", "records", "single-dict"), ("merge", "dataframe", "no-op-column"),
-       ("update", "dataframe", "no-key-column"), ("merge", "dataframe", "no-key-column")],
+       ("update", "dataframe", "no-key-column"), ("merge", "dataframe", "no-key-column")]
+    + [("merge", kind, case) for case in ("op-column-clash", "op-column-clash-case")
+       for kind in ("records", "dataframe")],
 )
 def test_verbs_share_one_conform_contract(spark, root, verb, kind, case):
     """load, update and merge conform records and DataFrames alike:

@@ -22,6 +22,42 @@ from pyspark.sql import DataFrame, SparkSession
 # warehouse_load_nested_evolution, #380), so the head is now always
 # the ops whose plan/code changed most recently.
 _FIRST_NAMES = (
+    # --- ops that stage files on disk, changed to run through
+    # ops._util.on_scratch_dir (and, for streams, the shared
+    # staged-wave stream and foreachBatch runner) ---
+    "warehouse_branch_merge",
+    "warehouse_quarantine_load",
+    "warehouse_clone_zero_copy",
+    "warehouse_two_table_atomic_publish",
+    "warehouse_partitioned_upsert",
+    "warehouse_load_fetch",
+    "warehouse_load_dataframe",
+    "warehouse_load_nested_evolution",
+    "join_dynamic_partition_pruned",
+    "warehouse_expiry_sweep",
+    "warehouse_schema_evolution",
+    "warehouse_compact_small_files",
+    "warehouse_time_travel",
+    "warehouse_merge_cdc",
+    "warehouse_vacuum_snapshots",
+    "source_formats_roundtrip",
+    "warehouse_incremental_view",
+    "warehouse_snapshot_diff",
+    "source_partition_pruned_read",
+    "warehouse_right_to_forget",
+    "warehouse_mv_rewrite",
+    "source_schema_merge_read",
+    "source_csv_malformed_handling",
+    "source_federated_union",
+    "warehouse_etl_capstone",
+    "warehouse_idempotent_backfill",
+    "stream_ingest_warehouse",
+    "stream_late_data_drop",
+    "stream_update_mode_history",
+    "stream_upsert_warehouse",
+    "stream_ivm_aggregate",
+    "stream_exactly_once_sink",
+    "stream_backfill_then_tail",
     # --- round-18 OPTIMIZATION head: every op whose PHYSICAL PLAN
     # changed in the r18 optimization pass (doc_id-keyed scan spread
     # eliding every doc-keyed exchange; 128-bit xxhash64 pair keys on
@@ -82,29 +118,12 @@ _FIRST_NAMES = (
     "join_range_bucketed",
     "join_range_bands",
     # --- round-16 head (previous round's changed ops, re-checked) ---
-    "warehouse_load_nested_evolution",
-    "warehouse_load_dataframe",
     "join_anti",
     "setop_except",
     "q22_idle_rich_segments",
     "subq_not_exists_idle_rich",
     "multimodal_audio_silence_segments",
     "dedup_exact_groups",
-    # --- S2 load() conform refactor: the verb family re-checks ---
-    "warehouse_load_fetch",
-    "warehouse_merge_cdc",
-    "warehouse_etl_capstone",
-    "warehouse_partitioned_upsert",
-    "warehouse_vacuum_snapshots",
-    "warehouse_expiry_sweep",
-    "warehouse_quarantine_load",
-    "warehouse_schema_evolution",
-    "warehouse_snapshot_diff",
-    "warehouse_time_travel",
-    "warehouse_right_to_forget",
-    "warehouse_two_table_atomic_publish",
-    "warehouse_incremental_view",
-    "warehouse_idempotent_backfill",
     # --- siblings of the re-anchored ops (shared claims/predicates) ---
     "setop_except_all",
     "setop_intersect",
@@ -121,7 +140,6 @@ _FIRST_NAMES = (
     # --- shared-gate path (embedding family on require_pair_budget) ---
     # --- earlier-round re-checks (banding, jaccard histogram,
     # federated union, MG merge, lazy PCA, kmeans, FLAC trio) ---
-    "source_federated_union",
     "multimodal_video_frame_dedup",
     "embedding_pca_second_component",
     "dedup_levenshtein_verify",

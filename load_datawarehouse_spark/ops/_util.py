@@ -20,6 +20,9 @@ what makes the oracle hash-comparison meaningful at any cluster size.
 
 from __future__ import annotations
 
+import functools
+import shutil
+import tempfile
 import threading as _threading
 
 from pyspark.sql import Column
@@ -30,6 +33,29 @@ DEC = "decimal(38,6)"
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def on_scratch_dir(op):
+    """Run an operator that stages files on disk (warehouse tables,
+    partitioned layouts, stream inputs and checkpoints) in a fresh
+    scratch directory. Place it under ``@_register``.
+
+    The wrapped ``op(spark, sf_dir, root)`` builds its tables under
+    ``root`` and returns a DataFrame that may still read them. The
+    registered ``(spark, sf_dir)`` form collects that frame into memory
+    with the same schema, so the result outlives the directory, and
+    removes ``root`` when the op returns and when it raises."""
+
+    @functools.wraps(op)
+    def run(spark, sf_dir):
+        root = tempfile.mkdtemp(prefix=f"ldw_{op.__name__}_")
+        try:
+            out = op(spark, sf_dir, root)
+            return spark.createDataFrame(out.collect(), out.schema)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    return run
 
 
 def bcast_bounded(df, bound: str):
@@ -196,15 +222,22 @@ def lineage_cut(df):
     consumed by 2+ alias-renamed branches (self-join sides defeat
     ReusedExchange). Use via ``df.transform(lineage_cut)``.
 
-    Local / single-JVM mode (the bench + driver configuration): lazy
-    ``localCheckpoint`` — blocks live in the one JVM, nothing can be
-    lost, and the measured wins (-10..-33% on the shingle-index and
-    signature dedup ops) apply.
+    Local / single-JVM mode (the bench + driver configuration):
+    ``localCheckpoint(eager=False)`` — blocks live in the one JVM,
+    nothing can be lost, and the measured wins (-10..-33% on the
+    shingle-index and signature dedup ops) apply. The cut is NOT lazy
+    in effect: with AQE on (Spark 4.1.2) building the checkpoint's
+    plan runs the frame's upstream jobs when the cut is constructed,
+    so they land in plan construction, before the terminal action
+    (``dedup_minhash_verified`` ran 7 jobs before its action with its
+    cuts and 0 with them removed). Its blocks are not tracked, so
+    :func:`release_lineage_cuts` does not free them (see
+    ``_CUT_FRAMES``).
 
     Cluster mode: ``localCheckpoint`` stores blocks NON-replicated on
     executors, so one executor loss makes the truncated lineage
     unrecoverable (query aborts) and the checkpoint pins the pre-AQE
-    plan (advisor r5). There we keep recomputability with
+    plan. There we keep recomputability with
     ``persist(MEMORY_AND_DISK)`` instead — same reuse benefit, lineage
     intact, AQE still free to re-plan.
     """
@@ -245,13 +278,15 @@ def lineage_cut_eager(df):
 
 
 #: Cluster-mode frames persisted by lineage_cut / lineage_cut_eager,
-#: awaiting release. Local-mode localCheckpoint blocks are reclaimed
-#: by the ContextCleaner when the RDD is GC'd, so they are not
-#: tracked; the persist() branches are NOT auto-reclaimed and would
-#: accumulate across queries in a long-lived cluster session until
-#: LRU thrash — the runners (bench / scalecheck / scaleverify /
+#: awaiting release. The persist() branches are NOT auto-reclaimed and
+#: would accumulate across queries in a long-lived cluster session
+#: until LRU thrash — the runners (bench / scalecheck / scaleverify /
 #: windowcheck / oracle_harness) release them after every query's
-#: terminal action. Guarded by a lock so concurrent queries in one
+#: terminal action. Local-mode localCheckpoint blocks are not tracked
+#: here, so release_lineage_cuts never frees them: they go only when
+#: the ContextCleaner collects their RDD, which need not happen
+#: between queries (11 persistent RDDs remained in one session after
+#: 15 query_suite ops). Guarded by a lock so concurrent queries in one
 #: session (e.g. a thread-pooled driver) cannot corrupt the list.
 _CUT_FRAMES: list = []
 

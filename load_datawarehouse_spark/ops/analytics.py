@@ -21,7 +21,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from load_datawarehouse_spark.ops._util import bcast_bounded, dec_sum, lineage_cut, sql_dec_sum
+from load_datawarehouse_spark.ops._util import (
+    bcast_bounded,
+    dec_sum,
+    lineage_cut,
+    on_scratch_dir,
+    sql_dec_sum,
+)
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
@@ -701,7 +707,8 @@ FROM merged GROUP BY seg ORDER BY segment
 
 
 @_register("warehouse_branch_merge", _BRANCH_MERGE_ORACLE)
-def warehouse_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_branch_merge(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Git-style table branching: snapshot a base table, let two
     branches diverge (branch A adjusts balances on keys % 3, branch B
     discounts balances on keys % 7 and relabels segments on keys % 5),
@@ -720,9 +727,6 @@ def warehouse_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver-gated-verb-exercise convention, cf.
     ``warehouse_merge_cdc``.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -735,65 +739,59 @@ def warehouse_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("seg"),
         )
     )
-    root = tempfile.mkdtemp(prefix="ldw_branch_")
-    try:
-        wh = SparkWarehouse.new(
-            spark, root, "accounts", data=[r.asDict() for r in base_df.collect()]
-        )
-        v0 = wh.snapshot()  # the common ancestor version
-        anc = wh.df_at(v0).select(
-            "k", F.col("cents").alias("cents0"), F.col("seg").alias("seg0")
-        )
-        br_a = anc.select(
+    wh = SparkWarehouse.new(
+        spark, root, "accounts", data=[r.asDict() for r in base_df.collect()]
+    )
+    v0 = wh.snapshot()  # the common ancestor version
+    anc = wh.df_at(v0).select(
+        "k", F.col("cents").alias("cents0"), F.col("seg").alias("seg0")
+    )
+    br_a = anc.select(
+        "k",
+        F.when(F.col("k") % 3 == 0, F.col("cents0") + 10000)
+        .otherwise(F.col("cents0"))
+        .alias("cents_a"),
+        F.col("seg0").alias("seg_a"),
+    )
+    br_b = anc.select(
+        "k",
+        F.when(F.col("k") % 7 == 0, F.col("cents0") - 5000)
+        .otherwise(F.col("cents0"))
+        .alias("cents_b"),
+        F.when(F.col("k") % 5 == 0, F.lit("PROMO"))
+        .otherwise(F.col("seg0"))
+        .alias("seg_b"),
+    )
+    a_chg = F.col("cents_a") != F.col("cents0")
+    b_chg = F.col("cents_b") != F.col("cents0")
+    merged = (
+        anc.join(br_a, "k")
+        .join(br_b, "k")
+        .select(
             "k",
-            F.when(F.col("k") % 3 == 0, F.col("cents0") + 10000)
+            F.when(a_chg, F.col("cents_a"))
+            .when(b_chg, F.col("cents_b"))
             .otherwise(F.col("cents0"))
-            .alias("cents_a"),
-            F.col("seg0").alias("seg_a"),
-        )
-        br_b = anc.select(
-            "k",
-            F.when(F.col("k") % 7 == 0, F.col("cents0") - 5000)
-            .otherwise(F.col("cents0"))
-            .alias("cents_b"),
-            F.when(F.col("k") % 5 == 0, F.lit("PROMO"))
+            .alias("cents"),
+            F.when(F.col("seg_b") != F.col("seg0"), F.col("seg_b"))
             .otherwise(F.col("seg0"))
-            .alias("seg_b"),
+            .alias("seg"),
+            F.when(a_chg & b_chg, 1).otherwise(0).alias("conflict"),
         )
-        a_chg = F.col("cents_a") != F.col("cents0")
-        b_chg = F.col("cents_b") != F.col("cents0")
-        merged = (
-            anc.join(br_a, "k")
-            .join(br_b, "k")
-            .select(
-                "k",
-                F.when(a_chg, F.col("cents_a"))
-                .when(b_chg, F.col("cents_b"))
-                .otherwise(F.col("cents0"))
-                .alias("cents"),
-                F.when(F.col("seg_b") != F.col("seg0"), F.col("seg_b"))
-                .otherwise(F.col("seg0"))
-                .alias("seg"),
-                F.when(a_chg & b_chg, 1).otherwise(0).alias("conflict"),
-            )
+    )
+    wh.update(merged.select("k", "cents", "seg"), keys=["k"])
+    conflicts = merged.select("k", "conflict")
+    return (
+        wh.df()
+        .join(conflicts, "k")
+        .groupBy(F.col("seg").alias("segment"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("cents").cast("long").alias("sum_cents"),
+            F.sum("conflict").cast("long").alias("n_conflicts"),
         )
-        wh.update(merged.select("k", "cents", "seg"), keys=["k"])
-        conflicts = merged.select("k", "conflict")
-        out = (
-            wh.df()
-            .join(conflicts, "k")
-            .groupBy(F.col("seg").alias("segment"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("cents").cast("long").alias("sum_cents"),
-                F.sum("conflict").cast("long").alias("n_conflicts"),
-            )
-            .orderBy("segment")
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("segment")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -906,7 +904,8 @@ FROM judged GROUP BY reason ORDER BY reason
 
 
 @_register("warehouse_quarantine_load", _QUARANTINE_ORACLE)
-def warehouse_quarantine_load(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_quarantine_load(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Constraint-gated load: a batch with deterministically injected
     defects (blank event types, negated values) is split by CHECK
     rules into the target table and a quarantine table carrying the
@@ -922,9 +921,6 @@ def warehouse_quarantine_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; each side is a distributed parquet write — no
     driver-side row inspection.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -944,35 +940,29 @@ def warehouse_quarantine_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("value") < 0, "negative_value")
         .otherwise("ok"),
     )
-    root = tempfile.mkdtemp(prefix="ldw_quar_")
-    try:
-        good_wh = SparkWarehouse(spark, root, "events_clean")
-        good_wh._write_meta({"schema": None, "expires": None})
-        quar_wh = SparkWarehouse(spark, root, "events_quarantine")
-        quar_wh._write_meta({"schema": None, "expires": None})
-        judged.filter(F.col("reason") == "ok").drop("reason").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(good_wh.path, "data"))
-        judged.filter(F.col("reason") != "ok").write.mode("overwrite").parquet(
-            os.path.join(quar_wh.path, "data")
+    good_wh = SparkWarehouse(spark, root, "events_clean")
+    good_wh._write_meta({"schema": None, "expires": None})
+    quar_wh = SparkWarehouse(spark, root, "events_quarantine")
+    quar_wh._write_meta({"schema": None, "expires": None})
+    judged.filter(F.col("reason") == "ok").drop("reason").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(good_wh.path, "data"))
+    judged.filter(F.col("reason") != "ok").write.mode("overwrite").parquet(
+        os.path.join(quar_wh.path, "data")
+    )
+    good = good_wh.df().withColumn("reason", F.lit("ok"))
+    quar = quar_wh.df().select(*good.columns)
+    return (
+        good.unionByName(quar)
+        .groupBy("reason")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.round(F.col("value") * 100).cast("long"))
+            .cast("long")
+            .alias("cents_sum"),
         )
-        good = good_wh.df().withColumn("reason", F.lit("ok"))
-        quar = quar_wh.df().select(*good.columns)
-        out = (
-            good.unionByName(quar)
-            .groupBy("reason")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                .cast("long")
-                .alias("cents_sum"),
-            )
-            .orderBy("reason")
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("reason")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1624,7 +1614,8 @@ ORDER BY table_name
 
 
 @_register("warehouse_clone_zero_copy", _CLONE_ORACLE)
-def warehouse_clone_zero_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_clone_zero_copy(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Zero-copy CLONE (Delta's SHALLOW CLONE shape): the clone's data
     directory hard-links the base's immutable parquet files —
     O(files) metadata, zero bytes copied — then evolves independently
@@ -1638,9 +1629,6 @@ def warehouse_clone_zero_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes — new files never collide with linked ones (uuid part
     names).
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -1652,41 +1640,35 @@ def warehouse_clone_zero_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         )
     )
-    root = tempfile.mkdtemp(prefix="ldw_clone_")
-    try:
-        base = SparkWarehouse(spark, root, "accounts")
-        base._write_meta({"schema": None, "expires": None})
-        base_data = os.path.join(base.path, "data")
-        base_df.write.mode("overwrite").parquet(base_data)
+    base = SparkWarehouse(spark, root, "accounts")
+    base._write_meta({"schema": None, "expires": None})
+    base_data = os.path.join(base.path, "data")
+    base_df.write.mode("overwrite").parquet(base_data)
 
-        clone = SparkWarehouse(spark, root, "accounts_clone")
-        clone._write_meta({"schema": None, "expires": None})
-        clone_data = os.path.join(clone.path, "data")
-        os.makedirs(clone_data)
-        for name in os.listdir(base_data):
-            src = os.path.join(base_data, name)
-            if os.path.isfile(src):
-                os.link(src, os.path.join(clone_data, name))
+    clone = SparkWarehouse(spark, root, "accounts_clone")
+    clone._write_meta({"schema": None, "expires": None})
+    clone_data = os.path.join(clone.path, "data")
+    os.makedirs(clone_data)
+    for name in os.listdir(base_data):
+        src = os.path.join(base_data, name)
+        if os.path.isfile(src):
+            os.link(src, os.path.join(clone_data, name))
 
-        appended = base_df.filter(F.col("k") < 50).select(
-            (F.col("k") + 100000).alias("k"), (F.col("cents") + 1).alias("cents")
+    appended = base_df.filter(F.col("k") < 50).select(
+        (F.col("k") + 100000).alias("k"), (F.col("cents") + 1).alias("cents")
+    )
+    appended.write.mode("append").parquet(clone_data)
+
+    def acct(wh, name):
+        return wh.df().agg(
+            F.lit(name).alias("table_name"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("cents").cast("long").alias("cents_sum"),
         )
-        appended.write.mode("append").parquet(clone_data)
 
-        def acct(wh, name):
-            return wh.df().agg(
-                F.lit(name).alias("table_name"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("cents").cast("long").alias("cents_sum"),
-            )
-
-        out = acct(base, "base").unionByName(acct(clone, "clone")).orderBy(
-            "table_name"
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return acct(base, "base").unionByName(acct(clone, "clone")).orderBy(
+        "table_name"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1713,7 +1695,10 @@ ORDER BY table_name, key_col
 
 
 @_register("warehouse_two_table_atomic_publish", _TWO_TABLE_ORACLE)
-def warehouse_two_table_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_two_table_atomic_publish(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Cross-table transaction: two summary tables are written under a
     staging version directory and published with ONE atomic pointer
     rename — readers resolve the pointer first, so they see both
@@ -1726,68 +1711,59 @@ def warehouse_two_table_atomic_publish(spark: SparkSession, sf_dir: str) -> Data
     Scale: the commit is one rename regardless of data volume; table
     writes inside the version dir are ordinary distributed writes.
     """
-    import shutil
-    import tempfile
+    t = load_tables(spark, sf_dir, register_views=False)
+    s1 = (
+        t["orders"]
+        .groupBy(F.col("o_orderpriority").alias("key_col"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            .cast("long")
+            .alias("cents"),
+        )
+    )
+    s2 = (
+        t["customer"]
+        .groupBy(F.col("c_mktsegment").alias("key_col"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.round(F.col("c_acctbal") * 100).cast("long"))
+            .cast("long")
+            .alias("cents"),
+        )
+    )
 
-    root = tempfile.mkdtemp(prefix="ldw_txn_")
-    try:
-        t = load_tables(spark, sf_dir, register_views=False)
-        s1 = (
-            t["orders"]
-            .groupBy(F.col("o_orderpriority").alias("key_col"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                .alias("cents"),
+    def publish(version: int, tables: dict, fail_after_first: bool = False):
+        staging = os.path.join(root, f"_staging_v{version}")
+        for i, (name, df) in enumerate(tables.items()):
+            if fail_after_first and i == 1:
+                raise RuntimeError("simulated writer crash mid-transaction")
+            df.write.mode("overwrite").parquet(os.path.join(staging, name))
+        final = os.path.join(root, f"v{version}")
+        os.rename(staging, final)  # the atomic commit point
+        tmp_ptr = os.path.join(root, ".ptr_tmp")
+        with open(tmp_ptr, "w") as f:
+            f.write(str(version))
+        os.replace(tmp_ptr, os.path.join(root, "CURRENT"))
+
+    publish(1, {"orders_summary": s1, "customer_summary": s2})
+    try:  # failed txn: must not move the pointer
+        publish(2, {"orders_summary": s1.limit(1), "customer_summary": s2},
+                fail_after_first=True)
+    except RuntimeError:
+        pass
+    with open(os.path.join(root, "CURRENT")) as f:
+        current = int(f.read())
+    assert current == 1, "failed transaction moved the pointer"
+    vdir = os.path.join(root, f"v{current}")
+    frames = []
+    for name in ("orders_summary", "customer_summary"):
+        frames.append(
+            spark.read.parquet(os.path.join(vdir, name)).select(
+                F.lit(name).alias("table_name"), "key_col", "n", "cents"
             )
         )
-        s2 = (
-            t["customer"]
-            .groupBy(F.col("c_mktsegment").alias("key_col"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("c_acctbal") * 100).cast("long"))
-                .cast("long")
-                .alias("cents"),
-            )
-        )
-
-        def publish(version: int, tables: dict, fail_after_first: bool = False):
-            staging = os.path.join(root, f"_staging_v{version}")
-            for i, (name, df) in enumerate(tables.items()):
-                if fail_after_first and i == 1:
-                    raise RuntimeError("simulated writer crash mid-transaction")
-                df.write.mode("overwrite").parquet(os.path.join(staging, name))
-            final = os.path.join(root, f"v{version}")
-            os.rename(staging, final)  # the atomic commit point
-            tmp_ptr = os.path.join(root, ".ptr_tmp")
-            with open(tmp_ptr, "w") as f:
-                f.write(str(version))
-            os.replace(tmp_ptr, os.path.join(root, "CURRENT"))
-
-        publish(1, {"orders_summary": s1, "customer_summary": s2})
-        try:  # failed txn: must not move the pointer
-            publish(2, {"orders_summary": s1.limit(1), "customer_summary": s2},
-                    fail_after_first=True)
-        except RuntimeError:
-            pass
-        with open(os.path.join(root, "CURRENT")) as f:
-            current = int(f.read())
-        assert current == 1, "failed transaction moved the pointer"
-        vdir = os.path.join(root, f"v{current}")
-        frames = []
-        for name in ("orders_summary", "customer_summary"):
-            frames.append(
-                spark.read.parquet(os.path.join(vdir, name)).select(
-                    F.lit(name).alias("table_name"), "key_col", "n", "cents"
-                )
-            )
-        out = frames[0].unionByName(frames[1]).orderBy("table_name", "key_col")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return frames[0].unionByName(frames[1]).orderBy("table_name", "key_col")
 
 
 # ---------------------------------------------------------------------------
@@ -2303,7 +2279,10 @@ GROUP BY m.month ORDER BY m.month
 
 
 @_register("warehouse_partitioned_upsert", _PART_UPSERT_ORACLE)
-def warehouse_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_partitioned_upsert(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Partition-pruned upsert: the table lives hive-partitioned by
     month, the delta touches exactly two months (updates on keys % 10
     = 3 plus one insert per month), and the merge REWRITES ONLY THOSE
@@ -2321,87 +2300,80 @@ def warehouse_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rewritten/intact accounting.
     """
     import shutil
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="ldw_partup_")
-    try:
-        t = load_tables(spark, sf_dir, register_views=False)
-        base = t["orders"].select(
-            F.date_trunc("month", F.col("o_orderdate").cast("date"))
-            .cast("date")
-            .cast("string")
-            .alias("month"),
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        data = os.path.join(root, "data")
-        base.write.partitionBy("month").parquet(data)
+    t = load_tables(spark, sf_dir, register_views=False)
+    base = t["orders"].select(
+        F.date_trunc("month", F.col("o_orderdate").cast("date"))
+        .cast("date")
+        .cast("string")
+        .alias("month"),
+        F.col("o_orderkey").alias("k"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    data = os.path.join(root, "data")
+    base.write.partitionBy("month").parquet(data)
 
-        months = sorted(
-            r["month"] for r in base.select("month").distinct().collect()
-        )
-        target = months[:2]
-        upd = (
-            base.filter(F.col("month").isin(target) & (F.col("k") % 10 == 3))
-            .select("month", "k", (F.col("cents") + 777).alias("cents"))
-        )
-        ins = spark.createDataFrame(
-            [(m, 90000000 + i + 1, 12345) for i, m in enumerate(target)],
-            "month string, k long, cents long",
-        )
-        delta = upd.unionByName(ins)
+    months = sorted(
+        r["month"] for r in base.select("month").distinct().collect()
+    )
+    target = months[:2]
+    upd = (
+        base.filter(F.col("month").isin(target) & (F.col("k") % 10 == 3))
+        .select("month", "k", (F.col("cents") + 777).alias("cents"))
+    )
+    ins = spark.createDataFrame(
+        [(m, 90000000 + i + 1, 12345) for i, m in enumerate(target)],
+        "month string, k long, cents long",
+    )
+    delta = upd.unionByName(ins)
 
-        def listing(months_):
-            out = {}
-            for m in months_:
-                d = os.path.join(data, f"month={m}")
-                out[m] = sorted(
-                    (f, os.path.getsize(os.path.join(d, f)),
-                     os.path.getmtime(os.path.join(d, f)))
-                    for f in os.listdir(d)
-                    if not f.startswith(("_", "."))
-                )
-            return out
-
-        untouched = [m for m in months if m not in target]
-        before = listing(untouched)
-
-        # the pruned rewrite: per affected partition only
-        for m in target:
-            part_dir = os.path.join(data, f"month={m}")
-            existing = spark.read.parquet(part_dir).withColumn("month", F.lit(m))
-            d_m = delta.filter(F.col("month") == m)
-            merged = existing.join(
-                d_m.select("k"), "k", "left_anti"
-            ).unionByName(d_m).select("k", "cents")
-            staging = os.path.join(root, f".stage_{m}")
-            merged.write.parquet(staging)
-            old = os.path.join(root, f".old_{m}")
-            os.rename(part_dir, old)
-            os.rename(staging, part_dir)
-            shutil.rmtree(old)
-
-        intact = listing(untouched) == before
-        final = spark.read.parquet(data)  # partition column re-inferred
-        out = (
-            final.groupBy(F.col("month").cast("string").alias("month"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("cents").cast("long").alias("cents_sum"),
+    def listing(months_):
+        out = {}
+        for m in months_:
+            d = os.path.join(data, f"month={m}")
+            out[m] = sorted(
+                (f, os.path.getsize(os.path.join(d, f)),
+                 os.path.getmtime(os.path.join(d, f)))
+                for f in os.listdir(d)
+                if not f.startswith(("_", "."))
             )
-            .select(
-                "month",
-                "n_rows",
-                "cents_sum",
-                F.col("month").isin(target).alias("rewritten"),
-                F.lit(bool(intact)).alias("untouched_intact"),
-            )
-            .orderBy("month")
+        return out
+
+    untouched = [m for m in months if m not in target]
+    before = listing(untouched)
+
+    # the pruned rewrite: per affected partition only
+    for m in target:
+        part_dir = os.path.join(data, f"month={m}")
+        existing = spark.read.parquet(part_dir).withColumn("month", F.lit(m))
+        d_m = delta.filter(F.col("month") == m)
+        merged = existing.join(
+            d_m.select("k"), "k", "left_anti"
+        ).unionByName(d_m).select("k", "cents")
+        staging = os.path.join(root, f".stage_{m}")
+        merged.write.parquet(staging)
+        old = os.path.join(root, f".old_{m}")
+        os.rename(part_dir, old)
+        os.rename(staging, part_dir)
+        shutil.rmtree(old)
+
+    intact = listing(untouched) == before
+    final = spark.read.parquet(data)  # partition column re-inferred
+    return (
+        final.groupBy(F.col("month").cast("string").alias("month"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("cents").cast("long").alias("cents_sum"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .select(
+            "month",
+            "n_rows",
+            "cents_sum",
+            F.col("month").isin(target).alias("rewritten"),
+            F.lit(bool(intact)).alias("untouched_intact"),
+        )
+        .orderBy("month")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,7 @@ from load_datawarehouse_spark.ops._util import (
     dec_sum2,
     lineage_cut,
     lineage_cut_eager,
+    on_scratch_dir,
     require_pair_budget,
     sql_dec_avg,
     sql_dec_sum,
@@ -2623,7 +2624,8 @@ LIMIT 20
 
 
 @_register("warehouse_load_fetch", _WAREHOUSE_RT_ORACLE)
-def warehouse_load_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_load_fetch(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """End-to-end warehouse verb exercise under the correctness gate:
     ``prepare`` -> schema inference -> conform -> distributed parquet
     append -> ``fetch`` (projection + sort + limit), through a real
@@ -2634,9 +2636,6 @@ def warehouse_load_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep is bounded; everything after ``load`` is the same distributed
     path a TB-scale load takes (executors write parquet; fetch is a
     pruned scan)."""
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import QuerySort, SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -2647,18 +2646,12 @@ def warehouse_load_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "source")
         .collect()
     ]
-    root = tempfile.mkdtemp(prefix="ldw_rt_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "docs_sample", data=records)
-        out = wh.fetch(
-            fields=("doc_id", "lang", "source"),
-            sort=[("doc_id", QuerySort.ASCENDING)],
-            count=20,
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    wh = SparkWarehouse.new(spark, root, "docs_sample", data=records)
+    return wh.fetch(
+        fields=("doc_id", "lang", "source"),
+        sort=[("doc_id", QuerySort.ASCENDING)],
+        count=20,
+    )
 
 
 _WAREHOUSE_BULK_ORACLE = """
@@ -2674,12 +2667,13 @@ ORDER BY lang, source
 
 
 @_register("warehouse_load_dataframe", _WAREHOUSE_BULK_ORACLE)
-def warehouse_load_dataframe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-15 BULK form of the S2 verb under the correctness
+@on_scratch_dir
+def warehouse_load_dataframe(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """The BULK form of the S2 verb under the correctness
     gate: ``load`` with a DataFrame in — key sanitation as a zero-copy
     projection, DISTRIBUTED schema inference (per-partition
     observation + treeAggregate), conform, parquet append — no
-    records round-trip, no driver materialization (VERDICT r14 #5).
+    records round-trip, no driver materialization.
     Two loads exercise the widen-only append: the second batch adds a
     ``batch_tag`` column, which must backfill NULL on the first
     batch's rows and append AFTER the existing fields; ``n_tagged``
@@ -2690,38 +2684,27 @@ def warehouse_load_dataframe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALECHECK.json::warehouse_verb_decade, ``load_df`` leg) measures
     its decade slope against the record-oriented form's driver-bound
     6.02."""
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
     batch = t["documents"].filter(F.col("doc_id") < 500).select(
         "doc_id", "lang", "source", "n_chars"
     )
-    root = tempfile.mkdtemp(prefix="ldw_bulk_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "docs_bulk")
-        wh.load(batch.filter(F.col("doc_id") < 250))
-        wh.load(
-            batch.filter(F.col("doc_id") >= 250).withColumn(
-                "batch_tag", F.lit("b2")
-            )
+    wh = SparkWarehouse.new(spark, root, "docs_bulk")
+    wh.load(batch.filter(F.col("doc_id") < 250))
+    wh.load(
+        batch.filter(F.col("doc_id") >= 250).withColumn("batch_tag", F.lit("b2"))
+    )
+    return (
+        wh.df()
+        .groupBy("lang", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("sum_chars"),
+            F.count("batch_tag").alias("n_tagged"),
         )
-        out = (
-            wh.df()
-            .groupBy("lang", "source")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").alias("sum_chars"),
-                F.count("batch_tag").alias("n_tagged"),
-            )
-            .orderBy("lang", "source")
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("lang", "source")
+    )
 
 
 _WAREHOUSE_NESTED_ORACLE = """
@@ -2741,25 +2724,25 @@ GROUP BY lang ORDER BY lang
 
 
 @_register("warehouse_load_nested_evolution", _WAREHOUSE_NESTED_ORACLE)
-def warehouse_load_nested_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_load_nested_evolution(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Nested-schema evolution on the S2 DataFrame bulk path, under
-    the correctness gate (ADVICE r15 #1): the table declares a RECORD
+    the correctness gate: the table declares a RECORD
     column ``meta<chars, src>``, then two DataFrame batches each ship
     a struct missing ONE nested field (even docs carry only
     ``meta.chars``, odd docs only ``meta.src``). The conform stage
     must backfill the absent nested field with NULL per batch —
     mirroring ``_conform_record``'s recursion on the records path —
     instead of failing the whole-struct cast (which is exactly what
-    the pre-r16 cast-based conform did on this query). The per-lang
+    a cast-based conform does on this query). The per-lang
     NULL census (``n_with_chars`` / ``n_with_src``) proves which
     nested field each batch populated.
 
     Scale: conform is a zero-shuffle projection (per-field struct
     rebuild in codegen); both loads stay narrow distributed passes
     like ``warehouse_load_dataframe``."""
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     nested_schema = [
@@ -2780,26 +2763,20 @@ def warehouse_load_nested_evolution(spark: SparkSession, sf_dir: str) -> DataFra
         "doc_id", "lang",
         F.struct(F.col("source").alias("src")).alias("meta"),
     )
-    root = tempfile.mkdtemp(prefix="ldw_nested_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "docs_nested")
-        wh.load(even, schema=nested_schema, full_schema=True)
-        wh.load(odd)  # adopts the table schema; conform backfills chars
-        out = (
-            wh.df()
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.count("meta.chars").alias("n_with_chars"),
-                F.count("meta.src").alias("n_with_src"),
-                F.sum("meta.chars").alias("sum_chars"),
-            )
-            .orderBy("lang")
+    wh = SparkWarehouse.new(spark, root, "docs_nested")
+    wh.load(even, schema=nested_schema, full_schema=True)
+    wh.load(odd)  # adopts the table schema; conform backfills chars
+    return (
+        wh.df()
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count("meta.chars").alias("n_with_chars"),
+            F.count("meta.src").alias("n_with_src"),
+            F.sum("meta.chars").alias("sum_chars"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("lang")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2968,7 +2945,10 @@ def dpp_join_plan(spark: SparkSession, fact_path: str, dim_path: str) -> DataFra
 
 
 @_register("join_dynamic_partition_pruned", _DPP_ORACLE)
-def join_dynamic_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def join_dynamic_partition_pruned(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Dynamic partition pruning: the fact table is laid out
     hive-partitioned on the join key, and the selective dimension
     filter prunes fact partitions AT RUNTIME (Catalyst injects a
@@ -2979,20 +2959,11 @@ def join_dynamic_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame
     The partitioned copy is rebuilt per call here; production lays
     the fact table out once and every selective dim join prunes for
     free."""
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir, register_views=False)
-    root = tempfile.mkdtemp(prefix="ldw_dpp_")
-    try:
-        path = os.path.join(root, "orders_part")
-        dim_path = os.path.join(root, "prio_dim")
-        build_dpp_layout(spark, t, path, dim_path)
-        out = dpp_join_plan(spark, path, dim_path)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    path = os.path.join(root, "orders_part")
+    dim_path = os.path.join(root, "prio_dim")
+    build_dpp_layout(spark, t, path, dim_path)
+    return dpp_join_plan(spark, path, dim_path)
 
 
 # ---------------------------------------------------------------------------
@@ -3184,40 +3155,33 @@ ORDER BY table_name
 
 
 @_register("warehouse_expiry_sweep", _EXPIRY_ORACLE)
-def warehouse_expiry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_expiry_sweep(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """TTL lifecycle under the correctness gate: two tables get
     expiries (one past, one future); the sweep drops expired tables
     (set_expiry / is_expired / delete — reference
     bigquery/__init__.py:248-284 + classes.py drop alias) and the
     resulting inventory is pinned by the oracle."""
     import datetime as dt
-    import shutil
-    import tempfile
 
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
-    root = tempfile.mkdtemp(prefix="ldw_ttl_")
-    try:
-        now = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
-        specs = {
-            "t_expired": now - dt.timedelta(days=1),
-            "t_fresh": now + dt.timedelta(days=1),
-        }
-        rows = []
-        for name, exp in specs.items():
-            wh = SparkWarehouse.new(
-                spark, root, name, data=[{"k": 1}], expires=exp
-            )
-            wh.set_expiry(exp)
-            was_expired = wh.is_expired(now=now)
-            if was_expired:
-                wh.delete()
-            rows.append((name, was_expired, wh.exists()))
-        return spark.createDataFrame(
-            sorted(rows), "table_name string, was_expired boolean, still_exists boolean"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    now = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    specs = {
+        "t_expired": now - dt.timedelta(days=1),
+        "t_fresh": now + dt.timedelta(days=1),
+    }
+    rows = []
+    for name, exp in specs.items():
+        wh = SparkWarehouse.new(spark, root, name, data=[{"k": 1}], expires=exp)
+        wh.set_expiry(exp)
+        was_expired = wh.is_expired(now=now)
+        if was_expired:
+            wh.delete()
+        rows.append((name, was_expired, wh.exists()))
+    return spark.createDataFrame(
+        sorted(rows), "table_name string, was_expired boolean, still_exists boolean"
+    )
 
 
 _EVOLUTION_ORACLE = """
@@ -3232,7 +3196,8 @@ ORDER BY position
 
 
 @_register("warehouse_schema_evolution", _EVOLUTION_ORACLE)
-def warehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_schema_evolution(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Widening append under the correctness gate: a table created
     with (id, name, score) receives a batch that omits `score` and
     adds `tag` — the declared schema must keep every existing field
@@ -3240,25 +3205,15 @@ def warehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no narrowing, no permutation; the silent-column-loss bug class
     the reference's condense() invites). The oracle pins the exact
     post-append layout."""
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
-    root = tempfile.mkdtemp(prefix="ldw_evo_")
-    try:
-        wh = SparkWarehouse.new(
-            spark, root, "evolving",
-            data=[{"id": 1, "name": "a", "score": 1.5}],
-        )
-        wh.load([{"id": 2, "name": "b", "tag": "x"}])
-        rows = [
-            (i + 1, f["name"], f["type"])
-            for i, f in enumerate(wh.schema)
-        ]
-        return spark.createDataFrame(rows, "position int, name string, type string")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    wh = SparkWarehouse.new(
+        spark, root, "evolving",
+        data=[{"id": 1, "name": "a", "score": 1.5}],
+    )
+    wh.load([{"id": 2, "name": "b", "tag": "x"}])
+    rows = [(i + 1, f["name"], f["type"]) for i, f in enumerate(wh.schema)]
+    return spark.createDataFrame(rows, "position int, name string, type string")
 
 
 # ---------------------------------------------------------------------------
@@ -3275,7 +3230,10 @@ FROM (VALUES
 
 
 @_register("warehouse_compact_small_files", _COMPACTION_ORACLE)
-def warehouse_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_compact_small_files(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Small-file compaction: a table fragmented into many tiny
     parquet files (the streaming-append pathology) is rewritten into
     few right-sized files with an atomic swap — the maintenance job
@@ -3287,33 +3245,27 @@ def warehouse_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame
     count (at 100 TB, repartition to total_bytes/target_file_size
     and compact per partition-directory, not the whole table)."""
     import glob
-    import os as _os
     import shutil
-    import tempfile
 
     t = load_tables(spark, sf_dir, register_views=False)
     docs = t["documents"].select("doc_id", "lang", "source").limit(500)
-    root = tempfile.mkdtemp(prefix="ldw_compact_")
-    try:
-        frag = _os.path.join(root, "frag")
-        docs.coalesce(1).write.option("maxRecordsPerFile", "50").parquet(frag)
-        n_before = len(glob.glob(f"{frag}/*.parquet"))
-        n_rows_before = spark.read.parquet(frag).count()
-        compacted = _os.path.join(root, "compacted")
-        spark.read.parquet(frag).repartition(1).write.parquet(compacted)
-        # atomic swap, same discipline as SparkWarehouse.update
-        old = _os.path.join(root, "old")
-        _os.replace(frag, old)
-        _os.replace(compacted, frag)
-        shutil.rmtree(old)
-        n_after = len(glob.glob(f"{frag}/*.parquet"))
-        n_rows_after = spark.read.parquet(frag).count()
-        return spark.createDataFrame(
-            [(n_before, n_after, n_rows_after, n_rows_after == n_rows_before)],
-            "n_files_before int, n_files_after int, n_rows long, rows_preserved boolean",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    frag = os.path.join(root, "frag")
+    docs.coalesce(1).write.option("maxRecordsPerFile", "50").parquet(frag)
+    n_before = len(glob.glob(f"{frag}/*.parquet"))
+    n_rows_before = spark.read.parquet(frag).count()
+    compacted = os.path.join(root, "compacted")
+    spark.read.parquet(frag).repartition(1).write.parquet(compacted)
+    # atomic swap, same discipline as SparkWarehouse.update
+    old = os.path.join(root, "old")
+    os.replace(frag, old)
+    os.replace(compacted, frag)
+    shutil.rmtree(old)
+    n_after = len(glob.glob(f"{frag}/*.parquet"))
+    n_rows_after = spark.read.parquet(frag).count()
+    return spark.createDataFrame(
+        [(n_before, n_after, n_rows_after, n_rows_after == n_rows_before)],
+        "n_files_before int, n_files_after int, n_rows long, rows_preserved boolean",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3786,7 +3738,8 @@ SELECT * FROM (
 
 
 @_register("warehouse_time_travel", _TIME_TRAVEL_ORACLE)
-def warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_time_travel(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Snapshot/time-travel lifecycle under the correctness gate:
     load batch 1 -> snapshot v1 -> append batch 2 -> snapshot v2 ->
     upsert (redact lang of early docs) -> read v1, v2, and current
@@ -3800,9 +3753,6 @@ def warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-of reads are plain parquet scans of the pinned file set with
     the schema of their time.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -3812,36 +3762,30 @@ def warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.asDict()
         for r in docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 100)).collect()
     ]
-    root = tempfile.mkdtemp(prefix="ldw_tt_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "corpus", data=batch1)
-        v1 = wh.snapshot()
-        wh.load(batch2)
-        v2 = wh.snapshot()
-        redacted = [
-            {**r, "lang": "redacted"} for r in batch1 if r["doc_id"] < 10
-        ]
-        wh.update(redacted, keys=["doc_id"])
+    wh = SparkWarehouse.new(spark, root, "corpus", data=batch1)
+    v1 = wh.snapshot()
+    wh.load(batch2)
+    v2 = wh.snapshot()
+    redacted = [
+        {**r, "lang": "redacted"} for r in batch1 if r["doc_id"] < 10
+    ]
+    wh.update(redacted, keys=["doc_id"])
 
-        def stats(df: DataFrame, label: str) -> DataFrame:
-            return df.agg(
-                F.lit(label).alias("version"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("doc_id").alias("sum_doc_id"),
-                F.sum(
-                    F.when(F.col("lang") == "redacted", 1).otherwise(0)
-                ).alias("n_redacted"),
-            )
-        out = (
-            stats(wh.df_at(v1), "v1")
-            .unionByName(stats(wh.df_at(v2), "v2"))
-            .unionByName(stats(wh.df(), "current"))
-            .orderBy("version")
+    def stats(df: DataFrame, label: str) -> DataFrame:
+        return df.agg(
+            F.lit(label).alias("version"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("doc_id").alias("sum_doc_id"),
+            F.sum(
+                F.when(F.col("lang") == "redacted", 1).otherwise(0)
+            ).alias("n_redacted"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return (
+        stats(wh.df_at(v1), "v1")
+        .unionByName(stats(wh.df_at(v2), "v2"))
+        .unionByName(stats(wh.df(), "current"))
+        .orderBy("version")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3860,7 +3804,8 @@ ORDER BY doc_id
 
 
 @_register("warehouse_merge_cdc", _MERGE_CDC_ORACLE)
-def warehouse_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_merge_cdc(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Full MERGE INTO semantics through ``SparkWarehouse.merge``: a
     CDC batch mixing inserts (new keys), updates (lang rewrite on
     keys ending in 1), and deletes (keys ending in 2) applied in ONE
@@ -3872,9 +3817,6 @@ def warehouse_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of op mix. Same atomic temp-path swap discipline as
     ``update`` (single-writer, SURVEY.md §7.5).
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -3897,15 +3839,9 @@ def warehouse_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["doc_id"] < 5
         ]
     )
-    root = tempfile.mkdtemp(prefix="ldw_merge_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "cdc", data=base)
-        wh.merge(changes, keys=["doc_id"])
-        out = wh.df().orderBy("doc_id")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    wh = SparkWarehouse.new(spark, root, "cdc", data=base)
+    wh.merge(changes, keys=["doc_id"])
+    return wh.df().orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -3985,7 +3921,10 @@ SELECT * FROM (
 
 
 @_register("warehouse_vacuum_snapshots", _VACUUM_ORACLE)
-def warehouse_vacuum_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_vacuum_snapshots(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Snapshot retention GC: load -> v1 -> append -> v2 -> append ->
     v3 -> ``vacuum(keep_last=1)`` -> snapshot again. v1/v2 must be
     GONE (as-of reads raise — reproducibility failures are loud, never
@@ -3997,9 +3936,6 @@ def warehouse_vacuum_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: vacuum is O(files) hard-link unlinks per dropped version
     (see ``SparkWarehouse.vacuum``); nothing data-sized moves.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.errors import WarehouseTableNotFound
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
@@ -4020,31 +3956,27 @@ def warehouse_vacuum_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         ],
     ]
-    root = tempfile.mkdtemp(prefix="ldw_vac_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "corpus", data=batches[0])
-        v1 = wh.snapshot()
-        wh.load(batches[1])
-        v2 = wh.snapshot()
-        wh.load(batches[2])
-        v3 = wh.snapshot()
-        assert wh.vacuum(keep_last=1) == [v1, v2]
-        v4 = wh.snapshot()
-        assert v4 == v3 + 1
+    wh = SparkWarehouse.new(spark, root, "corpus", data=batches[0])
+    v1 = wh.snapshot()
+    wh.load(batches[1])
+    v2 = wh.snapshot()
+    wh.load(batches[2])
+    v3 = wh.snapshot()
+    assert wh.vacuum(keep_last=1) == [v1, v2]
+    v4 = wh.snapshot()
+    assert v4 == v3 + 1
 
-        def probe(version: int, label: str) -> tuple:
-            try:
-                n = wh.df_at(version).count()
-                return (label, 1, n)
-            except WarehouseTableNotFound:
-                return (label, 0, -1)
+    def probe(version: int, label: str) -> tuple:
+        try:
+            n = wh.df_at(version).count()
+            return (label, 1, n)
+        except WarehouseTableNotFound:
+            return (label, 0, -1)
 
-        rows = [probe(v, f"v{v}") for v in (v1, v2, v3, v4)]
-        return spark.createDataFrame(
-            rows, "version string, readable long, n_rows long"
-        ).orderBy("version")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    rows = [probe(v, f"v{v}") for v in (v1, v2, v3, v4)]
+    return spark.createDataFrame(
+        rows, "version string, readable long, n_rows long"
+    ).orderBy("version")
 
 
 # ---------------------------------------------------------------------------
@@ -4671,7 +4603,8 @@ ORDER BY fmt
 
 
 @_register("source_formats_roundtrip", _FORMATS_RT_ORACLE)
-def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def source_formats_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """S14 under the driver gate: one lineitem slice written and read
     back through csv, json, and orc via ``sources.write_table`` /
     ``read_table`` (explicit schema on the way back in — no inference
@@ -4685,9 +4618,6 @@ def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice here is deliberately small; the format machinery, not the
     volume, is under test.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.sources import read_table, write_table
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -4696,25 +4626,19 @@ def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") < 100)
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_shipdate")
     )
-    root = tempfile.mkdtemp(prefix="ldw_fmt_")
-    try:
-        frames = []
-        for fmt in ("csv", "json", "orc"):
-            path = os.path.join(root, fmt)
-            write_table(base, path, fmt=fmt)
-            back = read_table(spark, path, fmt=fmt, schema=base.schema)
-            frames.append(
-                back.agg(
-                    F.lit(fmt).alias("fmt"),
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    dec_sum("l_extendedprice", "sum_price"),
-                )
+    frames = []
+    for fmt in ("csv", "json", "orc"):
+        path = os.path.join(root, fmt)
+        write_table(base, path, fmt=fmt)
+        back = read_table(spark, path, fmt=fmt, schema=base.schema)
+        frames.append(
+            back.agg(
+                F.lit(fmt).alias("fmt"),
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                dec_sum("l_extendedprice", "sum_price"),
             )
-        out = frames[0].unionByName(frames[1]).unionByName(frames[2]).orderBy("fmt")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        )
+    return frames[0].unionByName(frames[1]).unionByName(frames[2]).orderBy("fmt")
 
 
 # ---------------------------------------------------------------------------
@@ -5139,7 +5063,10 @@ ORDER BY o_custkey
 
 
 @_register("warehouse_incremental_view", _IVM_ORACLE)
-def warehouse_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_incremental_view(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Incremental view maintenance: a per-customer revenue aggregate
     is materialized into a SparkWarehouse table from the history
     BEFORE {_IVM_SPLIT_DATE}, then a delta batch (orders on/after the
@@ -5154,9 +5081,6 @@ def warehouse_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (count/sum) maintain exactly; non-additive ones (exact
     distinct, median) need auxiliary state — use sketches there.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -5171,51 +5095,45 @@ def warehouse_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = agg_view(orders.filter(F.col("o_orderdate") < split))
     delta = agg_view(orders.filter(F.col("o_orderdate") >= split))
-    root = tempfile.mkdtemp(prefix="ldw_ivm_")
-    try:
-        wh = SparkWarehouse.new(
-            spark,
-            root,
-            "rev_view",
-            data=[r.asDict() for r in base.collect()],
+    wh = SparkWarehouse.new(
+        spark,
+        root,
+        "rev_view",
+        data=[r.asDict() for r in base.collect()],
+    )
+    merged = (
+        wh.df()
+        .select("o_custkey", "n_orders", "rev_dec")
+        .join(
+            delta.select(
+                F.col("o_custkey").alias("dk"),
+                F.col("n_orders").alias("d_n"),
+                F.col("rev_dec").alias("d_rev"),
+            ),
+            F.col("o_custkey") == F.col("dk"),
+            "full_outer",
         )
-        merged = (
-            wh.df()
-            .select("o_custkey", "n_orders", "rev_dec")
-            .join(
-                delta.select(
-                    F.col("o_custkey").alias("dk"),
-                    F.col("n_orders").alias("d_n"),
-                    F.col("rev_dec").alias("d_rev"),
-                ),
-                F.col("o_custkey") == F.col("dk"),
-                "full_outer",
-            )
-            .select(
-                F.coalesce("o_custkey", "dk").alias("o_custkey"),
-                (
-                    F.coalesce("n_orders", F.lit(0)) + F.coalesce("d_n", F.lit(0))
-                ).cast("long").alias("n_orders"),
-                (
-                    F.coalesce(F.col("rev_dec"), F.lit(0).cast(DEC))
-                    + F.coalesce(F.col("d_rev"), F.lit(0).cast(DEC))
-                ).alias("rev_dec"),
-            )
+        .select(
+            F.coalesce("o_custkey", "dk").alias("o_custkey"),
+            (
+                F.coalesce("n_orders", F.lit(0)) + F.coalesce("d_n", F.lit(0))
+            ).cast("long").alias("n_orders"),
+            (
+                F.coalesce(F.col("rev_dec"), F.lit(0).cast(DEC))
+                + F.coalesce(F.col("d_rev"), F.lit(0).cast(DEC))
+            ).alias("rev_dec"),
         )
-        wh.update([r.asDict() for r in merged.collect()], keys=["o_custkey"])
-        out = (
-            wh.df()
-            .select(
-                "o_custkey",
-                F.col("n_orders").cast("long").alias("n_orders"),
-                F.col("rev_dec").cast(DEC).cast("double").alias("revenue"),
-            )
-            .orderBy("o_custkey")
+    )
+    wh.update([r.asDict() for r in merged.collect()], keys=["o_custkey"])
+    return (
+        wh.df()
+        .select(
+            "o_custkey",
+            F.col("n_orders").cast("long").alias("n_orders"),
+            F.col("rev_dec").cast(DEC).cast("double").alias("revenue"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("o_custkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6021,7 +5939,8 @@ SELECT * FROM (
 
 
 @_register("warehouse_snapshot_diff", _SNAPSHOT_DIFF_ORACLE)
-def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Snapshot diff: classify every key as added / removed / changed /
     unchanged between snapshot v1 and the current table state — the
     audit query behind "what did this pipeline run actually do", built
@@ -6035,9 +5954,6 @@ def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets; a lakehouse-format diff would prune to changed files, same
     contract).
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
     t = load_tables(spark, sf_dir, register_views=False)
@@ -6053,37 +5969,31 @@ def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         if r["doc_id"] % 10 == 3
     ]
     deletes = [{**r, "op": "D"} for r in base if r["doc_id"] % 10 == 7]
-    root = tempfile.mkdtemp(prefix="ldw_diff_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "corpus", data=base)
-        v1 = wh.snapshot()
-        wh.merge(inserts + updates + deletes, keys=["doc_id"])
-        old = wh.df_at(v1).select(
-            F.col("doc_id"), F.struct("lang", "source").alias("old_val")
+    wh = SparkWarehouse.new(spark, root, "corpus", data=base)
+    v1 = wh.snapshot()
+    wh.merge(inserts + updates + deletes, keys=["doc_id"])
+    old = wh.df_at(v1).select(
+        F.col("doc_id"), F.struct("lang", "source").alias("old_val")
+    )
+    new = wh.df().select(
+        F.col("doc_id"), F.struct("lang", "source").alias("new_val")
+    )
+    change = (
+        F.when(F.col("old_val").isNull(), "added")
+        .when(F.col("new_val").isNull(), "removed")
+        .when(F.col("old_val") != F.col("new_val"), "changed")
+        .otherwise("unchanged")
+    )
+    return (
+        old.join(new, "doc_id", "full_outer")
+        .select("doc_id", change.alias("change"))
+        .groupBy("change")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
         )
-        new = wh.df().select(
-            F.col("doc_id"), F.struct("lang", "source").alias("new_val")
-        )
-        change = (
-            F.when(F.col("old_val").isNull(), "added")
-            .when(F.col("new_val").isNull(), "removed")
-            .when(F.col("old_val") != F.col("new_val"), "changed")
-            .otherwise("unchanged")
-        )
-        out = (
-            old.join(new, "doc_id", "full_outer")
-            .select("doc_id", change.alias("change"))
-            .groupBy("change")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("doc_id").cast("long").alias("sum_doc_id"),
-            )
-            .orderBy("change")
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("change")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6394,7 +6304,10 @@ GROUP BY lang ORDER BY lang
 
 
 @_register("source_partition_pruned_read", _PART_PRUNE_ORACLE)
-def source_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def source_partition_pruned_read(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Hive-style partitioned write + partition-pruned read: documents
     written ``partitionBy("lang")``, then a lang-IN filter read back —
     the filter must resolve against DIRECTORY values (PartitionFilters
@@ -6406,27 +6319,18 @@ def source_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory listing plus the matching fraction. The plan lock
     (tests/test_plans.py) asserts the pruning actually fires.
     """
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir, register_views=False)
-    root = tempfile.mkdtemp(prefix="ldw_part_")
-    try:
-        t["documents"].write.mode("overwrite").partitionBy("lang").parquet(root)
-        out = (
-            spark.read.parquet(root)
-            .filter(F.col("lang").isin("en", "de"))
-            .groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("sum_chars"),
-            )
-            .orderBy("lang")
+    t["documents"].write.mode("overwrite").partitionBy("lang").parquet(root)
+    return (
+        spark.read.parquet(root)
+        .filter(F.col("lang").isin("en", "de"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("lang")
+    )
 
 
 _DEGREE_ORACLE = """
@@ -7264,7 +7168,8 @@ SELECT * FROM (
 
 
 @_register("warehouse_right_to_forget", _FORGET_ORACLE)
-def warehouse_right_to_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_right_to_forget(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Right-to-be-forgotten (GDPR erasure) through the warehouse
     verbs: load the event table, MERGE a delete batch for every row
     key belonging to the forgotten users (user_id % 97 == 0 stands in
@@ -7278,9 +7183,6 @@ def warehouse_right_to_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     one key shuffle regardless of takedown-list size; with a
     key-partitioned layout only affected partitions rewrite.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark import types as wtypes
     from load_datawarehouse_spark.warehouse import SparkWarehouse
     from pyspark.sql import types as T
@@ -7294,41 +7196,37 @@ def warehouse_right_to_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("event_type", T.StringType()),
         ]
     )
-    root = tempfile.mkdtemp(prefix="ldw_forget_")
-    try:
-        wh = SparkWarehouse.new(
-            spark, root, "events_copy", schema=wtypes.struct_type_to_api_repr(struct)
-        )
-        wh.update(ev, keys=["event_id"])
+    wh = SparkWarehouse.new(
+        spark, root, "events_copy", schema=wtypes.struct_type_to_api_repr(struct)
+    )
+    wh.update(ev, keys=["event_id"])
 
-        def stats(df: DataFrame, phase: str) -> DataFrame:
-            return df.agg(
-                F.lit(phase).alias("phase"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("user_id").cast("long").alias("n_users"),
-                F.sum(F.when(F.col("user_id") % 97 == 0, 1).otherwise(0))
-                .cast("long")
-                .alias("n_forgotten_rows"),
-            )
-
-        # materialize BEFORE-state rows and the delete batch eagerly:
-        # both plans read the data files the merge is about to replace,
-        # and a lazy plan evaluated after the swap would hit
-        # FAILED_READ_FILE on the vanished paths
-        before = stats(wh.df(), "before")
-        before_rows = before.collect()
-        forget = (
-            wh.df()
-            .filter(F.col("user_id") % 97 == 0)
-            .withColumn("op", F.lit("D"))
-            .transform(lineage_cut_eager)
+    def stats(df: DataFrame, phase: str) -> DataFrame:
+        return df.agg(
+            F.lit(phase).alias("phase"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("user_id").cast("long").alias("n_users"),
+            F.sum(F.when(F.col("user_id") % 97 == 0, 1).otherwise(0))
+            .cast("long")
+            .alias("n_forgotten_rows"),
         )
-        wh.merge(forget, keys=["event_id"])
-        after = stats(wh.df(), "after")
-        rows = before_rows + after.collect()
-        return spark.createDataFrame(rows, before.schema).orderBy("phase")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    # materialize BEFORE-state rows and the delete batch eagerly:
+    # both plans read the data files the merge is about to replace,
+    # and a lazy plan evaluated after the swap would hit
+    # FAILED_READ_FILE on the vanished paths
+    before = stats(wh.df(), "before")
+    before_rows = before.collect()
+    forget = (
+        wh.df()
+        .filter(F.col("user_id") % 97 == 0)
+        .withColumn("op", F.lit("D"))
+        .transform(lineage_cut_eager)
+    )
+    wh.merge(forget, keys=["event_id"])
+    after = stats(wh.df(), "after")
+    rows = before_rows + after.collect()
+    return spark.createDataFrame(rows, before.schema).orderBy("phase")
 
 
 _STRING_SHAPE_ORACLE = """
@@ -7378,7 +7276,8 @@ GROUP BY 1 ORDER BY month
 
 
 @_register("warehouse_mv_rewrite", _MV_REWRITE_ORACLE)
-def warehouse_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_mv_rewrite(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Materialized-view answering: a monthly revenue summary is
     materialized ONCE through the warehouse verbs, and the H1-1997
     report is answered from the MV — the oracle computes the same
@@ -7393,9 +7292,6 @@ def warehouse_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     |months| rows instead of the fact table — the amortization that
     makes MVs the first lever for repeated dashboards at 100 TB.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark import types as wtypes
     from load_datawarehouse_spark.warehouse import SparkWarehouse
     from pyspark.sql import types as T
@@ -7420,26 +7316,20 @@ def warehouse_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("revenue_cents", T.LongType()),
         ]
     )
-    root = tempfile.mkdtemp(prefix="ldw_mv_")
-    try:
-        mv = SparkWarehouse.new(
-            spark, root, "monthly_revenue", schema=wtypes.struct_type_to_api_repr(struct)
+    mv = SparkWarehouse.new(
+        spark, root, "monthly_revenue", schema=wtypes.struct_type_to_api_repr(struct)
+    )
+    mv.update(summary, keys=["month"])
+    return (
+        mv.df()
+        .filter((F.col("month") >= "1997-01-01") & (F.col("month") < "1997-07-01"))
+        .select(
+            "month",
+            "n_orders",
+            F.round(F.col("revenue_cents").cast("double") / 100, 6).alias("revenue"),
         )
-        mv.update(summary, keys=["month"])
-        out = (
-            mv.df()
-            .filter((F.col("month") >= "1997-01-01") & (F.col("month") < "1997-07-01"))
-            .select(
-                "month",
-                "n_orders",
-                F.round(F.col("revenue_cents").cast("double") / 100, 6).alias("revenue"),
-            )
-            .orderBy("month")
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("month")
+    )
 
 
 _BOOL_AGG_ORACLE = """
@@ -7554,7 +7444,8 @@ GROUP BY lang ORDER BY lang
 
 
 @_register("source_schema_merge_read", _SCHEMA_MERGE_ORACLE)
-def source_schema_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def source_schema_merge_read(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Parquet schema evolution on read: two file batches written with
     DIFFERENT column sets (old writer had n_chars, new writer has
     source), read back as one table with ``mergeSchema`` — absent
@@ -7566,35 +7457,26 @@ def source_schema_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     read per file at planning — production tables pin the merged
     schema in the catalog instead; the read semantics are identical.
     """
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir, register_views=False)
     docs = t["documents"]
-    root = tempfile.mkdtemp(prefix="ldw_merge_")
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).select(
-            "doc_id", "lang", "n_chars"
-        ).write.parquet(os.path.join(root, "b=old"))
-        docs.filter(F.col("doc_id") % 2 == 1).select(
-            "doc_id", "lang", "source"
-        ).write.parquet(os.path.join(root, "b=new"))
-        merged = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(root, "b=old"), os.path.join(root, "b=new")
+    docs.filter(F.col("doc_id") % 2 == 0).select(
+        "doc_id", "lang", "n_chars"
+    ).write.parquet(os.path.join(root, "b=old"))
+    docs.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id", "lang", "source"
+    ).write.parquet(os.path.join(root, "b=new"))
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(root, "b=old"), os.path.join(root, "b=new")
+    )
+    return (
+        merged.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count("n_chars").cast("long").alias("n_with_chars"),
+            F.count("source").cast("long").alias("n_with_source"),
         )
-        out = (
-            merged.groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.count("n_chars").cast("long").alias("n_with_chars"),
-                F.count("source").cast("long").alias("n_with_source"),
-            )
-            .orderBy("lang")
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("lang")
+    )
 
 
 _CSV_MALFORMED_ORACLE = """
@@ -7607,7 +7489,10 @@ FROM orders WHERE o_orderkey % 10 <> 7
 
 
 @_register("source_csv_malformed_handling", _CSV_MALFORMED_ORACLE)
-def source_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def source_csv_malformed_handling(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """CSV corruption handling: every o_orderkey%10==7 row is written
     with a non-numeric price field, then read back in DROPMALFORMED
     mode — the reader must drop exactly those rows and parse the rest
@@ -7619,9 +7504,6 @@ def source_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: one narrow write + one schema-enforced read, no shuffle
     until the final 1-row aggregate.
     """
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir, register_views=False)
     o = t["orders"].select(
         "o_orderkey",
@@ -7629,27 +7511,21 @@ def source_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame
         .otherwise(F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"))
         .alias("cents_str"),
     )
-    root = tempfile.mkdtemp(prefix="ldw_csv_")
-    try:
-        path = os.path.join(root, "orders_csv")
-        o.write.option("header", "true").csv(path)
-        clean = (
-            spark.read.option("header", "true")
-            .option("mode", "DROPMALFORMED")
-            .schema("o_orderkey long, cents_str long")
-            .csv(path)
-            .filter(F.col("cents_str").isNotNull())
-        )
-        total = t["orders"].count()
-        out = clean.agg(
-            F.count(F.lit(1)).alias("n_clean"),
-            (F.lit(total) - F.count(F.lit(1))).cast("long").alias("n_dropped"),
-            F.sum("cents_str").cast("long").alias("clean_cents"),
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    path = os.path.join(root, "orders_csv")
+    o.write.option("header", "true").csv(path)
+    clean = (
+        spark.read.option("header", "true")
+        .option("mode", "DROPMALFORMED")
+        .schema("o_orderkey long, cents_str long")
+        .csv(path)
+        .filter(F.col("cents_str").isNotNull())
+    )
+    total = t["orders"].count()
+    return clean.agg(
+        F.count(F.lit(1)).alias("n_clean"),
+        (F.lit(total) - F.count(F.lit(1))).cast("long").alias("n_dropped"),
+        F.sum("cents_str").cast("long").alias("clean_cents"),
+    )
 
 
 _DUP_SUSPECTS_ORACLE = """
@@ -7964,7 +7840,8 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 
 @_register("source_federated_union", _FEDERATED_ORACLE)
-def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def source_federated_union(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Federated query: HALF the orders live in parquet, the other
     half in an embedded Derby database, and ONE DataFrame unions both
     sources into the same aggregate — the lakehouse-plus-operational-
@@ -7980,14 +7857,12 @@ def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one staged CSV -> ``SYSCS_IMPORT_TABLE``), as a real operational
     load would: measured at sf1, batched JDBC INSERTs cost 9-11 s
     regardless of batchsize/write-parallelism (Derby's insert path is
-    latch-bound in one JVM) vs 4.5 s staged+imported — the round-10
-    SCALECHECK slope 8.77 was fixture-load-bound, not read-bound. The
+    latch-bound in one JVM) vs 4.5 s staged+imported — an earlier
+    SCALECHECK slope of 8.77 was fixture-load-bound, not read-bound. The
     S14 JDBC *sink* stays exercised by ``source_formats_roundtrip``
     and the Derby end-to-end tests in ``tests/test_sources.py``.
     """
     import glob
-    import shutil
-    import tempfile
 
     from load_datawarehouse_spark.sources import _jdbc_available, read_jdbc
 
@@ -7995,7 +7870,6 @@ def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t["orders"].select("o_orderkey", "o_orderstatus", "o_totalprice")
     parquet_half = o.filter(F.col("o_orderkey") % 2 == 0)
     jdbc_half_src = o.filter(F.col("o_orderkey") % 2 == 1)
-    root = tempfile.mkdtemp(prefix="ldw_fed_")
     url = f"jdbc:derby:{root}/db;create=true"
     try:
         try:
@@ -8007,7 +7881,7 @@ def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             # share a filesystem — true in local mode (and in the
             # driver harness); on a multi-node cluster the glob below
             # finds nothing and the except arm serves the all-parquet
-            # union instead (ADVICE r11). Writer options are pinned to
+            # union instead. Writer options are pinned to
             # Derby's import defaults (comma, double-quote, no header)
             # and the staged projection is exactly these three
             # NON-NULL columns — a nullable string column would need
@@ -8052,7 +7926,7 @@ def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Derby path stays covered by tests/test_sources.py) — but
             # a silent downgrade would also hide a Derby-path
             # regression from BENCHMARK runs, so the fallback is
-            # loudly recorded on stderr (advisor r12)
+            # loudly recorded on stderr
             print(
                 "source_federated_union: Derby staging path failed, "
                 f"falling back to all-parquet union: {exc!r}",
@@ -8070,8 +7944,8 @@ def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderstatus")
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        # the JDBC half must be read before Derby shuts down below
+        return spark.createDataFrame(out.collect(), out.schema)
     finally:
         try:
             spark._jvm.java.sql.DriverManager.getConnection(
@@ -8079,7 +7953,6 @@ def source_federated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         except Exception:
             pass
-        shutil.rmtree(root, ignore_errors=True)
 
 
 _RETURN_RATE_ORACLE = """
@@ -9036,8 +8909,9 @@ ORDER BY event_type
 
 
 @_register("warehouse_etl_capstone", _ETL_CAPSTONE_ORACLE)
-def warehouse_etl_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's PRIMARY use-case end to end, as op #300: messy
+@on_scratch_dir
+def warehouse_etl_capstone(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """The reference's PRIMARY use-case end to end: messy
     semi-structured records (BigQuery-illegal field names, nested
     props) -> recursive key sanitation -> value-driven schema
     inference -> table creation -> chunked load -> the R1 ``query``
@@ -9050,9 +8924,6 @@ def warehouse_etl_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     record prep is bounded (2000 rows); the landed table's query is a
     plain pruned scan + hash agg like any other.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.data import clean_keys
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
@@ -9073,29 +8944,23 @@ def warehouse_etl_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     records = clean_keys(raw)
-    root = tempfile.mkdtemp(prefix="ldw_etl_")
-    try:
-        wh = SparkWarehouse.new(spark, root, "events_landed", data=records)
-        out = wh.query(
-            """
-            SELECT event_type,
-                   COUNT(*) AS n_events,
-                   SUM(element_at(payload, 1).value_micros) AS sum_micros,
-                   COUNT(DISTINCT user_id) AS n_users
-            FROM events_landed
-            GROUP BY event_type
-            ORDER BY event_type
-            """
-        ).select(
-            F.col("event_type"),
-            F.col("n_events").cast("long"),
-            F.col("sum_micros").cast("long"),
-            F.col("n_users").cast("long"),
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    wh = SparkWarehouse.new(spark, root, "events_landed", data=records)
+    return wh.query(
+        """
+        SELECT event_type,
+               COUNT(*) AS n_events,
+               SUM(element_at(payload, 1).value_micros) AS sum_micros,
+               COUNT(DISTINCT user_id) AS n_users
+        FROM events_landed
+        GROUP BY event_type
+        ORDER BY event_type
+        """
+    ).select(
+        F.col("event_type"),
+        F.col("n_events").cast("long"),
+        F.col("sum_micros").cast("long"),
+        F.col("n_users").cast("long"),
+    )
 
 
 _PMI_ORACLE = """
@@ -9171,7 +9036,10 @@ SELECT * FROM (
 
 
 @_register("warehouse_idempotent_backfill", _IDEMPOTENT_ORACLE)
-def warehouse_idempotent_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def warehouse_idempotent_backfill(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Idempotence proof for the keyed upsert path: loading the SAME
     batch twice through ``update`` leaves the table bit-identical
     (row count and exact-cents checksum equal across phases) — the
@@ -9183,9 +9051,6 @@ def warehouse_idempotent_backfill(spark: SparkSession, sf_dir: str) -> DataFrame
     idempotence comes from the key semantics, not from any
     deduplication pass.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark import types as wtypes
     from load_datawarehouse_spark.warehouse import SparkWarehouse
     from pyspark.sql import types as T
@@ -9198,27 +9063,23 @@ def warehouse_idempotent_backfill(spark: SparkSession, sf_dir: str) -> DataFrame
     struct = T.StructType(
         [T.StructField("o_orderkey", T.LongType()), T.StructField("cents", T.LongType())]
     )
-    root = tempfile.mkdtemp(prefix="ldw_idem_")
-    try:
-        wh = SparkWarehouse.new(
-            spark, root, "orders_backfill", schema=wtypes.struct_type_to_api_repr(struct)
+    wh = SparkWarehouse.new(
+        spark, root, "orders_backfill", schema=wtypes.struct_type_to_api_repr(struct)
+    )
+
+    def snap(phase):
+        return wh.df().agg(
+            F.lit(phase).alias("phase"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("cents").cast("long").alias("checksum_cents"),
         )
 
-        def snap(phase):
-            return wh.df().agg(
-                F.lit(phase).alias("phase"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("cents").cast("long").alias("checksum_cents"),
-            )
-
-        wh.update(batch, keys=["o_orderkey"])
-        first = snap("after_first_load").collect()
-        wh.update(batch, keys=["o_orderkey"])  # the replayed backfill
-        second = snap("after_replay").collect()
-        out_schema = "phase string, n_rows long, checksum_cents long"
-        return spark.createDataFrame(first + second, out_schema).orderBy("phase")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    wh.update(batch, keys=["o_orderkey"])
+    first = snap("after_first_load").collect()
+    wh.update(batch, keys=["o_orderkey"])  # the replayed backfill
+    second = snap("after_replay").collect()
+    out_schema = "phase string, n_rows long, checksum_cents long"
+    return spark.createDataFrame(first + second, out_schema).orderBy("phase")
 
 
 _AGING_ORACLE = """

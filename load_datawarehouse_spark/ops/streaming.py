@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from load_datawarehouse_spark.ops._util import DEC, sql_dec_sum
+from load_datawarehouse_spark.ops._util import DEC, on_scratch_dir, sql_dec_sum
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
@@ -135,6 +136,42 @@ def run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
     )
     q.awaitTermination()
     return df.sparkSession.table(name)
+
+
+def run_foreach_batch(stream: DataFrame, sink, root: str) -> None:
+    """Run a streaming DataFrame to completion (AvailableNow) through
+    the ``foreachBatch`` ``sink``, checkpointing under ``root``."""
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(root, "_chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def staged_wave_stream(spark: SparkSession, waves, root: str) -> DataFrame:
+    """Stage each frame of ``waves`` under ``root`` as one parquet file
+    and return the file stream over them that reads one file per
+    trigger, in wave order: one micro-batch per wave."""
+    d = os.path.join(root, "in")
+    os.makedirs(d)
+    for i, w in enumerate(waves):
+        sub = os.path.join(d, f"b{i}")
+        w.coalesce(1).write.parquet(sub)
+        part = next(f for f in sorted(os.listdir(sub)) if f.endswith(".parquet"))
+        dst = os.path.join(d, f"{i}.parquet")
+        os.rename(os.path.join(sub, part), dst)
+        # mtime order fixes the FileStreamSource processing order
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+        shutil.rmtree(sub)
+    schema = spark.read.parquet(os.path.join(d, "0.parquet")).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("latestFirst", "false")
+        .parquet(d)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -525,7 +562,8 @@ ORDER BY event_id
 
 
 @_register("stream_ingest_warehouse", _STREAM_INGEST_ORACLE)
-def stream_ingest_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_ingest_warehouse(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Streaming ingest bridge: an unbounded event stream is filtered
     and appended into a ``SparkWarehouse`` table via ``foreachBatch``
     — the production pattern for landing a stream in batch-queryable
@@ -537,35 +575,19 @@ def stream_ingest_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink); each micro-batch append is a distributed parquet write, and
     the resulting table is immediately readable by every batch
     operator in this engine."""
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
-    root = tempfile.mkdtemp(prefix="ldw_stream_wh_")
-    try:
-        wh = SparkWarehouse(spark, root, "purchases")
-        wh._write_meta({"schema": None, "expires": None})
-        data_path = os.path.join(wh.path, "data")
+    wh = SparkWarehouse(spark, root, "purchases")
+    wh._write_meta({"schema": None, "expires": None})
+    data_path = os.path.join(wh.path, "data")
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(data_path)
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(data_path)
 
-        ev = events_stream(spark, sf_dir)
-        q = (
-            ev.filter(F.col("event_type") == "purchase")
-            .select("event_id", "user_id", "value")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # materialize before the temp dir disappears
-        rows = wh.df().orderBy("event_id").collect()
-        return spark.createDataFrame(rows, wh.df().schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ev = events_stream(spark, sf_dir)
+    purchases = ev.filter(F.col("event_type") == "purchase")
+    run_foreach_batch(purchases.select("event_id", "user_id", "value"), sink, root)
+    return wh.df().orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -642,7 +664,8 @@ ORDER BY window_start
 
 
 @_register("stream_late_data_drop", _STREAM_LATE_ORACLE)
-def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_late_data_drop(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """True multi-micro-batch watermark semantics. Three files arrive
     in order (one per trigger): wave 1 (mid-month), wave 2 (newest —
     advances the watermark near the stream's max), then STRAGGLERS
@@ -661,9 +684,6 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical plan to any watermarked windowed count — the
     point here is state-bound correctness across batches."""
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir, register_views=False)
     # cast NTZ -> session-TZ timestamp BEFORE writing the staged wave
     # files: this op builds its own stream source, and a re-read NTZ
@@ -675,39 +695,14 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("ts") >= d2),                         # wave 2
         ev.filter(F.col("ts") < d1),                          # stragglers (late)
     )
-    root = tempfile.mkdtemp(prefix="ldw_late_")
-    try:
-        d = os.path.join(root, "in")
-        os.makedirs(d)
-        for i, w in enumerate(waves):
-            sub = os.path.join(d, f"b{i}")
-            w.coalesce(1).write.parquet(sub)
-            part = next(
-                f for f in sorted(os.listdir(sub)) if f.endswith(".parquet")
-            )
-            dst = os.path.join(d, f"{i}.parquet")
-            os.rename(os.path.join(sub, part), dst)
-            # mtime order fixes the FileStreamSource processing order
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            shutil.rmtree(sub)
-        schema = spark.read.parquet(os.path.join(d, "0.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(d)
-        )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events")
-        )
-        out = run_to_memory(agg, "append")
-        rows = out.orderBy("window_start").collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    agg = (
+        staged_wave_stream(spark, waves, root)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
+    return run_to_memory(agg, "append").orderBy("window_start")
 
 
 # ---------------------------------------------------------------------------
@@ -740,7 +735,10 @@ ORDER BY window_start, emit_batch
 
 
 @_register("stream_update_mode_history", _STREAM_UPDATE_ORACLE)
-def stream_update_mode_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_update_mode_history(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Update-mode churn semantics made visible: the even half of the
     stream arrives first, the odd half second; update mode re-emits a
     window EVERY time its aggregate changes, so the sink holds the full
@@ -757,70 +755,35 @@ def stream_update_mode_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same partial-agg shuffle as any windowed count; the
     emission multiplicity is per-changed-key, not per-row."""
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir, register_views=False)
     ev = t["events"].select("event_id", "ts")
     halves = (
         ev.filter(F.col("event_id") % 2 == 0),
         ev.filter(F.col("event_id") % 2 == 1),
     )
-    root = tempfile.mkdtemp(prefix="ldw_upd_")
-    try:
-        d = os.path.join(root, "in")
-        os.makedirs(d)
-        for i, h in enumerate(halves):
-            sub = os.path.join(d, f"b{i}")
-            h.coalesce(1).write.parquet(sub)
-            part = next(
-                f for f in sorted(os.listdir(sub)) if f.endswith(".parquet")
-            )
-            dst = os.path.join(d, f"{i}.parquet")
-            os.rename(os.path.join(sub, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            shutil.rmtree(sub)
-        schema = spark.read.parquet(os.path.join(d, "0.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(d)
+    agg = (
+        staged_wave_stream(spark, halves, root)
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
+    sunk = run_to_memory(agg, "update")
+    # map each sink row to the batch that emitted it: batch 0's
+    # rows are exactly the even-only counts (cumulative counts for
+    # odd-touched windows can only appear in batch 1)
+    b0 = (
+        halves[0]
+        .groupBy(F.date_trunc("hour", "ts").alias("window_start"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    out = sunk.join(b0, ["window_start", "n_events"], "left_semi").select(
+        "window_start", "n_events", F.lit(0).alias("emit_batch")
+    ).unionByName(
+        sunk.join(b0, ["window_start", "n_events"], "left_anti").select(
+            "window_start", "n_events", F.lit(1).alias("emit_batch")
         )
-        agg = (
-            stream.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events")
-        )
-        name = f"upd_sink_{next(_SINK_SEQ)}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # map each sink row to the batch that emitted it: batch 0's
-        # rows are exactly the even-only counts (cumulative counts for
-        # odd-touched windows can only appear in batch 1)
-        q.awaitTermination()
-        sunk = spark.table(name)
-        b0 = (
-            halves[0]
-            .groupBy(F.date_trunc("hour", "ts").alias("window_start"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        out = sunk.join(b0, ["window_start", "n_events"], "left_semi").select(
-            "window_start", "n_events", F.lit(0).alias("emit_batch")
-        ).unionByName(
-            sunk.join(b0, ["window_start", "n_events"], "left_anti").select(
-                "window_start", "n_events", F.lit(1).alias("emit_batch")
-            )
-        )
-        rows = out.orderBy("window_start", "emit_batch").collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    return out.orderBy("window_start", "emit_batch")
 
 
 # ---------------------------------------------------------------------------
@@ -841,7 +804,8 @@ ORDER BY user_id
 
 
 @_register("stream_upsert_warehouse", _STREAM_UPSERT_ORACLE)
-def stream_upsert_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_upsert_warehouse(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Streaming CDC merge: ``foreachBatch`` upserts each micro-batch's
     per-user latest event into a ``SparkWarehouse`` table through the
     R3 ``update`` verb (the reference declares the verb,
@@ -862,9 +826,6 @@ def stream_upsert_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed now that ``update`` takes DataFrames (no driver
     round-trip). With a key-partitioned table layout the rewrite
     touches only affected partitions."""
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark import types as wtypes
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
@@ -882,66 +843,37 @@ def stream_upsert_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "m.last_ts", "m.last_event_id", "m.last_event_type", "m.last_value")
         )
 
-    root = tempfile.mkdtemp(prefix="ldw_upsert_")
-    try:
-        d = os.path.join(root, "in")
-        os.makedirs(d)
-        for i, w in enumerate(waves):
-            sub = os.path.join(d, f"b{i}")
-            w.coalesce(1).write.parquet(sub)
-            part = next(f for f in sorted(os.listdir(sub)) if f.endswith(".parquet"))
-            dst = os.path.join(d, f"{i}.parquet")
-            os.rename(os.path.join(sub, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            shutil.rmtree(sub)
+    tbl_struct = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("last_ts", T.TimestampType()),
+            T.StructField("last_event_id", T.LongType()),
+            T.StructField("last_event_type", T.StringType()),
+            T.StructField("last_value", T.DoubleType()),
+        ]
+    )
+    wh = SparkWarehouse.new(
+        spark,
+        root,
+        "user_latest",
+        schema=wtypes.struct_type_to_api_repr(tbl_struct),
+    )
 
-        tbl_struct = T.StructType(
-            [
-                T.StructField("user_id", T.LongType()),
-                T.StructField("last_ts", T.TimestampType()),
-                T.StructField("last_event_id", T.LongType()),
-                T.StructField("last_event_type", T.StringType()),
-                T.StructField("last_value", T.DoubleType()),
-            ]
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        b = batch_df.select(
+            "user_id",
+            F.col("ts").alias("last_ts"),
+            F.col("event_id").alias("last_event_id"),
+            F.col("event_type").alias("last_event_type"),
+            F.col("value").alias("last_value"),
         )
-        wh = SparkWarehouse.new(
-            spark,
-            root,
-            "user_latest",
-            schema=wtypes.struct_type_to_api_repr(tbl_struct),
-        )
+        lb = _latest(b)
+        current = wh.df().join(lb.select("user_id"), "user_id", "left_semi")
+        desired = _latest(lb.unionByName(current))
+        wh.update(desired, keys=["user_id"])
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            b = batch_df.select(
-                "user_id",
-                F.col("ts").alias("last_ts"),
-                F.col("event_id").alias("last_event_id"),
-                F.col("event_type").alias("last_event_type"),
-                F.col("value").alias("last_value"),
-            )
-            lb = _latest(b)
-            current = wh.df().join(lb.select("user_id"), "user_id", "left_semi")
-            desired = _latest(lb.unionByName(current))
-            wh.update(desired, keys=["user_id"])
-
-        schema = spark.read.parquet(os.path.join(d, "0.parquet")).schema
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(d)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # materialize before the temp dir disappears
-        out = wh.df().orderBy("user_id")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    run_foreach_batch(staged_wave_stream(spark, waves, root), sink, root)
+    return wh.df().orderBy("user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1191,7 +1123,8 @@ ORDER BY event_type
 
 
 @_register("stream_ivm_aggregate", _STREAM_IVM_ORACLE)
-def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_ivm_aggregate(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Streaming incremental view maintenance: a per-event-type
     (count, sum) aggregate table kept current by ``foreachBatch``
     DELTA merges — each micro-batch contributes only its own partial
@@ -1208,9 +1141,6 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp. Scale: per-batch partial agg shuffles only batch rows on the
     tiny type key; the merge touches |event types| stored rows.
     """
-    import shutil
-    import tempfile
-
     from load_datawarehouse_spark import types as wtypes
     from load_datawarehouse_spark.warehouse import SparkWarehouse
 
@@ -1224,61 +1154,33 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 1e6, 0).cast("long")).alias("sum_micros"),
         )
 
-    root = tempfile.mkdtemp(prefix="ldw_ivm_")
-    try:
-        d = os.path.join(root, "in")
-        os.makedirs(d)
-        for i, w in enumerate(waves):
-            sub = os.path.join(d, f"b{i}")
-            w.coalesce(1).write.parquet(sub)
-            part = next(f for f in sorted(os.listdir(sub)) if f.endswith(".parquet"))
-            dst = os.path.join(d, f"{i}.parquet")
-            os.rename(os.path.join(sub, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-            shutil.rmtree(sub)
+    tbl_struct = T.StructType(
+        [
+            T.StructField("event_type", T.StringType()),
+            T.StructField("n_events", T.LongType()),
+            T.StructField("sum_micros", T.LongType()),
+        ]
+    )
+    wh = SparkWarehouse.new(
+        spark, root, "type_totals",
+        schema=wtypes.struct_type_to_api_repr(tbl_struct),
+    )
 
-        tbl_struct = T.StructType(
-            [
-                T.StructField("event_type", T.StringType()),
-                T.StructField("n_events", T.LongType()),
-                T.StructField("sum_micros", T.LongType()),
-            ]
-        )
-        wh = SparkWarehouse.new(
-            spark, root, "type_totals",
-            schema=wtypes.struct_type_to_api_repr(tbl_struct),
-        )
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            delta = _delta(batch_df)
-            cur = wh.df().join(delta.select("event_type"), "event_type", "left_semi")
-            merged = (
-                delta.unionByName(cur)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_events").cast("long").alias("n_events"),
-                    F.sum("sum_micros").cast("long").alias("sum_micros"),
-                )
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        delta = _delta(batch_df)
+        cur = wh.df().join(delta.select("event_type"), "event_type", "left_semi")
+        merged = (
+            delta.unionByName(cur)
+            .groupBy("event_type")
+            .agg(
+                F.sum("n_events").cast("long").alias("n_events"),
+                F.sum("sum_micros").cast("long").alias("sum_micros"),
             )
-            wh.update(merged, keys=["event_type"])
-
-        schema = spark.read.parquet(os.path.join(d, "0.parquet")).schema
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(d)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        out = wh.df().orderBy("event_type")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        wh.update(merged, keys=["event_type"])
+
+    run_foreach_batch(staged_wave_stream(spark, waves, root), sink, root)
+    return wh.df().orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -1297,7 +1199,8 @@ GROUP BY event_type ORDER BY event_type
 
 
 @_register("stream_exactly_once_sink", _STREAM_E1_ORACLE)
-def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_exactly_once_sink(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Exactly-once streaming sink: ``foreachBatch`` writes each
     micro-batch under a staging path and COMMITS it with one atomic
     rename to ``batch_<id>``; a retry of an already-committed batch id
@@ -1314,49 +1217,34 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch regardless of row count; data still lands as a
     distributed parquet write.
     """
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="ldw_e1_sink_")
     out = os.path.join(root, "table")
     os.makedirs(out, exist_ok=True)
-    try:
-        def write_idempotent(batch_df: DataFrame, batch_id: int) -> None:
-            committed = os.path.join(out, f"batch_{batch_id}")
-            if os.path.exists(committed):  # retry of a committed batch
-                return
-            staging = os.path.join(root, f"staging_{batch_id}")
-            batch_df.write.mode("overwrite").parquet(staging)
-            os.rename(staging, committed)  # atomic commit
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            write_idempotent(batch_df, batch_id)
-            write_idempotent(batch_df, batch_id)  # redelivery simulation
+    def write_idempotent(batch_df: DataFrame, batch_id: int) -> None:
+        committed = os.path.join(out, f"batch_{batch_id}")
+        if os.path.exists(committed):  # retry of a committed batch
+            return
+        staging = os.path.join(root, f"staging_{batch_id}")
+        batch_df.write.mode("overwrite").parquet(staging)
+        os.rename(staging, committed)  # atomic commit
 
-        ev = events_stream(spark, sf_dir)
-        q = (
-            ev.filter(F.col("event_type").isin("purchase", "signup"))
-            .select("event_id", "event_type", "value")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        write_idempotent(batch_df, batch_id)
+        write_idempotent(batch_df, batch_id)  # redelivery simulation
+
+    ev = events_stream(spark, sf_dir)
+    picked = ev.filter(F.col("event_type").isin("purchase", "signup"))
+    run_foreach_batch(picked.select("event_id", "event_type", "value"), sink, root)
+    final = spark.read.parquet(os.path.join(out, "batch_*"))
+    return (
+        final.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count_distinct("event_id").alias("n_distinct"),
+            F.sum(F.col("value").cast(DEC)).cast("double").alias("value_sum"),
         )
-        q.awaitTermination()
-        final = spark.read.parquet(os.path.join(out, "batch_*"))
-        res = (
-            final.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count_distinct("event_id").alias("n_distinct"),
-                F.sum(F.col("value").cast(DEC)).cast("double").alias("value_sum"),
-            )
-            .orderBy("event_type")
-        )
-        rows = res.collect()
-        return spark.createDataFrame(rows, res.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1523,7 +1411,8 @@ GROUP BY event_type ORDER BY event_type
 
 
 @_register("stream_backfill_then_tail", _BF_ORACLE)
-def stream_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch_dir
+def stream_backfill_then_tail(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Kappa-style backfill + tail: the historical 80% of the event
     log lands as ONE distributed batch write, the remaining 20%
     arrives through the streaming path (``foreachBatch`` appends into
@@ -1538,49 +1427,32 @@ def stream_backfill_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     at full cluster parallelism (no state store, no watermark); only
     the tail pays streaming overheads.
     """
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="ldw_bf_")
     out = os.path.join(root, "unified")
-    try:
-        t = load_tables(spark, sf_dir, register_views=False)
-        ev = t["events"]
-        cut = ev.agg(
-            F.expr("percentile_approx(event_id, 0.8, 1000000)").alias("c")
-        ).collect()[0]["c"]
-        cut = int(cut)
-        cols = ["event_id", "event_type", "user_id", "value"]
-        # backfill: plain batch write of history
-        ev.filter(F.col("event_id") <= cut).select(*cols).write.mode(
-            "overwrite"
-        ).parquet(out)
+    t = load_tables(spark, sf_dir, register_views=False)
+    ev = t["events"]
+    cut = ev.agg(
+        F.expr("percentile_approx(event_id, 0.8, 1000000)").alias("c")
+    ).collect()[0]["c"]
+    cut = int(cut)
+    cols = ["event_id", "event_type", "user_id", "value"]
+    # backfill: plain batch write of history
+    ev.filter(F.col("event_id") <= cut).select(*cols).write.mode(
+        "overwrite"
+    ).parquet(out)
 
-        # tail: the stream appends only post-cut events
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out)
+    # tail: the stream appends only post-cut events
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(out)
 
-        q = (
-            events_stream(spark, sf_dir)
-            .filter(F.col("event_id") > cut)
-            .select(*cols)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
+    tail = events_stream(spark, sf_dir).filter(F.col("event_id") > cut)
+    run_foreach_batch(tail.select(*cols), sink, root)
+    unified = spark.read.parquet(out)
+    return (
+        unified.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count_distinct("user_id").alias("n_users"),
+            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
         )
-        q.awaitTermination()
-        unified = spark.read.parquet(out)
-        res = (
-            unified.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.count_distinct("user_id").alias("n_users"),
-                F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
-            )
-            .orderBy("event_type")
-        )
-        rows = res.collect()
-        return spark.createDataFrame(rows, res.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("event_type")
+    )

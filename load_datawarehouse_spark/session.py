@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import DataFrame, SparkSession
 
 #: Tables the driver provisions under /root/testdata/sf*/ (TESTDATA.md).
@@ -46,7 +47,18 @@ def get_spark(
     One session per process, reused across calls (unlike the reference,
     which constructs a fresh BigQuery client per verb,
     ``bigquery/__init__.py:519-544``).
+
+    When a session is already running (active in this thread, or the
+    process default from any thread) it is returned as it is: no
+    argument and no default below is applied to it. (The builder's
+    ``getOrCreate`` would re-apply every default to the live session,
+    so a bare second call would silently reset, say, the shuffle
+    partitions a caller chose.)
     """
+    try:
+        return SparkSession.active()
+    except PySparkRuntimeError:  # no session yet
+        pass
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:

@@ -30,6 +30,12 @@ Each decade also measures a few rows that are not registered queries
 (``Decade.extras``). They run on a full sweep or when named in
 ``--only``; otherwise the artifact keeps their previous measurement.
 
+Every row a run measures is stamped ``machine: {cpus, mem_gb}``. An
+``--only`` run keeps the artifact's other rows, which may have been
+timed on other hardware, so the summary (``median_*``, ``max_*`` and
+the decade-2 lists) reads only rows stamped with this run's machine and
+counts the rest as ``rows_other_machine``.
+
 Usage:
     python scalegen.py 10 && python scalecheck.py [--only a,b]
     python scalegen.py 100 && python scalecheck.py --decade 2 [--only a,b]
@@ -529,15 +535,23 @@ def _measure(spark, d: Decade, name: str, fn, prior: dict) -> dict:
     return row
 
 
-def _summary(d: Decade, rows: dict) -> dict:
-    slopes = sorted(v[d.slope_key] for v in rows.values() if d.slope_key in v)
+def _machine() -> dict:
+    """The hardware a run times on: usable cpus and physical memory."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {"cpus": len(os.sched_getaffinity(0)), "mem_gb": round(mem / 2**30)}
+
+
+def _summary(d: Decade, rows: dict, machine: dict) -> dict:
+    here = {n: v for n, v in rows.items() if v.get("machine") == machine}
     k = d.slope_key
+    slopes = sorted(v[k] for v in here.values() if k in v)
     out = {
         f"median_{k}": round(slopes[len(slopes) // 2], 2) if slopes else None,
         f"max_{k}": round(slopes[-1], 2) if slopes else None,
+        "rows_other_machine": len(rows) - len(here),
     }
     if d.prior is not None:
-        both = {n: (v["slope1"], v[k]) for n, v in rows.items() if v.get("slope1") and v.get(k)}
+        both = {n: (v["slope1"], v[k]) for n, v in here.items() if v.get("slope1") and v.get(k)}
         # superlinear: wall time grew faster than the 100x data across
         # the two decades (120, not 100, leaves room for timing jitter);
         # accelerating: the second decade is steeper than the first
@@ -581,12 +595,13 @@ def main(argv: list[str] | None = None) -> dict:
     if d.prior is not None:
         prior = _read(os.path.join(HERE, DECADES[d.prior].artifact)).get("queries", {})
 
+    machine = _machine()
     rows: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name, measure in d.extras.items():
         if only is None or name in only:
             try:
-                rows[name] = measure(spark, d)
+                rows[name] = {**measure(spark, d), "machine": machine}
             except Exception as exc:  # one failing row must not lose the run
                 _error(errors, name, exc)
             else:
@@ -595,7 +610,7 @@ def main(argv: list[str] | None = None) -> dict:
         if only is not None and name not in only:
             continue
         try:
-            rows[name] = _measure(spark, d, name, queries[name], prior)
+            rows[name] = {**_measure(spark, d, name, queries[name], prior), "machine": machine}
         except Exception as exc:
             _error(errors, name, exc)
         else:
@@ -615,7 +630,7 @@ def main(argv: list[str] | None = None) -> dict:
         "note": d.note,
         "metric": f"scale_slope_{d.small_label}_to_{d.big_label}",
         "data_factor": 10,
-        **_summary(d, queries_out),
+        **_summary(d, queries_out, machine),
         "queries": queries_out,
         **extras_out,
     }

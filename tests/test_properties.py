@@ -902,6 +902,93 @@ def test_no_raw_broadcast_hints():
     )
 
 
+def test_one_scratch_dir_wrapper_and_one_stream_runner():
+    """Operators that stage files go through ``ops._util.on_scratch_dir``
+    (which alone creates and removes the scratch directory), and
+    streaming.py keeps one ``foreachBatch`` runner and one memory sink
+    (``run_to_memory``)."""
+    import pathlib
+    import re
+
+    ops = pathlib.Path("load_datawarehouse_spark/ops")
+
+    def code_sites(path, pattern):
+        return [
+            f"{path}:{i}"
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if re.search(pattern, line.split("#", 1)[0])
+        ]
+
+    mkdtemp = [
+        site
+        for path in sorted(ops.glob("*.py"))
+        if path.name != "_util.py"
+        for site in code_sites(path, r"\bmkdtemp\(")
+    ]
+    assert not mkdtemp, f"stage files through @on_scratch_dir: {mkdtemp}"
+    streaming = ops / "streaming.py"
+    runners = code_sites(streaming, r"\bforeachBatch\(")
+    assert len(runners) == 1, f"run foreachBatch sinks through run_foreach_batch: {runners}"
+    sinks = code_sites(streaming, r"""\bformat\(\s*["']memory["']\s*\)""")
+    assert len(sinks) == 1, f"use run_to_memory for memory sinks: {sinks}"
+
+
+def test_on_scratch_dir_result_outlives_its_directory(spark):
+    import os
+
+    import pytest
+
+    from load_datawarehouse_spark.ops._util import on_scratch_dir
+
+    roots, schemas = [], []
+
+    @on_scratch_dir
+    def staged(spark, sf_dir, root):
+        roots.append(root)
+        path = os.path.join(root, "t")
+        spark.range(5).selectExpr("id", "id * 2 AS twice").write.parquet(path)
+        frame = spark.read.parquet(path).orderBy("id")
+        schemas.append(frame.schema)
+        return frame
+
+    out = staged(spark, "unused")
+    assert not os.path.exists(roots[0])
+    assert os.path.basename(roots[0]).startswith("ldw_staged_")
+    assert [tuple(r) for r in out.collect()] == [(i, 2 * i) for i in range(5)]
+    assert out.schema == schemas[0]
+
+    @on_scratch_dir
+    def failing(spark, sf_dir, root):
+        roots.append(root)
+        spark.range(3).write.parquet(os.path.join(root, "partial"))
+        raise RuntimeError("failed mid-op")
+
+    with pytest.raises(RuntimeError, match="failed mid-op"):
+        failing(spark, "unused")
+    assert not os.path.exists(roots[1])
+
+
+def test_get_spark_leaves_a_live_session_as_it_is(spark):
+    # the test session is built with 8 shuffle partitions; a later bare
+    # call, from this thread or another, must not re-apply the defaults
+    # (32) to it
+    import threading
+
+    from load_datawarehouse_spark.session import get_spark
+
+    seen = []
+    try:
+        assert get_spark() is spark
+        assert get_spark(shuffle_partitions=3) is spark
+        worker = threading.Thread(target=lambda: seen.append(get_spark()))
+        worker.start()
+        worker.join(60)
+        assert not worker.is_alive() and seen == [spark]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+
 def test_bcast_bounded_sites_match_coverage_table():
     """COVERAGE.md's broadcast-bound table states how many forced
     hints exist and under which bound categories. Pin the claimed

@@ -22,13 +22,11 @@ def _committed() -> dict[str, bytes]:
 def test_both_decades_write_documented_rows_and_merge_on_only(spark, tmp_path, monkeypatch):
     import scalecheck
 
-    from load_datawarehouse_spark import session
     from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
 
     committed = _committed()
-    # reuse the test session as configured (get_spark would reset its
-    # shuffle partitions) and keep the driver-memory default local
-    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    # main() reuses the live test session through get_spark; keep its
+    # driver-memory default local
     monkeypatch.setitem(os.environ, "SPARK_GRAFT_DRIVER_MEM",
                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     for k, d in scalecheck.DECADES.items():
@@ -42,7 +40,7 @@ def test_both_decades_write_documented_rows_and_merge_on_only(spark, tmp_path, m
         return {n: set(r) - {"slope_per_output_row"} for n, r in result["queries"].items()}
 
     d1 = scalecheck.main(["--only", ONLY])
-    timed1 = {"sf0.1_sec", "sf1_sec", "slope", "rows"}
+    timed1 = {"sf0.1_sec", "sf1_sec", "slope", "rows", "machine"}
     assert rows(d1) == {
         "q1_pricing_summary": timed1,
         "dedup_ngram_jaccard": timed1 | {"pair_slots", "slope_per_pair_slot"},
@@ -50,16 +48,31 @@ def test_both_decades_write_documented_rows_and_merge_on_only(spark, tmp_path, m
     assert d1["queries"]["dedup_ngram_jaccard"]["pair_slots"] == slots
     assert d1["metric"] == "scale_slope_sf0.1_to_sf1"
     assert {"median_slope", "max_slope"} <= set(d1)
+    machine = scalecheck._machine()
+    assert all(r["machine"] == machine for r in d1["queries"].values())
+    assert d1["rows_other_machine"] == 0
     # extras run on a full sweep or when named, so none ran here
     assert not {"warehouse_verb_decade", "skew_stress_sf1"} & set(d1)
     assert json.load(open(tmp_path / "SCALECHECK.json")) == d1
 
+    # a row merged from another machine stays in the artifact but out
+    # of the summary
+    foreign = {"sf0.1_sec": 0.01, "sf1_sec": 9.99, "slope": 999.0, "rows": [1, 1],
+               "machine": {"cpus": machine["cpus"] + 1, "mem_gb": machine["mem_gb"]}}
+    d1["queries"]["join_inner"] = foreign
+    with open(tmp_path / "SCALECHECK.json", "w") as f:
+        json.dump(d1, f)
     again = scalecheck.main(["--only", "q1_pricing_summary"])
     assert again["queries"]["dedup_ngram_jaccard"] == d1["queries"]["dedup_ngram_jaccard"]
+    assert again["queries"]["join_inner"] == foreign
     assert set(again["queries"]) == set(d1["queries"])
+    assert again["rows_other_machine"] == 1
+    here = sorted(r["slope"] for n, r in again["queries"].items() if n != "join_inner")
+    assert again["max_slope"] == here[-1] < 999.0
+    assert again["median_slope"] == here[len(here) // 2]
 
     d2 = scalecheck.main(["--decade", "2", "--only", ONLY])
-    timed2 = {"sf1_sec", "sf10_sec", "slope10", "rows", "slope1", "decade_ratio"}
+    timed2 = {"sf1_sec", "sf10_sec", "slope10", "rows", "slope1", "decade_ratio", "machine"}
     assert rows(d2) == {
         "q1_pricing_summary": timed2,
         "dedup_ngram_jaccard": timed2 | {"pair_slots", "slope_per_pair_slot"},
@@ -75,7 +88,7 @@ def test_both_decades_write_documented_rows_and_merge_on_only(spark, tmp_path, m
     skip = scalecheck.main(["--decade", "2", "--only", "dedup_ngram_jaccard"])
     assert rows(skip) == {
         "q1_pricing_summary": timed2,
-        "dedup_ngram_jaccard": {"sf1_sec", "sf10_skipped", "pair_slots"},
+        "dedup_ngram_jaccard": {"sf1_sec", "sf10_skipped", "pair_slots", "machine"},
     }
     assert skip["queries"]["dedup_ngram_jaccard"]["pair_slots"] == slots
     assert skip["queries"]["q1_pricing_summary"] == d2["queries"]["q1_pricing_summary"]

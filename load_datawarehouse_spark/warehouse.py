@@ -18,7 +18,9 @@ and the ``update`` / ``merge`` rewrites are distributed
 ``df.write.parquet``; a record batch, which already sits on the
 driver, is appended as one Arrow-built parquet file written by the
 driver, with no Spark job; it is conformed column by column, so its
-cost follows the fields its records carry, not the table's width.
+cost follows the fields its records carry, not the table's width. Its
+keys are cleaned inside that conform, once per distinct key of each
+level, so no record is copied to clean them.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ import os
 import shutil
 import uuid
 from enum import Enum
-from typing import Any, Iterable
+from typing import Any, Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -43,13 +45,19 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from load_datawarehouse_spark import types as wtypes
-from load_datawarehouse_spark.data import clean_dataframe_keys, prepare
+from load_datawarehouse_spark.data import (
+    clean_dataframe_keys,
+    clean_field_key,
+    clean_keys,
+    prepare,
+)
 from load_datawarehouse_spark.errors import (
     WarehouseInvalidInput,
     WarehouseTableNotFound,
     WarehouseTableRowsInvalid,
 )
 from load_datawarehouse_spark.schema_infer import (
+    _existing_by_name,
     infer_schema,
     infer_schema_distributed,
 )
@@ -107,21 +115,62 @@ _CONFORMED_TYPE = {
 }
 
 
+def _key_level(rows: list[dict]) -> tuple[list[dict], dict]:
+    """One level of a record batch (the records, or the records of one
+    RECORD field) with its keys as ``clean_keys`` leaves them, as
+    ``(rows, clean name -> raw key)``; each distinct key is cleaned
+    once. Plain dicts whose keys are plain ``str`` and clean to
+    distinct names are read as they are, through their raw keys. Any
+    other level (a non-``str`` key such as ``1`` beside ``True``, two
+    keys that clean to one name, a dict subclass) is rebuilt one level
+    deep exactly as ``clean_keys`` rebuilds it: the last value wins, at
+    the first key's position. Values are not copied."""
+    keys = set().union(*rows)
+    raw_of = {clean_field_key(k): k for k in keys}
+    if (
+        len(raw_of) == len(keys)
+        and all(type(k) is str for k in keys)
+        and all(type(r) is dict for r in rows)
+    ):
+        return rows, raw_of
+    rows = [{clean_field_key(k): v for k, v in r.items()} for r in rows]
+    return rows, {k: k for k in set().union(*rows)}
+
+
+def _observed(records: list[dict], schema: Iterable[dict] | None) -> Iterator[dict]:
+    """The records as ``infer_schema(..., schema=schema)`` reads them
+    after ``prepare``: keys cleaned per level, and the values it
+    observes, those of the fields ``schema`` does not fix, deep-cleaned.
+    A generator, so ``schema`` is read after ``infer_schema`` read it;
+    a one-shot ``schema`` then fixes nothing here, which cleans more
+    values but reads the same."""
+    rows, raw_of = _key_level(records)
+    fixed = _existing_by_name(schema)
+    read = [raw for name, raw in raw_of.items() if name not in fixed]
+    for r in rows:
+        clean = {k: c for k in read if k in r and (c := clean_keys(r[k])) is not r[k]}
+        yield {**r, **clean} if clean else r
+
+
 def _conform_record(rows: list[dict], fields: list[dict], arrow: Iterable[pa.Field]) -> list[pa.Array]:
     """Conform a batch of records to ``fields`` column by column: one
     Arrow array per field, typed by its ``arrow`` field. A field no
     record carries is all nulls with no per-row work, so the cost
-    follows the fields present, not the table's width. Keys are not
-    cleaned again: ``prepare`` cleaned them at every depth.
+    follows the fields present, not the table's width. Keys are cleaned
+    here, per level (``_key_level``): a field reads its values through
+    the raw key that cleans to its name, so a field name that is not
+    clean matches no key.
 
     The name is fixed: the benchmark's trace wraps this module global
     by name for its ``warehouse.conform`` span, so every call, the
     recursion into RECORD fields included, goes through it."""
-    n, present, columns = len(rows), set().union(*rows), []
+    rows, raw_of = _key_level(rows)
+    n, columns = len(rows), []
     for f, af in zip(fields, arrow):
         name = f["name"]
-        absent = name not in present
-        values = None if absent else [r.get(name) for r in rows]
+        raw = raw_of.get(name)
+        absent = raw is None
+        values = None if absent else [r.get(raw) for r in rows]
         # normalised as api_repr_to_struct_type does: a null in a
         # non-nullable Arrow column would be written as a zero
         required = str(f.get("mode", "")).upper() == wtypes.REQUIRED
@@ -145,9 +194,11 @@ def _naming(name: str, atype: pa.DataType):
 
 def _conform_column(values: list, field: dict, atype: pa.DataType) -> pa.Array:
     """One field's values as an Arrow array of ``atype``. A value of
-    exactly the field's Python type passes through. REPEATED wraps a
-    scalar and reads a plain dict as its keys (the reference's quirk);
-    REPEATED RECORD keeps only dict elements."""
+    exactly the field's Python type passes through; any other is
+    key-cleaned first, since its keys become data (a dict into STRING
+    is ``str()``-ed). REPEATED wraps a scalar and reads a plain dict as
+    its cleaned keys (the reference's quirk); REPEATED RECORD keeps
+    only dict elements."""
     ftype = wtypes.normalize_type(field.get("type", wtypes.DEFAULT_TYPE))
     repeated = str(field.get("mode", "")).upper() == wtypes.REPEATED
     if ftype == wtypes.RECORD:  # built as lists; a RECORD is its one-element list
@@ -176,11 +227,15 @@ def _conform_column(values: list, field: dict, atype: pa.DataType) -> pa.Array:
     exact = _CONFORMED_TYPE.get(ftype)
     if repeated:
         return pa.array([None if v is None else [
-            x if type(x) is exact or x is None else _conform_scalar(x, ftype)
-            for x in (list(v) if isinstance(v, dict) else v if isinstance(v, (list, tuple)) else (v,))
+            x if type(x) is exact or x is None else _conform_scalar(clean_keys(x), ftype)
+            for x in (
+                list(dict.fromkeys(map(clean_field_key, v))) if isinstance(v, dict)
+                else v if isinstance(v, (list, tuple)) else (v,)
+            )
         ] for v in values], atype)
     return pa.array(
-        [v if type(v) is exact or v is None else _conform_scalar(v, ftype) for v in values], atype
+        [v if type(v) is exact or v is None else _conform_scalar(clean_keys(v), ftype) for v in values],
+        atype,
     )
 
 
@@ -191,34 +246,43 @@ def _struct(api: list[dict], op_col: str | None = None) -> T.StructType:
 
 
 def _conform_records(data, api_of, op_col: str | None = None) -> tuple[list[dict], pa.Table]:
-    """Fit a record batch to the schema ``api_of(records)`` as one Arrow
+    """Fit a record batch to the schema ``api_of(observed)`` as one Arrow
     table typed by Spark's own Spark→Arrow map: a field missing at any
     depth is null, an unknown field drops, and a record that is not a
     dict, a null REQUIRED field or a value that cannot convert raises
-    ``WarehouseTableRowsInvalid``. ``op_col`` adds a merge's op column
-    (``"U"`` where a record has none). Returns ``(api, table)``."""
-    records = prepare(data)
-    if not isinstance(records, list):
+    ``WarehouseTableRowsInvalid``. ``observed(schema)`` yields the
+    records as ``infer_schema(..., schema=schema)`` reads them.
+    ``op_col`` adds a merge's op column (``"U"`` where a record has
+    none). Returns ``(api, table)``.
+
+    A list or tuple batch is not copied through ``prepare``: the
+    conform cleans its keys where it reads them, with the same result.
+    Other input (pandas) still goes through ``prepare``."""
+    records = data if isinstance(data, (list, tuple)) else prepare(data)
+    if not isinstance(records, (list, tuple)):
         raise WarehouseInvalidInput(f"expected records or DataFrame, got {type(data).__name__}")
     odd = [r for r in records if not isinstance(r, dict)]
     if odd:
         raise WarehouseTableRowsInvalid(
-            f"{len(odd)} record(s) are not dicts (the first is {type(odd[0]).__name__})"
+            f"{len(odd)} record(s) are not dicts (the first is {type(clean_keys(odd[0])).__name__})"
         )
-    api = api_of(records)
+    api = api_of(functools.partial(_observed, records))
     schema = to_arrow_schema(_struct(api, op_col))
     if records and not len(schema):
         raise WarehouseTableRowsInvalid("records have no fields to write")
     columns = _conform_record(records, api, schema)
     if op_col:
+        rows, raw_of = _key_level(records)
+        raw = raw_of.get(op_col)  # None for a dirty op_col: no cleaned key matches it
+        ops = ["U"] * len(rows) if raw is None else [clean_keys(r.get(raw, "U")) for r in rows]
         with _naming(op_col, pa.string()):
-            columns.append(pa.array([r.get(op_col, "U") for r in records], pa.string()))
+            columns.append(pa.array(ops, pa.string()))
     return api, pa.Table.from_arrays(columns, schema=schema)
 
 
 def _conform_expr(col: Column, src_type: T.DataType | None, dst_type: T.DataType) -> Column:
-    """Conform one column (ADVICE r15 #1): a whole-struct ``cast``
-    fails when the batch's struct misses (or adds) nested fields, while
+    """Conform one column: a whole-struct ``cast`` fails when the
+    batch's struct misses (or adds) nested fields, while
     ``_conform_record`` backfills them with NULL and drops extras, so
     structs are rebuilt field by field."""
     if src_type is None:
@@ -345,7 +409,7 @@ class SparkWarehouse:
         os.makedirs(self.path, exist_ok=True)
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump(meta, fh, default=str)
+            fh.write(json.dumps(meta, default=str))
         os.replace(tmp, self._meta_path)
 
     @property
@@ -627,8 +691,12 @@ class SparkWarehouse:
         full_schema: bool = False,
     ) -> bool:
         """The flagship load pipeline (bigquery/__init__.py:363-461,
-        SURVEY.md §3.1): prepare → adopt-existing-schema → infer/merge
-        (existing wins per field) → create-if-missing → append.
+        SURVEY.md §3.1): clean keys → adopt-existing-schema →
+        infer/merge (existing wins per field) → create-if-missing →
+        append. A record batch's keys are cleaned inside the conform,
+        once per distinct key of each level; ``infer_schema`` sees
+        deep-cleaned values only for the fields it observes, those the
+        schema does not fix.
 
         The reference's chunked streaming-insert loop (:432-442)
         becomes one parquet file per batch, and parquet row-groups
@@ -640,8 +708,8 @@ class SparkWarehouse:
         conform does not slow down as the table widens. A batch with
         no rows updates the schema and writes no file.
 
-        ``data`` may also be a Spark DataFrame (VERDICT r14 #5): that
-        is the BULK path — no records round-trip, no driver
+        ``data`` may also be a Spark DataFrame: that is the BULK
+        path — no records round-trip, no driver
         materialization. Key sanitation runs as a zero-copy projection
         (``clean_dataframe_keys``), the infer/merge stage runs
         distributed (``infer_schema_distributed``: per-partition
@@ -656,7 +724,8 @@ class SparkWarehouse:
         REQUIRED field or a value that cannot convert raises
         ``WarehouseTableRowsInvalid`` before anything is written.
         """
-        existing = self.schema if self.exists() else None
+        meta = self._read_meta()
+        existing = meta.get("schema")
         if existing and schema is None:
             schema = existing  # :409-410 — adopt table schema
 
@@ -670,11 +739,11 @@ class SparkWarehouse:
         if isinstance(data, DataFrame):
             api, out = _conform_dataframe(data, lambda src: api_of(src, infer_schema_distributed))
         else:
-            api, out = _conform_records(data, lambda records: api_of(records, infer_schema))
+            api, out = _conform_records(data, lambda observed: api_of(observed(schema), infer_schema))
         # schema first, data second: a crash in between leaves extra
         # nullable columns, never a data file the schema cannot read
         created = _dt.datetime.now(_dt.timezone.utc).isoformat()
-        self._write_meta({"expires": None, "created_at": created, **self._read_meta(), "schema": api})
+        self._write_meta({"expires": None, "created_at": created, **meta, "schema": api})
         if isinstance(out, DataFrame):
             out.write.mode("append").parquet(os.path.join(self.path, "data"))
         elif out.num_rows:

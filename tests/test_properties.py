@@ -1908,7 +1908,7 @@ def _oracle_value(value, field):
     if field.get("mode", wtypes.DEFAULT_MODE) == wtypes.REPEATED:
         if ftype == wtypes.RECORD:
             items = value if isinstance(value, (list, tuple)) else [value]
-            return [_oracle_record(v, field["fields"]) for v in items if isinstance(v, dict)]
+            return [_oracle_record(v, field.get("fields", [])) for v in items if isinstance(v, dict)]
         if isinstance(value, dict):
             items = list(value.keys())
         elif isinstance(value, (list, tuple)):
@@ -1917,7 +1917,7 @@ def _oracle_value(value, field):
             items = [value]
         return [_oracle_scalar(v, ftype) for v in items]
     if ftype == wtypes.RECORD:
-        return _oracle_record(value, field["fields"]) if isinstance(value, dict) else value
+        return _oracle_record(value, field.get("fields", [])) if isinstance(value, dict) else value
     return _oracle_scalar(value, ftype)
 
 
@@ -2112,6 +2112,148 @@ def test_columnar_conform_equals_row_wise_on_growing_ingest_batches():
     api = None
     for i in range(12):
         batch = gen.ingest_batch(rng, i * 300, 300, f"attr-{i}")
-        api = SparkWarehouse._widen_only_merge(infer_schema(prepare(batch), schema=api).schema, api)
+        inferred = infer_schema(prepare(batch), schema=api).schema
+        assert _load_api(batch, api) == inferred, i
+        api = SparkWarehouse._widen_only_merge(inferred, api)
         new, old = _conform_both(api, batch)
         assert isinstance(new, pa.Table) and _same_table(new, old), i
+
+
+# --- record conform: keys are cleaned as prepare cleans them ---------------
+#
+# A list or tuple batch is not copied through ``prepare``: the conform
+# cleans each level's keys and the inference view cleans what it
+# observes. Both must give what ``prepare`` followed by them gives.
+
+
+class _Inferred(Exception):
+    """Carries the load path's inferred api out of ``_conform_records``."""
+
+
+def _load_api(batch, schema):
+    """The api the record load path infers for ``batch`` under
+    ``schema``, taken before the conform can reject a value."""
+    from load_datawarehouse_spark.warehouse import _conform_records
+
+    def api_of(observed):
+        raise _Inferred(infer_schema(observed(schema), schema=schema).schema)
+
+    try:
+        _conform_records(batch, api_of)
+    except _Inferred as got:
+        return got.args[0]
+    raise AssertionError("the load path did not infer a schema")
+
+
+class _Key(str):
+    """A key of a str subclass, as numpy's ``str_`` is."""
+
+
+class _Defaulting(dict):
+    """A record type whose ``get`` differs from the plain dict
+    ``prepare`` copies it into."""
+
+    def get(self, key, default=None):
+        return super().get(key, "?")
+
+
+def _aliases(key):
+    """Keys that clean to what ``key`` cleans to."""
+    if not isinstance(key, str):
+        return [key]
+    return [key, key.replace("_", "-"), key.replace("_", " "), _Key(key)]
+
+
+def _dirty(draw, obj):
+    """``obj`` with the keys at every depth swapped for dirty aliases,
+    sometimes a second alias or a ``1`` / ``True`` key beside them,
+    lists sometimes tuples, and scalars sometimes wrapped in a dict or
+    tuple with dirty keys of its own."""
+    if isinstance(obj, dict):
+        out = {}
+        for k, v in obj.items():
+            v = _dirty(draw, v)
+            out[draw(st.sampled_from(_aliases(k)))] = v
+            if draw(st.integers(0, 5)) == 0:
+                out[draw(st.sampled_from(_aliases(k)))] = draw(st.sampled_from([None, 1, "x", [1]]))
+        if draw(st.integers(0, 4)) == 0:
+            out[draw(st.sampled_from([1, True]))] = draw(st.sampled_from([None, 2, "y", ["z"]]))
+        return out
+    if isinstance(obj, (list, tuple)):
+        items = [_dirty(draw, v) for v in obj]
+        return tuple(items) if draw(st.booleans()) else items
+    if obj is not None and draw(st.integers(0, 7)) == 0:
+        return draw(st.sampled_from([{"p-q": obj, "p q": 1}, (obj, {"r s": 1})]))
+    return obj
+
+
+def _underscored(fields):
+    """Field names with a ``_`` in them, so that they have dirty aliases."""
+    return [
+        {**f, "name": f"{f['name']}_{f['name']}",
+         **({"fields": _underscored(f["fields"])} if "fields" in f else {})}
+        for f in fields
+    ]
+
+
+#: fields no clean record key reaches directly: a dirty name matches no
+#: cleaned key, and ``1`` / ``True`` keys clean to these
+_ODD_FIELDS = [
+    {"name": "d-e", "type": "STRING", "mode": "NULLABLE"},
+    {"name": "1", "type": "STRING", "mode": "NULLABLE"},
+    {"name": "True", "type": "STRING", "mode": "REPEATED"},
+]
+
+
+@st.composite
+def _dirty_schema_and_batch(draw):
+    api = _underscored(draw(_fields(0))) + draw(st.lists(st.sampled_from(_ODD_FIELDS), unique_by=str))
+    record = _batch_record(api, clean=draw(st.booleans()))
+    batch = [_dirty(draw, r) for r in draw(st.lists(record, min_size=1, max_size=5))]
+    # a dirty op_col must match no raw key, not even one spelled like it
+    op_col = draw(st.sampled_from([None, "o_p", "o-p"]))
+    if op_col:
+        batch = [
+            {**r, draw(st.sampled_from(_aliases("o_p"))): draw(st.sampled_from(["I", "D", None]))}
+            if draw(st.booleans()) else r
+            for r in batch
+        ]
+    return api, tuple(batch) if draw(st.booleans()) else batch, op_col
+
+
+_KK = [{"name": "k_k", "type": "INTEGER", "mode": "NULLABLE"}]
+_S1 = [{"name": "s_s", "type": "STRING", "mode": "NULLABLE"}]
+
+
+@settings(max_examples=300, deadline=None)
+@given(case=_dirty_schema_and_batch())
+@example(case=(_KK, [{"k-k": 1}, {"k k": 2}, {"k_k": 3}], None))  # dirty aliases
+@example(case=(_KK, [{"k-k": 1, "x": 0, "k k": 2}], None))  # two aliases in one dict
+@example(case=(_ODD_FIELDS, [{1: "a"}, {True: ["b"]}, {"1": "c"}], None))  # 1 and True
+@example(case=(_KK, [{_Key("k-k"): 4}, {"k_k": 5}], None))  # a str-subclass key
+@example(case=(_S1, [_Defaulting({"s_s": "a"}), _Defaulting()], None))  # a dict subclass
+@example(case=(_KK, [{"k_k": 1, "o-p": "D"}, {"o p": "I"}], "o-p"))  # a dirty op_col
+@example(case=(  # a plain dict on REPEATED STRING reads as its cleaned keys
+    [{"name": "r_r", "type": "STRING", "mode": "REPEATED"}],
+    [{"r_r": {"k-1": 1, "k 1": 2, 3: 4, True: 5}}, {"r_r": ("a", {"b-c": 1})}], None,
+))
+@example(case=(_S1, [{"s_s": {"a-b": {"c d": 1}}}, {"s_s": (1, {"q r": 2})}], None))  # dict, tuple into STRING
+@example(case=(  # RECORD inside REPEATED RECORD, dirty keys at each level
+    [{"name": "r_r", "type": "RECORD", "mode": "REPEATED", "fields": [
+        {"name": "x_x", "type": "RECORD", "mode": "NULLABLE", "fields": _KK}]}],
+    ({"r-r": ({"x x": {"k-k": 1, "k k": 2}}, {"x-x": {1: 3}})}, {"r r": [{"x_x": None}]}), "o_p",
+))
+def test_columnar_conform_cleans_keys_as_prepare_does(case):
+    api, batch, op_col = case
+    conforms = [(api, op_col)]
+    for schema in (None, api):
+        inferred = _load_api(batch, schema)
+        assert inferred == infer_schema(prepare(batch), schema=schema).schema
+        conforms.append((inferred, None))
+    for fields, op in conforms:
+        new, old = _conform_both(fields, batch, op)
+        if isinstance(old, Exception):
+            assert isinstance(new, WarehouseTableRowsInvalid), (old, new)
+        else:
+            assert isinstance(new, pa.Table), new
+            assert _same_table(new, old), (new.to_pylist(), old.to_pylist())

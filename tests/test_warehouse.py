@@ -809,8 +809,12 @@ def test_verbs_share_one_conform_contract(spark, root, verb, kind, case):
 def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
     """perfbench/trace.py times the loader's layers by wrapping these
     module and class attributes; each verb must still reach them, or
-    a layer's metric would silently read 0."""
+    a layer's metric would silently read 0. A list or tuple batch is
+    not run through ``prepare`` (the conform cleans its keys); a
+    pandas batch still is, so the name stays importable."""
     from collections import Counter
+
+    import pandas as pd
 
     from load_datawarehouse_spark import warehouse
 
@@ -834,19 +838,27 @@ def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
     wh = SparkWarehouse.new(spark, root, "credits")
     expect = {
         "records load": (lambda: wh.load(RECORDS),
-                         {"prepare", "infer_schema", "_conform_record", "load"}),
+                         {"infer_schema", "_conform_record", "load"}),
+        "tuple load": (lambda: wh.load(tuple(RECORDS)),
+                       {"infer_schema", "_conform_record", "load"}),
+        "pandas load": (lambda: wh.load(pd.DataFrame(RECORDS)),
+                        {"prepare", "infer_schema", "_conform_record", "load"}),
         "DataFrame load": (lambda: wh.load(_records_as_df(spark)),
                            {"clean_dataframe_keys", "infer_schema_distributed", "load"}),
         "records update": (lambda: wh.update(RECORDS[:1], keys=["id"]),
-                           {"prepare", "_conform_record"}),
+                           {"_conform_record"}),
         "records merge": (lambda: wh.merge([{**RECORDS[0], "op": "U"}], keys=["id"]),
-                          {"prepare", "_conform_record", "merge"}),
+                          {"_conform_record", "merge"}),
     }
     for what, (run, credited) in expect.items():
         calls.clear()
         run()
         missing = {n for n in credited if not calls[n]}
         assert not missing, f"{what} no longer calls {sorted(missing)}"
+        if "prepare" in credited:
+            assert calls["prepare"] == 1, what
+        else:
+            assert calls["prepare"] == 0, f"{what} copied its records through prepare"
     # the conform pass runs once per batch, not once per record
     per_batch = []
     for n in (1, 200):

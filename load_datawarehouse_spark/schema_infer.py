@@ -21,7 +21,14 @@ Reproduces the observation -> condense lattice of
 Fields the existing schema fixes are not observed: ``condense``
 copies their entry verbatim whatever was seen, so only their presence
 is recorded (which keeps field order and the stability factor
-unchanged) and their values are never walked.
+unchanged) and their values are never walked. ``infer_schema`` does
+this in one pass over a batch it holds as a list: presence comes from
+the batch's key union, each distinct key is cleaned once, and a row is
+walked key by key only when it brings a key no earlier row had or
+carries more than one key the schema leaves open.
+``Observation.observe_row`` walks every key of every row; it serves
+``infer_schema_distributed``, which streams a partition without
+holding it.
 
 Verified golden outputs: FIXTURES.md F1/F2 (executed against the
 reference during the survey).
@@ -166,17 +173,7 @@ class Observation:
             if len(self.type_errors) < self.MAX_ERROR_SAMPLES:
                 self.type_errors.append(row)
             return
-        added = False
-        fields, fixed = self.fields, self.fixed
-        for raw_key, value in row.items():
-            key = clean_field_key(raw_key)
-            obs = fields.get(key)
-            if obs is None:
-                obs = fields[key] = FieldObs()
-                added = True
-            if value is None or key in fixed:
-                continue
-            _observe_value(obs, value, order_key)
+        added = _walk_row(self.fields, self.fixed, row, order_key)
         if self.first_seen and added:
             self.n_adding += 1
         self.first_seen = True
@@ -201,6 +198,24 @@ class Observation:
     def factor_of_records_adding_fields(self) -> float:
         # schema.py:753-755 — nonzero adding-rows / total enumerated rows
         return self.n_adding / self.n_rows if self.n_rows else 0.0
+
+
+def _walk_row(fields: "dict[str, FieldObs]", fixed, row: dict, order_key: _RowKeys,
+              clean=clean_field_key) -> bool:
+    """Observe one dict row key by key, in its own order: register each
+    ``clean``-ed name, and observe each non-None value of a name
+    ``fixed`` does not hold. Returns whether the row added a field."""
+    added = False
+    for raw_key, value in row.items():
+        key = clean(raw_key)
+        obs = fields.get(key)
+        if obs is None:
+            obs = fields[key] = FieldObs()
+            added = True
+        if value is None or key in fixed:
+            continue
+        _observe_value(obs, value, order_key)
+    return added
 
 
 def _observe_value(obs: FieldObs, value: Any, order_key: "_RowKeys") -> None:
@@ -424,25 +439,67 @@ def infer_schema(
 ) -> InferenceResult:
     """Sequential reference-faithful inference
     (= deconstruct_records + condense_record_fields +
-    get_api_repr_from_record_fields).
+    get_api_repr_from_record_fields), in one pass over the batch, which
+    it holds in memory as a list. The result equals an
+    ``Observation.observe_row`` loop's, at a cost that follows the keys
+    the batch carries and the fields ``schema`` leaves open.
 
     Values of the fields ``schema`` already types are not observed:
     the existing entry wins verbatim, so observing them could not
-    change the result. Only their presence is recorded.
+    change the result. The batch's key union is taken once and each
+    distinct key cleaned once. A row that brings a key no earlier row
+    had is walked whole, as ``observe_row`` walks it, which gives field
+    order and the stability factor; once every key has been seen, a
+    row is read only through the keys ``schema`` leaves open, in its
+    own key order only when it carries more than one of them (two keys
+    of one row may name one field, and their order then decides the
+    kinds). A dict subclass (its own ``items``) and a row with a key
+    that is not a ``str`` are always walked whole: ``1`` and ``True``
+    are one dict key but clean to two names.
     """
     if records is None or isinstance(records, (str, bytes, dict)):
         raise WarehouseInvalidInput(
             f"expected an iterable of records, got {type(records).__name__}"
         )
+    # the schema first: ``records`` may be a generator that reads it
     existing = _existing_by_name(schema)
-    obs = Observation(fixed=frozenset(existing))
-    for row in records:
-        obs.observe_row(row)
+    rows = records if type(records) is list else list(records)
+    keys = set().union(*[r for r in rows if type(r) is dict])
+    name_of = {k: clean_field_key(k) for k in keys}
+    odd = {k for k in keys if type(k) is not str}
+    open_keys = {k for k, name in name_of.items() if name not in existing}
+    fields: dict[str, FieldObs] = {}
+    seen: set = set()  # keys whose field is registered
+    type_errors: list = []
+    n_records = n_adding = 0
+    for i, row in enumerate(rows):
+        if not isinstance(row, dict):
+            if len(type_errors) < Observation.MAX_ERROR_SAMPLES:
+                type_errors.append(row)
+            continue
+        if type(row) is not dict or (odd and row.keys() & odd):
+            added = _walk_row(fields, existing, row, _RowKeys(0, i))
+        elif len(seen) < len(keys) and not seen.issuperset(row):
+            # a row that brings a key is walked whole; ``issuperset``
+            # walks the row, where ``row.keys() - seen`` would walk ``seen``
+            seen.update(row)
+            added = _walk_row(fields, existing, row, _RowKeys(0, i), name_of.__getitem__)
+        else:
+            added = False
+            hit = open_keys and row.keys() & open_keys
+            if hit:
+                order_key = _RowKeys(0, i)
+                for k in hit if len(hit) == 1 else [k for k in row if k in hit]:
+                    if row[k] is not None:
+                        _observe_value(fields[name_of[k]], row[k], order_key)
+        if added and n_records:
+            n_adding += 1
+        n_records += 1
     return InferenceResult(
-        schema=condense(obs.fields, list(existing.values()), strict_dates),
-        type_errors=obs.type_errors,
-        factor_of_records_adding_fields=obs.factor_of_records_adding_fields,
-        n_records=obs.n_records,
+        schema=condense(fields, list(existing.values()), strict_dates),
+        type_errors=type_errors,
+        factor_of_records_adding_fields=n_adding / len(rows) if rows else 0.0,
+        n_records=n_records,
     )
 
 

@@ -18,9 +18,10 @@ and the ``update`` / ``merge`` rewrites are distributed
 ``df.write.parquet``; a record batch, which already sits on the
 driver, is appended as one Arrow-built parquet file written by the
 driver, with no Spark job; it is conformed column by column, so its
-cost follows the fields its records carry, not the table's width. Its
-keys are cleaned inside that conform, once per distinct key of each
-level, so no record is copied to clean them.
+cost follows the fields its records carry, not the table's width, and
+the file holds only the columns that have a value. Its keys are
+cleaned inside that conform, once per distinct key of each level, so
+no record is copied to clean them.
 """
 
 from __future__ import annotations
@@ -137,34 +138,36 @@ def _key_level(rows: list[dict]) -> tuple[list[dict], dict]:
     return rows, {k: k for k in set().union(*rows)}
 
 
-def _observed(records: list[dict], schema: Iterable[dict] | None) -> Iterator[dict]:
-    """The records as ``infer_schema(..., schema=schema)`` reads them
-    after ``prepare``: keys cleaned per level, and the values it
-    observes, those of the fields ``schema`` does not fix, deep-cleaned.
-    A generator, so ``schema`` is read after ``infer_schema`` read it;
-    a one-shot ``schema`` then fixes nothing here, which cleans more
-    values but reads the same."""
-    rows, raw_of = _key_level(records)
+def _observed(level: tuple[list[dict], dict], schema: Iterable[dict] | None) -> Iterator[dict]:
+    """The records of ``level`` (``_key_level``'s result for the top
+    level) as ``infer_schema(..., schema=schema)`` reads them after
+    ``prepare``: keys cleaned, and the values it observes, those of the
+    fields ``schema`` does not fix, deep-cleaned. A generator, so
+    ``schema`` is read after ``infer_schema`` read it; a one-shot
+    ``schema`` then fixes nothing here, which cleans more values but
+    reads the same."""
+    rows, raw_of = level
     fixed = _existing_by_name(schema)
-    read = [raw for name, raw in raw_of.items() if name not in fixed]
+    read = {raw for name, raw in raw_of.items() if name not in fixed}
     for r in rows:
-        clean = {k: c for k in read if k in r and (c := clean_keys(r[k])) is not r[k]}
+        clean = not read.isdisjoint(r) and {k: c for k in read if k in r and (c := clean_keys(r[k])) is not r[k]}
         yield {**r, **clean} if clean else r
 
 
-def _conform_record(rows: list[dict], fields: list[dict], arrow: Iterable[pa.Field]) -> list[pa.Array]:
+def _conform_record(level: tuple[list[dict], dict], fields: list[dict], arrow: Iterable[pa.Field]) -> list[pa.Array]:
     """Conform a batch of records to ``fields`` column by column: one
     Arrow array per field, typed by its ``arrow`` field. A field no
     record carries is all nulls with no per-row work, so the cost
-    follows the fields present, not the table's width. Keys are cleaned
-    here, per level (``_key_level``): a field reads its values through
-    the raw key that cleans to its name, so a field name that is not
-    clean matches no key.
+    follows the fields present, not the table's width. ``level`` is the
+    batch as ``_key_level`` returns it, with its keys cleaned: a field
+    reads its values through the raw key that cleans to its name, so a
+    field name that is not clean matches no key. Each RECORD field's
+    sub-batch gets its own ``_key_level``.
 
     The name is fixed: the benchmark's trace wraps this module global
     by name for its ``warehouse.conform`` span, so every call, the
     recursion into RECORD fields included, goes through it."""
-    rows, raw_of = _key_level(rows)
+    rows, raw_of = level
     n, columns = len(rows), []
     for f, af in zip(fields, arrow):
         name = f["name"]
@@ -216,7 +219,7 @@ def _conform_column(values: list, field: dict, atype: pa.DataType) -> pa.Array:
         flat = [e for items in lists if items for e in items]
         offsets = itertools.accumulate((len(items or ()) for items in lists), initial=0)
         struct = atype.value_type if repeated else atype
-        children = _conform_record(flat, field.get("fields", []), struct)
+        children = _conform_record(_key_level(flat), field.get("fields", []), struct)
         array = pa.ListArray.from_arrays(
             pa.array(list(offsets), pa.int32()),
             pa.Array.from_buffers(struct, len(flat), [None], children=children),
@@ -266,13 +269,14 @@ def _conform_records(data, api_of, op_col: str | None = None) -> tuple[list[dict
         raise WarehouseTableRowsInvalid(
             f"{len(odd)} record(s) are not dicts (the first is {type(clean_keys(odd[0])).__name__})"
         )
-    api = api_of(functools.partial(_observed, records))
+    level = _key_level(records)  # the top level's keys, cleaned once
+    api = api_of(functools.partial(_observed, level))
     schema = to_arrow_schema(_struct(api, op_col))
     if records and not len(schema):
         raise WarehouseTableRowsInvalid("records have no fields to write")
-    columns = _conform_record(records, api, schema)
+    columns = _conform_record(level, api, schema)
     if op_col:
-        rows, raw_of = _key_level(records)
+        rows, raw_of = level
         raw = raw_of.get(op_col)  # None for a dirty op_col: no cleaned key matches it
         ops = ["U"] * len(rows) if raw is None else [clean_keys(r.get(raw, "U")) for r in rows]
         with _naming(op_col, pa.string()):
@@ -526,9 +530,10 @@ class SparkWarehouse:
     def _scan(self, path: str, api: list[dict] | None) -> DataFrame:
         """Lazy scan of ``path`` with the declared schema ``api``: files
         written before a schema-widening append lack the newer columns,
-        and a bare read would surface whichever footer Spark samples
-        first — the declared schema fills missing columns with null
-        deterministically (cheaper than mergeSchema, which re-reads
+        and a record load's file holds only the columns its batch gave
+        a value, so a bare read would surface whichever footer Spark
+        samples first — the declared schema fills missing columns with
+        null deterministically (cheaper than mergeSchema, which re-reads
         every footer)."""
         if not os.path.isdir(path) or not os.listdir(path):
             return self.spark.createDataFrame([], wtypes.api_repr_to_struct_type(api or []))
@@ -705,8 +710,11 @@ class SparkWarehouse:
         column by column into one Arrow table, typed by Spark's own
         Spark→Arrow map, and appended as a single file with no Spark
         job. A field no record carries costs no per-row work, so the
-        conform does not slow down as the table widens. A batch with
-        no rows updates the schema and writes no file.
+        conform does not slow down as the table widens, and the file
+        leaves out every column with no value in the batch (the first
+        column stays when none has one); reads fill those columns from
+        the declared schema (``_scan``). A batch with no rows updates
+        the schema and writes no file.
 
         ``data`` may also be a Spark DataFrame: that is the BULK
         path — no records round-trip, no driver
@@ -747,14 +755,19 @@ class SparkWarehouse:
         if isinstance(out, DataFrame):
             out.write.mode("append").parquet(os.path.join(self.path, "data"))
         elif out.num_rows:
-            self._append_file(out)
+            # a column with no value is left out of the file; the first
+            # stays if none has one, so the file still holds the rows
+            held = [i for i, c in enumerate(out.columns) if c.null_count < out.num_rows]
+            self._append_file(out.select(held or [0]))
         return True
 
     def _append_file(self, table: pa.Table) -> None:
         """Append ``table`` to ``data/`` as one parquet file compressed
         with the session's parquet codec. It is written under a dot
         name, which Spark's reader skips, and renamed into place, so no
-        reader sees a partial file."""
+        reader sees a partial file. A record load's ``table`` holds only
+        the columns that have a value, so a file may hold fewer columns
+        than the table's schema; ``_scan`` reads it with that schema."""
         codec = self.spark.conf.get("spark.sql.parquet.compression.codec").lower()
         if codec == "uncompressed":
             codec = "none"

@@ -2257,3 +2257,123 @@ def test_columnar_conform_cleans_keys_as_prepare_does(case):
         else:
             assert isinstance(new, pa.Table), new
             assert _same_table(new, old), (new.to_pylist(), old.to_pylist())
+
+
+# --- infer_schema: one pass, equal to the observe_row loop ----------------
+#
+# ``infer_schema`` reads presence from the batch's key union and
+# observes only the fields the schema leaves open; an
+# ``Observation.observe_row`` loop walks every key of every row. Both
+# must give the same schema, field order, type errors, record count
+# and stability factor.
+
+
+def _observe_row_oracle(rows, schema):
+    """What ``infer_schema(rows, schema)`` returns, as an
+    ``Observation.observe_row`` loop followed by ``condense`` gives it."""
+    obs = Observation(fixed=frozenset(f["name"] for f in schema or ()))
+    for row in rows:
+        obs.observe_row(row)
+    return condense(obs.fields, schema), obs.type_errors, obs.n_records, obs.factor_of_records_adding_fields
+
+
+class _Reordered(dict):
+    """A record whose ``items`` walks its keys backwards and whose
+    ``get`` never misses."""
+
+    def get(self, key, default=None):
+        return super().get(key, "?")
+
+    def items(self):
+        return list(super().items())[::-1]
+
+
+_INFER_KEYS = st.sampled_from(["a", "b_c", "b-c", "b c", _Key("b-c"), 1, True, "1", "True", "d"])
+_INFER_NAMES = ["a", "b_c", "1", "True", "d", "zz"]
+_NOT_DICTS = st.sampled_from([None, 7, "x", [1], ("t",)])
+
+
+def _infer_record(depth: int):
+    leaf = st.one_of(_scalars, st.lists(_scalars, max_size=3))
+    if depth <= 0:
+        value = leaf
+    else:
+        sub = st.deferred(lambda: _infer_record(depth - 1))
+        # a plain dict reads as its keys; dicts in a list or tuple are records
+        value = st.one_of(leaf, sub, st.lists(st.one_of(sub, _scalars), max_size=3), st.lists(sub, max_size=2).map(tuple))
+    return st.dictionaries(_INFER_KEYS, value, max_size=5)
+
+
+@st.composite
+def _infer_batch(draw):
+    record = _infer_record(2)
+    row = st.one_of(record, record, record, record.map(_Reordered), _NOT_DICTS)
+    rows = draw(st.lists(row, max_size=25))
+    if draw(st.integers(0, 5)) == 0:  # more non-dict rows than type_errors keeps
+        at = draw(st.integers(0, len(rows)))
+        rows[at:at] = draw(st.lists(_NOT_DICTS, min_size=21, max_size=24))
+    names = draw(st.lists(st.sampled_from(_INFER_NAMES), unique=True, max_size=4))
+    schema = [
+        {"name": n, "type": draw(st.sampled_from(_TYPES)), "mode": draw(st.sampled_from(_MODES))}
+        for n in names
+    ] if draw(st.booleans()) else None
+    return rows, schema, draw(st.booleans())
+
+
+@settings(max_examples=400, deadline=None)
+@given(case=_infer_batch())
+@example(case=([{1: "a"}, {True: [2]}, {"1": 3, "True": None}], None, False))  # 1 next to True
+@example(case=([{1: "a", "d": 0}, {True: 2}], [{"name": "1", "type": "STRING", "mode": "NULLABLE"}], False))
+@example(case=(  # two dirty aliases in one row: both values observed, in row order
+    [{"b-c": "s", "a": 1, "b c": 2}, {"b_c": 3.5}], [{"name": "a", "type": "INTEGER", "mode": "NULLABLE"}], False,
+))
+@example(case=([{"a": 1}, {"b-c": [dt.date(2020, 1, 1)], "b c": ""}], None, True))  # aliases, list then str
+@example(case=(  # aliases in a row after every key was seen: row order, not set order, decides
+    [{"b-c": None, "b c": None}, {"b-c": [dt.date(2020, 1, 1)], "b c": ""}], None, False,
+))
+@example(case=([{"b c": None, "b-c": None}, {"b c": "", "b-c": [dt.date(2020, 1, 1)]}], None, False))
+@example(case=([_Reordered({"a": 1, "d": "x"}), {"d": 2, "zz": None}], None, False))  # a dict subclass
+@example(case=([7] * 12 + [{"a": 1}] + [None] * 12, None, False))  # more than 20 non-dict rows
+@example(case=(  # nested dicts and lists, with dirty keys inside
+    [{"a": [{"b-c": 1, "b c": "x"}], "d": {"k-1": 1, 1: 2}}, {"a": ({"b_c": 2.0},), "d": [1, "y"]}], None, False,
+))
+@example(case=([{"a": 1}, {1: 2, "a": "x"}, {"a": 3, "d": None}], None, False))  # one non-str key in the level
+@example(case=([{f"k{i}_{j}": j for j in range(5)} for i in range(60)], None, False))  # sparse keys
+@example(case=(  # fixed and open fields, the open one first seen late
+    [{"a": 1, "d": "x"}] * 5 + [{"a": 2, "zz": [b"b"]}, {"zz": "s", "d": None}],
+    [{"name": "a", "type": "FLOAT", "mode": "REQUIRED"}, {"name": "d", "type": "STRING", "mode": "NULLABLE"}], True,
+))
+def test_infer_schema_equals_the_observe_row_loop(case):
+    rows, schema, one_shot = case
+    got = infer_schema(iter(rows) if one_shot else rows, schema)
+    want = _observe_row_oracle(rows, schema)
+    assert (got.schema, got.type_errors, got.n_records, got.factor_of_records_adding_fields) == want
+
+
+def test_infer_schema_cost_follows_the_batch_not_a_column_scan(monkeypatch):
+    """Observing each open field as a column over every row is
+    quadratic on a batch whose records share no keys; the one pass must
+    stay within a small factor of the row walk. It never calls
+    ``observe_row``, not even for a non-``str`` key or a dict subclass."""
+    import time
+
+    sparse = [{f"k{i}_{j}": j for j in range(5)} for i in range(2000)]
+
+    def timed(run):
+        start = time.perf_counter()
+        run()
+        return time.perf_counter() - start
+
+    runs = [(timed(lambda: _observe_row_oracle(sparse, None)), timed(lambda: infer_schema(sparse)))
+            for _ in range(3)]  # interleaved, so a slow spell hits both sides
+    oracle, one_pass = (min(side) for side in zip(*runs))
+    assert one_pass <= 3 * oracle, (one_pass, oracle)
+
+    def no_walk(self, row):
+        raise AssertionError("infer_schema walked a row through observe_row")
+
+    odd = [{"a": 1}, {1: "x", "a": 2}, {True: 3}, _Reordered({"a": "y"}), 5]
+    want = _observe_row_oracle(odd, None)
+    monkeypatch.setattr(Observation, "observe_row", no_walk)
+    got = infer_schema(odd)
+    assert (got.schema, got.type_errors, got.n_records, got.factor_of_records_adding_fields) == want

@@ -273,13 +273,13 @@ def test_f3_round_trips_through_spark(spark):
 
     from load_datawarehouse_spark import types as wtypes
     from load_datawarehouse_spark.data import prepare
-    from load_datawarehouse_spark.warehouse import _conform_record
+    from load_datawarehouse_spark.warehouse import _conform_record, _key_level
 
     records = _f3_records()
     api = infer_schema(records).schema
     struct = wtypes.api_repr_to_struct_type(api)
     arrow = to_arrow_schema(struct)
-    table = pa.Table.from_arrays(_conform_record(prepare(records), api, arrow), schema=arrow)
+    table = pa.Table.from_arrays(_conform_record(_key_level(prepare(records)), api, arrow), schema=arrow)
     df = spark.createDataFrame(table, struct)
     assert df.count() == len(records)
     assert {f.name for f in df.schema.fields} == {f["name"] for f in api}

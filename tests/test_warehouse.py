@@ -631,15 +631,89 @@ def test_snapshot_reads_driver_written_files(spark, root):
     assert wh.df_at(v2).filter("extra = 'x'").count() == 1
 
 
+_WIDE = [
+    {"name": "id", "type": "INTEGER", "mode": "REQUIRED"},
+    {"name": "name", "type": "STRING", "mode": "NULLABLE"},
+    {"name": "score", "type": "FLOAT", "mode": "NULLABLE"},
+    {"name": "tags", "type": "STRING", "mode": "REPEATED"},
+    {"name": "addr", "type": "RECORD", "mode": "NULLABLE", "fields": [
+        {"name": "city", "type": "STRING", "mode": "NULLABLE"},
+        {"name": "zip", "type": "STRING", "mode": "NULLABLE"}]},
+    {"name": "items", "type": "RECORD", "mode": "REPEATED", "fields": [
+        {"name": "sku", "type": "STRING", "mode": "NULLABLE"},
+        {"name": "qty", "type": "INTEGER", "mode": "NULLABLE"}]},
+    *({"name": f"c{i}", "type": "STRING", "mode": "NULLABLE"} for i in range(20)),
+]
+
+
+def _rows(df):
+    return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda r: r["id"])
+
+
+def test_record_load_file_holds_only_columns_with_a_value(spark, root):
+    """A record load leaves out of its file every column the batch gave
+    no value; every read fills them from the declared schema, so the
+    table reads as a twin whose files hold every column, before and
+    after a widening load, an update and a merge, and in a snapshot."""
+    from load_datawarehouse_spark.warehouse import _conform_records
+
+    wh = SparkWarehouse.new(spark, root, "sparse", schema=_WIDE)
+    twin = SparkWarehouse.new(spark, root, "twin", schema=_WIDE)
+    batches = [
+        [{"id": 1, "name": "a", "c3": "x", "addr": {"city": "Oslo"}}, {"id": 2, "c3": None, "score": None}],
+        [{"id": 3, "items": [{"sku": "s", "qty": None}], "new-1": "widens", "score": None},
+         {"id": 4, "c19": "z", "tags": ["t"], "name": None}],
+    ]
+    footers = [["id", "name", "addr", "c3"], ["id", "tags", "items", "c19", "new_1"]]
+    for batch, footer in zip(batches, footers):
+        before = set(_data_files(wh))
+        wh.load(batch)
+        (path,) = set(_data_files(wh)) - before
+        assert pq.read_schema(path).names == footer
+        assert pq.read_metadata(path).num_rows == len(batch)
+        twin.set_schema(wh.schema)
+        _, full = _conform_records(batch, lambda _: wh.schema)
+        assert full.num_columns == len(wh.schema)
+        twin._append_file(full)
+    assert wh.schema == twin.schema == [*_WIDE, {"name": "new_1", "type": "STRING", "mode": "NULLABLE"}]
+    assert len(_rows(wh.df())) == 4 and _rows(wh.df()) == _rows(twin.df())
+    v, tv = wh.snapshot(), twin.snapshot()
+    wh.update([{"id": 1, "c0": "u"}], keys=["id"])
+    twin.update([{"id": 1, "c0": "u"}], keys=["id"])
+    assert _rows(wh.df()) == _rows(twin.df())
+    changes = [{"id": 2, "op": "D"}, {"id": 5, "name": "e", "op": "I"}, {"id": 3, "c1": "m"}]
+    wh.merge(changes, keys=["id"])
+    twin.merge(changes, keys=["id"])
+    assert _rows(wh.df()) == _rows(twin.df())
+    assert [r["id"] for r in _rows(wh.df())] == [1, 3, 4, 5]
+    assert _rows(wh.df_at(v)) == _rows(twin.df_at(tv))
+    assert [r["id"] for r in _rows(wh.df_at(v))] == [1, 2, 3, 4]
+
+
+def test_record_load_of_no_values_keeps_one_column(spark, root):
+    """A batch whose records carry no value still appends its rows: the
+    file keeps the first column, so its footer holds the row count."""
+    schema = [{"name": "a", "type": "STRING", "mode": "NULLABLE"},
+              {"name": "b", "type": "INTEGER", "mode": "NULLABLE"}]
+    wh = SparkWarehouse.new(spark, root, "nulls", schema=schema)
+    wh.load([{}, {"a": None, "b": None}, {"zz": None}])
+    (path,) = _data_files(wh)
+    assert pq.read_schema(path).names == ["a"]
+    assert pq.read_metadata(path).num_rows == 3
+    assert wh.df().count() == 3
+    assert [f["name"] for f in wh.schema] == ["a", "b", "zz"]
+    assert {tuple(r) for r in wh.df().collect()} == {(None, None, None)}
+
+
 def _conform_one(record, schema):
     """``record`` conformed alone through the batch pass, as a dict."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from load_datawarehouse_spark.warehouse import _conform_record, _struct
+    from load_datawarehouse_spark.warehouse import _conform_record, _key_level, _struct
 
     arrow = to_arrow_schema(_struct(schema))
-    return pa.Table.from_arrays(_conform_record([record], schema, arrow), schema=arrow).to_pylist()[0]
+    return pa.Table.from_arrays(_conform_record(_key_level([record]), schema, arrow), schema=arrow).to_pylist()[0]
 
 
 def test_conform_alternating_schemas():
@@ -811,12 +885,15 @@ def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
     module and class attributes; each verb must still reach them, or
     a layer's metric would silently read 0. A list or tuple batch is
     not run through ``prepare`` (the conform cleans its keys); a
-    pandas batch still is, so the name stays importable."""
+    pandas batch still is, so the name stays importable. A record
+    load, into a table with a schema or not, runs ``infer_schema``
+    once and never ``Observation.observe_row``."""
     from collections import Counter
 
     import pandas as pd
 
     from load_datawarehouse_spark import warehouse
+    from load_datawarehouse_spark.schema_infer import Observation
 
     calls = Counter()
 
@@ -834,11 +911,14 @@ def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
         counting(warehouse, name)
     for name in ("load", "merge"):
         counting(SparkWarehouse, name)
+    counting(Observation, "observe_row")
 
     wh = SparkWarehouse.new(spark, root, "credits")
     expect = {
         "records load": (lambda: wh.load(RECORDS),
                          {"infer_schema", "_conform_record", "load"}),
+        "records load into a typed table": (lambda: wh.load(RECORDS),
+                                            {"infer_schema", "_conform_record", "load"}),
         "tuple load": (lambda: wh.load(tuple(RECORDS)),
                        {"infer_schema", "_conform_record", "load"}),
         "pandas load": (lambda: wh.load(pd.DataFrame(RECORDS)),
@@ -859,6 +939,10 @@ def test_verbs_call_the_functions_the_trace_credits(spark, root, monkeypatch):
             assert calls["prepare"] == 1, what
         else:
             assert calls["prepare"] == 0, f"{what} copied its records through prepare"
+        if "infer_schema" in credited:
+            # one inference pass per batch, none of it row by row
+            assert calls["infer_schema"] == 1, what
+            assert calls["observe_row"] == 0, f"{what} walked its rows through observe_row"
     # the conform pass runs once per batch, not once per record
     per_batch = []
     for n in (1, 200):

@@ -22,6 +22,29 @@ from pyspark.sql import DataFrame, SparkSession
 # warehouse_load_nested_evolution, #380), so the head is now always
 # the ops whose plan/code changed most recently.
 _FIRST_NAMES = (
+    # --- ops that lost a lineage_cut to a paired cut / no-cut A/B at
+    # sf0.1 and sf1 (the first 16 lost every cut and now build with no
+    # Spark job; the rest keep another cut) ---
+    "sessions_gap_sensitivity",
+    "dq_key_skew_gini",
+    "stat_mann_kendall_trend",
+    "similarity_sq_topk",
+    "customer_concentration_hhi",
+    "events_autocorr_lags",
+    "events_dau_wau_stickiness",
+    "q11_important_stock",
+    "tokenizer_vocab_coverage",
+    "embedding_norm_outliers",
+    "quality_source_kl_divergence",
+    "dedup_strategy_comparison",
+    "quality_dedup_rate_by_source",
+    "search_bm25_topk",
+    "search_rrf_fusion",
+    "basket_affinity_lift",
+    "dedup_shingle_containment",
+    "dedup_incremental_batch",
+    "dedup_tfidf_cosine_pairs",
+    "dedup_minhash_estimate_quality",
     # --- ops that stage files on disk, changed to run through
     # ops._util.on_scratch_dir (and, for streams, the shared
     # staged-wave stream and foreachBatch runner) ---
@@ -73,17 +96,13 @@ _FIRST_NAMES = (
     "dedup_simhash_neardup",
     "dedup_minhash_lsh",
     "dedup_minhash_verified",
-    "dedup_minhash_estimate_quality",
     "dedup_lsh_bucket_skew",
     "dedup_ngram_jaccard",
-    "dedup_shingle_containment",
     "dedup_jaccard_threshold_histogram",
-    "dedup_incremental_batch",
     "dedup_neardup_clusters",
     "text_novelty_per_doc",
     "dedup_crossdoc_segments",
     "pipeline_source_quality_card",
-    "dedup_tfidf_cosine_pairs",
     "contamination_ngram_check",
     "contamination_bloom_prefilter",
     "contamination_decontaminate_apply",
@@ -101,7 +120,6 @@ _FIRST_NAMES = (
     "dedup_semantic_clusters",
     # --- round-17 BUILD head (re-anchors) and band/asof siblings ---
     "heavy_hitters_misra_gries",
-    "q11_important_stock",
     "join_asof_nearest",
     "graph_pagerank",
     # --- siblings sharing the re-anchored claims/predicates: the
@@ -136,7 +154,6 @@ _FIRST_NAMES = (
     "window_ranking",
     "events_velocity_flags",
     "scalar_string",
-    "tokenizer_vocab_coverage",
     # --- shared-gate path (embedding family on require_pair_budget) ---
     # --- earlier-round re-checks (banding, jaccard histogram,
     # federated union, MG merge, lazy PCA, kmeans, FLAC trio) ---
@@ -149,15 +166,12 @@ _FIRST_NAMES = (
     "multimodal_payload_entropy",
     "multimodal_cdc_chunk_dedup",
     # --- dedup/pipeline family siblings of the gated probes ---
-    "dedup_strategy_comparison",
     "dedup_cascade_report",
     "dedup_template_groups",
     # --- embedding-family re-checks ---
     "similarity_cosine_topk",
     "similarity_ivf_topk",
     "similarity_lsh_topk",
-    "similarity_sq_topk",
-    "embedding_norm_outliers",
     # --- join/flagship representatives ---
     "q10_returned_items",
     "q3_shipping_priority",
@@ -168,7 +182,6 @@ _FIRST_NAMES = (
     "graph_triangle_count",
     "basket_association_rules",
     "stream_static_enrich",
-    "search_rrf_fusion",
 )
 
 

@@ -35,6 +35,24 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def registrar(queries: dict, oracles: dict):
+    """The ``@_register(name, oracle)`` decorator of one ops module,
+    bound to that module's registry: it adds the operator to
+    ``queries`` under ``name`` and, unless ``oracle`` is None, its
+    DuckDB oracle SQL to ``oracles``."""
+
+    def register(name: str, oracle: str | None):
+        def deco(fn):
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return register
+
+
 def on_scratch_dir(op):
     """Run an operator that stages files on disk (warehouse tables,
     partitioned layouts, stream inputs and checkpoints) in a fresh
@@ -218,21 +236,31 @@ def sql_dec_avg(expr: str, alias: str) -> str:
 
 
 def lineage_cut(df):
-    """Cut the lineage of a slim, expensive-to-derive frame that is
-    consumed by 2+ alias-renamed branches (self-join sides defeat
-    ReusedExchange). Use via ``df.transform(lineage_cut)``.
+    """Cut the lineage of a frame that is costly to derive and that
+    DIFFERING consumers each read — alias-renamed self-join sides, or
+    an array column that Catalyst would otherwise re-derive inside
+    every reference. Use via ``df.transform(lineage_cut)``.
+
+    Do not cut a small aggregate (a daily series, a histogram, a
+    per-key table) or a cheap projection that feeds identical
+    sub-plans: Spark's exchange reuse already shares those, so the cut
+    only adds eager build jobs and held storage. Every site was
+    re-measured by a paired cut / no-cut A/B at sf0.1 and sf1 on a
+    4-core machine (``CHANGES.md``): 20 of 54 did not make their op
+    faster and were deleted; the 34 left won at sf0.1 or sf1, or are
+    unresolved.
 
     Local / single-JVM mode (the bench + driver configuration):
-    ``localCheckpoint(eager=False)`` — blocks live in the one JVM,
-    nothing can be lost, and the measured wins (-10..-33% on the
-    shingle-index and signature dedup ops) apply. The cut is NOT lazy
-    in effect: with AQE on (Spark 4.1.2) building the checkpoint's
-    plan runs the frame's upstream jobs when the cut is constructed,
-    so they land in plan construction, before the terminal action
-    (``dedup_minhash_verified`` ran 7 jobs before its action with its
-    cuts and 0 with them removed). Its blocks are not tracked, so
-    :func:`release_lineage_cuts` does not free them (see
-    ``_CUT_FRAMES``).
+    ``localCheckpoint(eager=False)`` — blocks live in the one JVM and
+    nothing can be lost. The cut is NOT lazy in effect: with AQE on
+    (Spark 4.1.2) building the checkpoint's plan runs the frame's
+    upstream jobs when the cut is constructed, so they land in plan
+    construction, before the terminal action
+    (``dedup_minhash_verified`` runs 7 jobs before its action). Its
+    blocks are not tracked, so :func:`release_lineage_cuts` does not
+    free them (see ``_CUT_FRAMES``). A cut frame reports no input
+    files, and a keyed ``spread_small_scan`` partitioning does not
+    survive it.
 
     Cluster mode: ``localCheckpoint`` stores blocks NON-replicated on
     executors, so one executor loss makes the truncated lineage
@@ -286,8 +314,10 @@ def lineage_cut_eager(df):
 #: here, so release_lineage_cuts never frees them: they go only when
 #: the ContextCleaner collects their RDD, which need not happen
 #: between queries (11 persistent RDDs remained in one session after
-#: 15 query_suite ops). Guarded by a lock so concurrent queries in one
-#: session (e.g. a thread-pooled driver) cannot corrupt the list.
+#: 15 query_suite ops). 34 lineage_cut sites (in 34 ops) and the 6
+#: lineage_cut_eager sites still make such blocks. Guarded by a lock
+#: so concurrent queries in one session (e.g. a thread-pooled driver)
+#: cannot corrupt the list.
 _CUT_FRAMES: list = []
 
 _CUT_LOCK = _threading.Lock()

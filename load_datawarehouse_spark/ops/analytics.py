@@ -26,22 +26,14 @@ from load_datawarehouse_spark.ops._util import (
     dec_sum,
     lineage_cut,
     on_scratch_dir,
+    registrar,
     sql_dec_sum,
 )
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+_register = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------

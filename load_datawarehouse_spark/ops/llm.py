@@ -20,6 +20,7 @@ from load_datawarehouse_spark.ops._util import (
     bcast_measured,
     lineage_cut,
     lineage_cut_eager,
+    registrar,
 )
 from load_datawarehouse_spark.session import (
     load_tables,
@@ -29,16 +30,7 @@ from load_datawarehouse_spark.session import (
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+_register = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -892,15 +884,6 @@ def _x6(col):
     of the exact double). Float inputs must widen to double BEFORE
     scaling so both engines round the same exact value."""
     return F.round(col.cast("double") * _SCALE6, 0).cast("long")
-
-
-def _dec_fold(arr):
-    """Exact order-free sum of a decimal array, returned as double.
-    (s + x) widens decimal(28,12) -> decimal(29,12); cast back each
-    step to satisfy aggregate's accumulator-type contract (exact —
-    magnitudes here are << 10^16)."""
-    zero = F.lit(0).cast(_COS_DEC)
-    return F.aggregate(arr, zero, lambda s, x: (s + x).cast(_COS_DEC)).cast("double")
 
 
 def _long_fold(arr):
@@ -3943,7 +3926,7 @@ def similarity_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, register_views=False)
     # spread the single-file embeddings scan: the per-row scoring
     # kernel ran as ONE task (sf1 A/B in commit message)
-    emb = _with_norm(spread_small_scan(t["embeddings"])).transform(lineage_cut)
+    emb = _with_norm(spread_small_scan(t["embeddings"]))
     iq = emb.select(
         "vec_id",
         "embedding",
@@ -4498,7 +4481,6 @@ def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = t["documents"].select(
         "source", F.explode(F.split("text", " ", -1)).alias("word")
     )
-    words = words.transform(lineage_cut)
     vocab = (
         words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -4601,10 +4583,10 @@ def dedup_minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFram
     """
     t = load_tables(spark, sf_dir, register_views=False)
     ds = _shingles(t, spread=True).transform(lineage_cut)
-    # sigs feed BOTH the banding and the agreement estimator, so the
-    # shared helper's frame is cut once here (unlike _minhash_bands
-    # consumers, which only need the band rows)
-    sigs = _minhash_sigs(ds).transform(lineage_cut)
+    # sigs feed both the banding and the agreement estimator; only the
+    # shingle frame is cut (cutting sigs and the candidate pairs too
+    # measured no faster at sf0.1 or sf1)
+    sigs = _minhash_sigs(ds)
     bands = _bands_from_sigs(sigs, _derived_band_size(t["documents"]))
     cand = (
         bands.select(F.col("doc_id").alias("d1"), "band", "bk1", "bk2")
@@ -4612,7 +4594,7 @@ def dedup_minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFram
         .filter(F.col("d1") < F.col("d2"))
         .select("d1", "d2")
         .distinct()
-    ).transform(lineage_cut)
+    )
     s1 = sigs.select(F.col("doc_id").alias("d1"), *[F.col(f"sig{j}").alias(f"a{j}") for j in range(N_MINHASH)])
     s2 = sigs.select(F.col("doc_id").alias("d2"), *[F.col(f"sig{j}").alias(f"b{j}") for j in range(N_MINHASH)])
     n_agree = sum(
@@ -4939,7 +4921,7 @@ def _bm25_scored(t) -> DataFrame:
     (doc_id, bm25) with the 9-dp-rounded decimal-accumulated score."""
     words = t["documents"].select(
         "doc_id", F.explode(F.split("text", " ", -1)).alias("word")
-    ).transform(lineage_cut)
+    )
     dl = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -5243,7 +5225,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel ran as ONE task (sf1 A/B in commit message)
     norms = spread_small_scan(t["embeddings"]).select(
         "vec_id", "label", _dec_norm("embedding").alias("nrm")
-    ).transform(lineage_cut)
+    )
     mu = norms.agg(
         F.round(
             F.sum(F.col("nrm").cast(dec18)).cast("double") / F.count(F.lit(1)), 12
@@ -5385,7 +5367,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-output production path.
     """
     t = load_tables(spark, sf_dir, register_views=False)
-    # r17: array-frame cut + narrow per-doc counts (see
+    # array-frame cut + narrow per-doc counts (see
     # dedup_ngram_jaccard for the rationale)
     arrs = _shingle_arrays(t, spread=True).transform(lineage_cut)
     ds = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -5396,13 +5378,9 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate each unordered pair once (d1 < d2 halves the pair
     # shuffle, the op's dominant cost) and re-emit both directions
     # after — 18.4 -> 10.3 s at sf1, identical rows.
-    # r18: the union below references `half` TWICE and Spark unions
-    # re-derive each branch — without a cut the whole inverted-index
-    # pair join ran twice (at every scale). The cut materializes the
-    # pair AGGREGATE (output-sized, far smaller than the posting
-    # stream), bench-neutral at sf0.1, halves the dominant join at
-    # scale.
-    half = _capped_shingle_pairs(ds).transform(lineage_cut)
+    # The union below references `half` twice; a cut of `half` measured
+    # no faster at sf0.1 or sf1 (paired A/B, inside the with-cut spread).
+    half = _capped_shingle_pairs(ds)
     pairs = half.unionByName(
         half.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"), "n_common")
     )
@@ -5767,7 +5745,6 @@ def _tfidf_weights(t) -> DataFrame:
             "t2",
             (F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df"))).alias("w"),
         )
-        .transform(lineage_cut)
     )
 
 
@@ -5814,8 +5791,9 @@ def dedup_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-budget sweep raises ``WarehousePairBudgetExceeded`` naming
     the production paths instead of launching the unbounded join.
     Override via $SPARK_GRAFT_TFIDF_PAIR_BUDGET (0 disables). The
-    budget job reuses the lineage-cut weights frame the query itself
-    consumes, so the extra cost is one histogram aggregation.
+    budget job reads the weights frame the query itself consumes (over
+    its lineage-cut tf frame), so the extra cost is one histogram
+    aggregation.
     """
     t = load_tables(spark, sf_dir, register_views=False)
     dec18 = "decimal(38,18)"
@@ -5912,7 +5890,6 @@ def quality_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_tf = (
         words.groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(lineage_cut)
     )
     src_tot = src_tf.groupBy("source").agg(F.sum("n").alias("tot"))
     corpus_tf = src_tf.groupBy("term").agg(F.sum("n").alias("cn"))
@@ -6123,7 +6100,7 @@ def dedup_jaccard_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataF
     <= 11 rows.
     """
     t = load_tables(spark, sf_dir, register_views=False)
-    # r17: array-frame cut + narrow per-doc counts (see
+    # array-frame cut + narrow per-doc counts (see
     # dedup_ngram_jaccard for the rationale)
     arrs = _shingle_arrays(t, spread=True).transform(lineage_cut)
     ds = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -6178,7 +6155,7 @@ def dedup_strategy_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     run reports before committing to a policy (near-dup policies are
     measured by ``dedup_cascade_report``).
 
-    Scale: one base scan feeds all three branches (lineage-cut); each
+    Scale: one base scan feeds all three branches (exchange reuse); each
     dedup is a keeper-id aggregation on an md5 key + a semi-join back
     — never a self-join on text. Integer token accounting.
     """
@@ -6190,7 +6167,7 @@ def dedup_strategy_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.filter(F.split("text", " ", -1), lambda w: w != F.lit(""))).alias(
             "n_tokens"
         ),
-    ).transform(lineage_cut)
+    )
 
     def kept(col):
         keepers = base.groupBy(col).agg(F.min("doc_id").alias("doc_id"))
@@ -6271,7 +6248,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification on candidates, admit/reject accounting out.
     """
     t = load_tables(spark, sf_dir, register_views=False)
-    # r17: cut the per-doc shingle ARRAY frame; the exploded postings
+    # cut the per-doc shingle ARRAY frame; the exploded postings
     # derive narrowly from it for the DF index and the pruned join,
     # and per-doc counts are array sizes (no groupBy shuffle).
     arrs = _shingle_arrays(t, spread=True).transform(lineage_cut)
@@ -6279,14 +6256,14 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = arrs.filter(F.size("shingles") >= 1).select(
         "doc_id", F.size("shingles").cast("long").alias("n")
     )
-    # r18: DF census, pruning join, postings cut and the asymmetric
-    # probe all key on the 128-bit hash pair (guide §2.3; see _h128)
+    # DF census, pruning join and the asymmetric probe all key on the
+    # 128-bit hash pair (guide §2.3; see _h128)
     sh1, sh2 = _h128("shingle")
     hs = ds.select("doc_id", sh1.alias("sh1"), sh2.alias("sh2"))
     idx = hs.groupBy("sh1", "sh2").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= MAX_SHINGLE_DF
     )
-    pruned = hs.join(idx.select("sh1", "sh2"), ["sh1", "sh2"]).transform(lineage_cut)
+    pruned = hs.join(idx.select("sh1", "sh2"), ["sh1", "sh2"])
     old = pruned.filter(F.col("doc_id") < 400).select(
         F.col("doc_id").alias("old_doc"), "sh1", "sh2"
     )
@@ -6345,7 +6322,7 @@ def quality_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, register_views=False)
     keyed = t["documents"].select(
         "doc_id", "source", F.md5("text").alias("h")
-    ).transform(lineage_cut)
+    )
     keepers = keyed.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
     dup = F.when(F.col("kp_doc").isNull(), 1).otherwise(0)
     return (

@@ -46,24 +46,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from load_datawarehouse_spark.ops._util import registrar
 from load_datawarehouse_spark.session import load_tables, spread_small_scan
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+_register = registrar(QUERIES, ORACLES)
 
 FRAME_BYTES = 64  #: fixed-width "video frame" size in the fake codec
 FRAME_STRIDE = 4  #: sample every 4th frame
 THUMB_PIXELS = 64  #: byte-grid "thumbnail" size (8x8)
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

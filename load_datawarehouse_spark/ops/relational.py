@@ -38,6 +38,7 @@ from load_datawarehouse_spark.ops._util import (
     lineage_cut,
     lineage_cut_eager,
     on_scratch_dir,
+    registrar,
     require_pair_budget,
     sql_dec_avg,
     sql_dec_sum,
@@ -47,16 +48,7 @@ from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+_register = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -5243,7 +5235,7 @@ def basket_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_triangle_count.
     """
     t = load_tables(spark, sf_dir, register_views=False)
-    baskets = t["lineitem"].select("l_orderkey", "l_partkey").distinct().transform(lineage_cut)
+    baskets = t["lineitem"].select("l_orderkey", "l_partkey").distinct()
     n_orders = baskets.agg(F.countDistinct("l_orderkey").cast("long").alias("n"))
     item = baskets.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n_item"))
     a = baskets.select("l_orderkey", F.col("l_partkey").alias("p1"))
@@ -6125,7 +6117,7 @@ def dq_key_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = load_tables(spark, sf_dir, register_views=False)
     per_key = t["orders"].groupBy("o_custkey").agg(F.count(F.lit(1)).alias("c"))
-    hist = per_key.groupBy("c").agg(F.count(F.lit(1)).alias("m")).transform(lineage_cut)
+    hist = per_key.groupBy("c").agg(F.count(F.lit(1)).alias("m"))
     w_asc = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
     w_desc = Window.orderBy(F.desc("c")).rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy()
@@ -6730,7 +6722,6 @@ def stat_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["orders"]
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("rev"))
-        .transform(lineage_cut)
     )
     a = daily.select(F.col("day").alias("d1"), F.col("rev").alias("r1"))
     b = daily.select(F.col("day").alias("d2"), F.col("rev").alias("r2"))
@@ -7077,7 +7068,7 @@ def events_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("x"),
         F.lag("n", 1).over(w).alias("l1"),
         F.lag("n", 7).over(w).alias("l7"),
-    ).transform(lineage_cut)
+    )
 
     def corr_row(lag_days: int, lcol: str) -> DataFrame:
         d = lagged.filter(F.col(lcol).isNotNull())
@@ -8032,7 +8023,6 @@ def customer_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("c_custkey") == F.col("o_custkey"))
         .groupBy("c_mktsegment", "o_custkey")
         .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("cents"))
-        .transform(lineage_cut)
     )
     seg = per_cust.groupBy("c_mktsegment").agg(F.sum("cents").alias("total"))
     share2 = F.pow(F.col("cents").cast("double") / F.col("total"), F.lit(2))
@@ -8083,7 +8073,6 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["events"]
         .select("user_id", F.col("ts").cast("date").alias("day"))
         .distinct()
-        .transform(lineage_cut)
     )
     dau = activity.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = activity.select(
@@ -9497,7 +9486,7 @@ def sessions_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     secs = F.col("ts").cast("timestamp").cast("long")
     seq = t["events"].select(
         (secs - F.lag(secs).over(w)).alias("gap_s")
-    ).transform(lineage_cut)
+    )
 
     def count_at(label, secs):
         return seq.agg(

@@ -41,24 +41,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from load_datawarehouse_spark.ops._util import DEC, on_scratch_dir, sql_dec_sum
+from load_datawarehouse_spark.ops._util import DEC, on_scratch_dir, registrar, sql_dec_sum
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+_register = registrar(QUERIES, ORACLES)
 
 #: Memory-sink names must be unique per started query within a session.
 _SINK_SEQ = itertools.count()
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _as_stream_dir(file_path: str) -> str:

@@ -33,22 +33,14 @@ from load_datawarehouse_spark.ops._util import (
     DEC,
     dec_sum,
     lineage_cut,
+    registrar,
     sql_dec_sum,
 )
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+_register = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -388,7 +380,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value_dec")
         )
     )
-    partvalue = partvalue.transform(lineage_cut)
     # threshold = 4x the mean part value, derived as exact-decimal SUM
     # cast to double, then * 4 / COUNT — the identical IEEE op
     # sequence the oracle runs, so the strict comparison is

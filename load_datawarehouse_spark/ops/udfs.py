@@ -26,20 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from load_datawarehouse_spark.ops._util import registrar
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+_register = registrar(QUERIES, ORACLES)
 
 
 # ---------------------------------------------------------------------------

@@ -12,21 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from load_datawarehouse_spark.ops._util import DEC, bcast_bounded
+from load_datawarehouse_spark.ops._util import DEC, bcast_bounded, registrar
 from load_datawarehouse_spark.session import load_tables
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+_register = registrar(QUERIES, ORACLES)
 
 
 _WIN_RANK_ORACLE = """

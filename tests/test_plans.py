@@ -14,6 +14,37 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+#: Locks that match Spark's EXPLAIN text line by line (attribute-id
+#: suffixes, shuffle-origin labels, codegen stage markers, node names)
+#: or a partitioning that AQE reports through a checkpoint. They were
+#: probed on Spark 4.1.x; another version can change that text, so a
+#: negative check could pass vacuously.
+_FORMAT_LOCKS = (
+    "test_doc_keyed_spread_elides_downstream_exchanges",
+    "test_kmeans_mean_update_join_not_broadcast",
+    "test_pca_matvec_join_co_partitioned",
+    "test_skew_stress_salted_spreads_hot_key",
+    "test_embedding_neardup_self_join_is_group_pair_tiled",
+    "test_cc_edge_build_is_group_pair_tiled",
+    "test_whole_stage_codegen_on_hot_path",
+    "test_scan_spread_sites_round_robin",
+    "test_minhash_verified_checkpoints_candidates",
+    "test_curation_v3_single_composed_plan",
+)
+
+
+def test_spark_is_the_version_the_plan_locks_were_probed_on():
+    import pyspark
+
+    assert all(callable(globals().get(n)) for n in _FORMAT_LOCKS)
+    assert pyspark.__version__.startswith("4.1."), (
+        f"pyspark {pyspark.__version__}: the plan locks were probed on 4.1.x; "
+        f"re-probe the executed-plan text of {', '.join(_FORMAT_LOCKS)} "
+        "(and the spread_small_scan claim that a keyed spread does not "
+        "survive a lineage_cut) before trusting tests/test_plans.py"
+    )
+
+
 def test_q1_filter_pushed_and_columns_pruned(spark):
     plan = _plan(relational.q1_pricing_summary(spark, SF_DIR))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
@@ -569,19 +600,38 @@ def test_bm25_df_and_stats_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
+def _agg_under_windows(plan: str) -> tuple[str, bool]:
+    """Grouping keys of the aggregate nearest below the plan's first
+    Window, and whether a Window also sits below that aggregate."""
+    import re
+
+    below = plan[plan.index("Window"):]
+    agg = re.search(r"HashAggregate\(keys=\[([^\]]*)\]", below)
+    return agg.group(1), "Window" in below[agg.end():]
+
+
 def test_dq_skew_gini_windows_only_over_histogram(spark):
     # the sorted windows must consume the count-of-counts histogram
-    # (post-aggregation), never the per-key or fact table
-    df = relational.dq_key_skew_gini(spark, SF_DIR)
-    plan = _plan(df)
-    first_window = plan.find("Window")
-    assert first_window != -1
-    below = plan[first_window:]
-    # the windows' input is the lineage-cut histogram (ExistingRDD), so
-    # neither the orders scan nor the per-key aggregate sits under them
-    assert "ExistingRDD" in below
-    assert "parquet" not in below.lower()
+    # (post-aggregation), never the per-key or fact table: the
+    # aggregate right under them is keyed on the per-key count `c`
+    # alone, and no window sits lower, over per-key or orders rows
+    import re
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    plan = _plan(relational.dq_key_skew_gini(spark, SF_DIR))
+    keys, window_lower = _agg_under_windows(plan)
+    assert re.fullmatch(r"c#\d+L?", keys), plan
+    assert not window_lower, plan
     assert "SortMergeJoin" not in plan
+    # control: a window over the per-key rows sits on the o_custkey
+    # aggregate, which the check above rejects
+    t = load_tables(spark, SF_DIR, register_views=False)
+    per_key = t["orders"].groupBy("o_custkey").agg(F.count(F.lit(1)).alias("c"))
+    bad = per_key.select("c", F.sum("c").over(Window.orderBy("c")).alias("cum"))
+    keys, _ = _agg_under_windows(_plan(bad))
+    assert re.fullmatch(r"o_custkey#\d+L?", keys), keys
 
 
 def test_chi_square_margins_broadcast(spark):
@@ -1325,3 +1375,43 @@ def test_eval_gram_gate_goes_bare_over_ceiling(spark, monkeypatch):
     monkeypatch.setattr(llm, "_EVAL_GRAM_BCAST_MAX", 1_000_000)
     hinted = opt(llm.contamination_ngram_check(spark, SF_DIR))
     assert "strategy=broadcast" in hinted
+
+
+#: Ops whose every lineage cut was deleted after a paired cut / no-cut
+#: A/B at sf0.1 and sf1, and that run no measured gate. A local cut
+#: runs its upstream jobs while the plan is built; with none left, the
+#: whole query runs at its terminal action.
+_UNCUT_OPS = (
+    "sessions_gap_sensitivity",
+    "dq_key_skew_gini",
+    "stat_mann_kendall_trend",
+    "similarity_sq_topk",
+    "customer_concentration_hhi",
+    "events_autocorr_lags",
+    "events_dau_wau_stickiness",
+    "q11_important_stock",
+    "tokenizer_vocab_coverage",
+    "embedding_norm_outliers",
+    "quality_source_kl_divergence",
+    "dedup_strategy_comparison",
+    "quality_dedup_rate_by_source",
+    "search_bm25_topk",
+    "search_rrf_fusion",
+    "basket_affinity_lift",
+)
+
+
+def test_uncut_ops_build_without_spark_jobs(spark):
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+    sc = spark.sparkContext
+    for name in _UNCUT_OPS:
+        group = f"build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            queries[name](spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name

@@ -247,8 +247,9 @@ def lineage_cut(df):
     only adds eager build jobs and held storage. Every site was
     re-measured by a paired cut / no-cut A/B at sf0.1 and sf1 on a
     4-core machine (``CHANGES.md``): 20 of 54 did not make their op
-    faster and were deleted; the 34 left won at sf0.1 or sf1, or are
-    unresolved.
+    faster and were deleted. Of the 34 left, 31 won at sf0.1 or sf1;
+    two could not be judged, and one that did not pay alone holds a
+    benchmarked plan fixed (``ROADMAP.md``, direction 4).
 
     Local / single-JVM mode (the bench + driver configuration):
     ``localCheckpoint(eager=False)`` — blocks live in the one JVM and

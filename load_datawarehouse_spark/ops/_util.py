@@ -211,12 +211,6 @@ def bcast_measured(
     return F.broadcast(df) if n <= max_rows else df
 
 
-def measured_workload(tag: str, key_df, count_fn) -> int:
-    """A MEASURED workload number (pair-budget histogram sums, gate
-    counts) through :func:`memo_measured`."""
-    return memo_measured("workload", tag, key_df, count_fn)
-
-
 def dec_sum(col: Column | str, alias: str) -> Column:
     """Exact sum of a double column, returned as double."""
     return F.sum(_c(col).cast(DEC)).cast("double").alias(alias)
@@ -410,63 +404,62 @@ def sql_dec_sum2(expr: str, alias: str) -> str:
     )
 
 
-def require_pair_budget(
-    workload: int,
-    budget: int | None,
-    *,
-    env_var: str,
-    default: int,
-    what: str,
-    levers: str,
-) -> None:
-    """Shared scale gate of every CONTRACT-quadratic operator family
-    (embedding pairs, theta join, tf-idf cosine pairs): refuse to
-    schedule a measured-over-budget pair sweep BEFORE any pair work
-    exists in the plan.
+#: Pair budget of every contract-quadratic operator (the exact embedding
+#: pair family, join_theta, dedup_tfidf_cosine_pairs), whose contract
+#: evaluates every within-block pair: work no plan can shrink. 200M
+#: clears the certified sf1 regime (~60M theta pairs, ~20M embedding
+#: pairs) with headroom and stops an order of magnitude short of the
+#: sf10 wall (2.0B embedding pairs took 759 s on local[32]). The scale
+#: sweep skips the big side of a pair op on the same number.
+PAIR_BUDGET = 200_000_000
 
-    ``workload`` is the op's exact pair count, measured LINEARLY (a
-    bucket/label histogram sum — never a pair join). ``budget`` is the
-    explicit per-call override; when ``None`` it comes from
-    ``$env_var`` (validated: a malformed value raises naming the
-    variable instead of a bare int() ValueError, and a negative value
-    is rejected rather than silently gating everything — ADVICE r13),
-    falling back to ``default``. A budget of 0 disables the gate.
-    The same negative-rejection applies to an explicitly passed
-    ``budget`` (ADVICE r14: a negative parameter is truthy, so without
-    validation it silently rejected every nonzero workload instead of
-    raising). ``what`` names the contract being refused; ``levers``
-    names the actionable alternatives and MUST mention ``env_var``.
-    """
-    if budget is not None and budget < 0:
-        from load_datawarehouse_spark.errors import WarehouseError
 
+def pair_budget() -> int:
+    """``$SPARK_GRAFT_PAIR_BUDGET`` if set, else ``PAIR_BUDGET``; 0
+    disables the gate. A malformed or negative value raises naming
+    the variable, rather than a bare ``int()`` ValueError or a budget
+    that silently refuses every workload."""
+    import os
+
+    from load_datawarehouse_spark.errors import WarehouseError
+
+    raw = os.environ.get("SPARK_GRAFT_PAIR_BUDGET")
+    if raw is None:
+        return PAIR_BUDGET
+    try:
+        budget = int(raw)
+    except ValueError:
         raise WarehouseError(
-            f"{what}: pair budget {budget} is negative; a pair budget "
+            f"$SPARK_GRAFT_PAIR_BUDGET={raw!r} is not an integer pair "
+            f"budget; set a non-negative integer (0 disables the gate) "
+            f"or unset it to use the default ({PAIR_BUDGET:,})"
+        ) from None
+    if budget < 0:
+        raise WarehouseError(
+            f"$SPARK_GRAFT_PAIR_BUDGET={budget} is negative; a pair budget "
             f"must be >= 0 (0 disables the gate)"
         )
-    if budget is None:
-        import os
+    return budget
 
-        raw = os.environ.get(env_var)
-        if raw is None:
-            budget = default
-        else:
-            from load_datawarehouse_spark.errors import WarehouseError
 
-            try:
-                budget = int(raw)
-            except ValueError:
-                raise WarehouseError(
-                    f"${env_var}={raw!r} is not an integer pair budget; "
-                    f"set a non-negative integer (0 disables the gate) "
-                    f"or unset it to use the default ({default:,})"
-                ) from None
-            if budget < 0:
-                raise WarehouseError(
-                    f"${env_var}={budget} is negative; a pair budget "
-                    f"must be >= 0 (0 disables the gate)"
-                )
-    if budget and workload > budget:
+def require_pair_budget(tag: str, key_df, workload_fn, what: str, levers: str) -> None:
+    """Scale gate of every contract-quadratic operator: refuse to
+    schedule a pair sweep over :func:`pair_budget` BEFORE any pair
+    work exists in the plan.
+
+    ``workload_fn`` measures the op's exact pair count LINEARLY (a
+    bucket/label histogram sum, never a pair join); the number is
+    memoized through :func:`memo_measured` under ``("workload", tag)``
+    and the input files of ``key_df`` (every frame the measurement
+    reads). A disabled gate measures nothing. ``what`` names the
+    contract being refused; ``levers`` names the alternatives,
+    including raising ``$SPARK_GRAFT_PAIR_BUDGET``.
+    """
+    budget = pair_budget()
+    if not budget:
+        return
+    workload = memo_measured("workload", tag, key_df, workload_fn)
+    if workload > budget:
         from load_datawarehouse_spark.errors import WarehousePairBudgetExceeded
 
         raise WarehousePairBudgetExceeded(

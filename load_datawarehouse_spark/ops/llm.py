@@ -21,6 +21,7 @@ from load_datawarehouse_spark.ops._util import (
     lineage_cut,
     lineage_cut_eager,
     registrar,
+    require_pair_budget,
 )
 from load_datawarehouse_spark.session import (
     load_tables,
@@ -196,22 +197,28 @@ def _word_ngrams(w, n, hashed=False):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _h128(col):
-    """Two independent 64-bit hash columns over a string expression —
-    the shuffle-narrow stand-in for joining/grouping on the string
-    itself (guide §2.3: shuffle keys, not payloads; VERDICT r17 #1).
+def _h128(*cols):
+    """Two 64-bit hash columns over one or more expressions — the
+    shuffle-narrow stand-in for joining/grouping on the value itself
+    (guide §2.3: shuffle keys, not payloads).
 
-    Collision safety: equality of the PAIR is equality under an
-    effective 128-bit hash (the second xxhash64 prepends a constant,
-    so the two are independent), and every use below is key-internal —
-    the strings never appear in any query's output. A result can
-    change only if two DISTINCT strings in one corpus agree on both
-    halves: p ~ n^2 / 2^129, i.e. ~7e-16 even at 10^12 distinct grams
-    (a 100-TB corpus), the same guarantee class as the md5-128 keys
-    the oracles use. A single 64-bit key would NOT be safe at that
-    scale (birthday bound ~5e9)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c), F.xxhash64(F.lit(1), c)
+    The halves are XXH64 under two seeds: Spark's ``xxhash64`` folds
+    its arguments left to right, each hash seeding the next, so the
+    leading ``lit(1)`` of the second half re-seeds the same XXH64 over
+    the same bytes. They are not independent hash functions (XXH64
+    admits seed-independent collisions on multi-block inputs of 32
+    bytes or more), so the bound below is a heuristic for
+    non-adversarial corpora and weaker than the oracles' md5-128 on a
+    crafted one: a result changes only if two DISTINCT values in one
+    corpus agree on both halves, p ~ n^2 / 2^129 if the halves behaved
+    independently (~7e-16 at 10^12 distinct grams). A single 64-bit
+    key would NOT be safe at that scale (birthday bound ~5e9). Every
+    use is key-internal — the values never appear in any query's
+    output — and groups or joins on equal keys, so a collision can
+    only OVER-merge (a spurious dedup group or contamination hit),
+    never split one value apart."""
+    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
+    return F.xxhash64(*cs), F.xxhash64(F.lit(1), *cs)
 
 
 def _gopher_metrics(w):
@@ -523,7 +530,7 @@ def _bands_from_sigs(sigs: DataFrame, band_size: int) -> DataFrame:
     N_MINHASH // band_size full bands; trailing signatures that do not
     fill a band are dropped.
 
-    r18: the band key is the 128-bit xxhash64 pair over the band's
+    The band key is the 128-bit ``_h128`` pair over the band's
     signature columns (passed directly — no concat_ws, no md5) instead
     of a 32-char md5 hex string: the bucket self-join's exchange rows
     narrow from ~48 to 24 bytes and the crypto hash per (doc, band)
@@ -532,19 +539,12 @@ def _bands_from_sigs(sigs: DataFrame, band_size: int) -> DataFrame:
     ``_LSH_BANDS_SQL`` buckets by the md5 of the same tuple), so the
     candidate set is unchanged under the ``_h128`` collision bound."""
     n_bands = max(1, N_MINHASH // band_size)
-    band_structs = [
-        F.struct(
-            F.lit(b).cast("long").alias("band"),
-            F.xxhash64(
-                *[F.col(f"sig{j}") for j in range(b * band_size, (b + 1) * band_size)]
-            ).alias("bk1"),
-            F.xxhash64(
-                F.lit(1),
-                *[F.col(f"sig{j}") for j in range(b * band_size, (b + 1) * band_size)],
-            ).alias("bk2"),
+    band_structs = []
+    for b in range(n_bands):
+        bk1, bk2 = _h128(*[f"sig{j}" for j in range(b * band_size, (b + 1) * band_size)])
+        band_structs.append(
+            F.struct(F.lit(b).cast("long").alias("band"), bk1.alias("bk1"), bk2.alias("bk2"))
         )
-        for b in range(n_bands)
-    ]
     return sigs.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("bk")
     ).select(
@@ -741,52 +741,72 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NIBBLE_SQL = "(strpos('0123456789abcdef', substr(md5(word), {pos}, 1)) - 1)"
 
 
-def _simhash_oracle() -> str:
+def _simhash_sql(bits: int) -> str:
+    """DuckDB twin of :func:`_simhash`'s vote sum over ``word`` rows:
+    bit b is bit (3 - b%4) of md5 hex char b//4 + 1, voted +1/-1 per
+    word and set when the vote sum is positive."""
     bit_terms = []
-    for b in range(16):
+    for b in range(bits):
         nib = _NIBBLE_SQL.format(pos=b // 4 + 1)
         bit = f"(({nib} // {2 ** (3 - b % 4)}) % 2)"
         bit_terms.append(
             f"CASE WHEN SUM(2 * {bit} - 1) > 0 THEN {2 ** b} ELSE 0 END"
         )
-    total = " + ".join(bit_terms)
-    return f"""
+    return " + ".join(bit_terms)
+
+
+_SIMHASH_ORACLE = f"""
 WITH words AS (
     SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
 )
-SELECT doc_id, CAST({total} AS BIGINT) AS simhash16
+SELECT doc_id, CAST({_simhash_sql(16)} AS BIGINT) AS simhash16
 FROM words GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@_register("doc_fingerprint_simhash", _simhash_oracle())
+@_register("doc_fingerprint_simhash", _SIMHASH_ORACLE)
 def doc_fingerprint_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per document from word-level md5s.
 
     Each md5 nibble yields 4 signed bit votes; the fingerprint sets
     bit b when the vote sum is positive. Pure integer arithmetic on
     both engines — bitwise identical. Scale: one explode + one
-    groupBy(doc_id) with partial aggregation of the 16 vote sums.
+    groupBy(doc_id) of the 16 vote sums, local to the doc-keyed
+    spread (see :func:`_simhash`).
     """
     t = load_tables(spark, sf_dir, register_views=False)
-    return _simhash16(t).orderBy("doc_id")
+    return _simhash(t, 16).select("doc_id", F.col("simhash").alias("simhash16")).orderBy("doc_id")
 
 
-def _simhash16(t) -> DataFrame:
-    """doc_id -> 16-bit SimHash (shared by fingerprint + near-dup)."""
-    words = t["documents"].select("doc_id", F.explode(F.split("text", " ", -1)).alias("word"))
-    h = F.md5("word")
-    bit_cols = []
-    for b in range(16):
-        nib = F.instr(F.lit("0123456789abcdef"), F.substring(h, b // 4 + 1, 1)) - 1
-        bit = F.floor(nib / (2 ** (3 - b % 4))) % 2
-        bit_cols.append(
-            F.when(F.sum(2 * bit - 1) > 0, 2**b).otherwise(0)
-        )
-    total = bit_cols[0]
-    for c in bit_cols[1:]:
-        total = total + c
-    return words.groupBy("doc_id").agg(total.cast("long").alias("simhash16"))
+def _simhash(t, bits: int) -> DataFrame:
+    """doc_id -> ``bits``-bit SimHash (a multiple of 4, at most 60):
+    the fingerprint op's 16 bits and the near-dup op's 60.
+
+    The signature aggregation is explode-heavy, so the single-file
+    scan is spread first, keyed on doc_id: the groupBy(doc_id) below
+    then plans with no exchange — a doc's words are partition-local
+    and the votes aggregate in place (guide §2.4; 2.27 -> 1.61 s for
+    the near-dup op at sf0.1).
+
+    ONE integer parse of the leading ``bits // 4`` md5 hex chars
+    replaces a per-bit instr+substring nibble extraction (bit-exact to
+    the oracle's ``_NIBBLE_SQL``; ~11% off the 60-bit signature
+    stage). Bit b of the nibble formulation — bit (3 - b%4) of hex
+    char b//4+1 — sits at position 4*(n_hex - 1 - b//4) + 3 - b%4 of
+    this big-endian integer."""
+    words = spread_small_scan(t["documents"], by="doc_id").select(
+        "doc_id", F.explode(F.split("text", " ", -1)).alias("word")
+    )
+    n_hex = bits // 4
+    h = F.conv(F.substring(F.md5("word"), 1, n_hex), 16, 10).cast("long")
+    words = words.select("doc_id", h.alias("h"))
+    total = None
+    for b in range(bits):
+        pos = 4 * (n_hex - 1 - b // 4) + 3 - b % 4
+        bit = F.shiftright(F.col("h"), pos).bitwiseAND(F.lit(1))
+        c = F.when(F.sum(2 * bit - 1) > 0, 2**b).otherwise(0)
+        total = c if total is None else total + c
+    return words.groupBy("doc_id").agg(total.cast("long").alias("simhash"))
 
 
 # ---------------------------------------------------------------------------
@@ -1137,9 +1157,9 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     label cell serializes onto one task; the quadratic within-cell
     pair work is the price of the exact contract — bound it upstream
     by blocking key choice (finer labels), not by silent candidate
-    pruning. Since round 13 that bound is ENFORCED in-op: the
+    pruning. That bound is ENFORCED in-op: the
     contract cost sum C(n_label, 2) is measured linearly before any
-    pair work and an over-``LABEL_PAIR_BUDGET`` workload raises
+    pair work and an over-``PAIR_BUDGET`` workload raises
     ``WarehousePairBudgetExceeded`` naming the production siblings
     (see ``_label_cos_edges`` / COVERAGE.md §Embedding-pair scale
     contract). sf1: verified against the float32-prefiltered exact
@@ -1290,28 +1310,6 @@ _CC_MAX_ITERS = 25
 #: raise with cell size (replication cost is G slim-row copies).
 _CC_PAIR_GROUPS = 8
 
-#: Within-label pair budget for the EXACT embedding pair family
-#: (dedup_embedding_neardup / dedup_semantic_clusters /
-#: dedup_connected_components via _label_cos_edges). The exact
-#: contract costs sum-over-labels C(n_label, 2) — quadratic in label
-#: cell size by definition, not by plan choice — so the op measures
-#: its workload LINEARLY (one label histogram) before scheduling any
-#: pair work and refuses past this budget instead of launching an
-#: unbounded job (round-12 second decade measured the wall: 2.0B
-#: pairs / 759 s at sf10 on local[32]). 200M clears the certified
-#: sf1 regime (~20M pairs) with a decade of headroom and stops ~an
-#: order of magnitude short of the measured sf10 wall. Override via
-#: $SPARK_GRAFT_EMB_PAIR_BUDGET (0 disables the gate) after choosing
-#: finer blocking keys, or use the approximate production siblings
-#: whose candidate sets are bucket-bounded: dedup_minhash_verified
-#: (DF-independent banded LSH + exact verify — the production dedup
-#: path), similarity_lsh_topk / similarity_ivf_topk (ANN). The other
-#: sibling, dedup_neardup_clusters, collapses the DF-capped n-gram
-#: Jaccard edge set, whose recall decays under MAX_SHINGLE_DF in the
-#: very regime that trips this gate (ADVICE r13) — prefer the
-#: minhash-verified path at scale.
-LABEL_PAIR_BUDGET = 200_000_000
-
 
 def _require_cc_converged(changed: int) -> None:
     """Fail loudly if label propagation hit ``_CC_MAX_ITERS`` while
@@ -1328,16 +1326,16 @@ def _require_cc_converged(changed: int) -> None:
             "exceeds the iteration cap — raise _CC_MAX_ITERS"
         )
 
-def _label_pair_workload(emb) -> int:
-    """sum-over-labels C(n_label, 2) — the exact number of pairs the
-    within-label contract must score, computed LINEARLY from the label
-    histogram (one groupBy on the slim label column, no pair join).
-    Shared by the in-op budget gate (:func:`_label_cos_edges`) and the
-    sweep's pair bound (``_bound_label_pairs``) so the two can
-    never drift."""
+
+def _bucket_pair_sum(df: DataFrame, *keys: str) -> int:
+    """sum over buckets of C(bucket_size, 2) — the exact number of
+    join-row slots a bucket self-join emits, computed LINEARLY from
+    the bucket histogram (one groupBy, no pair join). The in-op pair
+    budget gates and the sweep's ``CANDIDATE_PAIR_BOUNDS`` both call
+    it, so the two cannot drift."""
     n = F.col("n").cast("double")
     row = (
-        emb.groupBy("label")
+        df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(F.sum(n * (n - 1) / 2).alias("p"))
         .collect()[0]
@@ -1345,43 +1343,7 @@ def _label_pair_workload(emb) -> int:
     return int(row["p"] or 0)
 
 
-def _require_pair_budget(workload: int, budget: int | None) -> None:
-    """Scale contract of the exact embedding pair family: refuse to
-    schedule a measured-over-budget quadratic pair sweep, naming the
-    levers (COVERAGE.md §Embedding-pair scale contract). Thin wrapper
-    over the shared :func:`require_pair_budget` gate (round 14 — the
-    theta/tfidf families gate through the same helper)."""
-    from load_datawarehouse_spark.ops._util import require_pair_budget
-
-    require_pair_budget(
-        workload,
-        budget,
-        env_var="SPARK_GRAFT_EMB_PAIR_BUDGET",
-        default=LABEL_PAIR_BUDGET,
-        what="exact within-label embedding pair contract",
-        levers=(
-            "The exact contract evaluates every C(n_label, 2) pair — "
-            "cost no plan can reduce. Either (a) choose finer blocking "
-            "keys so label cells shrink (cost is sum C(n_label, 2)), "
-            "(b) raise the budget explicitly via "
-            "$SPARK_GRAFT_EMB_PAIR_BUDGET (0 disables) and accept the "
-            "quadratic sweep, or (c) use the bucket-bounded production "
-            "siblings: dedup_minhash_verified (DF-independent banded "
-            "LSH + exact verify), similarity_lsh_topk / "
-            "similarity_ivf_topk (ANN), or dedup_neardup_clusters "
-            "(cluster collapse over the DF-capped n-gram Jaccard edge "
-            "set — note its recall decays under MAX_SHINGLE_DF in "
-            "exactly the regime that trips this gate)."
-        ),
-    )
-
-
-def _label_cos_edges(
-    spark: SparkSession,
-    emb,
-    pair_budget: int | None = None,
-    workload_frame=None,
-) -> DataFrame:
+def _label_cos_edges(spark: SparkSession, emb, workload_frame=None) -> DataFrame:
     """Exact cosine>=0.3 edge set (v1, v2, label, cos) within label
     cells, with the pair space of each cell tiled into a G x G grid
     of group-pairs (side A replicates each row over (g(v), *), side B
@@ -1404,19 +1366,18 @@ def _label_cos_edges(
     per pair instead of per row (A/B at sf0.1: 1.33 s -> 0.81 s;
     values identical, it is the same quantize-then-multiply order).
 
-    SCALE CONTRACT (round 13): the exact contract's cost is
-    sum-over-labels C(n_label, 2) — work no plan can shrink, and the
-    round-12 second decade measured the wall (2.0B pairs / 759 s at
-    sf10). So before ANY pair work is scheduled, the workload is
-    measured linearly (:func:`_label_pair_workload` — the same
-    histogram sum the scale sweep's candidate counter uses) and
-    compared against ``pair_budget`` (default ``LABEL_PAIR_BUDGET`` /
-    $SPARK_GRAFT_EMB_PAIR_BUDGET); over budget raises
+    SCALE CONTRACT: the exact contract's cost is sum-over-labels
+    C(n_label, 2) — work no plan can shrink, and the second scale
+    decade measured the wall (2.0B pairs / 759 s at sf10). So before
+    ANY pair work is scheduled, the workload is measured linearly
+    (``_bucket_pair_sum`` over the label — the same histogram sum the
+    scale sweep's ``_bound_label_pairs`` uses) and checked by the
+    shared :func:`require_pair_budget` gate (``PAIR_BUDGET``,
+    ``$SPARK_GRAFT_PAIR_BUDGET``, 0 disables); over budget raises
     ``WarehousePairBudgetExceeded`` naming the finer-blocking lever
     and the bucket-bounded production siblings instead of launching
     an unbounded quadratic job. Locked by
-    ``test_embedding_pair_scale_contract`` (tests/test_plans.py),
-    mirroring the theta/range family's plan contract.
+    ``test_embedding_pair_scale_contract`` (tests/test_plans.py).
 
     ``workload_frame`` lets callers point the gate at the RAW table
     scan: ``emb`` is usually wrapped in ``spread_small_scan``, whose
@@ -1424,16 +1385,26 @@ def _label_cos_edges(
     job — on the raw scan the label histogram is a map-side-combined
     aggregation (tiny shuffle of distinct labels per partition), the
     right shape at 100 TB. The histogram is identical either way."""
-    from load_datawarehouse_spark.ops._util import measured_workload
-
     wf = emb if workload_frame is None else workload_frame
-    # r17: the label-histogram gate job is memoized per corpus file
-    # identity (same contract as the band-size / bcast_measured memos)
-    _require_pair_budget(
-        measured_workload(
-            "embedding-label-pair-workload", wf, lambda: _label_pair_workload(wf)
+    require_pair_budget(
+        "embedding-label-pair-workload",
+        wf,
+        lambda: _bucket_pair_sum(wf, "label"),
+        what="exact within-label embedding pair contract",
+        levers=(
+            "The exact contract evaluates every C(n_label, 2) pair — "
+            "cost no plan can reduce. Either (a) choose finer blocking "
+            "keys so label cells shrink (cost is sum C(n_label, 2)), "
+            "(b) raise the budget explicitly via "
+            "$SPARK_GRAFT_PAIR_BUDGET (0 disables) and accept the "
+            "quadratic sweep, or (c) use the bucket-bounded production "
+            "siblings: dedup_minhash_verified (DF-independent banded "
+            "LSH + exact verify), similarity_lsh_topk / "
+            "similarity_ivf_topk (ANN), or dedup_neardup_clusters "
+            "(cluster collapse over the DF-capped n-gram Jaccard edge "
+            "set — note its recall decays under MAX_SHINGLE_DF in "
+            "exactly the regime that trips this gate)."
         ),
-        pair_budget,
     )
     grid = F.array(*[F.lit(i) for i in range(_CC_PAIR_GROUPS)])
     grp = F.pmod(F.col("vec_id"), F.lit(_CC_PAIR_GROUPS)).cast("int")
@@ -1894,6 +1865,10 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SIMHASH_HAMMING_MAX = 3
+# 16 bits (the fingerprint op) is too coarse for banding: 4-bit bands
+# give 16 bucket values, i.e. ~N^2/16 candidate pairs — a disguised
+# cross join. 60 bits / 15-bit bands give 32768 buckets per band, so
+# bucket sizes stay O(N/32768).
 _SIMHASH_ND_BITS = 60  # 15 md5 nibbles; fits BIGINT positive range
 _SIMHASH_ND_BANDS = 4  # pigeonhole: distance <= BANDS-1 shares a band
 _SIMHASH_ND_BAND_BITS = _SIMHASH_ND_BITS // _SIMHASH_ND_BANDS  # 15
@@ -1902,7 +1877,7 @@ _SIMHASH_NEARDUP_ORACLE = f"""
 WITH words AS (
     SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
 ), sh AS (
-    SELECT doc_id, CAST({{total}} AS BIGINT) AS simhash
+    SELECT doc_id, CAST({_simhash_sql(_SIMHASH_ND_BITS)} AS BIGINT) AS simhash
     FROM words GROUP BY doc_id
 )
 SELECT a.doc_id AS d1, b.doc_id AS d2,
@@ -1911,49 +1886,6 @@ FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= {_SIMHASH_HAMMING_MAX}
 ORDER BY d1, d2
 """
-
-
-def _simhash_neardup_oracle() -> str:
-    # 60-bit variant of the fingerprint oracle's bit-vote expression
-    bit_terms = []
-    for b in range(_SIMHASH_ND_BITS):
-        nib = _NIBBLE_SQL.format(pos=b // 4 + 1)
-        bit = f"(({nib} // {2 ** (3 - b % 4)}) % 2)"
-        bit_terms.append(f"CASE WHEN SUM(2 * {bit} - 1) > 0 THEN {2 ** b} ELSE 0 END")
-    return _SIMHASH_NEARDUP_ORACLE.format(total=" + ".join(bit_terms))
-
-
-def _simhash60(t) -> DataFrame:
-    """doc_id -> 60-bit SimHash (near-dup resolution).
-
-    16 bits (the fingerprint op) is too coarse for banding: 4-bit
-    bands give 16 bucket values, i.e. ~N^2/16 candidate pairs — a
-    disguised cross join. 60 bits / 15-bit bands give 32768 buckets
-    per band, so bucket sizes stay O(N/32768)."""
-    # the 60-bit-per-word signature aggregation is explode-heavy:
-    # spread the single-file scan first (2.27 -> 1.61 s at sf0.1).
-    # r18: keyed on doc_id, so the groupBy(doc_id) below — whose 60
-    # partial-sum vote columns were the op's widest exchange — plans
-    # with no exchange at all: a doc's words are partition-local and
-    # the votes aggregate in place (guide §2.4).
-    words = spread_small_scan(t["documents"], by="doc_id").select(
-        "doc_id", F.explode(F.split("text", " ", -1)).alias("word")
-    )
-    # ONE integer parse of the first 15 md5 hex chars instead of 60
-    # instr+substring nibble extractions per word (bit-exact to the
-    # nibble formulation and to the oracle's _NIBBLE_SQL; ~11% off the
-    # signature stage). Bit b of the old formulation — bit (3 - b%4)
-    # of hex char b//4+1 — sits at position 4*(14 - b//4) + 3 - b%4
-    # of this 60-bit big-endian integer.
-    h = F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("long")
-    words = words.select("doc_id", h.alias("h"))
-    total = None
-    for b in range(_SIMHASH_ND_BITS):
-        pos = 4 * (14 - b // 4) + 3 - b % 4
-        bit = F.shiftright(F.col("h"), pos).bitwiseAND(F.lit(1))
-        c = F.when(F.sum(2 * bit - 1) > 0, 2**b).otherwise(0)
-        total = c if total is None else total + c
-    return words.groupBy("doc_id").agg(total.cast("long").alias("simhash"))
 
 
 def _simhash_band_pairs(sh: DataFrame) -> DataFrame:
@@ -1994,7 +1926,7 @@ def _simhash_bands(sh: DataFrame) -> DataFrame:
     )
 
 
-@_register("dedup_simhash_neardup", _simhash_neardup_oracle())
+@_register("dedup_simhash_neardup", _SIMHASH_NEARDUP_ORACLE)
 def dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance <= 3.
 
@@ -2009,7 +1941,7 @@ def dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one 60-bit signature row per doc, consumed by BOTH self-join
     # sides — cut lineage so the token-explode signature aggregation
     # runs once, not per side (measured 10% at sf0.1)
-    sh = _simhash60(t).transform(lineage_cut)
+    sh = _simhash(t, _SIMHASH_ND_BITS).transform(lineage_cut)
     hamming = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
     return (
         _simhash_band_pairs(sh)
@@ -3798,8 +3730,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pair generation is blocked per label cell and tiled over
     the G x G group-pair grid (never corpus^2, and a skewed label
     spreads across G^2 join keys — see ``_label_cos_edges``), and
-    since round 13 the quadratic contract cost is budget-gated in-op
-    (``LABEL_PAIR_BUDGET`` — over budget raises naming the
+    the quadratic contract cost is budget-gated in-op
+    (``PAIR_BUDGET`` — over budget raises naming the
     bucket-bounded production siblings, COVERAGE.md §Embedding-pair
     scale contract); min-label propagation shuffles once per round on
     vec_id with per-round lineage cuts; rounds = cluster diameter.
@@ -5780,7 +5712,7 @@ def dedup_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate density; see ``dedup_minhash_verified`` for the
     DF-independent production path.
 
-    SCALE CONTRACT (round 14, VERDICT r13 #5): the inverted-index
+    SCALE CONTRACT: the inverted-index
     self-join's cost is sum-over-terms C(DF(term), 2) — and the
     corpus-RELATIVE DF cap loosens as n_docs grows while per-term DF
     stays near base, readmitting hot terms (measured bound: 311k
@@ -5790,39 +5722,26 @@ def dedup_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_bound_tfidf_pairs`` uses, so the two cannot drift) and an
     over-budget sweep raises ``WarehousePairBudgetExceeded`` naming
     the production paths instead of launching the unbounded join.
-    Override via $SPARK_GRAFT_TFIDF_PAIR_BUDGET (0 disables). The
-    budget job reads the weights frame the query itself consumes (over
-    its lineage-cut tf frame), so the extra cost is one histogram
-    aggregation.
+    The budget is the shared ``PAIR_BUDGET``
+    (``$SPARK_GRAFT_PAIR_BUDGET``, 0 disables). The budget job reads
+    the weights frame the query itself consumes (over its lineage-cut
+    tf frame), so the extra cost is one histogram aggregation, paid
+    once per corpus file identity.
     """
     t = load_tables(spark, sf_dir, register_views=False)
     dec18 = "decimal(38,18)"
     wts = _tfidf_weights(t)
-    from load_datawarehouse_spark.ops._util import (
-        measured_workload,
-        require_pair_budget,
-    )
-
     require_pair_budget(
-        # r17: the gate's histogram job is memoized per corpus (file
-        # identity), like every other measured gate — bench warmup +
-        # timed runs and long-lived sessions pay it once, and a
-        # regenerated corpus invalidates the memo
-        measured_workload(
-            "tfidf-pair-workload",
-            t["documents"],
-            lambda: _bucket_pair_sum(wts, "t1", "t2"),
-        ),
-        None,
-        env_var="SPARK_GRAFT_TFIDF_PAIR_BUDGET",
-        default=LABEL_PAIR_BUDGET,
+        "tfidf-pair-workload",
+        t["documents"],
+        lambda: _bucket_pair_sum(wts, "t1", "t2"),
         what="tf-idf inverted-index pair contract (sum C(DF(term), 2))",
         levers=(
             "The corpus-relative DF cap readmits hot terms as the "
             "corpus grows (per-term DF stays near base while the 5% "
             "cap rises). Either (a) tighten the DF cap so hot-term "
             "posting lists shrink, (b) raise the budget explicitly "
-            "via $SPARK_GRAFT_TFIDF_PAIR_BUDGET (0 disables) and "
+            "via $SPARK_GRAFT_PAIR_BUDGET (0 disables) and "
             "accept the quadratic sweep, or (c) use the bucket-"
             "bounded production siblings: dedup_minhash_verified "
             "(DF-independent banded LSH + exact verify) or "
@@ -7906,25 +7825,11 @@ def embedding_pca_second_component(spark: SparkSession, sf_dir: str) -> DataFram
 def _bound_label_pairs(spark: SparkSession, sf_dir: str) -> int:
     # the exact within-label contract evaluates every C(n_label, 2)
     # pair; the tiled router changes WHERE they run, not how many.
-    # The SAME histogram sum the in-op budget gate uses
-    # (_require_pair_budget in _label_cos_edges), so sweep accounting
-    # and the op's own refusal threshold cannot drift.
+    # The SAME histogram sum the in-op budget gate in _label_cos_edges
+    # uses, so sweep accounting and the op's own refusal threshold
+    # cannot drift.
     t = load_tables(spark, sf_dir, register_views=False)
-    return _label_pair_workload(t["embeddings"])
-
-
-def _bucket_pair_sum(df: DataFrame, *keys: str) -> int:
-    """sum over buckets of C(bucket_size, 2) — the exact number of
-    join-row slots a bucket self-join emits, computed LINEARLY from
-    the bucket histogram (one groupBy, no pair join)."""
-    n = F.col("n").cast("double")
-    row = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum(n * (n - 1) / 2).alias("p"))
-        .collect()[0]
-    )
-    return int(row["p"] or 0)
+    return _bucket_pair_sum(t["embeddings"], "label")
 
 
 def _bound_shingle_pairs(spark: SparkSession, sf_dir: str) -> int:
@@ -7956,13 +7861,13 @@ def _bound_minhash_pairs(spark: SparkSession, sf_dir: str) -> int:
 
 def _bound_simhash_pairs(spark: SparkSession, sf_dir: str) -> int:
     t = load_tables(spark, sf_dir, register_views=False)
-    return _bucket_pair_sum(_simhash_bands(_simhash60(t)), "band", "bits")
+    return _bucket_pair_sum(_simhash_bands(_simhash(t, _SIMHASH_ND_BITS)), "band", "bits")
 
 
 def _bound_theta_pairs(spark: SparkSession, sf_dir: str) -> int:
     # join_theta's residual workload over the fixed 25-key nation
     # domain — delegates to the SAME histogram product the op's
-    # round-14 in-op gate measures, so the sweep skips-with-bound
+    # in-op gate measures, so the sweep skips-with-bound
     # instead of tripping the op's own refusal at sf10
     from load_datawarehouse_spark.ops.relational import _theta_pair_workload
 

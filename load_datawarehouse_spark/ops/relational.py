@@ -521,37 +521,32 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed equi expansions (``join_range_bands``,
     ``join_range_bucketed``) whose keys grow with the data.
 
-    SCALE CONTRACT (round 14, VERDICT r13 #5): the residual
+    SCALE CONTRACT: the residual
     inequality must evaluate every within-key (supplier, customer)
     pair — sum-over-keys n_s(k) * n_c(k), work no plan can reduce. As
     with the embedding family, that workload is measured LINEARLY
     first (two 25-row key histograms joined and summed) and an
     over-budget sweep raises ``WarehousePairBudgetExceeded`` naming
     the linear-scaling production paths instead of launching the
-    quadratic job (round-12 sf10 measured the wall this guards).
-    Override via $SPARK_GRAFT_THETA_PAIR_BUDGET (0 disables).
+    quadratic job (the sf10 sweep measured the wall this guards). The
+    budget is the shared ``PAIR_BUDGET`` (``$SPARK_GRAFT_PAIR_BUDGET``,
+    0 disables).
     """
     t = load_tables(spark, sf_dir, register_views=False)
     s, c, n = t["supplier"], t["customer"], t["nation"]
-    from load_datawarehouse_spark.ops._util import measured_workload
-
     require_pair_budget(
-        # r17: workload histogram memoized per corpus file identity;
-        # r18 (ADVICE r17 #1): keyed on BOTH inputs the histogram
-        # reads, so regenerating either table invalidates the memo
-        measured_workload(
-            "theta-pair-workload", (s, c), lambda: _theta_pair_workload(t)
-        ),
-        None,
-        env_var="SPARK_GRAFT_THETA_PAIR_BUDGET",
-        default=200_000_000,
+        # keyed on BOTH inputs the histogram reads, so regenerating
+        # either table invalidates the memo
+        "theta-pair-workload",
+        (s, c),
+        lambda: _theta_pair_workload(t),
         what="theta-join within-key pair contract (sum n_s(k) * n_c(k))",
         levers=(
             "The equi conjunct's key domain is fixed (25 nations), so "
             "within-key pairs grow quadratically with the data. Either "
             "(a) add a finer equi conjunct so keys grow with the data, "
             "(b) raise the budget explicitly via "
-            "$SPARK_GRAFT_THETA_PAIR_BUDGET (0 disables) and accept "
+            "$SPARK_GRAFT_PAIR_BUDGET (0 disables) and accept "
             "the quadratic sweep, or (c) use the linear-scaling "
             "production paths: join_range_bands (bucketed literal "
             "bands) or join_range_bucketed (time-bucketed x2 "

@@ -18,9 +18,12 @@ Pair-producing ops record their pair workload at both scales as
 sums over the op's own blocking keys, computed linearly with no pair
 join; the in-op budget gates share the same functions), plus
 ``slope_per_pair_slot``, which separates workload-intrinsic pair growth
-from engine scaling. An op whose big-side bound passes
-``PAIR_SLOT_BUDGET`` is timed on the small side only and recorded as
-skipped with its bound.
+from engine scaling. An op whose big-side bound passes the ops' own
+pair budget (``ops._util.pair_budget()``: ``PAIR_BUDGET`` or
+``$SPARK_GRAFT_PAIR_BUDGET``; 0 skips nothing) is timed on the small
+side only and recorded as skipped with its bound: on the synthetic
+corpus such a workload is intrinsic to the op's blocking keys, and its
+production-path siblings are measured in the same table.
 
 Timing: warm-up plus min-of-2 ``count()``. Decade 2 warms only the sf1
 side: the sf1 pass already JIT-warmed every plan shape, and at sf10 run
@@ -58,11 +61,6 @@ from typing import Callable
 from scalegen import SRC
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-
-#: a big-side pair-slot bound past this is recorded, not run: on the
-#: synthetic corpus such a workload is intrinsic to the op's blocking
-#: keys, and its production-path siblings are measured in the same table
-PAIR_SLOT_BUDGET = 300_000_000
 
 #: Decade 2's sweep, chosen from decade-1 slopes of earlier data models
 #: (the current SCALECHECK.json no longer reproduces that choice), so
@@ -482,7 +480,7 @@ DECADES = {
             "decade 2 reached CPU-saturated LINEAR throughput (slope10 -> 10 "
             "is t ~ N) — an investigate-list, not a verdict. `pair_slots` "
             "are [sf1, sf10] bucket-pair sums from CANDIDATE_PAIR_BOUNDS; "
-            "`sf10_skipped` rows passed the pair-slot budget and their "
+            "`sf10_skipped` rows passed the ops' pair budget and their "
             "production-path siblings run in the same table. Rows measured "
             "before the bounds became the one workload registry carry "
             "`candidates` / `candidate_bound` instead."
@@ -498,7 +496,8 @@ def _error(errors: dict, name: str, exc: Exception) -> None:
 
 def _measure(spark, d: Decade, name: str, fn, prior: dict) -> dict:
     """One sweep row: times at both scales (or the small scale only,
-    past the pair-slot budget) and the op's pair workload."""
+    past the ops' pair budget) and the op's pair workload."""
+    from load_datawarehouse_spark.ops._util import pair_budget
     from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
 
     small_sec, big_sec = f"{d.small_label}_sec", f"{d.big_label}_sec"
@@ -507,7 +506,8 @@ def _measure(spark, d: Decade, name: str, fn, prior: dict) -> dict:
     if bound is not None:
         slots = [bound(spark, d.small), bound(spark, d.big)]
         _release()
-    if slots and slots[1] > PAIR_SLOT_BUDGET:
+    budget = pair_budget()
+    if slots and budget and slots[1] > budget:
         t_small, _ = _time(fn, spark, d.small)
         return {small_sec: round(t_small, 3), f"{d.big_label}_skipped": True, "pair_slots": slots}
     t_small, n_small = _time(fn, spark, d.small)

@@ -30,6 +30,9 @@ import queue
 import sys
 import time
 
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
+from oracle_harness import _norm, duckdb_connect  # noqa: E402
+
 # Spark-side exclusions, each with a measured reason (mirrors the
 # scalecheck exclusions — same replication artifacts):
 SPARK_EXCLUDED = {
@@ -43,29 +46,10 @@ SPARK_EXCLUDED = {
 ORACLE_TIMEOUT_SEC = int(os.environ.get("SPARK_GRAFT_ORACLE_TIMEOUT", "240"))
 
 
-def _duck_connect(sf_dir: str):
-    """duckdb_connect variant that handles Spark-written table
-    DIRECTORIES (part-files + _SUCCESS), which scalegen.py produces —
-    the driver's testdata uses single .parquet files instead."""
-    import duckdb
-
-    from load_datawarehouse_spark.session import TABLE_NAMES
-
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{pattern}'")
-    return con
-
-
 def _duck_worker(sf_dir: str, sql: str, q):
     """Child process: run the oracle and ship (columns, normalized rows)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
-    from oracle_harness import _norm
-
     try:
-        con = _duck_connect(sf_dir)
+        con = duckdb_connect(sf_dir)
         odf = con.execute(sql).fetchdf()
         cols = sorted(odf.columns)
         rows = [tuple(_norm(v) for v in row) for row in odf[cols].itertuples(index=False)]
@@ -123,7 +107,7 @@ def _adjudicate_empty_on_timeout(spark, fn, sql: str) -> dict:
     probe_err = None
     try:
         s_small = fn(spark, SMALL_SF_DIR).count()
-        con = _duck_connect(SMALL_SF_DIR)
+        con = duckdb_connect(SMALL_SF_DIR)
         o_small = len(con.execute(sql).fetchall())
     except Exception as exc:
         probe_err = f"{type(exc).__name__}: {exc}"[:300]
@@ -160,14 +144,12 @@ def _adjudicate_empty_on_timeout(spark, fn, sql: str) -> dict:
 def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, here)
-    sys.path.insert(0, os.path.join(here, "tests"))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     big = os.path.join(here, ".scaledata", "sf1.0")
     if not os.path.isdir(big):
         raise SystemExit("run `python scalegen.py 10` first")
 
     import __spark_entry__ as entry_mod
-    from oracle_harness import _norm
 
     from load_datawarehouse_spark.ops._util import release_lineage_cuts
     from load_datawarehouse_spark.session import get_spark

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
 from decimal import Decimal
 
 import duckdb
@@ -19,11 +20,14 @@ from load_datawarehouse_spark.session import TABLE_NAMES
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One DuckDB view per table of ``sf_dir``: ``NAME.parquet`` is a
+    single file (the driver's test data) or a Spark-written directory
+    of part-files (``scalegen.py``'s scale data)."""
     con = duckdb.connect()
     for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
+        path = f"{sf_dir}/{name}.parquet"
+        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{pattern}'")
     return con
 
 

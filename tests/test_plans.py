@@ -177,34 +177,36 @@ def test_embedding_neardup_self_join_is_group_pair_tiled(spark):
     ), "pair self-join is not keyed on (label, g1, g2):\n" + "\n".join(join_lines)
 
 
-def test_embedding_pair_scale_contract(spark):
+def test_embedding_pair_scale_contract(spark, monkeypatch):
     # the exact embedding pair family's scale contract (COVERAGE.md
     # §Embedding-pair scale contract), mirroring the theta/range
     # family's: the contract cost sum C(n_label, 2) is measured
     # LINEARLY before any pair work is scheduled, and an over-budget
     # workload REFUSES with an error naming the finer-blocking lever
     # and the bucket-bounded production siblings — never silently
-    # prunes candidates (advisor r7: banding at the 0.3 threshold
-    # dropped ~2/3 of true pairs) and never launches the unbounded
-    # quadratic sweep round 12 measured at sf10 (2.0B pairs, 759 s).
+    # prunes candidates (banding at the 0.3 threshold dropped ~2/3 of
+    # true pairs) and never launches the unbounded quadratic sweep
+    # measured at sf10 (2.0B pairs, 759 s).
     import pytest
 
     from load_datawarehouse_spark.errors import WarehousePairBudgetExceeded
     from load_datawarehouse_spark.ops.llm import (
+        CANDIDATE_PAIR_BOUNDS,
+        _bucket_pair_sum,
         _label_cos_edges,
-        _label_pair_workload,
         _with_norm,
     )
 
     t = load_tables(spark, SF_DIR, register_views=False)
     emb = _with_norm(t["embeddings"])
-    workload = _label_pair_workload(emb)
+    workload = _bucket_pair_sum(emb, "label")
     assert workload > 10  # the gate below must actually trip
 
     # over budget: refuse BEFORE scheduling, with the documented
     # levers in the message
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "10")
     with pytest.raises(WarehousePairBudgetExceeded) as exc:
-        _label_cos_edges(spark, emb, pair_budget=10)
+        _label_cos_edges(spark, emb)
     msg = str(exc.value)
     for lever in (
         "dedup_minhash_verified",  # the DF-independent production path
@@ -212,7 +214,7 @@ def test_embedding_pair_scale_contract(spark):
         "similarity_lsh_topk",
         "similarity_ivf_topk",
         "finer blocking keys",
-        "SPARK_GRAFT_EMB_PAIR_BUDGET",
+        "SPARK_GRAFT_PAIR_BUDGET",
     ):
         assert lever in msg, lever
 
@@ -220,68 +222,63 @@ def test_embedding_pair_scale_contract(spark):
     # (label, g1, g2) triple — asserted by
     # test_embedding_neardup_self_join_is_group_pair_tiled) and a
     # budget of 0 disables the gate entirely
-    assert _label_cos_edges(spark, emb, pair_budget=workload) is not None
-    assert _label_cos_edges(spark, emb, pair_budget=0) is not None
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", str(workload))
+    assert _label_cos_edges(spark, emb) is not None
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "0")
+    assert _label_cos_edges(spark, emb) is not None
 
     # the in-op gate and the scale sweep's pair bound must be the same
-    # measurement (they share _label_pair_workload)
-    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
-
+    # measurement (they share _bucket_pair_sum over the label)
     assert CANDIDATE_PAIR_BOUNDS["dedup_embedding_neardup"](spark, SF_DIR) == workload
 
 
 def test_theta_tfidf_pair_scale_contract(spark, monkeypatch):
-    # round 14 (VERDICT r13 #5): the two remaining contract-quadratic
-    # audit views gate in-op through the same shared
-    # require_pair_budget helper as the embedding family — workload
+    # the two other contract-quadratic audit views gate in-op through
+    # the same require_pair_budget as the embedding family — workload
     # measured LINEARLY (key/bucket histogram sums) before any pair
-    # work, over-budget refuses naming the production paths, 0
-    # disables, and the env override is validated (ADVICE r13 #3).
+    # work, over-budget refuses naming the production paths, a
+    # workload equal to the budget builds, 0 disables, and the env
+    # override is validated.
     import pytest
 
     from load_datawarehouse_spark.errors import (
         WarehouseError,
         WarehousePairBudgetExceeded,
     )
+    from load_datawarehouse_spark.ops.llm import CANDIDATE_PAIR_BOUNDS
 
-    # --- join_theta: sum-over-keys n_s(k) * n_c(k) ---
-    monkeypatch.setenv("SPARK_GRAFT_THETA_PAIR_BUDGET", "10")
-    with pytest.raises(WarehousePairBudgetExceeded) as exc:
-        relational.join_theta(spark, SF_DIR)
-    msg = str(exc.value)
-    for lever in (
-        "join_range_bands",
-        "join_range_bucketed",
-        "SPARK_GRAFT_THETA_PAIR_BUDGET",
-        "finer equi conjunct",
+    for name, op, levers in (
+        # join_theta: sum-over-keys n_s(k) * n_c(k)
+        ("join_theta", relational.join_theta,
+         ("join_range_bands", "join_range_bucketed", "finer equi conjunct")),
+        # dedup_tfidf_cosine_pairs: sum-over-terms C(DF(term), 2)
+        ("dedup_tfidf_cosine_pairs", llm.dedup_tfidf_cosine_pairs,
+         ("dedup_minhash_verified", "similarity_lsh_topk", "DF cap")),
     ):
-        assert lever in msg, lever
-    monkeypatch.setenv("SPARK_GRAFT_THETA_PAIR_BUDGET", "0")
-    assert relational.join_theta(spark, SF_DIR) is not None  # 0 disables
-
-    # --- dedup_tfidf_cosine_pairs: sum-over-terms C(DF(term), 2) ---
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_PAIR_BUDGET", "1")
-    with pytest.raises(WarehousePairBudgetExceeded) as exc:
-        llm.dedup_tfidf_cosine_pairs(spark, SF_DIR)
-    msg = str(exc.value)
-    for lever in (
-        "dedup_minhash_verified",
-        "similarity_lsh_topk",
-        "SPARK_GRAFT_TFIDF_PAIR_BUDGET",
-        "DF cap",
-    ):
-        assert lever in msg, lever
-    monkeypatch.setenv("SPARK_GRAFT_TFIDF_PAIR_BUDGET", "0")
-    assert llm.dedup_tfidf_cosine_pairs(spark, SF_DIR) is not None
+        # the in-op gate must measure exactly the sweep's pair bound:
+        # at that budget the op builds, one pair below it refuses
+        bound = CANDIDATE_PAIR_BOUNDS[name](spark, SF_DIR)
+        assert bound > 1, name  # the gate below must actually trip
+        monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", str(bound))
+        assert op(spark, SF_DIR) is not None
+        monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", str(bound - 1))
+        with pytest.raises(WarehousePairBudgetExceeded) as exc:
+            op(spark, SF_DIR)
+        msg = str(exc.value)
+        assert f"measured pair workload {bound:,} exceeds" in msg, name
+        for lever in (*levers, "SPARK_GRAFT_PAIR_BUDGET"):
+            assert lever in msg, (name, lever)
+        monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "0")
+        assert op(spark, SF_DIR) is not None  # 0 disables
 
     # --- env validation: malformed / negative values get an
     # actionable error naming the variable, never a bare ValueError
     # or a silently-gate-everything negative budget ---
-    monkeypatch.setenv("SPARK_GRAFT_THETA_PAIR_BUDGET", "2e8")
-    with pytest.raises(WarehouseError, match="SPARK_GRAFT_THETA_PAIR_BUDGET"):
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "2e8")
+    with pytest.raises(WarehouseError, match="SPARK_GRAFT_PAIR_BUDGET"):
         relational.join_theta(spark, SF_DIR)
-    monkeypatch.setenv("SPARK_GRAFT_THETA_PAIR_BUDGET", "-5")
-    with pytest.raises(WarehouseError, match="negative"):
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "-5")
+    with pytest.raises(WarehouseError, match="SPARK_GRAFT_PAIR_BUDGET.*negative"):
         relational.join_theta(spark, SF_DIR)
 
 
@@ -1330,11 +1327,12 @@ def test_eval_gram_sites_derive_identical_gram_sets(spark, monkeypatch):
     assert sets[2] and not (sets[2] & sets[0])
 
 
-def test_pair_budget_explicit_negative_rejected():
-    """ADVICE r14 #4: an explicitly PASSED negative budget must raise
-    the same 'must be >= 0' error as a negative env override — before
-    the fix it was truthy and silently rejected every nonzero workload
-    instead of raising."""
+def test_pair_budget_explicit_negative_rejected(spark, monkeypatch):
+    """An explicitly set negative budget must raise the 'must be >= 0'
+    error naming the variable: a negative number is truthy, so
+    without validation it would silently reject every nonzero
+    workload instead of raising. 0 disables, a workload equal to the
+    budget passes, one above it refuses."""
     import pytest
 
     from load_datawarehouse_spark.errors import (
@@ -1343,14 +1341,22 @@ def test_pair_budget_explicit_negative_rejected():
     )
     from load_datawarehouse_spark.ops._util import require_pair_budget
 
-    kw = dict(env_var="SPARK_GRAFT_TEST_BUDGET", default=10,
-              what="probe", levers="raise $SPARK_GRAFT_TEST_BUDGET")
-    with pytest.raises(WarehouseError, match="negative"):
-        require_pair_budget(5, -1, **kw)
-    require_pair_budget(5, 0, **kw)  # explicit 0 still disables
-    require_pair_budget(5, 5, **kw)  # at-budget passes
+    probe = spark.range(1)  # in-memory: no file identity, so no memo
+
+    def gate():
+        require_pair_budget("probe", probe, lambda: 5, what="probe",
+                            levers="raise $SPARK_GRAFT_PAIR_BUDGET")
+
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "-1")
+    with pytest.raises(WarehouseError, match="SPARK_GRAFT_PAIR_BUDGET.*negative"):
+        gate()
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "0")
+    gate()  # 0 disables
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "5")
+    gate()  # at-budget passes
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "4")
     with pytest.raises(WarehousePairBudgetExceeded):
-        require_pair_budget(5, 4, **kw)
+        gate()
 
 
 def test_eval_gram_gate_goes_bare_over_ceiling(spark, monkeypatch):

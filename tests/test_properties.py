@@ -1815,7 +1815,7 @@ def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
     """BASELINE.md measured-gate memo contract (VERDICT r17 #7): the
     in-process gate memo may hold ONLY scalar ints keyed by (kind,
     tag, file-identity tuples) — never DataFrames or other derived
-    state — measured_workload must key on EVERY input frame it is
+    state — a workload memo must key on EVERY input frame it is
     given (ADVICE r17 #1), so regenerating any one input invalidates
     the entry, and two kinds sharing a tag never collide (ADVICE r17
     #2). Runs real memoized measurements against two throwaway parquet
@@ -1834,9 +1834,9 @@ def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
 
     calls = []
     tag = "memo-contract-probe"
-    n = _util.measured_workload(tag, (df1, df2), lambda: calls.append(1) or 42)
+    n = _util.memo_measured("workload", tag, (df1, df2), lambda: calls.append(1) or 42)
     assert n == 42 and calls == [1]
-    n = _util.measured_workload(tag, (df1, df2), lambda: calls.append(1) or 42)
+    n = _util.memo_measured("workload", tag, (df1, df2), lambda: calls.append(1) or 42)
     assert n == 42 and calls == [1], "second call must hit the memo"
     # regenerate ONE of the two inputs in place -> memo must miss
     spark.range(5, 11).write.mode("overwrite").parquet(p2)
@@ -1845,7 +1845,7 @@ def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
         for f in files:
             os.utime(os.path.join(root, f), (now + 5, now + 5))
     df2b = spark.read.parquet(p2)
-    n = _util.measured_workload(tag, (df1, df2b), lambda: calls.append(1) or 43)
+    n = _util.memo_measured("workload", tag, (df1, df2b), lambda: calls.append(1) or 43)
     assert n == 43 and calls == [1, 1], (
         "regenerating the SECOND input must invalidate the memo"
     )
@@ -1853,7 +1853,7 @@ def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
     # a row count and a workload number under the SAME tag and input
     # are different kinds: neither may read or overwrite the other
     _util.bcast_measured(df1, 10, "memo probe", tag=tag)
-    n = _util.measured_workload(tag, df1, lambda: calls.append(1) or 99)
+    n = _util.memo_measured("workload", tag, df1, lambda: calls.append(1) or 99)
     assert n == 99 and calls == [1, 1, 1], "workload read the row count"
     assert _util._MEASURED_MEMO[("rows", tag, _util.input_files_key(df1))] == 7
 
@@ -1872,6 +1872,28 @@ def test_gate_memos_store_only_ints_keyed_by_file_identity(spark, tmp_path):
             assert isinstance(part, tuple), (
                 f"_MEASURED_MEMO key {key!r} carries a non-file-identity part"
             )
+
+
+def test_package_environment_variables_are_pinned():
+    """Every ``SPARK_GRAFT_*`` environment variable the package reads is
+    declared here, so a new knob is a visible decision, not a silent
+    addition: session settings plus the one pair budget that every
+    contract-quadratic operator shares."""
+    import os
+    import re
+
+    import load_datawarehouse_spark
+
+    root = os.path.dirname(load_datawarehouse_spark.__file__)
+    found = set()
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    found |= set(re.findall(r"SPARK_GRAFT_([A-Z_]+)", fh.read()))
+    assert found == {
+        "SF_DIR", "CPUS", "MASTER", "SHUFFLE_PARTITIONS", "DRIVER_MEM", "PAIR_BUDGET",
+    }, sorted(found)
 
 
 # --- record conform: the columnar pass equals the row-wise one -------------

@@ -83,8 +83,8 @@ def test_both_decades_write_documented_rows_and_merge_on_only(spark, tmp_path, m
     assert d2["metric"] == "scale_slope_sf1_to_sf10"
     assert {"median_slope10", "superlinear", "accelerating"} <= set(d2)
 
-    # past the pair-slot budget an op is timed on the small side only
-    monkeypatch.setattr(scalecheck, "PAIR_SLOT_BUDGET", 0)
+    # past the pair budget an op is timed on the small side only
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_BUDGET", "1")
     skip = scalecheck.main(["--decade", "2", "--only", "dedup_ngram_jaccard"])
     assert rows(skip) == {
         "q1_pricing_summary": timed2,
